@@ -46,13 +46,43 @@ object Bench {
       }
   }
 
+  /** Keys whose runs failed (best time -1.0), as a sorted JSON list. */
+  private[graft] def failedJson(results: Map[String, Double]): String =
+    results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
+      .map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** The one-line stdout contract for per-key best times (-1.0 = failed).
+    * Failed keys are listed under `failed` and left out of `total`.
+    */
+  private[graft] def summaryLine(results: Map[String, Double], sfDir: String): String = {
+    val failed = failedJson(results)
+    // slowest-first so anything elided by the budget is a fast query; the
+    // failed list is never elided, so it comes out of the map's budget
+    val sorted = results.toSeq.sortBy { case (_, v) => -v }
+      .map { case (k, v) => "\"" + k + f"""":$v%.4f""" }
+    val kept = new scala.collection.mutable.ArrayBuffer[String]
+    var used = 0
+    for (e <- sorted if used + e.length + 1 <= MapBudget - failed.length) {
+      kept += e; used += e.length + 1
+    }
+    val qs = kept.mkString("{", ",", "}")
+    val total = results.values.filter(_ >= 0).sum
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size}%d,"omitted":${results.size - kept.size}%d,"failed":$failed%s,"full":"BENCH_LOCAL.json","queries":$qs%s,"sf":"$sfDir%s"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cleanScratch()
     val spark = Engine.session()
-    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a failed run reads -1.0; the key then goes to `failed`, not the total
+    def once(name: String,
+        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+      try { fn(spark, sfDir).count() } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench-failed] $name: $e")
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
     val runs = SparkEntry.queries.map { case (name, fn) =>
@@ -67,26 +97,15 @@ object Bench {
       // of very large size") land on stderr too, so the interleaving
       // attributes them to a query without touching the stdout contract
       System.err.println(s"[bench-query] $name")
-      once(fn) // warm-up: plan compilation + codegen JIT, untimed
-      name -> Seq.fill(TimedRuns)(once(fn))
+      once(name, fn) // warm-up: plan compilation + codegen JIT, untimed
+      name -> Seq.fill(TimedRuns)(once(name, fn))
     }
     val results = runs.map { case (name, ts) =>
       name -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
     }
-    // slowest-first so anything elided by the budget is a fast query
-    val sorted = results.toSeq.sortBy { case (_, v) => -v }
-      .map { case (k, v) => "\"" + k + f"""":$v%.4f""" }
-    val kept = new scala.collection.mutable.ArrayBuffer[String]
-    var used = 0
-    for (e <- sorted if used + e.length + 1 <= MapBudget) {
-      kept += e; used += e.length + 1
-    }
-    val qs = kept.mkString("{", ",", "}")
+    val line = summaryLine(results, sfDir)
     val fullQs = results.map { case (k, v) => "\"" + k + f"""":$v%.4f""" }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size}%d,"omitted":${results.size - kept.size}%d,"full":"BENCH_LOCAL.json","queries":$qs%s,"sf":"$sfDir%s"}"""
     // full-precision artifact for round-over-round comparison
     val full = runs.map { case (k, ts) =>
       "\"" + k + "\":[" + ts.mkString(",") + "]"
@@ -113,7 +132,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter("BENCH_LOCAL.json")
       try w.println(
-        s"""{"sf":"$sfDir","best":$fullQs,"dmlFiles":$dmlFiles,"runs":$full}""")
+        s"""{"sf":"$sfDir","best":$fullQs,"failed":${failedJson(results)},"dmlFiles":$dmlFiles,"runs":$full}""")
       finally w.close()
     } catch { case _: Exception => () }
     println(line)

@@ -1,6 +1,6 @@
 package graft.sources.cole
 
-import java.io.ByteArrayOutputStream
+import java.nio.{ByteBuffer, ByteOrder}
 
 /** Binary codecs for the COLE columnar format.
   *
@@ -70,6 +70,13 @@ object ColeCodec {
     out
   }
 
+  /** Little-endian view of `len` bytes of `buf` from `off` — the bulk
+    * lane of the PLAIN kernels: the `asIntBuffer`/`asLongBuffer`/... views
+    * copy whole arrays in and out without touching a value one at a time.
+    */
+  private def le(buf: Array[Byte], off: Int, len: Int): ByteBuffer =
+    ByteBuffer.wrap(buf, off, len).order(ByteOrder.LITTLE_ENDIAN)
+
   /** Forward cursor over a byte array with little-endian primitives. */
   final class Cursor(val buf: Array[Byte], var pos: Int) {
     def u8(): Int = { val v = buf(pos) & 0xff; pos += 1; v }
@@ -87,8 +94,11 @@ object ColeCodec {
       pos += 8; v
     }
     def uvarint(): Long = {
-      var result = 0L
-      var shift = 0
+      val b0 = buf(pos)
+      pos += 1
+      if (b0 >= 0) return b0.toLong // one-byte varint: the common case
+      var result = b0 & 0x7fL
+      var shift = 7
       var b = 0
       do {
         b = buf(pos) & 0xff; pos += 1
@@ -102,28 +112,51 @@ object ColeCodec {
     def bytes(n: Int): Array[Byte] = {
       val out = java.util.Arrays.copyOfRange(buf, pos, pos + n); pos += n; out
     }
+    /** The next `n` bytes as a little-endian view; advances past them. */
+    def view(n: Int): ByteBuffer = { val b = le(buf, pos, n); pos += n; b }
   }
 
-  /** Little-endian growable output buffer. */
+  /** Little-endian growable output buffer (single-threaded, unsynchronized). */
   final class Out(initial: Int = 64) {
-    private val os = new ByteArrayOutputStream(initial)
-    def size: Int = os.size()
-    def u8(v: Int): Unit = os.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v); u8(v >>> 8) }
-    def u32(v: Int): Unit = { u8(v); u8(v >>> 8); u8(v >>> 16); u8(v >>> 24) }
+    private var buf = new Array[Byte](math.max(initial, 16))
+    private var n = 0
+    def size: Int = n
+    private def ensure(extra: Int): Unit =
+      if (n + extra > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(2 * buf.length, n + extra))
+    def u8(v: Int): Unit = { ensure(1); buf(n) = v.toByte; n += 1 }
+    def u16(v: Int): Unit = {
+      ensure(2); buf(n) = v.toByte; buf(n + 1) = (v >>> 8).toByte; n += 2
+    }
+    def u32(v: Int): Unit = {
+      ensure(4)
+      buf(n) = v.toByte; buf(n + 1) = (v >>> 8).toByte
+      buf(n + 2) = (v >>> 16).toByte; buf(n + 3) = (v >>> 24).toByte
+      n += 4
+    }
     def i64(v: Long): Unit = {
+      ensure(8)
       var i = 0
-      while (i < 8) { os.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
+      while (i < 8) { buf(n + i) = (v >>> (8 * i)).toByte; i += 1 }
+      n += 8
     }
     def uvarint(value: Long): Unit = {
+      ensure(10)
       var v = value
-      while ((v & ~0x7fL) != 0) { os.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      os.write(v.toInt)
+      while ((v & ~0x7fL) != 0) { buf(n) = ((v & 0x7f) | 0x80).toByte; n += 1; v >>>= 7 }
+      buf(n) = v.toByte; n += 1
     }
     def zz32(v: Int): Unit = uvarint(((v << 1) ^ (v >> 31)) & 0xffffffffL)
     def zz64(v: Long): Unit = uvarint((v << 1) ^ (v >> 63))
-    def raw(b: Array[Byte]): Unit = os.write(b, 0, b.length)
-    def toBytes: Array[Byte] = os.toByteArray
+    def raw(b: Array[Byte]): Unit = {
+      ensure(b.length); System.arraycopy(b, 0, buf, n, b.length); n += b.length
+    }
+    def raw(o: Out): Unit = {
+      ensure(o.n); System.arraycopy(o.buf, 0, buf, n, o.n); n += o.n
+    }
+    /** The written bytes; the buffer itself when it is exactly full. */
+    def toBytes: Array[Byte] =
+      if (n == buf.length) buf else java.util.Arrays.copyOf(buf, n)
   }
 
   // ---- RLE: [num_runs uvarint] ([run_len uvarint][value zigzag-varint])*
@@ -132,7 +165,7 @@ object ColeCodec {
     // Always emit the run-count header (0 for empty input): the decoder
     // unconditionally reads it, and a header-less empty chunk would desync
     // any cursor that reads further (e.g. the dictionary page layout).
-    val out = new Out(values.length)
+    val out = new Out(10 + values.length)
     var runs = 0
     val body = new Out(values.length)
     var i = 0
@@ -144,12 +177,12 @@ object ColeCodec {
       runs += 1
       i += len
     }
-    out.uvarint(runs.toLong); out.raw(body.toBytes)
+    out.uvarint(runs.toLong); out.raw(body)
     out.toBytes
   }
 
   def encodeRleLong(values: Array[Long]): Array[Byte] = {
-    val out = new Out(values.length)
+    val out = new Out(10 + values.length)
     var runs = 0
     val body = new Out(values.length)
     var i = 0
@@ -161,7 +194,7 @@ object ColeCodec {
       runs += 1
       i += len
     }
-    out.uvarint(runs.toLong); out.raw(body.toBytes)
+    out.uvarint(runs.toLong); out.raw(body)
     out.toBytes
   }
 
@@ -171,10 +204,11 @@ object ColeCodec {
     var idx = 0
     var r = 0
     while (r < runs) {
-      val len = c.uvarint().toInt
+      val end = idx + c.uvarint().toInt
       val v = c.zz32()
-      java.util.Arrays.fill(out, idx, idx + len, v)
-      idx += len
+      // runs are often one or two values long (dictionary ids of
+      // unsorted data): a plain loop beats the Arrays.fill call
+      while (idx < end) { out(idx) = v; idx += 1 }
       r += 1
     }
     out
@@ -186,10 +220,11 @@ object ColeCodec {
     var idx = 0
     var r = 0
     while (r < runs) {
-      val len = c.uvarint().toInt
+      val end = idx + c.uvarint().toInt
       val v = c.zz64()
-      java.util.Arrays.fill(out, idx, idx + len, v)
-      idx += len
+      // runs are often one or two values long (dictionary ids of
+      // unsorted data): a plain loop beats the Arrays.fill call
+      while (idx < end) { out(idx) = v; idx += 1 }
       r += 1
     }
     out
@@ -237,68 +272,93 @@ object ColeCodec {
     out
   }
 
-  // ---- PLAIN
+  // ---- PLAIN: fixed-width little-endian values, moved in bulk
 
   def encodePlainInt(values: Array[Int]): Array[Byte] = {
-    val out = new Out(values.length * 4)
-    values.foreach(out.u32)
-    out.toBytes
+    val out = new Array[Byte](4 * values.length)
+    le(out, 0, out.length).asIntBuffer().put(values)
+    out
   }
 
   def encodePlainLong(values: Array[Long]): Array[Byte] = {
-    val out = new Out(values.length * 8)
-    values.foreach(out.i64)
-    out.toBytes
+    val out = new Array[Byte](8 * values.length)
+    le(out, 0, out.length).asLongBuffer().put(values)
+    out
   }
 
-  def decodePlainInt(c: Cursor, numValues: Int): Array[Int] =
-    Array.fill(numValues)(c.i32())
+  def decodePlainInt(c: Cursor, numValues: Int): Array[Int] = {
+    val out = new Array[Int](numValues)
+    c.view(4 * numValues).asIntBuffer().get(out)
+    out
+  }
 
-  def decodePlainLong(c: Cursor, numValues: Int): Array[Long] =
-    Array.fill(numValues)(c.i64())
+  def decodePlainLong(c: Cursor, numValues: Int): Array[Long] = {
+    val out = new Array[Long](numValues)
+    c.view(8 * numValues).asLongBuffer().get(out)
+    out
+  }
 
   // ---- PLAIN doubles (format v2): 8-byte little-endian IEEE-754 bits
 
   def encodePlainDouble(values: Array[Double]): Array[Byte] = {
-    val out = new Out(values.length * 8)
-    values.foreach(d => out.i64(java.lang.Double.doubleToRawLongBits(d)))
-    out.toBytes
+    val out = new Array[Byte](8 * values.length)
+    le(out, 0, out.length).asDoubleBuffer().put(values)
+    out
   }
 
-  def decodePlainDouble(c: Cursor, numValues: Int): Array[Double] =
-    Array.fill(numValues)(java.lang.Double.longBitsToDouble(c.i64()))
+  def decodePlainDouble(c: Cursor, numValues: Int): Array[Double] = {
+    val out = new Array[Double](numValues)
+    c.view(8 * numValues).asDoubleBuffer().get(out)
+    out
+  }
+
+  /** PLAIN offsets table: n+1 u32 entries, the prefix of the string and
+    * vector layouts.
+    */
+  private def writeOffsets(out: Array[Byte], lens: Array[Int]): Unit = {
+    val ib = le(out, 0, 4 * (lens.length + 1)).asIntBuffer()
+    var off = 0
+    var i = 0
+    while (i < lens.length) { ib.put(off); off += lens(i); i += 1 }
+    ib.put(off)
+  }
+
+  private def readOffsets(c: Cursor, numValues: Int): Array[Int] = {
+    val offsets = new Array[Int](numValues + 1)
+    c.view(4 * (numValues + 1)).asIntBuffer().get(offsets)
+    offsets
+  }
 
   /** PLAIN float32 vectors: [element offsets u32 x (n+1)][f32 LE data] —
     * the PLAIN-strings layout with 4-byte elements, so variable per-row
     * dimensions cost one offset per row and decode is a bulk sweep.
     */
   def encodePlainVecs(values: Array[Array[Float]]): Array[Byte] = {
+    val lens = new Array[Int](values.length)
     var total = 0
-    values.foreach(v => total += v.length)
-    val out = new Out((values.length + 1 + total) * 4)
-    var off = 0
-    values.foreach { v => out.u32(off); off += v.length }
-    out.u32(off)
-    values.foreach(v => v.foreach(f => out.u32(java.lang.Float.floatToRawIntBits(f))))
-    out.toBytes
+    var i = 0
+    while (i < values.length) { lens(i) = values(i).length; total += lens(i); i += 1 }
+    val head = 4 * (values.length + 1)
+    val out = new Array[Byte](head + 4 * total)
+    writeOffsets(out, lens)
+    val fb = le(out, head, 4 * total).asFloatBuffer()
+    i = 0
+    while (i < values.length) { fb.put(values(i)); i += 1 }
+    out
   }
 
   def decodePlainVecs(c: Cursor, numValues: Int): Array[Array[Float]] = {
-    val offsets = Array.fill(numValues + 1)(c.u32())
-    val base = c.pos
-    Array.tabulate(numValues) { i =>
-      val len = offsets(i + 1) - offsets(i)
-      val a = new Array[Float](len)
-      var p = base + offsets(i) * 4
-      var j = 0
-      while (j < len) {
-        a(j) = java.lang.Float.intBitsToFloat(
-          (c.buf(p) & 0xff) | ((c.buf(p + 1) & 0xff) << 8) |
-            ((c.buf(p + 2) & 0xff) << 16) | ((c.buf(p + 3) & 0xff) << 24))
-        p += 4; j += 1
-      }
-      a
+    val offsets = readOffsets(c, numValues)
+    val fb = le(c.buf, c.pos, 4 * offsets(numValues)).asFloatBuffer()
+    val out = new Array[Array[Float]](numValues)
+    var i = 0
+    while (i < numValues) {
+      val a = new Array[Float](offsets(i + 1) - offsets(i))
+      fb.get(offsets(i), a)
+      out(i) = a
+      i += 1
     }
+    out
   }
 
   // ---- validity bitmaps (format v2): bit set = value present. The
@@ -316,30 +376,52 @@ object ColeCodec {
 
   /** Reads ceil(n/8) bitmap bytes from the cursor; returns per-row isNull. */
   def readValidity(c: Cursor, n: Int): Array[Boolean] = {
-    val bytes = c.bytes((n + 7) / 8)
-    Array.tabulate(n)(i => (bytes(i >>> 3) & (1 << (i & 7))) == 0)
+    val out = new Array[Boolean](n)
+    val buf = c.buf
+    val base = c.pos
+    var i = 0
+    while (i < n) { out(i) = (buf(base + (i >>> 3)) & (1 << (i & 7))) == 0; i += 1 }
+    c.pos += (n + 7) / 8
+    out
   }
 
   /** PLAIN strings: [offsets u32 x (n+1)][utf8 bytes]. */
   def encodePlainStrings(values: Array[Array[Byte]]): Array[Byte] = {
-    val out = new Out()
-    var off = 0
-    values.foreach { v => out.u32(off); off += v.length }
-    out.u32(off)
-    values.foreach(out.raw)
-    out.toBytes
+    val lens = new Array[Int](values.length)
+    var total = 0
+    var i = 0
+    while (i < values.length) { lens(i) = values(i).length; total += lens(i); i += 1 }
+    val head = 4 * (values.length + 1)
+    val out = new Array[Byte](head + total)
+    writeOffsets(out, lens)
+    var p = head
+    i = 0
+    while (i < values.length) {
+      System.arraycopy(values(i), 0, out, p, lens(i)); p += lens(i); i += 1
+    }
+    out
   }
 
+  /** Strings are returned as copies; the cursor is left just past the
+    * offsets (callers always consume whole pages, so the trailing position
+    * is unused).
+    */
   def decodePlainStrings(c: Cursor, numValues: Int): Array[Array[Byte]] = {
-    val offsets = Array.fill(numValues + 1)(c.u32())
-    Array.tabulate(numValues) { i => c.buf.slice(c.pos + offsets(i), c.pos + offsets(i + 1)) }
-    // NOTE: cursor is left at the offsets' end + total bytes by caller design:
-  } // callers always consume whole pages, so trailing position is unused
+    val offsets = readOffsets(c, numValues)
+    val out = new Array[Array[Byte]](numValues)
+    val base = c.pos
+    var i = 0
+    while (i < numValues) {
+      out(i) = java.util.Arrays.copyOfRange(c.buf, base + offsets(i), base + offsets(i + 1))
+      i += 1
+    }
+    out
+  }
 
   // ---- DICTIONARY strings: [dict_size u32]([len u32][bytes])* [indices RLE-int32]
 
   def encodeDictStrings(values: Array[Array[Byte]]): Array[Byte] = {
-    val index = new java.util.LinkedHashMap[String, Integer]()
+    val index = new java.util.HashMap[String, Integer]()
     val indices = new Array[Int](values.length)
     val entries = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
     var i = 0
@@ -366,13 +448,18 @@ object ColeCodec {
     */
   def decodeDictRaw(c: Cursor, numValues: Int): (Array[Array[Byte]], Array[Int]) = {
     val dictSize = c.u32()
-    val dict = Array.fill(dictSize) { val len = c.u32(); c.bytes(len) }
+    val dict = new Array[Array[Byte]](dictSize)
+    var i = 0
+    while (i < dictSize) { val len = c.u32(); dict(i) = c.bytes(len); i += 1 }
     (dict, decodeRleInt(c, numValues))
   }
 
   def decodeDictStrings(c: Cursor, numValues: Int): Array[Array[Byte]] = {
     val (dict, indices) = decodeDictRaw(c, numValues)
-    indices.map(dict(_))
+    val out = new Array[Array[Byte]](numValues)
+    var i = 0
+    while (i < numValues) { out(i) = dict(indices(i)); i += 1 }
+    out
   }
 
   // ---- streaming numeric aggregation (no array materialization)

@@ -5218,11 +5218,11 @@ class ColeDataWriter(schema: StructType, file: String, rowGroupSize: Int,
         case TInt32 =>
           val a = java.util.Arrays.copyOf(intBufs(i), buffered)
           (ColumnData(a, null, null, null, nulls),
-            if (nulls == null) chooseIntEnc(a.map(_.toLong)) else Plain)
+            if (nulls == null) chooseIntEnc(a.length, a(_)) else Plain)
         case t if isLongBacked(t) =>
           val a = java.util.Arrays.copyOf(longBufs(i), buffered)
           (ColumnData(null, a, null, null, nulls),
-            if (nulls == null) chooseIntEnc(a) else Plain)
+            if (nulls == null) chooseIntEnc(a.length, a(_)) else Plain)
         case TDouble =>
           val a = java.util.Arrays.copyOf(dblBufs(i), buffered)
           (ColumnData(null, null, null, a, nulls), Plain)
@@ -5246,19 +5246,25 @@ class ColeDataWriter(schema: StructType, file: String, rowGroupSize: Int,
     while (i < nullBufs.length) { nullBufs(i) = null; i += 1 }
   }
 
-  private def chooseIntEnc(a: Array[Long]): Enc = {
-    if (a.length < 2) return Plain
+  /** Encoding for `n` integral values read through `at` (an int or long
+    * buffer, unboxed: `Int => Long` is a specialized function type).
+    */
+  private def chooseIntEnc(n: Int, at: Int => Long): Enc = {
+    if (n < 2) return Plain
     var sorted = true
     var runs = 1
+    var prev = at(0)
     var i = 1
-    while (i < a.length && (sorted || runs * 3 < a.length)) {
-      if (a(i) < a(i - 1)) sorted = false
-      if (a(i) != a(i - 1)) runs += 1
+    while (i < n && (sorted || runs * 3 < n)) {
+      val v = at(i)
+      if (v < prev) sorted = false
+      if (v != prev) runs += 1
+      prev = v
       i += 1
     }
-    if (i < a.length) runs = a.length // bailed out: not compressible by RLE
+    if (i < n) runs = n // bailed out: not compressible by RLE
     if (sorted) Delta
-    else if (runs * 3 < a.length) Rle
+    else if (runs * 3 < n) Rle
     else Plain
   }
 

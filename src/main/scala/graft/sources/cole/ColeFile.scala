@@ -148,28 +148,69 @@ final class ColeFileReader(path: String, conf: Configuration) extends AutoClosea
     readAt(cc.fileOffset, cc.totalSize.toInt)
   }
 
+  // ---- decode-once: the decoded chunks, dictionary views and validity
+  // flags of the row group last served. A scan's predicate columns are
+  // decoded by the selection builder and then read again by the loader;
+  // both see one decode. Asking for another row group drops them, so the
+  // heap holds at most one row group per reader. Returned arrays are
+  // shared and read-only by contract.
+  private var cachedRg = -1
+  private val chunkCache = new Array[ColumnData](meta.columns.size)
+  private val dictCache = new Array[(Array[Array[Byte]], Array[Int])](meta.columns.size)
+  private val validityCache = new Array[Array[Boolean]](meta.columns.size)
+
+  private def useRowGroup(rgIdx: Int): Unit =
+    if (rgIdx != cachedRg) {
+      java.util.Arrays.fill(chunkCache.asInstanceOf[Array[AnyRef]], null)
+      java.util.Arrays.fill(dictCache.asInstanceOf[Array[AnyRef]], null)
+      java.util.Arrays.fill(validityCache.asInstanceOf[Array[AnyRef]], null)
+      cachedRg = rgIdx
+    }
+
+  /** The pages' arrays (of `elem` values) of one chunk as one array: a
+    * single page's array as-is, several joined with `System.arraycopy`.
+    */
+  private def concat[A](parts: Array[_ <: AnyRef], elem: Class[_]): A =
+    if (parts.length == 1) parts(0).asInstanceOf[A] else {
+      import java.lang.reflect.{Array => JArray}
+      var total = 0
+      parts.foreach(p => total += JArray.getLength(p))
+      val out = JArray.newInstance(elem, total)
+      var off = 0
+      parts.foreach { p =>
+        val n = JArray.getLength(p)
+        System.arraycopy(p, 0, out, off, n)
+        off += n
+      }
+      out.asInstanceOf[A]
+    }
+
   /** Read and decode one column chunk of one row group. v2 pages with
     * nulls decode their validity bitmap first; encoded values cover the
     * present rows only and are expanded to full-length arrays here
     * (placeholder at null slots, per-row flags in `ColumnData.nulls`).
+    * Decoded once per row group (see `useRowGroup`).
     */
   def readChunk(rgIdx: Int, colIdx: Int): ColumnData = {
-    val rg = meta.rowGroups(rgIdx)
-    val cc = rg.chunks(colIdx)
+    useRowGroup(rgIdx)
+    if (chunkCache(colIdx) == null) chunkCache(colIdx) = decodeChunk(rgIdx, colIdx)
+    chunkCache(colIdx)
+  }
+
+  private def decodeChunk(rgIdx: Int, colIdx: Int): ColumnData = {
+    val cc = meta.rowGroups(rgIdx).chunks(colIdx)
     val col = meta.columns(colIdx)
     val raw = readAt(cc.fileOffset, cc.totalSize.toInt)
     val c = new Cursor(raw, 0)
-    // chunk = sequence of [page header][page data]; decode and concatenate
-    val intParts = scala.collection.mutable.ArrayBuffer[Array[Int]]()
-    val longParts = scala.collection.mutable.ArrayBuffer[Array[Long]]()
-    val strParts = scala.collection.mutable.ArrayBuffer[Array[Array[Byte]]]()
-    val dblParts = scala.collection.mutable.ArrayBuffer[Array[Double]]()
-    val vecParts = scala.collection.mutable.ArrayBuffer[Array[Array[Float]]]()
-    val wideParts = scala.collection.mutable.ArrayBuffer[Array[Long]]()
-    val nullParts = scala.collection.mutable.ArrayBuffer[Array[Boolean]]()
-    val pageSizes = scala.collection.mutable.ArrayBuffer[Int]()
+    // chunk = sequence of [page header][page data]; decode each page into
+    // its primitive array, then join the pages
+    val nPages = cc.pages.size
+    val parts = new Array[AnyRef](nPages)
+    val nullParts = new Array[Array[Boolean]](nPages)
+    val pageRows = new Array[Int](nPages)
     var anyNulls = false
-    cc.pages.foreach { _ =>
+    var p = 0
+    while (p < nPages) {
       val ph = readPageHeader(c, meta.version, col.colType == TDouble,
         isWide(col.colType))
       val pageData = pageCursor(c, ph)
@@ -178,41 +219,49 @@ final class ColeFileReader(path: String, conf: Configuration) extends AutoClosea
         else { anyNulls = true; readValidity(pageData, ph.numValues) }
       val present = ph.numValues - ph.nullCount
       // null per dense page: materialized only when some page has nulls
-      nullParts += (if (isNull != null) isNull else null)
-      pageSizes += ph.numValues
-      col.colType match {
-        case TInt32 => intParts += expandInt(decodeIntPage(pageData, ph, present), isNull, ph.numValues)
+      nullParts(p) = isNull
+      pageRows(p) = ph.numValues
+      parts(p) = col.colType match {
+        case TInt32 => expandInt(decodeIntPage(pageData, ph, present), isNull, ph.numValues)
         case t if isLongBacked(t) =>
-          longParts += expandLong(decodeLongPage(pageData, ph, present), isNull, ph.numValues)
+          expandLong(decodeLongPage(pageData, ph, present), isNull, ph.numValues)
         case TString | TBinary =>
-          strParts += expandRef(decodeStringPage(pageData, ph, present), isNull, ph.numValues)
+          expandRef(decodeStringPage(pageData, ph, present), isNull, ph.numValues)
         case TDouble =>
-          dblParts += expandDouble(decodeDoublePage(pageData, ph, present), isNull, ph.numValues)
+          expandDouble(decodeDoublePage(pageData, ph, present), isNull, ph.numValues)
         case TFloatVec =>
-          vecParts += expandVec(decodeVecPage(pageData, ph, present), isNull, ph.numValues)
+          expandVec(decodeVecPage(pageData, ph, present), isNull, ph.numValues)
         case t if isWide(t) => // PLAIN [hi,lo] pairs = 2×present i64s
           val pairs = ph.encoding match {
             case Plain => decodePlainLong(pageData, 2 * present)
             case other => throw new ColeFormatException(s"$other not valid for WIDE DECIMAL")
           }
-          wideParts += expandWide(pairs, isNull, ph.numValues)
+          expandWide(pairs, isNull, ph.numValues)
         case other => throw new ColeFormatException(s"unhandled column type $other")
       }
       c.pos += ph.compressedSize
+      p += 1
     }
-    val nulls = if (!anyNulls) null
-      else nullParts.zip(pageSizes).flatMap { case (p, n) =>
-        if (p != null) p else new Array[Boolean](n)
-      }.toArray
+    val nulls: Array[Boolean] = if (!anyNulls) null else {
+      var q = 0
+      while (q < nPages) {
+        if (nullParts(q) == null) nullParts(q) = new Array[Boolean](pageRows(q))
+        q += 1
+      }
+      concat(nullParts, classOf[Boolean])
+    }
     col.colType match {
-      case TInt32 => ColumnData(intParts.flatten.toArray, null, null, null, nulls)
-      case t if isLongBacked(t) => ColumnData(null, longParts.flatten.toArray, null, null, nulls)
+      case TInt32 => ColumnData(concat(parts, classOf[Int]), null, null, null, nulls)
+      case t if isLongBacked(t) =>
+        ColumnData(null, concat(parts, classOf[Long]), null, null, nulls)
       case TString | TBinary =>
-        ColumnData(null, null, strParts.flatten.toArray, null, nulls)
-      case TDouble => ColumnData(null, null, null, dblParts.flatten.toArray, nulls)
-      case TFloatVec => ColumnData(null, null, null, null, nulls, vecParts.flatten.toArray)
+        ColumnData(null, null, concat(parts, classOf[Array[Byte]]), null, nulls)
+      case TDouble =>
+        ColumnData(null, null, null, concat(parts, classOf[Double]), nulls)
+      case TFloatVec =>
+        ColumnData(null, null, null, null, nulls, concat(parts, classOf[Array[Float]]))
       case t if isWide(t) =>
-        ColumnData(null, null, null, null, nulls, null, wideParts.flatten.toArray)
+        ColumnData(null, null, null, null, nulls, null, concat(parts, classOf[Long]))
       case other => throw new ColeFormatException(s"unhandled column type $other")
     }
   }
@@ -320,7 +369,7 @@ final class ColeFileReader(path: String, conf: Configuration) extends AutoClosea
       // behind the validity prefix, so the dense sweep over them IS the
       // SQL null-ignoring aggregate — skip the bitmap, sweep `present`
       // values, and acc.count accumulates non-null rows exactly
-      if (ph.nullCount > 0) readValidity(pageData, ph.numValues)
+      if (ph.nullCount > 0) pageData.pos += (ph.numValues + 7) / 8
       val present = ph.numValues - ph.nullCount
       (colType, ph.encoding) match {
         case (TInt32, Plain) => aggPlainInt(pageData, present, acc)
@@ -349,7 +398,7 @@ final class ColeFileReader(path: String, conf: Configuration) extends AutoClosea
       val pageData = pageCursor(c, ph)
       // same null discipline as [[aggChunk]]: skip the validity prefix,
       // sweep the densely-encoded present values
-      if (ph.nullCount > 0) readValidity(pageData, ph.numValues)
+      if (ph.nullCount > 0) pageData.pos += (ph.numValues + 7) / 8
       ph.encoding match {
         case Plain => aggPlainDouble(pageData, ph.numValues - ph.nullCount, acc)
         case e => throw new ColeFormatException(s"$e not valid for DOUBLE")
@@ -367,24 +416,32 @@ final class ColeFileReader(path: String, conf: Configuration) extends AutoClosea
 
   /** Per-row isNull flags for one chunk, decoded from validity bitmaps
     * alone (values stay encoded — the COUNT(col)-under-filter path);
-    * null when the footer proves the chunk dense.
+    * null when the footer proves the chunk dense. An already-decoded chunk
+    * of the row group answers from its own flags.
     */
   def chunkValidity(rgIdx: Int, colIdx: Int): Array[Boolean] = {
-    val cc = meta.rowGroups(rgIdx).chunks(colIdx)
     if (meta.chunkNullCount(rgIdx, colIdx) == 0L) return null
-    val raw = readAt(cc.fileOffset, cc.totalSize.toInt)
-    val c = new Cursor(raw, 0)
-    val isDbl = meta.columns(colIdx).colType == TDouble
-    val isW = isWide(meta.columns(colIdx).colType)
-    val parts = scala.collection.mutable.ArrayBuffer[Array[Boolean]]()
-    cc.pages.foreach { _ =>
-      val ph = readPageHeader(c, meta.version, isDbl, isW)
-      val pageData = pageCursor(c, ph)
-      parts += (if (ph.nullCount == 0) new Array[Boolean](ph.numValues)
-                else readValidity(pageData, ph.numValues))
-      c.pos += ph.compressedSize
+    useRowGroup(rgIdx)
+    if (chunkCache(colIdx) != null) return chunkCache(colIdx).nulls
+    if (validityCache(colIdx) == null) {
+      val cc = meta.rowGroups(rgIdx).chunks(colIdx)
+      val raw = readAt(cc.fileOffset, cc.totalSize.toInt)
+      val c = new Cursor(raw, 0)
+      val isDbl = meta.columns(colIdx).colType == TDouble
+      val isW = isWide(meta.columns(colIdx).colType)
+      val parts = new Array[Array[Boolean]](cc.pages.size)
+      var p = 0
+      while (p < parts.length) {
+        val ph = readPageHeader(c, meta.version, isDbl, isW)
+        val pageData = pageCursor(c, ph)
+        parts(p) = if (ph.nullCount == 0) new Array[Boolean](ph.numValues)
+          else readValidity(pageData, ph.numValues)
+        c.pos += ph.compressedSize
+        p += 1
+      }
+      validityCache(colIdx) = concat(parts, classOf[Boolean])
     }
-    parts.flatten.toArray
+    validityCache(colIdx)
   }
 
   /** Dictionary view of an all-DICTIONARY string chunk: (entries, per-row
@@ -393,29 +450,42 @@ final class ColeFileReader(path: String, conf: Configuration) extends AutoClosea
     * caller falls back to materialized strings.
     */
   def readStringChunkDict(rgIdx: Int, colIdx: Int): (Array[Array[Byte]], Array[Int]) = {
-    val rg = meta.rowGroups(rgIdx)
-    val cc = rg.chunks(colIdx)
+    val cc = meta.rowGroups(rgIdx).chunks(colIdx)
     if (meta.columns(colIdx).colType != TString) return null
     if (!cc.pages.forall(_.encoding == Dict)) return null
     // null-bearing chunks have no dense id-per-row view: callers fall
     // back to the materialized (null-expanded) string path
     if (cc.pages.exists(_.nullCount > 0)) return null
-    val raw = readAt(cc.fileOffset, cc.totalSize.toInt)
-    val c = new Cursor(raw, 0)
-    val entries = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
-    val idParts = scala.collection.mutable.ArrayBuffer[Array[Int]]()
-    cc.pages.foreach { _ =>
-      val ph = readPageHeader(c, meta.version, isDouble = false)
-      val (dict, ids) = decodeDictRaw(pageCursor(c, ph), ph.numValues)
-      val base = entries.size
-      entries ++= dict
-      idParts += (if (base == 0) ids else ids.map(_ + base))
-      c.pos += ph.compressedSize
+    useRowGroup(rgIdx)
+    if (dictCache(colIdx) == null) {
+      val raw = readAt(cc.fileOffset, cc.totalSize.toInt)
+      val c = new Cursor(raw, 0)
+      val entryParts = new Array[Array[Array[Byte]]](cc.pages.size)
+      val idParts = new Array[Array[Int]](cc.pages.size)
+      var base = 0
+      var p = 0
+      while (p < idParts.length) {
+        val ph = readPageHeader(c, meta.version, isDouble = false)
+        val (dict, ids) = decodeDictRaw(pageCursor(c, ph), ph.numValues)
+        if (base != 0) {
+          var j = 0
+          while (j < ids.length) { ids(j) += base; j += 1 }
+        }
+        entryParts(p) = dict
+        idParts(p) = ids
+        base += dict.length
+        c.pos += ph.compressedSize
+        p += 1
+      }
+      dictCache(colIdx) = (concat(entryParts, classOf[Array[Byte]]), concat(idParts, classOf[Int]))
     }
-    (entries.toArray, idParts.flatten.toArray)
+    dictCache(colIdx)
   }
 
-  override def close(): Unit = in.close()
+  override def close(): Unit = {
+    useRowGroup(-1)
+    in.close()
+  }
 }
 
 object ColeFileWriter {
@@ -561,8 +631,15 @@ final class ColeFileWriter(path: String, columns: Seq[ColeColumn],
         case TInt32 =>
           val vals = presentInts
           var s = 0L
+          var mn = Int.MaxValue; var mx = Int.MinValue
           var k = 0
-          while (k < vals.length) { s += vals(k); k += 1 }
+          while (k < vals.length) {
+            val v = vals(k)
+            s += v
+            if (v < mn) mn = v
+            if (v > mx) mx = v
+            k += 1
+          }
           rgSums(i) = s
           val bytes = col.encoding match {
             case Plain => encodePlainInt(vals)
@@ -571,13 +648,20 @@ final class ColeFileWriter(path: String, columns: Seq[ColeColumn],
             case Dict => throw new ColeFormatException("DICTIONARY not valid for INT32")
           }
           val st = if (vals.isEmpty) PageStats(None, None, nullCount)
-            else PageStats(Some(vals.min.toLong), Some(vals.max.toLong), nullCount)
+            else PageStats(Some(mn.toLong), Some(mx.toLong), nullCount)
           (bytes, st)
         case t if isLongBacked(t) =>
           val vals = presentLongs
           var s = 0L
+          var mn = Long.MaxValue; var mx = Long.MinValue
           var k = 0
-          while (k < vals.length) { s += vals(k); k += 1 }
+          while (k < vals.length) {
+            val v = vals(k)
+            s += v
+            if (v < mn) mn = v
+            if (v > mx) mx = v
+            k += 1
+          }
           rgSums(i) = s
           val bytes = col.encoding match {
             case Plain => encodePlainLong(vals)
@@ -586,7 +670,7 @@ final class ColeFileWriter(path: String, columns: Seq[ColeColumn],
             case Dict => throw new ColeFormatException("DICTIONARY not valid for INT64")
           }
           val st = if (vals.isEmpty) PageStats(None, None, nullCount)
-            else PageStats(Some(vals.min), Some(vals.max), nullCount)
+            else PageStats(Some(mn), Some(mx), nullCount)
           (bytes, st)
         case TDouble =>
           val vals =
@@ -597,7 +681,19 @@ final class ColeFileWriter(path: String, columns: Seq[ColeColumn],
             case other => throw new ColeFormatException(s"$other not valid for DOUBLE")
           }
           val st = if (vals.isEmpty) PageStats(None, None, nullCount)
-            else PageStats(None, None, nullCount, Some(vals.min), Some(vals.max))
+            else {
+              // java.lang.Double.compare: the total order (NaN above
+              // +Infinity, -0.0 below 0.0) the stats have always used
+              var mn = vals(0); var mx = vals(0)
+              var k = 1
+              while (k < vals.length) {
+                val v = vals(k)
+                if (java.lang.Double.compare(v, mn) < 0) mn = v
+                if (java.lang.Double.compare(v, mx) > 0) mx = v
+                k += 1
+              }
+              PageStats(None, None, nullCount, Some(mn), Some(mx))
+            }
           (bytes, st)
         case TString | TBinary =>
           val vals = presentStrs

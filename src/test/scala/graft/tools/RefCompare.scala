@@ -1,17 +1,19 @@
 package graft.tools
 
 import graft.Engine
+import graft.sources.cole.{ColeFileReader, ColeIO}
 import org.apache.spark.sql.functions._
 
-/** Head-to-head vs the reference engine's own benchmark: point this at the
-  * `benchmark_data.col` its bench suite writes (1M rows) and run the same
-  * four operations through the COLE connector.
-  * `sbt "Test/runMain graft.tools.RefCompare /tmp/refbuild/benchmark_data.col"`
+/** Head-to-head vs the reference engine's own benchmark: the same four
+  * operations through the COLE connector on the in-repo
+  * `benchmark_data.col` (1M rows, the file the reference's bench suite
+  * writes), after the single-thread L0 decode rate per page encoding.
+  * `sbt "Test/runMain graft.tools.RefCompare [file]"`
   */
 object RefCompare {
   def main(args: Array[String]): Unit = {
-    val file = if (args.nonEmpty) args(0) else "/tmp/refbuild/benchmark_data.col"
-    val spark = Engine.session("local[32]")
+    val file = if (args.nonEmpty) args(0) else "benchmark_data.col"
+    val spark = Engine.session(s"local[${Runtime.getRuntime.availableProcessors}]")
     val mb = new java.io.File(file).length() / 1e6
     def df = spark.read.format("cole").load(file)
     def bench(label: String, warm: Int = 2)(f: => Any): Unit = {
@@ -23,6 +25,9 @@ object RefCompare {
       println(f"[refcmp] $label%-28s ${ms}%8.1f ms  ${mb / (ms / 1000)}%8.1f MB/s")
     }
     println(f"[refcmp] file: $file ($mb%.1f MB)")
+    decodeRates(file).foreach { case (label, mbs) =>
+      println(f"[refcmp] decode $label%-21s ${mbs}%8.1f MB/s (1 thread)")
+    }
     bench("full scan (all cols)")(df.agg(sum("id"), sum("value"), sum("score"),
       count("region")).head())
     bench("filtered scan value>50000")(df.filter(col("value") > 50000)
@@ -31,6 +36,34 @@ object RefCompare {
     bench("group by region")(df.groupBy("region")
       .agg(count(lit(1)), sum("value")).head())
     spark.stop()
+  }
+
+  /** Single-thread L0 decode rate (stored MB/s) of `file`, per page
+    * encoding and for the whole file: every chunk is decoded once per pass
+    * through a fresh reader, so the reader's row-group cache never serves
+    * a repeat. Best of ten passes after two warm-up passes.
+    */
+  def decodeRates(file: String): Seq[(String, Double)] = {
+    val conf = ColeIO.driverConf()
+    val meta = { val r = new ColeFileReader(file, conf); try r.meta finally r.close() }
+    val chunks = for (g <- meta.rowGroups.indices; c <- meta.columns.indices) yield (g, c)
+    def encoding(g: Int, c: Int): String =
+      meta.rowGroups(g).chunks(c).pages.map(_.encoding.toString.toUpperCase).distinct
+        .mkString("+")
+    def rate(sel: Seq[(Int, Int)]): Double = {
+      val bytes = sel.map { case (g, c) => meta.rowGroups(g).chunks(c).totalSize }.sum
+      val ns = (1 to 12).map { _ =>
+        val r = new ColeFileReader(file, conf)
+        try {
+          val t0 = System.nanoTime()
+          sel.foreach { case (g, c) => r.readChunk(g, c) }
+          System.nanoTime() - t0
+        } finally r.close()
+      }.drop(2).min
+      bytes / 1e6 / (ns / 1e9)
+    }
+    chunks.groupBy { case (g, c) => encoding(g, c) }.toSeq.sortBy(_._1)
+      .map { case (e, sel) => e -> rate(sel) } :+ ("whole file" -> rate(chunks))
   }
 }
 
