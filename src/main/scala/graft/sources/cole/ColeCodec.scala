@@ -555,31 +555,4 @@ object ColeCodec {
     var i = 0
     while (i < numValues) { acc.add(java.lang.Double.longBitsToDouble(c.i64())); i += 1 }
   }
-
-  /** Int128 twin of [[NumAgg]] for v2 TDecimalWide chunks: values are
-    * two's-complement (hi, lo) lane pairs in the wide unscaled domain.
-    * The sum accumulates in 128 bits (unsigned-lo carry into hi); a
-    * possible 128-bit wrap is excluded at EMISSION by the
-    * count·max|value| bound (ColeAggGuards.checkWideSumBound), mirroring
-    * the int64 decimal discipline.
-    */
-  final class WideAgg {
-    var count: Long = 0L
-    var sumHi: Long = 0L
-    var sumLo: Long = 0L // unsigned lane
-    var minHi: Long = Long.MaxValue
-    var minLo: Long = -1L // +inf sentinel: largest int128
-    var maxHi: Long = Long.MinValue
-    var maxLo: Long = 0L // -inf sentinel: smallest int128
-    @inline def add(hi: Long, lo: Long): Unit = {
-      count += 1
-      val nl = sumLo + lo
-      // unsigned overflow of the lo lane carries into hi
-      if (java.lang.Long.compareUnsigned(nl, sumLo) < 0) sumHi += 1
-      sumLo = nl
-      sumHi += hi
-      if (ColeFormat.cmp128(hi, lo, minHi, minLo) < 0) { minHi = hi; minLo = lo }
-      if (ColeFormat.cmp128(hi, lo, maxHi, maxLo) > 0) { maxHi = hi; maxLo = lo }
-    }
-  }
 }

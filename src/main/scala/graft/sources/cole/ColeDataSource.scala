@@ -1134,8 +1134,8 @@ class ColeScanBuilder(fullSchema: StructType, path: String, conf: Configuration,
     }
     def sumOk(n: String): Boolean = fullSchema(n).dataType match {
       case IntegerType | LongType | DoubleType => true
-      // ≤18: unscaled-long accumulation; 19–38: the int128 two-lane
-      // WideAgg sweep — both emit Decimal partials, both pushed only
+      // ≤18: unscaled-long accumulation; 19–38: the int128 [hi,lo]
+      // lane sweep — both emit Decimal partials, both pushed only
       // when footer stats PROVE every partial fits DecimalType(p, s)
       case dt: DecimalType if dt.precision <= 38 => decimalSumFits(n, dt)
       case _ => false
@@ -1234,1311 +1234,6 @@ class ColeScanBuilder(fullSchema: StructType, path: String, conf: Configuration,
         pushed.flatMap(ColePredicate.fromFilter), partCols, snapshot)
     else new ColeScan(fullSchema, required, path, conf, pushed, limit, topN, partCols,
       skipOnly, snapshot)
-}
-
-private[cole] object ColeAggGuards {
-  /** Decimal SUM pushdown accumulates UNSCALED values in an int64; a
-    * silent wrap would return a plausible-looking wrong answer where
-    * Spark's native decimal sum (p+10 digits) is right. O(1) emission
-    * check: |sum| ≤ count · max(|min|,|max|), so if that bound cannot
-    * exceed Long.MaxValue the accumulated sum is exact; otherwise fail
-    * LOUDLY with the fix (smaller partitions/row groups bound count).
-    * count·maxAbs overflowing int64 does not imply the sum did — signs
-    * cancel — but at that magnitude exactness is unprovable, and a scan
-    * that might be wrong must not answer.
-    */
-  def checkDecimalSumBound(count: Long, min: Long, max: Long): Unit = {
-    if (count <= 0) return
-    val maxAbs = math.max(math.abs(math.max(min, -Long.MaxValue)),
-      math.abs(math.max(max, -Long.MaxValue)))
-    if (maxAbs > 0 && count > Long.MaxValue / maxAbs)
-      throw new ColeFormatException(
-        s"pushed DECIMAL SUM may exceed int64 in the unscaled domain " +
-          s"($count values up to unscaled |$maxAbs|): reduce " +
-          "spark.sql.files.maxPartitionBytes (or the writer rowGroupSize) " +
-          "so each partial covers fewer rows, or aggregate without pushdown")
-  }
-
-  /** Wide twin: the int128 sum accumulator must provably fit both 128
-    * bits (no silent lane wrap) and the partial's DecimalType(sumPrec, s)
-    * — |sum| ≤ count · max(|min|,|max|) < 10^sumPrec covers both, since
-    * 10^38 < 2^127. Exact O(1) BigInteger arithmetic at emission only.
-    */
-  def checkWideSumBound(count: Long, minHi: Long, minLo: Long,
-      maxHi: Long, maxLo: Long, sumPrec: Int): Unit = {
-    if (count <= 0) return
-    val mn = ColeFormat.wideToBigInteger(minHi, minLo).abs
-    val mx = ColeFormat.wideToBigInteger(maxHi, maxLo).abs
-    val bound = mn.max(mx).multiply(java.math.BigInteger.valueOf(count))
-    if (bound.compareTo(java.math.BigInteger.TEN.pow(sumPrec)) >= 0)
-      throw new ColeFormatException(
-        s"pushed wide-DECIMAL SUM may exceed DECIMAL($sumPrec) in the " +
-          s"unscaled domain ($count values up to unscaled |${mn.max(mx)}|): " +
-          "reduce spark.sql.files.maxPartitionBytes (or the writer " +
-          "rowGroupSize) so each partial covers fewer rows, or aggregate " +
-          "without pushdown")
-  }
-}
-
-/** One pushed aggregate: kind ∈ {count_star, count, min, max, sum};
-  * column is null for count_star. Resolved to a file column index at read
-  * time (part files may order columns differently).
-  */
-final case class ColeAggSpec(kind: String, column: String)
-
-/** Plans an unfiltered, ungrouped, vector-free aggregate entirely from
-  * the driver's cached footers: counts from row/null counts, min/max
-  * from page stats, SUM from the v2 SUMS footer tail (wrapped per-chunk
-  * sums — Long addition is associative mod 2^64, so the fold is
-  * bit-identical to the page sweep in any order). The query then ships
-  * ONE task carrying the finished partials: zero data files opened,
-  * zero pages decoded, O(row groups) driver work over metadata the
-  * planner already cached. None when any agg needs evidence footers
-  * can't give (string min/max, double/wide sums, a pre-extension file,
-  * a decimal bound that can't prove exactness) — the partitioned sweep
-  * remains the fallback.
-  */
-private[graft] object ColeAggFold {
-  /** Spec-visible: plans answered without scheduling a sweep. */
-  val foldedPlans = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Test seam for the fold-vs-sweep differential spec: when set, tryFold
-    * declines every shape so the partitioned sweep answers the same query
-    * and the two row sets can be compared exactly. Never set in
-    * production paths.
-    */
-  @volatile private[graft] var disableForTest: Boolean = false
-
-  def tryFold(survivors: Seq[ColeMetaCache.FileInfo],
-      aggs: Seq[ColeAggSpec]): Option[Array[Any]] = {
-    if (disableForTest) return None
-    if (survivors.isEmpty)
-      return Some(aggs.map {
-        case ColeAggSpec("count_star" | "count", _) => 0L
-        case _ => null
-      }.toArray[Any])
-    val head = survivors.head.meta
-    val out = new Array[Any](aggs.length)
-    var ai = 0
-    while (ai < aggs.length) {
-      val sp = aggs(ai)
-      sp.kind match {
-        case "count_star" =>
-          out(ai) = survivors.iterator.map(_.meta.totalRows).sum
-        case "count" =>
-          var n = 0L
-          survivors.foreach { f =>
-            val ci = f.meta.columns.indexWhere(_.name == sp.column)
-            f.meta.rowGroups.indices.foreach(rg =>
-              n += f.meta.rowGroups(rg).numRows - f.meta.chunkNullCount(rg, ci))
-          }
-          out(ai) = n
-        case kind =>
-          val tpe = head.columns(head.columns.indexWhere(_.name == sp.column)).colType
-          tpe match {
-            case TString =>
-              // r17: the STRB footer tail carries EXACT per-chunk string
-              // bounds (byte-wise unsigned = UTF8String order), so string
-              // MIN/MAX folds metadata-only too; any chunk without
-              // recorded bounds (pre-extension file, all-null chunk
-              // handled by present-count, over-cap extreme) falls back
-              if (kind == "sum") return None
-              var pres = 0L
-              var mn: Array[Byte] = null
-              var mx: Array[Byte] = null
-              def cmp(a: Array[Byte], b: Array[Byte]): Int = {
-                val n = math.min(a.length, b.length)
-                var i = 0
-                while (i < n) {
-                  val dd = (a(i) & 0xff) - (b(i) & 0xff)
-                  if (dd != 0) return dd
-                  i += 1
-                }
-                a.length - b.length
-              }
-              survivors.foreach { f =>
-                val ci = f.meta.columns.indexWhere(_.name == sp.column)
-                f.meta.rowGroups.indices.foreach { rg =>
-                  val p = f.meta.rowGroups(rg).numRows - f.meta.chunkNullCount(rg, ci)
-                  if (p > 0) f.meta.statsMinMaxS(rg, ci) match {
-                    case Some((lo, hi)) =>
-                      pres += p
-                      if (mn == null || cmp(lo, mn) < 0) mn = lo
-                      if (mx == null || cmp(hi, mx) > 0) mx = hi
-                    case None => return None
-                  }
-                }
-              }
-              out(ai) =
-                if (pres == 0) null
-                else org.apache.spark.unsafe.types.UTF8String.fromBytes(
-                  if (kind == "min") mn else mx)
-            case TDouble =>
-              if (kind == "sum") return None // float addition is order-sensitive
-              var pres = 0L
-              var mn = Double.MaxValue
-              var mx = Double.MinValue
-              survivors.foreach { f =>
-                val ci = f.meta.columns.indexWhere(_.name == sp.column)
-                f.meta.rowGroups.indices.foreach { rg =>
-                  val p = f.meta.rowGroups(rg).numRows - f.meta.chunkNullCount(rg, ci)
-                  if (p > 0) f.meta.statsMinMaxD(rg, ci) match {
-                    case Some((lo, hi)) =>
-                      pres += p
-                      if (lo < mn) mn = lo
-                      if (hi > mx) mx = hi
-                    case None => return None
-                  }
-                }
-              }
-              out(ai) = if (pres == 0) null else if (kind == "min") mn else mx
-            case w: TDecimalWide =>
-              if (kind == "sum") return None // int128 sums need the page sweep
-              var pres = 0L
-              var mnHi = 0L; var mnLo = 0L; var mxHi = 0L; var mxLo = 0L
-              survivors.foreach { f =>
-                val ci = f.meta.columns.indexWhere(_.name == sp.column)
-                f.meta.rowGroups.indices.foreach { rg =>
-                  val p = f.meta.rowGroups(rg).numRows - f.meta.chunkNullCount(rg, ci)
-                  if (p > 0) f.meta.statsMinMaxW(rg, ci) match {
-                    case Some(((loHi, loLo), (hiHi, hiLo))) =>
-                      if (pres == 0) {
-                        mnHi = loHi; mnLo = loLo; mxHi = hiHi; mxLo = hiLo
-                      } else {
-                        if (ColeFormat.cmp128(loHi, loLo, mnHi, mnLo) < 0) {
-                          mnHi = loHi; mnLo = loLo
-                        }
-                        if (ColeFormat.cmp128(hiHi, hiLo, mxHi, mxLo) > 0) {
-                          mxHi = hiHi; mxLo = hiLo
-                        }
-                      }
-                      pres += p
-                    case None => return None
-                  }
-                }
-              }
-              out(ai) =
-                if (pres == 0) null
-                else {
-                  val (hi, lo) = if (kind == "min") (mnHi, mnLo) else (mxHi, mxLo)
-                  org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(
-                    ColeFormat.wideToBigInteger(hi, lo), w.scale), w.precision, w.scale)
-                }
-            case _ => // TInt32 / long-backed (incl. narrow decimal, timestamps)
-              var pres = 0L
-              var sum = 0L
-              var mn = Long.MaxValue
-              var mx = Long.MinValue
-              survivors.foreach { f =>
-                val ci = f.meta.columns.indexWhere(_.name == sp.column)
-                val sums = if (kind == "sum") {
-                  val s = f.meta.chunkSums.get(ci)
-                  if (s.isEmpty) return None // file predates the SUMS tail
-                  s.get
-                } else null
-                f.meta.rowGroups.indices.foreach { rg =>
-                  val p = f.meta.rowGroups(rg).numRows - f.meta.chunkNullCount(rg, ci)
-                  if (p > 0) {
-                    f.meta.statsMinMax(rg, ci) match {
-                      case Some((lo, hi)) =>
-                        if (lo < mn) mn = lo
-                        if (hi > mx) mx = hi
-                      case None => return None
-                    }
-                    if (kind == "sum") sum += sums(rg)
-                    pres += p
-                  }
-                }
-              }
-              out(ai) =
-                if (pres == 0) null
-                else (tpe, kind) match {
-                  case (TDecimal(p, sc), "sum") =>
-                    // the emission guard, non-throwing: a table-wide
-                    // bound that can't prove exactness falls back to the
-                    // partitioned sweep (whose per-partition bounds are
-                    // tighter), never refuses a query the sweep serves
-                    val maxAbs = math.max(math.abs(math.max(mn, -Long.MaxValue)),
-                      math.abs(math.max(mx, -Long.MaxValue)))
-                    if (maxAbs > 0 && pres > Long.MaxValue / maxAbs) return None
-                    org.apache.spark.sql.types.Decimal.createUnsafe(
-                      sum, math.min(38, p + 10), sc)
-                  case (TDecimal(p, sc), _) =>
-                    org.apache.spark.sql.types.Decimal.createUnsafe(
-                      if (kind == "min") mn else mx, p, sc)
-                  case (TInt32, "min") => mn.toInt
-                  case (TInt32, "max") => mx.toInt
-                  case (_, "sum") => sum
-                  case (_, "min") => mn
-                  case (_, "max") => mx
-                  case _ => return None // unknown kind: never fold
-                }
-          }
-      }
-      ai += 1
-    }
-    Some(out)
-  }
-}
-
-/** The single partition of a metadata-folded global aggregate: carries
-  * the finished partial values computed at planning (Long/Int/Double/
-  * Decimal/null — all serializable).
-  */
-final case class ColeFoldedAggPartition(values: Array[Any]) extends InputPartition
-
-class ColeFoldedAggReader(part: ColeFoldedAggPartition)
-    extends PartitionReader[InternalRow] {
-  private var emitted = false
-  override def next(): Boolean = !emitted
-  override def get(): InternalRow = {
-    emitted = true
-    InternalRow.fromSeq(part.values.toIndexedSeq)
-  }
-  override def close(): Unit = ()
-}
-
-/** Scan produced when an aggregation is pushed: partitions are packed
-  * row-group runs (same packing as the data scan). Ungrouped, each
-  * partition emits ONE row of partial aggregate values computed from page
-  * stats / streaming page sweeps; grouped, it emits one row per group
-  * (bounded by the 64k-group flush). Output volume is O(partitions ×
-  * groups) — at 100 TB that is the difference between shuffling 10^12
-  * rows into a hash aggregate and shuffling one row per group per
-  * ~128 MB slice.
-  */
-class ColeAggScan(path: String, conf: Configuration, groupCols: Seq[String],
-    aggs: Seq[ColeAggSpec], schema: StructType,
-    allPreds: Array[ColePredicate] = Array.empty,
-    partCols: Set[String] = Set.empty,
-    snapshot: Option[ColeSnapshot] = None)
-    extends Scan with Batch {
-
-  // Deliberately NOT SupportsReportPartitioning: the aggregate-pushdown
-  // rewrite always interposes `Project [k AS group_col_N]` between this
-  // scan and the final aggregate, and ProjectExec's alias-aware
-  // partitioning propagation only rewrites Expression-based partitionings
-  // (hash/range) — a reported KeyGroupedPartitioning would never reach the
-  // aggregate. The exchange this leaves behind carries only the pushed
-  // PARTIAL rows (≤ one per group per file), which at 100 TB is noise next
-  // to the chunk sweeps the pushdown already avoided; the row scan's SPJ
-  // report (ColeScan.outputPartitioning) covers the cases where shuffle
-  // volume actually matters.
-
-  private val hconf = new ColeHadoopConf(conf)
-
-  // partition-column predicates prune whole files at planning; only
-  // data-column predicates reach the readers' selection vectors.
-  // Claimed IsNotNull is dropped PER FILE below when the column is
-  // null-free there (keeping the metadata-only paths); null-bearing v2
-  // files enforce it row-exactly in the selection loop.
-  private val (partPreds, preds) =
-    allPreds.partition(p => partCols.contains(p.column))
-
-  // temporal layout: the same derived-ordinal pruning as the row scan —
-  // a filtered pushed aggregate over a ts range plans only touched
-  // directories (conservative; original preds stay in the data set)
-  private val temporalPreds = ColeTemporal.derivePartPreds(preds.toSeq,
-    snapshot.flatMap(_.temporalSpecs).getOrElse(ColeTemporal.readSpecs(path, conf)))
-
-  private def partitionKeeps(p: ColePredicate, raw: String): Boolean =
-    ColePredicate.partitionKeeps(p, raw)
-
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val g = if (groupCols.isEmpty) ""
-      else s", PushedGroupBy: [${groupCols.mkString(", ")}]"
-    val f = if (allPreds.isEmpty) ""
-      else s", AppliedFilters: [${allPreds.mkString(", ")}]"
-    s"ColeAggScan path=$path, PushedAggregates: [${aggs.map(a =>
-      s"${a.kind.toUpperCase}(${Option(a.column).getOrElse("*")})").mkString(", ")}]$g$f"
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val target = ColePack.targetBytes
-    // planning is metadata-only: footers come from the driver cache, no
-    // data file is opened here (snapshot reads plan the PINNED file set)
-    val infos = snapshot.map(_.infos).getOrElse(ColeMetaCache.infos(path, conf))
-    // vector mode: ship each file's deletion-vector ordinals to the
-    // readers (per row group, local ordinals — the row scan's plumbing).
-    // COUNT answers stay metadata-exact (physical rows minus vector
-    // counts, no data bytes); value sweeps mask with the vector.
-    val dvLocal: Map[String, Array[Array[Int]]] = snapshot match {
-      case Some(s) if s.dvs.nonEmpty => // pinned vectors as of the version
-        infos.flatMap(i => s.dvs.get(i.path).map(ords =>
-          i.path -> ColeDv.localize(i.meta, ords))).toMap
-      case Some(_) => Map.empty
-      case None if ColeDv.vectorModeFor(path, conf) =>
-        val (dfs, _) = ColeIO.resolve(path, conf)
-        // same foreign-file discipline as the row scan (ADVICE r13)
-        val foreign: String => Boolean =
-          if (ColeClone.read(path, conf).isEmpty) _ => false
-          else ColeClone.isForeign(path, _, conf)
-        infos.flatMap { i =>
-          if (foreign(i.path)) None
-          else ColeDv.read(dfs, i.path, i.len, i.mtime).map(ords =>
-            i.path -> ColeDv.localize(i.meta, ords))
-        }.toMap
-      case None => Map.empty
-    }
-    // a file whose vector covers every row is dead: skip it whole
-    val dvDead: Set[String] =
-      if (dvLocal.isEmpty) Set.empty
-      else infos.filter { i =>
-        dvLocal.get(i.path).exists(_.iterator.map(a =>
-          if (a == null) 0 else a.length).sum == i.meta.totalRows)
-      }.map(_.path).toSet
-    // metadata fold: an unfiltered (partition predicates still prune
-    // files, exactly), ungrouped, vector-free aggregate answers from the
-    // footer cache alone — ONE task ships the finished partials and no
-    // data file is ever opened (the v2 SUMS tail carries exact wrapped
-    // chunk sums; counts and min/max were already metadata)
-    if (groupCols.isEmpty && preds.isEmpty && dvLocal.isEmpty &&
-        snapshot.forall(_.rgKeep.isEmpty)) {
-      val survivors = infos.filter { info =>
-        val pv = info.partValues.toMap
-        partPreds.forall(p => pv.get(p.column).exists(partitionKeeps(p, _)))
-      }
-      val folded = ColeAggFold.tryFold(survivors, aggs)
-      if (folded.isDefined) {
-        ColeAggFold.foldedPlans.incrementAndGet()
-        return Array(ColeFoldedAggPartition(folded.get))
-      }
-    }
-    // bucket pruning, same as the row scan: a filtered aggregate whose
-    // claimed predicate pins the bucket column sweeps 1/n of the table,
-    // per ERA on evolved layouts (snapshots resolve the spec history as
-    // of their version)
-    val bucketKeeps: Map[String, Set[String]] = ColeBucket.keepsByEra(
-      snapshot.fold(ColeBucket.readHistory(path, conf))(_.bucketHistory),
-      preds.toSeq)
-    infos.filterNot(i => dvDead(i.path)).flatMap { info =>
-      val pv = info.partValues.toMap
-      if (ColeBucket.pruneFile(pv, bucketKeeps)) Seq.empty
-      else if (!partPreds.forall(p => pv.get(p.column).exists(partitionKeeps(p, _))))
-        Seq.empty
-      else if (!temporalPreds.forall(p =>
-          pv.get(p.column).forall(partitionKeeps(p, _)))) Seq.empty
-      else {
-        val meta = info.meta
-        val nameToIdx = meta.columns.map(_.name).zipWithIndex.toMap
-        // IsNotNull on a null-free column is vacuous for THIS file: drop
-        // it so dense files keep the preds-empty metadata/stat-only agg
-        // paths (same per-file discipline as the row scan)
-        val filePreds = preds.filter(p => !p.isNotNullClaim ||
-          nameToIdx.get(p.column).exists(meta.columnHasNulls))
-        // partition group columns are per-file constants — they need no
-        // chunk, so they never enter the projected column set
-        val colIndices = (groupCols.filterNot(partCols.contains) ++
-            aggs.flatMap(a => Option(a.column))).distinct
-          .map(nameToIdx(_)).toArray
-        val fileDv = dvLocal.get(info.path)
-        // PHYSICAL row counts (the readers need them to build selections
-        // over every stored row); the vector rides the partition and the
-        // readers subtract it — same contract as the row scan
-        val rgs = meta.rowGroups.zipWithIndex.collect {
-          case (rg, rgIdx) if rg.numRows > 0 &&
-              !ColePredicate.skipRowGroup(rg, nameToIdx, filePreds) &&
-              // advisory bloom sidecar, same as the row scan: a filtered
-              // aggregate's string point probe prunes row groups too
-              !ColeBloomIndex.skips(info.path, info.len, info.mtime, rgIdx, filePreds, conf) =>
-            (rgIdx, rg.numRows, colIndices.map(ci => rg.chunks(ci).totalSize).sum)
-        }
-        ColePack.pack(info.path, colIndices, rgs, target, filePreds,
-          info.partValues.toArray,
-          deletedOf = rg => fileDv.map(_(rg)).orNull)
-      }
-    }.toArray match {
-      // a fully-pruned (or empty) table still needs ONE partial row for a
-      // GLOBAL aggregate: Spark's rewritten final agg over zero partial
-      // rows would turn COUNT into NULL instead of 0. The empty partition
-      // emits (count=0, sum/min/max=NULL); grouped readers emit nothing.
-      case empty if empty.isEmpty && groupCols.isEmpty =>
-        // file path is never opened for an empty partition, so a table
-        // directory with ZERO .col files (external schema) is covered too
-        Array[InputPartition](ColeInputPartition(
-          infos.headOption.map(_.path).getOrElse(path),
-          Array.empty, Array.empty, Array.empty, preds))
-      case parts => parts.map(p => p: InputPartition)
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ColeAggReaderFactory(groupCols, aggs, hconf, schema, partCols)
-}
-
-class ColeAggReaderFactory(groupCols: Seq[String], aggs: Seq[ColeAggSpec],
-    hconf: ColeHadoopConf, aggSchema: StructType, partCols: Set[String])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case f: ColeFoldedAggPartition => new ColeFoldedAggReader(f)
-      case p: ColeInputPartition =>
-        if (groupCols.isEmpty) new ColeAggReader(p, aggs, hconf.value)
-        else new ColeGroupAggReader(p, groupCols, aggs, hconf.value,
-          aggSchema, partCols)
-    }
-}
-
-/** Grouped partial aggregation inside the source: per row group, decode
-  * the group + value chunks once and accumulate primitive (count, sum,
-  * min, max) slots per key; dict-encoded string keys accumulate by dict
-  * id (no per-row string materialization). The hash is flushed past 64k
-  * groups, so key cardinality can never exceed the memory of one flush
-  * window — pathological keys just emit more partial rows for Spark's
-  * final aggregate to merge.
-  */
-class ColeGroupAggReader(part: ColeInputPartition, groupCols: Seq[String],
-    aggs: Seq[ColeAggSpec], conf: Configuration, aggSchema: StructType,
-    partCols: Set[String] = Set.empty)
-    extends PartitionReader[InternalRow] {
-
-  private val FlushGroups = 1 << 16
-
-  // lazy: the metadata-only group-by path (constant keys, count-only, no
-  // filters) answers from the planner-provided row counts and never opens
-  // the data file at all
-  private var readerOpened = false
-  private lazy val reader = {
-    readerOpened = true
-    new ColeFileReader(part.file, conf)
-  }
-  private lazy val meta = reader.meta
-  private lazy val nameToIdx = meta.columns.map(_.name).zipWithIndex.toMap
-
-  /** Per group column: Left(file column index) reads chunks; Right(value)
-    * is a partition constant from the file's directory, typed by the agg
-    * schema (group fields lead it positionally).
-    */
-  private val groupSources: Array[Either[Int, Any]] =
-    groupCols.zipWithIndex.map { case (g, gi) =>
-      if (partCols.contains(g)) {
-        val raw = part.partValues.collectFirst { case (k, v) if k == g => v }
-          .getOrElse(throw new IllegalStateException(
-            s"missing partition value for '$g' in ${part.file}"))
-        Right(aggSchema.fields(gi).dataType match {
-          case IntegerType => raw.toInt
-          case LongType => raw.toLong
-          case _ => UTF8String.fromString(raw)
-        }): Either[Int, Any]
-      } else Left(nameToIdx(g)): Either[Int, Any]
-    }.toArray
-  private val fileGroupIdx: Array[Int] = groupSources.collect { case Left(i) => i }
-  // distinct value columns that need sweeps (sum/min/max), split by
-  // physical shape: numeric columns use primitive long slots, string
-  // min/max columns use byte-array slots
-  private val allValueCols: Array[Int] = aggs.collect {
-    case ColeAggSpec(k, c) if k == "sum" || k == "min" || k == "max" => nameToIdx(c)
-  }.distinct.toArray
-  private val valueCols: Array[Int] = allValueCols.filter(ci =>
-    meta.columns(ci).colType == TInt32 || isLongBacked(meta.columns(ci).colType))
-  private val dblValueCols: Array[Int] =
-    allValueCols.filter(ci => meta.columns(ci).colType == TDouble)
-  private val strValueCols: Array[Int] =
-    allValueCols.filter(ci => meta.columns(ci).colType == TString)
-  // wide decimals: int128 lane accumulators, 7 long slots per column
-  private val wideValueCols: Array[Int] =
-    allValueCols.filter(ci => isWide(meta.columns(ci).colType))
-  // COUNT(col) columns: per-group null-skipping counts, fed by validity
-  // bitmaps alone (dense chunks — footer-proven — count every row free)
-  private val cntCols: Array[Int] = aggs.collect {
-    case ColeAggSpec("count", c) => nameToIdx(c)
-  }.distinct.toArray
-  private val slotOf: Map[Int, Int] = valueCols.zipWithIndex.toMap
-  private val dblSlotOf: Map[Int, Int] = dblValueCols.zipWithIndex.toMap
-  private val strSlotOf: Map[Int, Int] = strValueCols.zipWithIndex.toMap
-  private val wideSlotOf: Map[Int, Int] = wideValueCols.zipWithIndex.toMap
-  private val cntSlotOf: Map[Int, Int] = cntCols.zipWithIndex.toMap
-  private val slotWidth = 4 // count, sum, min, max per numeric value column
-  private val DblSlotWidth = 3 // sum, min, max (counts live in dblCnt)
-  // count, sumHi, sumLo, minHi, minLo, maxHi, maxLo per wide column
-  private val WideSlotWidth = 7
-  private def newAccs(): Array[Long] = {
-    val a = new Array[Long](1 + slotWidth * valueCols.length)
-    var s = 0
-    while (s < valueCols.length) {
-      a(1 + s * slotWidth + 2) = Long.MaxValue // min
-      a(1 + s * slotWidth + 3) = Long.MinValue // max
-      s += 1
-    }
-    a
-  }
-  private def newDblAccs(): Array[Double] = {
-    val a = new Array[Double](DblSlotWidth * dblValueCols.length)
-    var s = 0
-    while (s < dblValueCols.length) {
-      a(s * DblSlotWidth + 1) = Double.PositiveInfinity // min
-      a(s * DblSlotWidth + 2) = Double.NegativeInfinity // max
-      s += 1
-    }
-    a
-  }
-  private def newWideAccs(): Array[Long] = {
-    val a = new Array[Long](WideSlotWidth * wideValueCols.length)
-    var s = 0
-    while (s < wideValueCols.length) {
-      val b = s * WideSlotWidth
-      a(b + 3) = Long.MaxValue; a(b + 4) = -1L // min = +inf (largest int128)
-      a(b + 5) = Long.MinValue; a(b + 6) = 0L // max = -inf (smallest int128)
-      s += 1
-    }
-    a
-  }
-
-  /** Per-key accumulator: primitive slots for numeric aggregates (with a
-    * non-null count per column so all-NULL groups emit NULL), double
-    * slots for v2 double aggregates, (min, max) byte slots per string
-    * min/max column, and per-column COUNT(col) slots.
-    */
-  private final class Acc {
-    val num: Array[Long] = newAccs()
-    val dbl: Array[Double] = if (dblValueCols.isEmpty) null else newDblAccs()
-    val dblCnt: Array[Long] =
-      if (dblValueCols.isEmpty) null else new Array[Long](dblValueCols.length)
-    val str: Array[Array[Byte]] =
-      if (strValueCols.isEmpty) null else new Array[Array[Byte]](2 * strValueCols.length)
-    val wide: Array[Long] = if (wideValueCols.isEmpty) null else newWideAccs()
-    val cnt: Array[Long] = if (cntCols.isEmpty) null else new Array[Long](cntCols.length)
-  }
-
-  // group key -> accumulator slots; LinkedHashMap for deterministic emission
-  private val accs = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Acc]
-  private val out = scala.collection.mutable.Queue.empty[InternalRow]
-  private var rgPos = 0
-  private var done = false
-
-  @inline private def bump(a: Array[Long], slot: Int, v: Long): Unit = {
-    val base = 1 + slot * slotWidth
-    a(base) += 1 // non-null count
-    a(base + 1) += v
-    if (v < a(base + 2)) a(base + 2) = v
-    if (v > a(base + 3)) a(base + 3) = v
-  }
-
-  @inline private def bumpDbl(a: Array[Double], slot: Int, v: Double): Unit = {
-    val base = slot * DblSlotWidth
-    a(base) += v
-    if (v < a(base + 1)) a(base + 1) = v
-    if (v > a(base + 2)) a(base + 2) = v
-  }
-
-  @inline private def bumpWide(a: Array[Long], slot: Int, hi: Long, lo: Long): Unit = {
-    val b = slot * WideSlotWidth
-    a(b) += 1 // non-null count
-    val nl = a(b + 2) + lo
-    if (java.lang.Long.compareUnsigned(nl, a(b + 2)) < 0) a(b + 1) += 1
-    a(b + 2) = nl
-    a(b + 1) += hi
-    if (cmp128(hi, lo, a(b + 3), a(b + 4)) < 0) { a(b + 3) = hi; a(b + 4) = lo }
-    if (cmp128(hi, lo, a(b + 5), a(b + 6)) > 0) { a(b + 5) = hi; a(b + 6) = lo }
-  }
-
-  // unsigned byte order — Spark's and DuckDB's binary string collation
-  @inline private def bumpStr(str: Array[Array[Byte]], slot: Int, v: Array[Byte]): Unit = {
-    val b = 2 * slot
-    if (str(b) == null || java.util.Arrays.compareUnsigned(v, str(b)) < 0) str(b) = v
-    if (str(b + 1) == null || java.util.Arrays.compareUnsigned(v, str(b + 1)) > 0) str(b + 1) = v
-  }
-
-  // ---- current row group's decoded state: row groups are consumed in
-  // SliceRows slices with a flush check between slices, so the group hash
-  // is bounded by FlushGroups + SliceRows no matter how large a writer-
-  // configured rowGroupSize made the row group (a single row group of
-  // unique keys previously grew the hash without ever hitting the
-  // between-row-group flush check).
-  private val SliceRows = 8192
-  private var curActive = false
-  private var rowCursor = 0
-  private var selCur: Array[Int] = null
-  private var endCur = 0
-  private var valueDataCur: Array[ColumnData] = null
-  private var dblValueDataCur: Array[ColumnData] = null
-  private var strValueDataCur: Array[ColumnData] = null
-  private var wideValueDataCur: Array[ColumnData] = null
-  private var cntValidityCur: Array[Array[Boolean]] = null
-  private var groupDataCur: Array[ColumnData] = null
-  private var dictEntriesCur: Array[Array[Byte]] = null
-  private var dictIdsCur: Array[Int] = null
-  private var dictLocalCur: Array[Acc] = null
-
-  private def decodeRowGroup(pos: Int): Unit = {
-    val rgIdx = part.rowGroups(pos)
-    val nRows = part.rowCounts(pos)
-    // claimed filters: selection vector decides which rows accumulate;
-    // the row group's deletion-vector ordinals (if any) subtract from it
-    val selP = if (part.preds.isEmpty) null
-      else ColePredicate.buildSelection(reader, rgIdx, nRows, nameToIdx, part.preds)
-    selCur = ColeDv.applyTo(selP,
-      if (part.deleted == null) null else part.deleted(pos), nRows)
-    endCur = if (selCur == null) nRows else selCur.length
-    if (endCur == 0) return
-    valueDataCur = valueCols.map(ci => reader.readChunk(rgIdx, ci))
-    dblValueDataCur = dblValueCols.map(ci => reader.readChunk(rgIdx, ci))
-    strValueDataCur = strValueCols.map(ci => reader.readChunk(rgIdx, ci))
-    wideValueDataCur = wideValueCols.map(ci => reader.readChunk(rgIdx, ci))
-    // COUNT(col): reuse null flags from an already-decoded value chunk;
-    // otherwise validity bitmaps alone (nothing read for dense chunks)
-    cntValidityCur = cntCols.map { ci =>
-      slotOf.get(ci).map(valueDataCur(_).nulls)
-        .orElse(dblSlotOf.get(ci).map(dblValueDataCur(_).nulls))
-        .orElse(strSlotOf.get(ci).map(strValueDataCur(_).nulls))
-        .orElse(wideSlotOf.get(ci).map(wideValueDataCur(_).nulls))
-        .getOrElse(reader.chunkValidity(rgIdx, ci))
-    }
-    // dict fast path: single string FILE group column, all-DICT chunk —
-    // accumulate per dict id, then fold ids into the global key map
-    val dictView =
-      if (groupSources.length == 1 && fileGroupIdx.length == 1 &&
-          meta.columns(fileGroupIdx(0)).colType == TString)
-        reader.readStringChunkDict(rgIdx, fileGroupIdx(0))
-      else null
-    if (dictView != null) {
-      dictEntriesCur = dictView._1
-      dictIdsCur = dictView._2
-      dictLocalCur = Array.fill(dictEntriesCur.length)(null: Acc)
-    } else {
-      groupDataCur = fileGroupIdx.map(ci => reader.readChunk(rgIdx, ci))
-    }
-    rowCursor = 0
-    curActive = true
-  }
-
-  private def processSlice(): Unit = {
-    val end = math.min(rowCursor + SliceRows, endCur)
-    if (dictLocalCur != null) {
-      var i = rowCursor
-      while (i < end) {
-        val r = if (selCur == null) i else selCur(i)
-        val id = dictIdsCur(r)
-        var a = dictLocalCur(id)
-        if (a == null) { a = new Acc; dictLocalCur(id) = a }
-        accumulate(a, r)
-        i += 1
-      }
-    } else {
-      var i = rowCursor
-      while (i < end) {
-        val r = if (selCur == null) i else selCur(i)
-        val key = new Array[Any](groupSources.length)
-        var gi = 0
-        var fi = 0
-        while (gi < groupSources.length) {
-          groupSources(gi) match {
-            case Right(const) => key(gi) = const
-            case Left(_) =>
-              val cd = groupDataCur(fi); fi += 1
-              key(gi) =
-                if (cd.nulls != null && cd.nulls(r)) null // NULL group key
-                else if (cd.ints != null) cd.ints(r)
-                else if (cd.longs != null) cd.longs(r)
-                else if (cd.doubles != null) cd.doubles(r)
-                else UTF8String.fromBytes(cd.strings(r))
-          }
-          gi += 1
-        }
-        accumulate(accs.getOrElseUpdate(key.toSeq, new Acc), r)
-        i += 1
-      }
-    }
-    rowCursor = end
-    if (rowCursor >= endCur) finishRowGroup()
-  }
-
-  @inline private def accumulate(a: Acc, r: Int): Unit = {
-    a.num(0) += 1
-    var s = 0
-    while (s < valueCols.length) {
-      val cd = valueDataCur(s)
-      if (cd.nulls == null || !cd.nulls(r))
-        bump(a.num, s, if (cd.ints != null) cd.ints(r).toLong else cd.longs(r))
-      s += 1
-    }
-    s = 0
-    while (s < dblValueCols.length) {
-      val cd = dblValueDataCur(s)
-      if (cd.nulls == null || !cd.nulls(r)) {
-        a.dblCnt(s) += 1
-        bumpDbl(a.dbl, s, cd.doubles(r))
-      }
-      s += 1
-    }
-    s = 0
-    while (s < strValueCols.length) {
-      val v = strValueDataCur(s).strings(r)
-      if (v != null) bumpStr(a.str, s, v) // expanded arrays: null slot = NULL row
-      s += 1
-    }
-    s = 0
-    while (s < wideValueCols.length) {
-      val cd = wideValueDataCur(s)
-      if (cd.nulls == null || !cd.nulls(r))
-        bumpWide(a.wide, s, cd.wides(2 * r), cd.wides(2 * r + 1))
-      s += 1
-    }
-    s = 0
-    while (s < cntCols.length) {
-      val nulls = cntValidityCur(s)
-      if (nulls == null || !nulls(r)) a.cnt(s) += 1
-      s += 1
-    }
-  }
-
-  private def finishRowGroup(): Unit = {
-    if (dictLocalCur != null) {
-      // per-id partials fold into the global key map once per row group
-      // (ids are chunk-local); a mid-group flush just means Spark's final
-      // aggregate merges one more partial row per key
-      var id = 0
-      while (id < dictEntriesCur.length) {
-        val a = dictLocalCur(id)
-        if (a != null) {
-          val key = Seq[Any](UTF8String.fromBytes(dictEntriesCur(id)))
-          accs.get(key) match {
-            case Some(g) => merge(g, a)
-            case None => accs.put(key, a)
-          }
-        }
-        id += 1
-      }
-    }
-    curActive = false
-    selCur = null; valueDataCur = null; dblValueDataCur = null
-    strValueDataCur = null; wideValueDataCur = null
-    cntValidityCur = null; groupDataCur = null
-    dictEntriesCur = null; dictIdsCur = null; dictLocalCur = null
-  }
-
-  private def merge(into: Acc, from: Acc): Unit = {
-    into.num(0) += from.num(0)
-    var s = 0
-    while (s < valueCols.length) {
-      val b = 1 + s * slotWidth
-      into.num(b) += from.num(b) // non-null count
-      into.num(b + 1) += from.num(b + 1) // sum
-      if (from.num(b + 2) < into.num(b + 2)) into.num(b + 2) = from.num(b + 2)
-      if (from.num(b + 3) > into.num(b + 3)) into.num(b + 3) = from.num(b + 3)
-      s += 1
-    }
-    s = 0
-    while (s < dblValueCols.length) {
-      val b = s * DblSlotWidth
-      into.dblCnt(s) += from.dblCnt(s)
-      into.dbl(b) += from.dbl(b)
-      if (from.dbl(b + 1) < into.dbl(b + 1)) into.dbl(b + 1) = from.dbl(b + 1)
-      if (from.dbl(b + 2) > into.dbl(b + 2)) into.dbl(b + 2) = from.dbl(b + 2)
-      s += 1
-    }
-    s = 0
-    while (s < strValueCols.length) {
-      if (from.str(2 * s) != null) bumpStr(into.str, s, from.str(2 * s))
-      if (from.str(2 * s + 1) != null) bumpStr(into.str, s, from.str(2 * s + 1))
-      s += 1
-    }
-    s = 0
-    while (s < wideValueCols.length) {
-      val b = s * WideSlotWidth
-      into.wide(b) += from.wide(b) // non-null count
-      val nl = into.wide(b + 2) + from.wide(b + 2) // 128-bit sum merge
-      if (java.lang.Long.compareUnsigned(nl, into.wide(b + 2)) < 0)
-        into.wide(b + 1) += 1
-      into.wide(b + 2) = nl
-      into.wide(b + 1) += from.wide(b + 1)
-      if (cmp128(from.wide(b + 3), from.wide(b + 4),
-          into.wide(b + 3), into.wide(b + 4)) < 0) {
-        into.wide(b + 3) = from.wide(b + 3); into.wide(b + 4) = from.wide(b + 4)
-      }
-      if (cmp128(from.wide(b + 5), from.wide(b + 6),
-          into.wide(b + 5), into.wide(b + 6)) > 0) {
-        into.wide(b + 5) = from.wide(b + 5); into.wide(b + 6) = from.wide(b + 6)
-      }
-      s += 1
-    }
-    s = 0
-    while (s < cntCols.length) { into.cnt(s) += from.cnt(s); s += 1 }
-  }
-
-  private def flush(): Unit = {
-    accs.foreach { case (key, a) =>
-      val vals: Seq[Any] = key ++ aggs.map { sp =>
-        lazy val ci = nameToIdx(sp.column) // lazy: null column for count_star
-        lazy val base = 1 + slotOf(ci) * slotWidth
-        lazy val isInt32 = meta.columns(ci).colType == TInt32
-        sp.kind match {
-          case "count_star" => a.num(0)
-          case "count" => a.cnt(cntSlotOf(ci))
-          case kind if meta.columns(ci).colType == TString =>
-            val b = a.str(2 * strSlotOf(ci) + (if (kind == "min") 0 else 1))
-            if (b == null) null else UTF8String.fromBytes(b)
-          case kind if meta.columns(ci).colType == TDouble =>
-            // zero non-null values in the group: NULL, like Spark's buffers
-            if (a.dblCnt(dblSlotOf(ci)) == 0) null
-            else {
-              val b = dblSlotOf(ci) * DblSlotWidth
-              kind match {
-                case "sum" => a.dbl(b)
-                case "min" => a.dbl(b + 1)
-                case "max" => a.dbl(b + 2)
-              }
-            }
-          case kind if isWide(meta.columns(ci).colType) =>
-            val b = wideSlotOf(ci) * WideSlotWidth
-            if (a.wide(b) == 0) null // all-NULL group
-            else {
-              val (p, sc) = meta.columns(ci).colType match {
-                case TDecimalWide(p0, s0) => (p0, s0)
-                case t => throw new IllegalStateException(s"not wide: $t")
-              }
-              val prec = if (kind == "sum") math.min(38, p + 10) else p
-              val bi = kind match {
-                case "sum" =>
-                  // final aggregate casts partials back to (p, s)
-                  ColeAggGuards.checkWideSumBound(a.wide(b), a.wide(b + 3),
-                    a.wide(b + 4), a.wide(b + 5), a.wide(b + 6), p)
-                  ColeFormat.wideToBigInteger(a.wide(b + 1), a.wide(b + 2))
-                case "min" =>
-                  ColeFormat.wideToBigInteger(a.wide(b + 3), a.wide(b + 4))
-                case "max" =>
-                  ColeFormat.wideToBigInteger(a.wide(b + 5), a.wide(b + 6))
-              }
-              org.apache.spark.sql.types.Decimal(
-                new java.math.BigDecimal(bi, sc), prec, sc)
-            }
-          case kind =>
-            if (a.num(base) == 0) null // all-NULL group
-            else {
-              val raw = kind match {
-                case "sum" => a.num(base + 1)
-                case "min" => a.num(base + 2)
-                case "max" => a.num(base + 3)
-              }
-              meta.columns(ci).colType match {
-                // decimal sweeps run in the unscaled domain; the partial
-                // row re-wraps (sum carries +10 digits of headroom)
-                case TDecimal(p, sc) =>
-                  if (kind == "sum")
-                    ColeAggGuards.checkDecimalSumBound(a.num(base),
-                      a.num(base + 2), a.num(base + 3))
-                  val prec = if (kind == "sum") math.min(38, p + 10) else p
-                  org.apache.spark.sql.types.Decimal.createUnsafe(raw, prec, sc)
-                case TInt32 if kind != "sum" => raw.toInt
-                case _ => raw
-              }
-            }
-        }
-      }
-      out.enqueue(InternalRow.fromSeq(vals))
-    }
-    accs.clear()
-  }
-
-  override def next(): Boolean = {
-    // metadata-only group-by: every group key is a partition constant,
-    // only counts are requested, and no filter is claimed — the partial
-    // row comes from footer row counts without reading a single chunk
-    // (COUNT(col) additionally reads the footer's nullCounts, still no
-    // chunk bytes)
-    if (fileGroupIdx.isEmpty && valueCols.isEmpty && dblValueCols.isEmpty &&
-        strValueCols.isEmpty && wideValueCols.isEmpty && part.preds.isEmpty &&
-        part.deleted == null) { // DV partitions sweep: footer counts are physical
-      if (!done) {
-        done = true
-        val a = new Acc
-        a.num(0) = part.rowCounts.map(_.toLong).sum
-        var s = 0
-        while (s < cntCols.length) {
-          var n = 0L
-          var i = 0
-          while (i < part.rowGroups.length) {
-            n += part.rowCounts(i) - meta.chunkNullCount(part.rowGroups(i), cntCols(s))
-            i += 1
-          }
-          a.cnt(s) = n
-          s += 1
-        }
-        if (a.num(0) > 0) {
-          accs.put(groupSources.map(_.toOption.get).toSeq, a)
-          flush()
-        }
-      }
-      return out.nonEmpty
-    }
-    while (out.isEmpty && !done) {
-      if (curActive) {
-        processSlice()
-        if (accs.size > FlushGroups) flush()
-      } else if (rgPos < part.rowGroups.length) {
-        decodeRowGroup(rgPos)
-        rgPos += 1
-      } else {
-        flush()
-        done = true
-      }
-    }
-    out.nonEmpty
-  }
-
-  override def get(): InternalRow = out.dequeue()
-
-  override def close(): Unit = if (readerOpened) reader.close()
-}
-
-class ColeAggReader(part: ColeInputPartition, aggs: Seq[ColeAggSpec],
-    conf: Configuration) extends PartitionReader[InternalRow] {
-
-  private var emitted = false
-
-  override def next(): Boolean = !emitted
-
-  override def get(): InternalRow = {
-    emitted = true
-    // the empty-table/fully-pruned partial row needs no file access:
-    // counts are 0 and value aggregates are NULL
-    if (part.rowGroups.isEmpty)
-      return InternalRow.fromSeq(aggs.map {
-        case ColeAggSpec("count_star" | "count", _) => 0L
-        case _ => null
-      })
-    val reader = new ColeFileReader(part.file, conf)
-    try {
-      val meta = reader.meta
-      val nameToIdx = meta.columns.map(_.name).zipWithIndex.toMap
-      val accs = scala.collection.mutable.Map.empty[Int, ColeCodec.NumAgg]
-      val dblAccs = scala.collection.mutable.Map.empty[Int, ColeCodec.DblAgg]
-      val wideAccs = scala.collection.mutable.Map.empty[Int, ColeCodec.WideAgg]
-      // string min/max accumulators: value = Array(minBytes, maxBytes),
-      // unsigned byte order (Spark's and DuckDB's binary string collation)
-      val strAccs = scala.collection.mutable.Map.empty[Int, Array[Array[Byte]]]
-      def isStrCol(ci: Int): Boolean = meta.columns(ci).colType == TString
-      def isDblCol(ci: Int): Boolean = meta.columns(ci).colType == TDouble
-      def isWideCol(ci: Int): Boolean =
-        meta.columns(ci).colType.isInstanceOf[TDecimalWide]
-      def bumpStr(mm: Array[Array[Byte]], v: Array[Byte]): Unit = {
-        if (mm(0) == null || java.util.Arrays.compareUnsigned(v, mm(0)) < 0) mm(0) = v
-        if (mm(1) == null || java.util.Arrays.compareUnsigned(v, mm(1)) > 0) mm(1) = v
-      }
-      var totalRows = 0L
-      // per-column null-skipping counts for COUNT(col): unfiltered they
-      // come from footer nullCounts alone (metadata-only); filtered, from
-      // validity bitmaps over the selection
-      val cntAccs = scala.collection.mutable.Map.empty[Int, Long]
-      val cntCols = aggs.collect { case ColeAggSpec("count", c) => nameToIdx(c) }.distinct
-
-      // footer/stat fast paths require BOTH no claimed filters and no
-      // deletion vector in the partition: footer counts/nullCounts and
-      // page stats describe PHYSICAL rows — a stat min/max could name a
-      // deleted row's value. DV-bearing partitions take the masked-sweep
-      // branch below (the vector rides `part.deleted`).
-      if (part.preds.isEmpty && part.deleted == null) {
-        totalRows = part.rowCounts.map(_.toLong).sum
-        cntCols.foreach { ci =>
-          var n = 0L
-          var i = 0
-          while (i < part.rowGroups.length) {
-            val rgIdx = part.rowGroups(i)
-            n += meta.rowGroups(rgIdx).numRows - meta.chunkNullCount(rgIdx, ci)
-            i += 1
-          }
-          cntAccs(ci) = n
-        }
-        // per referenced column: one merged accumulator across the
-        // partition's row groups; sweep pages only if some agg needs a
-        // sum or a row group lacks stats — otherwise stats alone answer
-        // min/max
-        val needSum = aggs.collect { case ColeAggSpec("sum", c) => nameToIdx(c) }.toSet
-        def fill(ci: Int): ColeCodec.NumAgg = {
-          val a = new ColeCodec.NumAgg
-          var i = 0
-          while (i < part.rowGroups.length) {
-            val rgIdx = part.rowGroups(i)
-            if (needSum(ci)) {
-              // the v2 SUMS footer tail + page stats reproduce the
-              // sweep's exact (wrapped) accumulation without touching a
-              // page; any gap (pre-extension file, stat-less page) falls
-              // back to the sweep
-              val pres = meta.rowGroups(rgIdx).numRows -
-                meta.chunkNullCount(rgIdx, ci)
-              val fast = meta.chunkSum(rgIdx, ci) match {
-                case Some(_) if pres == 0 => true // all-null chunk
-                case Some(s) => reader.statsMinMax(rgIdx, ci) match {
-                  case Some((mn, mx)) =>
-                    a.sum += s; a.count += pres
-                    if (mn < a.min) a.min = mn
-                    if (mx > a.max) a.max = mx
-                    true
-                  case None => false
-                }
-                case None => false
-              }
-              if (!fast) {
-                val rg = reader.aggChunk(rgIdx, ci)
-                a.sum += rg.sum; a.count += rg.count
-                if (rg.min < a.min) a.min = rg.min
-                if (rg.max > a.max) a.max = rg.max
-              }
-            } else reader.statsMinMax(rgIdx, ci) match {
-              case Some((mn, mx)) =>
-                // stats describe present rows only — count them, so an
-                // all-null partition still yields NULL min/max
-                a.count += meta.rowGroups(rgIdx).numRows - meta.chunkNullCount(rgIdx, ci)
-                if (mn < a.min) a.min = mn
-                if (mx > a.max) a.max = mx
-              case None =>
-                val rg = reader.aggChunk(rgIdx, ci)
-                a.count += rg.count
-                if (rg.min < a.min) a.min = rg.min
-                if (rg.max > a.max) a.max = rg.max
-            }
-            i += 1
-          }
-          a
-        }
-        // string min/max: dictionary chunks answer from the ENTRY table
-        // alone (every entry appears in the chunk by construction — the
-        // writer builds the dictionary from the chunk's values), so a
-        // low-cardinality column aggregates in O(distinct), not O(rows)
-        def fillStr(ci: Int): Array[Array[Byte]] = {
-          val mm = Array[Array[Byte]](null, null)
-          var i = 0
-          while (i < part.rowGroups.length) {
-            val rgIdx = part.rowGroups(i)
-            val dict = reader.readStringChunkDict(rgIdx, ci)
-            // null-bearing chunks have no dict view: the expanded string
-            // array carries null slots the sweep must skip
-            val vals = if (dict != null) dict._1 else reader.readChunk(rgIdx, ci).strings
-            var j = 0
-            while (j < vals.length) {
-              if (vals(j) != null) bumpStr(mm, vals(j))
-              j += 1
-            }
-            i += 1
-          }
-          mm
-        }
-        // v2 doubles: typed page stats answer min/max; a sum sweeps the
-        // PLAIN pages with the double accumulator
-        def fillDbl(ci: Int): ColeCodec.DblAgg = {
-          val a = new ColeCodec.DblAgg
-          var i = 0
-          while (i < part.rowGroups.length) {
-            val rgIdx = part.rowGroups(i)
-            if (needSum(ci)) {
-              val rg = reader.aggChunkDouble(rgIdx, ci)
-              a.sum += rg.sum; a.count += rg.count
-              if (rg.min < a.min) a.min = rg.min
-              if (rg.max > a.max) a.max = rg.max
-            } else meta.statsMinMaxD(rgIdx, ci) match {
-              case Some((mn, mx)) =>
-                a.count += meta.rowGroups(rgIdx).numRows - meta.chunkNullCount(rgIdx, ci)
-                if (mn < a.min) a.min = mn
-                if (mx > a.max) a.max = mx
-              case None =>
-                val rg = reader.aggChunkDouble(rgIdx, ci)
-                a.count += rg.count
-                if (rg.min < a.min) a.min = rg.min
-                if (rg.max > a.max) a.max = rg.max
-            }
-            i += 1
-          }
-          a
-        }
-        // wide decimals: (hi,lo) page stats answer min/max without
-        // touching values; a sum sweeps the interleaved lane pairs with
-        // the int128 accumulator
-        def fillWide(ci: Int): ColeCodec.WideAgg = {
-          val a = new ColeCodec.WideAgg
-          var i = 0
-          while (i < part.rowGroups.length) {
-            val rgIdx = part.rowGroups(i)
-            def sweep(): Unit = {
-              val cd = reader.readChunk(rgIdx, ci)
-              val nulls = cd.nulls
-              var r = 0
-              val n = cd.wides.length / 2
-              while (r < n) {
-                if (nulls == null || !nulls(r))
-                  a.add(cd.wides(2 * r), cd.wides(2 * r + 1))
-                r += 1
-              }
-            }
-            if (needSum(ci)) sweep()
-            else meta.statsMinMaxW(rgIdx, ci) match {
-              case Some(((mnHi, mnLo), (mxHi, mxLo))) =>
-                a.count += meta.rowGroups(rgIdx).numRows - meta.chunkNullCount(rgIdx, ci)
-                if (ColeFormat.cmp128(mnHi, mnLo, a.minHi, a.minLo) < 0) {
-                  a.minHi = mnHi; a.minLo = mnLo
-                }
-                if (ColeFormat.cmp128(mxHi, mxLo, a.maxHi, a.maxLo) > 0) {
-                  a.maxHi = mxHi; a.maxLo = mxLo
-                }
-              case None => sweep()
-            }
-            i += 1
-          }
-          a
-        }
-        // counts are answered by rowCounts alone — only sum/min/max
-        // specs touch stats or pages
-        aggs.foreach {
-          case ColeAggSpec("sum" | "min" | "max", c) =>
-            val ci = nameToIdx(c)
-            if (isStrCol(ci)) strAccs.getOrElseUpdate(ci, fillStr(ci))
-            else if (isDblCol(ci)) dblAccs.getOrElseUpdate(ci, fillDbl(ci))
-            else if (isWideCol(ci)) wideAccs.getOrElseUpdate(ci, fillWide(ci))
-            else accs.getOrElseUpdate(ci, fill(ci))
-          case _ => ()
-        }
-      } else {
-        // filtered aggregation: selection vector per row group, then a
-        // bitmap-guided sweep of each value column's decoded chunk
-        // (counts come from the selection length alone)
-        val valueCols = aggs.collect {
-          case ColeAggSpec("sum" | "min" | "max", c) => nameToIdx(c)
-        }.distinct
-        var i = 0
-        while (i < part.rowGroups.length) {
-          val rgIdx = part.rowGroups(i)
-          // selection = claimed filters (if any) minus this row group's
-          // deleted ordinals; preds-empty + DV-only yields the live-row
-          // complement, never the physical range
-          val sel0 = if (part.preds.isEmpty) null
-            else ColePredicate.buildSelection(reader, rgIdx,
-              part.rowCounts(i), nameToIdx, part.preds)
-          val sel1 = ColeDv.applyTo(sel0,
-            if (part.deleted == null) null else part.deleted(i),
-            part.rowCounts(i))
-          val sel = if (sel1 == null) Array.range(0, part.rowCounts(i)) else sel1
-          totalRows += sel.length
-          // COUNT(col) over the selection: dense chunks (footer-proven)
-          // count every selected row without touching a byte; null-bearing
-          // chunks consult validity bitmaps only (values stay encoded)
-          cntCols.foreach { ci =>
-            val prev = cntAccs.getOrElse(ci, 0L)
-            if (meta.chunkNullCount(rgIdx, ci) == 0L)
-              cntAccs(ci) = prev + sel.length
-            else {
-              val isNull = reader.chunkValidity(rgIdx, ci)
-              var n = 0L
-              var j = 0
-              while (j < sel.length) { if (!isNull(sel(j))) n += 1; j += 1 }
-              cntAccs(ci) = prev + n
-            }
-          }
-          valueCols.foreach { ci =>
-            val cd = reader.readChunk(rgIdx, ci)
-            // expanded arrays carry placeholder slots at null rows — the
-            // null flags gate every accumulation (SQL aggregates skip NULL)
-            val nulls = cd.nulls
-            if (isStrCol(ci)) {
-              val mm = strAccs.getOrElseUpdate(ci, Array[Array[Byte]](null, null))
-              var j = 0
-              while (j < sel.length) {
-                val v = cd.strings(sel(j))
-                if (v != null) bumpStr(mm, v)
-                j += 1
-              }
-            } else if (isDblCol(ci)) {
-              val a = dblAccs.getOrElseUpdate(ci, new ColeCodec.DblAgg)
-              var j = 0
-              while (j < sel.length) {
-                val r = sel(j)
-                if (nulls == null || !nulls(r)) a.add(cd.doubles(r))
-                j += 1
-              }
-            } else if (isWideCol(ci)) {
-              val a = wideAccs.getOrElseUpdate(ci, new ColeCodec.WideAgg)
-              var j = 0
-              while (j < sel.length) {
-                val r = sel(j)
-                if (nulls == null || !nulls(r))
-                  a.add(cd.wides(2 * r), cd.wides(2 * r + 1))
-                j += 1
-              }
-            } else {
-              val a = accs.getOrElseUpdate(ci, new ColeCodec.NumAgg)
-              var j = 0
-              while (j < sel.length) {
-                val r = sel(j)
-                if (nulls == null || !nulls(r))
-                  a.add(if (cd.ints != null) cd.ints(r).toLong else cd.longs(r))
-                j += 1
-              }
-            }
-          }
-          i += 1
-        }
-      }
-
-      val values: Seq[Any] = aggs.map { sp =>
-        sp.kind match {
-          case "count_star" => totalRows
-          case "count" => cntAccs.getOrElse(nameToIdx(sp.column), 0L)
-          case kind if isStrCol(nameToIdx(sp.column)) =>
-            strAccs.get(nameToIdx(sp.column)) match {
-              case Some(mm) =>
-                val b = if (kind == "min") mm(0) else mm(1)
-                if (b == null) null else UTF8String.fromBytes(b)
-              case None => null // zero surviving rows
-            }
-          case kind if isDblCol(nameToIdx(sp.column)) =>
-            dblAccs.get(nameToIdx(sp.column)).filter(_.count > 0) match {
-              case None => null
-              case Some(a) => kind match {
-                case "sum" => a.sum
-                case "min" => a.min
-                case "max" => a.max
-              }
-            }
-          case kind if isWideCol(nameToIdx(sp.column)) =>
-            val ci = nameToIdx(sp.column)
-            wideAccs.get(ci).filter(_.count > 0) match {
-              case None => null
-              case Some(a) =>
-                val (p, sc) = meta.columns(ci).colType match {
-                  case TDecimalWide(p0, s0) => (p0, s0)
-                  case t => throw new IllegalStateException(s"not wide: $t")
-                }
-                val prec = if (kind == "sum") math.min(38, p + 10) else p
-                val bi = kind match {
-                  case "sum" =>
-                    // the final aggregate casts this partial back to
-                    // DecimalType(p, s) — guard against p, not p+10
-                    ColeAggGuards.checkWideSumBound(a.count, a.minHi, a.minLo,
-                      a.maxHi, a.maxLo, p)
-                    ColeFormat.wideToBigInteger(a.sumHi, a.sumLo)
-                  case "min" => ColeFormat.wideToBigInteger(a.minHi, a.minLo)
-                  case "max" => ColeFormat.wideToBigInteger(a.maxHi, a.maxLo)
-                }
-                org.apache.spark.sql.types.Decimal(
-                  new java.math.BigDecimal(bi, sc), prec, sc)
-            }
-          case kind =>
-            val ci = nameToIdx(sp.column)
-            accs.get(ci).filter(_.count > 0) match {
-              case None => null // zero surviving rows: NULL, like Spark's buffers
-              case Some(a) =>
-                val raw = kind match {
-                  case "sum" => a.sum
-                  case "min" => a.min
-                  case "max" => a.max
-                }
-                meta.columns(ci).colType match {
-                  case TDecimal(p, sc) =>
-                    if (kind == "sum")
-                      ColeAggGuards.checkDecimalSumBound(a.count, a.min, a.max)
-                    val prec = if (kind == "sum") math.min(38, p + 10) else p
-                    org.apache.spark.sql.types.Decimal.createUnsafe(raw, prec, sc)
-                  case TInt32 if kind != "sum" => raw.toInt
-                  case _ => raw
-                }
-            }
-        }
-      }
-      InternalRow.fromSeq(values)
-    } finally reader.close()
-  }
-
-  override def close(): Unit = ()
 }
 
 /** Numeric min/max predicate usable against page stats
@@ -3947,9 +2642,28 @@ class ColeReaderFactory(required: StructType, hconf: ColeHadoopConf)
     override def close(): Unit = ()
   }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    if (partition.asInstanceOf[ColeInputPartition].rowGroups.isEmpty) emptyReader
-    else new ColeRowReader(partition.asInstanceOf[ColeInputPartition], required, hconf.value)
+  /** Row consumers (the CDF stream, row-level DML's hashing wrapper) read
+    * the columnar batches row by row: one decoder serves both shapes. The
+    * row is the batch's reused view — a consumer that keeps it past the
+    * next `next()` copies it.
+    */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val batches = createColumnarReader(partition)
+    new PartitionReader[InternalRow] {
+      private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+      private var row: InternalRow = _
+      override def next(): Boolean = {
+        while (!rows.hasNext) {
+          if (!batches.next()) return false
+          rows = batches.get().rowIterator()
+        }
+        row = rows.next()
+        true
+      }
+      override def get(): InternalRow = row
+      override def close(): Unit = batches.close()
+    }
+  }
 
   /** Vectorized path: decode once per chunk, emit 4096-row ColumnarBatches
     * (the reference engine's batch size, include/execution.h) that
@@ -4058,53 +2772,10 @@ class ColeColumnarReader(part: ColeInputPartition, required: StructType,
         // adapts its decoded lane here (INT32→long, i64 decimal→int128)
         val cd = ColeWiden.adapt(reader.readChunk(rgIdx, ci),
           required.fields(pos).dataType)
-        if (sel == null) cd
-        else {
-          // claimed predicates never select a null row of a FILTERED
-          // column, but OTHER projected columns can still be null at
-          // surviving rows — compact their null flags alongside values
-          val n: Array[Boolean] = if (cd.nulls == null) null else {
-            val g = new Array[Boolean](sel.length)
-            var j = 0
-            while (j < sel.length) { g(j) = cd.nulls(sel(j)); j += 1 }
-            g
-          }
-          if (cd.ints != null) {
-            val g = new Array[Int](sel.length)
-            var j = 0
-            while (j < sel.length) { g(j) = cd.ints(sel(j)); j += 1 }
-            ColumnData(g, null, null, null, n)
-          } else if (cd.longs != null) {
-            val g = new Array[Long](sel.length)
-            var j = 0
-            while (j < sel.length) { g(j) = cd.longs(sel(j)); j += 1 }
-            ColumnData(null, g, null, null, n)
-          } else if (cd.doubles != null) {
-            val g = new Array[Double](sel.length)
-            var j = 0
-            while (j < sel.length) { g(j) = cd.doubles(sel(j)); j += 1 }
-            ColumnData(null, null, null, g, n)
-          } else if (cd.vecs != null) {
-            val g = new Array[Array[Float]](sel.length)
-            var j = 0
-            while (j < sel.length) { g(j) = cd.vecs(sel(j)); j += 1 }
-            ColumnData(null, null, null, null, n, g)
-          } else if (cd.wides != null) {
-            val g = new Array[Long](2 * sel.length)
-            var j = 0
-            while (j < sel.length) {
-              g(2 * j) = cd.wides(2 * sel(j))
-              g(2 * j + 1) = cd.wides(2 * sel(j) + 1)
-              j += 1
-            }
-            ColumnData(null, null, null, null, n, null, g)
-          } else {
-            val g = new Array[Array[Byte]](sel.length)
-            var j = 0
-            while (j < sel.length) { g(j) = cd.strings(sel(j)); j += 1 }
-            ColumnData(null, null, g, null, n)
-          }
-        }
+        // claimed predicates never select a null row of a FILTERED column,
+        // but OTHER projected columns can still be null at surviving rows —
+        // the gather compacts their null flags alongside values
+        if (sel == null) cd else cd.gather(sel)
       }
       }
     }: Array[AnyRef]
@@ -4264,125 +2935,6 @@ final class ColeVectorDictionary(entries: Array[Array[Byte]])
     throw new UnsupportedOperationException("COLE dictionaries are string-typed")
   override def decodeToDouble(id: Int): Double =
     throw new UnsupportedOperationException("COLE dictionaries are string-typed")
-}
-
-class ColeRowReader(part: ColeInputPartition, required: StructType,
-    conf: Configuration) extends PartitionReader[InternalRow] {
-
-  private val reader = new ColeFileReader(part.file, conf)
-  private lazy val nameToIdx = reader.meta.columns.map(_.name).zipWithIndex.toMap
-  // exists defaults (ColeDefaults): what an absent column's rows read
-  // instead of NULL — null entry = no default, the plain NULL backfill
-  private lazy val fieldDefaults: Array[Any] = ColeDefaults.rowValues(required)
-  // per-field source, one entry per required field (legacy short shape:
-  // implicit trailing constants become explicit ConstSrc — see
-  // ColeUtil.ConstSrc)
-  private val fieldSrc: Array[Int] =
-    if (part.colIndices.length >= required.length) part.colIndices
-    else part.colIndices ++ Array.fill(
-      required.length - part.colIndices.length)(ColeUtil.ConstSrc)
-  private var rgPos = -1
-  private var columns: Array[ColumnData] = _
-  private var sel: Array[Int] = _ // claimed-filter selection; null = all rows
-  private var rgRows = 0
-  private var row = 0
-
-  override def next(): Boolean = {
-    row += 1
-    while (rgPos < 0 || row >= rgRows) {
-      if (rgPos + 1 >= part.rowGroups.length) return false
-      rgPos += 1
-      ColeReaderMetrics.rowGroupsDecoded.incrementAndGet()
-      val rgIdx = part.rowGroups(rgPos)
-      val selP = if (part.preds.isEmpty) null
-        else ColePredicate.buildSelection(reader, rgIdx, part.rowCounts(rgPos),
-          nameToIdx, part.preds)
-      // deletion vectors: subtract this row group's deleted ordinals
-      sel = ColeDv.applyTo(selP,
-        if (part.deleted == null) null else part.deleted(rgPos),
-        part.rowCounts(rgPos))
-      // -1 = schema-evolution column absent from this file: NULL for every
-      // row; ConstSrc fields serve from partValues in get(); present
-      // columns adapt narrower stored lanes to the union type
-      columns = fieldSrc.zipWithIndex.map { case (ci, pos) =>
-        if (ci < 0) null
-        else ColeWiden.adapt(reader.readChunk(rgIdx, ci),
-          required.fields(pos).dataType)
-      }
-      rgRows = if (sel == null) part.rowCounts(rgPos) else sel.length
-      row = 0
-    }
-    true
-  }
-
-  // ConstSrc fields are constant per file from the directory values; the
-  // `_cole_pos` metadata column is generated per row instead (null here)
-  private val constVals: Array[Any] =
-    required.fields.zipWithIndex.map { case (f, i) =>
-      if (fieldSrc(i) != ColeUtil.ConstSrc ||
-          f.name == ColeUtil.PosMetaCol) null
-      else {
-        val raw = part.partValues.collectFirst { case (k, v) if k == f.name => v }
-          .getOrElse(throw new IllegalStateException(
-            s"missing partition value for '${f.name}' in ${part.file}"))
-        f.dataType match {
-          case IntegerType => raw.toInt
-          case LongType => raw.toLong
-          case _ => UTF8String.fromString(raw)
-        }
-      }
-    }
-  private val posIdx: Int = required.fields.indexWhere(f =>
-    f.name == ColeUtil.PosMetaCol)
-  private lazy val rgStarts: Array[Long] = {
-    val a = new Array[Long](reader.meta.rowGroups.length)
-    var acc = 0L
-    var i = 0
-    while (i < a.length) { a(i) = acc; acc += reader.meta.rowGroups(i).numRows; i += 1 }
-    a
-  }
-
-  override def get(): InternalRow = {
-    val r = if (sel == null) row else sel(row)
-    val values = new Array[Any](required.length)
-    var i = 0
-    while (i < columns.length) {
-      val c = columns(i)
-      values(i) =
-        // constant-served field (directory value; `_cole_pos` per row)
-        if (fieldSrc(i) == ColeUtil.ConstSrc) {
-          if (i == posIdx) rgStarts(part.rowGroups(rgPos)) + r
-          else constVals(i)
-        }
-        // column absent from this file (schema evolution): NULL, or the
-        // column's exists-default when the ALTER declared one
-        else if (c == null) fieldDefaults(i)
-        else if (c.nulls != null && c.nulls(r)) null
-        else if (c.ints != null) c.ints(r)
-        else if (c.longs != null) required.fields(i).dataType match {
-          // decimal chunks decode as unscaled longs — wrap at emission
-          case dt: DecimalType =>
-            org.apache.spark.sql.types.Decimal.createUnsafe(c.longs(r),
-              dt.precision, dt.scale)
-          case _ => c.longs(r)
-        }
-        else if (c.doubles != null) c.doubles(r)
-        else if (c.vecs != null)
-          org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(c.vecs(r))
-        else if (c.wides != null) {
-          val dt = required.fields(i).dataType.asInstanceOf[DecimalType]
-          org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(
-            ColeFormat.wideToBigInteger(c.wides(2 * r), c.wides(2 * r + 1)),
-            dt.scale), dt.precision, dt.scale)
-        }
-        else if (required.fields(i).dataType == BinaryType) c.strings(r)
-        else UTF8String.fromBytes(c.strings(r))
-      i += 1
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
-  }
-
-  override def close(): Unit = reader.close()
 }
 
 // ------------------------------------------------------------------ write
@@ -5097,6 +3649,7 @@ class ColePartitionedDataWriter(schema: StructType, protected val baseDir: Strin
           // safe without a copy: the sub-writer extracts the floats before
           // this method returns and the source row is reused only after
           case ArrayType(FloatType, _) => proj.update(i, record.getArray(fi))
+          case BinaryType => proj.update(i, record.getBinary(fi))
           case _ => proj.update(i, record.getUTF8String(fi))
         }
       }

@@ -349,7 +349,7 @@ object ColeDelete {
             matching.foreach(drop(_) = true)
             val keepIdx = Array.range(0, rg.numRows).filterNot(drop)
             val cols = meta.columns.indices.map(ci =>
-              takeRows(reader.readChunk(rgIdx, ci), keepIdx))
+              reader.readChunk(rgIdx, ci).gather(keepIdx))
             writer.writeRowGroup(cols, keepIdx.length, chunkEncodings(rg, cols))
             kept += keepIdx.length
             deleted += matching.length
@@ -375,28 +375,6 @@ object ColeDelete {
       if (cd.nulls != null && cd.nulls.exists(identity)) Plain
       else c.pages.headOption.map(_.encoding).getOrElse(Plain)
     }
-
-  /** Row-subset of a decoded chunk, order-preserving. */
-  private def takeRows(cd: ColumnData, keep: Array[Int]): ColumnData = {
-    def takeI(a: Array[Int]) = if (a == null) null else keep.map(a)
-    def takeL(a: Array[Long]) = if (a == null) null else keep.map(a)
-    def takeD(a: Array[Double]) = if (a == null) null else keep.map(a)
-    def takeS(a: Array[Array[Byte]]) = if (a == null) null else keep.map(a)
-    def takeV(a: Array[Array[Float]]) = if (a == null) null else keep.map(a)
-    def takeB(a: Array[Boolean]) = if (a == null) null else keep.map(a)
-    // wide decimal lanes subset in [hi,lo] PAIRS
-    def takeW(a: Array[Long]) = if (a == null) null else {
-      val out = new Array[Long](2 * keep.length)
-      var j = 0
-      while (j < keep.length) {
-        out(2 * j) = a(2 * keep(j)); out(2 * j + 1) = a(2 * keep(j) + 1)
-        j += 1
-      }
-      out
-    }
-    ColumnData(takeI(cd.ints), takeL(cd.longs), takeS(cd.strings),
-      takeD(cd.doubles), takeB(cd.nulls), takeV(cd.vecs), takeW(cd.wides))
-  }
 
   /** Merge-on-read DELETE: one task per candidate file computes the
     * matching LIVE row ordinals (claimed-predicate selection minus the

@@ -17,7 +17,56 @@ final case class ColumnData(ints: Array[Int], longs: Array[Long],
     strings: Array[Array[Byte]], doubles: Array[Double] = null,
     nulls: Array[Boolean] = null, vecs: Array[Array[Float]] = null,
     /** TDecimalWide lane: interleaved [hi,lo] i64 pairs, length 2×rows. */
-    wides: Array[Long] = null)
+    wides: Array[Long] = null) {
+
+  /** The chunk restricted to positions `rows`, in that order: one
+    * primitive loop per lane (wides in [hi,lo] pairs), null flags too.
+    */
+  def gather(rows: Array[Int]): ColumnData = {
+    val n = rows.length
+    def refs[T <: AnyRef](a: Array[T], g: Array[T]): Array[T] = {
+      var j = 0
+      while (j < n) { g(j) = a(rows(j)); j += 1 }
+      g
+    }
+    ColumnData(
+      if (ints == null) null else {
+        val g = new Array[Int](n)
+        var j = 0
+        while (j < n) { g(j) = ints(rows(j)); j += 1 }
+        g
+      },
+      if (longs == null) null else {
+        val g = new Array[Long](n)
+        var j = 0
+        while (j < n) { g(j) = longs(rows(j)); j += 1 }
+        g
+      },
+      if (strings == null) null else refs(strings, new Array[Array[Byte]](n)),
+      if (doubles == null) null else {
+        val g = new Array[Double](n)
+        var j = 0
+        while (j < n) { g(j) = doubles(rows(j)); j += 1 }
+        g
+      },
+      if (nulls == null) null else {
+        val g = new Array[Boolean](n)
+        var j = 0
+        while (j < n) { g(j) = nulls(rows(j)); j += 1 }
+        g
+      },
+      if (vecs == null) null else refs(vecs, new Array[Array[Float]](n)),
+      if (wides == null) null else {
+        val g = new Array[Long](2 * n)
+        var j = 0
+        while (j < n) {
+          g(2 * j) = wides(2 * rows(j)); g(2 * j + 1) = wides(2 * rows(j) + 1)
+          j += 1
+        }
+        g
+      })
+  }
+}
 
 /** Read-time type widening (r9): adapt a file's decoded chunk to the
   * UNION schema's wider container — INT32 values under an INT64 union

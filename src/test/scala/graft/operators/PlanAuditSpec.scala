@@ -237,7 +237,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // a row scan would print pushed=[LessThan(ledger...)] — accept both
     assert(p.contains("LessThan(ledger") || p.contains("ledger ltw"),
       s"wide decimal comparison not claimed at the scan:\n$p")
-    // r9: the int128 two-lane WideAgg sweep pushes SUM/MIN/MAX for wide
+    // r9: the int128 [hi,lo] lane sweep pushes SUM/MIN/MAX for wide
     // decimals whenever footer stats prove every partial fits DECIMAL(p)
     // (rows × max|unscaled| < 10^p — true for this ledger fixture)
     assert(p.contains("PushedAggregates"),

@@ -209,19 +209,22 @@ class ColeFooterSumSpec extends AnyFunSuite {
   test("fold vs sweep differential: the cole_agg_fold query, both paths") {
     // the REAL driver query over the REAL sf0.01 fixture — the fold path
     // and the forced page-sweep path must emit byte-identical rows, not
-    // merely each pass their own oracle (verdict r14 ask #1c)
+    // merely each pass their own oracle (verdict r14 ask #1c). The sweep
+    // is forced by the twin key's always-true claimed predicate
+    // (`l_orderkey >= 0`), which routes every row group through a decode.
     val sfDir = "/root/testdata/sf0.01"
     assume(new java.io.File(s"$sfDir/lineitem.parquet").isFile)
     val q = graft.SparkEntry.queries("cole_agg_fold")
+    val sweep = graft.SparkEntry.queries("cole_agg_fold_sweep")
     def run(): org.apache.spark.sql.Row = q(spark, sfDir).head()
     run() // fixture write + footer-cache warm outside the measured paths
     val folds0 = ColeAggFold.foldedPlans.get()
     val folded = run()
     assert(ColeAggFold.foldedPlans.get() > folds0,
       "fold did not engage on the driver query")
-    val swept =
-      try { ColeAggFold.disableForTest = true; run() }
-      finally ColeAggFold.disableForTest = false
+    val folds1 = ColeAggFold.foldedPlans.get()
+    val swept = sweep(spark, sfDir).head()
+    assert(ColeAggFold.foldedPlans.get() == folds1, "the forced sweep folded")
     assert(folded == swept,
       s"fold/sweep divergence:\n  fold:  $folded\n  sweep: $swept")
   }
@@ -247,9 +250,12 @@ class ColeFooterSumSpec extends AnyFunSuite {
     assert(ColeAggFold.foldedPlans.get() > folds0,
       "string min/max did not fold")
     assert(ColeIO.opens.get() == opens0, "fold opened a data file")
-    val swept =
-      try { ColeAggFold.disableForTest = true; q.head() }
-      finally ColeAggFold.disableForTest = false
+    // an always-true claimed predicate forces the decode of every row
+    // group (no fold, no evidence step)
+    val folds1 = ColeAggFold.foldedPlans.get()
+    val swept = spark.read.format("cole").load(t).filter(col("id") >= 0)
+      .agg(min("s").as("mn"), max("s").as("mx"), count(col("s")).as("n")).head()
+    assert(ColeAggFold.foldedPlans.get() == folds1, "the forced sweep folded")
     assert(folded == swept,
       s"string fold/sweep divergence:\n  fold:  $folded\n  sweep: $swept")
     assert(folded.getString(0) == "apple" && folded.getString(1) == "éx")

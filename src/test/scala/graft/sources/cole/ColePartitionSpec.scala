@@ -147,6 +147,80 @@ class ColePartitionSpec extends AnyFunSuite {
       s"metadata-only group-by opened ${ColeIO.opens.get() - before} files")
   }
 
+  /** Bytes read through the Hadoop `file` scheme while `f` runs. */
+  private def fileBytesRead(f: => Unit): Long = {
+    import scala.jdk.CollectionConverters._
+    def total = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    val before = total
+    f
+    total - before
+  }
+
+  /** A v2 table partitioned by `part` whose `v` holds nulls and
+    * incompressible values, and the exact per-part (sum, min, max,
+    * count(v)) the aggregate must return over `rows`.
+    */
+  private def valueTable(dir: String): Seq[(Long, Option[Long], String)] = {
+    val s = spark
+    import s.implicits._
+    val rows = (0 until 200000).map { i =>
+      (i.toLong, if (i % 17 == 0) None else Some((i.toLong * 0x9E3779B97F4A7C15L) >> 20),
+        s"q-${i % 4}")
+    }
+    rows.toDF("id", "v", "part").write.format("cole").option("formatVersion", "2")
+      .mode("overwrite").partitionBy("part").save(dir)
+    rows
+  }
+
+  private def expectedByPart(rows: Seq[(Long, Option[Long], String)])
+      : Map[String, (Long, Long, Long, Long)] =
+    rows.groupBy(_._3).map { case (k, rs) =>
+      val vs = rs.flatMap(_._2)
+      k -> ((vs.sum, vs.min, vs.max, vs.size.toLong))
+    }
+
+  private def byPart(df: org.apache.spark.sql.DataFrame): Map[String, (Long, Long, Long, Long)] = {
+    val q = df.groupBy("part").agg(sum("v"), min("v"), max("v"), count(col("v")))
+    assert(q.queryExecution.executedPlan.toString.contains("PushedGroupBy: [part]"),
+      s"group-by partition column should push:\n${q.queryExecution.executedPlan}")
+    q.collect().map(r => r.getString(0) ->
+      ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+  }
+
+  test("GROUP BY a partition column answers SUM/MIN/MAX/COUNT(v) from footers") {
+    val dir = freshDir()
+    val rows = valueTable(dir)
+    val expected = expectedByPart(rows)
+    val back = spark.read.format("cole").load(dir)
+    assert(byPart(back) === expected) // also warms the footer cache
+    // every group key is a per-file constant, so each row group is one
+    // group: row/null counts, page stats and the SUMS tail answer it and
+    // no value chunk is read
+    val valueChunkBytes = ColeIO.listPartitioned(dir, ColeIO.driverConf()).map { case (st, _) =>
+      val r = new ColeFileReader(st.getPath.toString)
+      try {
+        val ci = r.meta.columns.indexWhere(_.name == "v")
+        r.meta.rowGroups.map(_.chunks(ci).totalSize).sum
+      } finally r.close()
+    }.sum
+    var got: Map[String, (Long, Long, Long, Long)] = null
+    val read = fileBytesRead { got = byPart(back) }
+    assert(got === expected)
+    assert(read < valueChunkBytes,
+      s"read $read bytes, the value chunks alone hold $valueChunkBytes")
+  }
+
+  test("GROUP BY a partition column stays exact under a deletion vector") {
+    val wh = freshDir()
+    spark.conf.set("spark.sql.catalog.pvw", "graft.sources.cole.ColeCatalog")
+    spark.conf.set("spark.sql.catalog.pvw.warehouse", wh)
+    val rows = valueTable(s"$wh/db/t")
+    spark.sql("CALL pvw.system.delete_mode('db.t', 'vector')")
+    spark.sql("DELETE FROM pvw.db.t WHERE id % 5 = 2")
+    assert(byPart(spark.table("pvw.db.t")) === expectedByPart(rows.filter(_._1 % 5 != 2)))
+  }
+
   test("append mode adds part files without clobbering existing data") {
     val s = spark
     import s.implicits._
