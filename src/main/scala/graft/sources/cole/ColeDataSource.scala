@@ -2678,28 +2678,17 @@ class ColeReaderFactory(required: StructType, hconf: ColeHadoopConf)
       hconf.value)
 }
 
-object ColeColumnarReader {
-  /** loadRowGroup marker for a ConstSrc field: get() serves it as a
-    * constant vector from the file's partition values / metadata.
-    */
-  private[cole] object ConstCol
-}
-
 class ColeColumnarReader(part: ColeInputPartition, required: StructType,
     conf: Configuration)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   /** Reference vectorized batch size (include/execution.h: kBatchSize). */
   private val BatchSize = 4096
 
   private val reader = new ColeFileReader(part.file, conf)
   private lazy val nameToIdx = reader.meta.columns.map(_.name).zipWithIndex.toMap
-  // exists defaults (ColeDefaults): what an absent column's rows read
-  // instead of NULL — null entry = no default, the plain NULL backfill
-  private lazy val fieldDefaults: Array[Any] = ColeDefaults.rowValues(required)
   // per-field source, normalized to one entry per required field: the
   // legacy short shape's implicit trailing constants become explicit
   // ConstSrc entries, so constant-served fields may sit at ANY position
@@ -2709,17 +2698,34 @@ class ColeColumnarReader(part: ColeInputPartition, required: StructType,
     if (part.colIndices.length >= required.length) part.colIndices
     else part.colIndices ++ Array.fill(
       required.length - part.colIndices.length)(ColeUtil.ConstSrc)
+  // fields constant across the file, built once: partition values from
+  // the directory, and columns absent from this file (schema evolution)
+  // as NULL or the exists-default the ALTER declared (ColeDefaults)
+  private lazy val constants: Array[ColeLaneVector] = {
+    lazy val defaults = ColeDefaults.rowValues(required)
+    Array.tabulate(required.length) { pos =>
+      val f = required.fields(pos)
+      val ci = fieldSrc(pos)
+      if (ci >= 0 || f.name == ColeUtil.PosMetaCol) null // per row group
+      else if (ci == ColeUtil.ConstSrc) {
+        val raw = part.partValues.collectFirst { case (k, pv) if k == f.name => pv }
+          .getOrElse(throw new IllegalStateException(
+            s"missing partition value for '${f.name}' in ${part.file}"))
+        ColeLaneVector.constant(f.dataType, f.dataType match {
+          case IntegerType => raw.toInt
+          case LongType => raw.toLong
+          case _ => UTF8String.fromString(raw)
+        })
+      } else ColeLaneVector.constant(f.dataType, defaults(pos))
+    }
+  }
   // row groups decode lazily, one at a time — a packed partition never
   // holds more than one row group's chunks in memory
   private var rgPos = -1
-  private var columns: Array[AnyRef] = _
+  private var lanes: Array[ColeLaneVector] = _
+  private var batch: ColumnarBatch = _
   private var rgRows = 0
   private var offset = 0
-  private var batch: ColumnarBatch = _
-  // physical row positions (file-wide) of the surviving rows — built
-  // only when the `_cole_pos` metadata column is requested
-  private val wantPos = required.fieldNames.contains(ColeUtil.PosMetaCol)
-  private var curPos: Array[Long] = _
   private lazy val rgStarts: Array[Long] = {
     val a = new Array[Long](reader.meta.rowGroups.length)
     var acc = 0L
@@ -2728,11 +2734,11 @@ class ColeColumnarReader(part: ColeInputPartition, required: StructType,
     a
   }
 
-  /** Per column: either a materialized chunk, or the raw dictionary view
-    * (entries + ids) for all-DICTIONARY string chunks — handed to Spark's
-    * dictionary-aware vectors with zero per-row string copies. Claimed
-    * filters compact each chunk through a selection vector before the
-    * batch is built, so downstream codegen sees only surviving rows.
+  /** One read-only view per field over this row group's decoded lanes —
+    * the raw dictionary (entries + ids) for all-DICTIONARY string chunks.
+    * Claimed filters and deletion vectors leave a selection vector that
+    * every view reads through, so downstream codegen sees only surviving
+    * rows and no lane is copied.
     */
   private def loadRowGroup(i: Int): Unit = {
     ColeReaderMetrics.rowGroupsDecoded.incrementAndGet()
@@ -2744,41 +2750,24 @@ class ColeColumnarReader(part: ColeInputPartition, required: StructType,
     // deletion vectors: subtract this row group's deleted ordinals
     val sel: Array[Int] = ColeDv.applyTo(selP,
       if (part.deleted == null) null else part.deleted(i), part.rowCounts(i))
-    if (wantPos) {
-      val base = rgStarts(rgIdx)
-      val n = if (sel == null) part.rowCounts(i) else sel.length
-      curPos = new Array[Long](n)
-      var j = 0
-      while (j < n) {
-        curPos(j) = base + (if (sel == null) j else sel(j)); j += 1
-      }
-    }
-    columns = fieldSrc.zipWithIndex.map { case (ci, pos) =>
-      if (ci == ColeUtil.ConstSrc) ColeColumnarReader.ConstCol
-      else if (ci < 0) null // schema-evolution column absent from this file
-      else {
-      val dict = reader.readStringChunkDict(rgIdx, ci)
-      if (dict != null) {
-        if (sel == null) dict
-        else {
-          val (entries, ids) = dict
-          val g = new Array[Int](sel.length)
-          var j = 0
-          while (j < sel.length) { g(j) = ids(sel(j)); j += 1 }
-          (entries, g)
-        }
+    lanes = Array.tabulate(required.length) { pos =>
+      val dt = required.fields(pos).dataType
+      val ci = fieldSrc(pos)
+      if (constants(pos) != null) constants(pos)
+      else if (ci == ColeUtil.ConstSrc) {
+        // `_cole_pos`: the file-wide physical position of every row
+        val base = rgStarts(rgIdx)
+        ColeLaneVector.lane(dt, ColumnData(null,
+          Array.tabulate(part.rowCounts(i))(base + _), null), sel)
       } else {
+        val dict = reader.readStringChunkDict(rgIdx, ci)
+        if (dict != null) ColeLaneVector.dictionary(dt, dict._1, dict._2, sel)
         // read-time type widening: a file narrower than the union schema
         // adapts its decoded lane here (INT32→long, i64 decimal→int128)
-        val cd = ColeWiden.adapt(reader.readChunk(rgIdx, ci),
-          required.fields(pos).dataType)
-        // claimed predicates never select a null row of a FILTERED column,
-        // but OTHER projected columns can still be null at surviving rows —
-        // the gather compacts their null flags alongside values
-        if (sel == null) cd else cd.gather(sel)
+        else ColeLaneVector.lane(dt, ColeWiden.adapt(reader.readChunk(rgIdx, ci), dt), sel)
       }
-      }
-    }: Array[AnyRef]
+    }
+    batch = new ColumnarBatch(lanes.toArray[ColumnVector])
     rgRows = if (sel == null) part.rowCounts(i) else sel.length
     offset = 0
   }
@@ -2794,147 +2783,14 @@ class ColeColumnarReader(part: ColeInputPartition, required: StructType,
 
   override def get(): ColumnarBatch = {
     val n = math.min(BatchSize, rgRows - offset)
-    val vecs = new Array[org.apache.spark.sql.vectorized.ColumnVector](required.length)
     var i = 0
-    while (i < columns.length) {
-      val v = new OnHeapColumnVector(n, required.fields(i).dataType)
-      columns(i) match {
-        case c: ColumnData =>
-          if (c.ints != null) v.putInts(0, n, c.ints, offset)
-          else if (c.longs != null) required.fields(i).dataType match {
-            // Spark's columnar layout stores precision<=9 decimals in the
-            // INT lane — a putLongs there would hit a null long buffer
-            case dt: DecimalType
-                if dt.precision <= org.apache.spark.sql.types.Decimal.MAX_INT_DIGITS =>
-              var r = 0
-              while (r < n) { v.putInt(r, c.longs(offset + r).toInt); r += 1 }
-            case _ => v.putLongs(0, n, c.longs, offset)
-          }
-          else if (c.doubles != null) v.putDoubles(0, n, c.doubles, offset)
-          else if (c.wides != null) {
-            // precision>18 decimals live in the vector's BINARY lane as
-            // two's-complement unscaled bytes (Spark's own columnar
-            // layout for wide decimals)
-            var r = 0
-            while (r < n) {
-              if (c.nulls == null || !c.nulls(offset + r))
-                v.putByteArray(r, ColeFormat.wideToBigInteger(
-                  c.wides(2 * (offset + r)),
-                  c.wides(2 * (offset + r) + 1)).toByteArray)
-              r += 1
-            }
-          }
-          else if (c.vecs != null) {
-            // array column: bulk-fill the child float vector, then point
-            // each row's (offset, length) slice at it
-            val child = v.arrayData()
-            var total = 0
-            var r = 0
-            while (r < n) {
-              val a = c.vecs(offset + r)
-              if (a != null) total += a.length
-              r += 1
-            }
-            child.reserve(total)
-            var pos = 0
-            r = 0
-            while (r < n) {
-              val a = c.vecs(offset + r)
-              if (a != null) {
-                child.putFloats(pos, a.length, a, 0)
-                v.putArray(r, pos, a.length)
-                pos += a.length
-              }
-              r += 1
-            }
-          } else {
-            var r = 0
-            while (r < n) {
-              val b = c.strings(offset + r)
-              if (b != null) v.putByteArray(r, b)
-              r += 1
-            }
-          }
-          if (c.nulls != null) {
-            var r = 0
-            while (r < n) { if (c.nulls(offset + r)) v.putNull(r); r += 1 }
-          }
-        case (entries: Array[Array[Byte]], ids: Array[Int]) =>
-          v.setDictionary(new ColeVectorDictionary(entries))
-          v.reserveDictionaryIds(n).putInts(0, n, ids, offset)
-        case ColeColumnarReader.ConstCol =>
-          // constant-served field: the file's directory value (a 1-entry
-          // dictionary for strings — no per-row byte copies), or the
-          // per-row `_cole_pos` physical position
-          val f = required.fields(i)
-          if (f.name == ColeUtil.PosMetaCol) {
-            var r = 0
-            while (r < n) { v.putLong(r, curPos(offset + r)); r += 1 }
-          } else {
-            val raw = part.partValues.collectFirst {
-              case (k, pv) if k == f.name => pv }
-              .getOrElse(throw new IllegalStateException(
-                s"missing partition value for '${f.name}' in ${part.file}"))
-            f.dataType match {
-              case IntegerType => v.putInts(0, n, raw.toInt)
-              case LongType => v.putLongs(0, n, raw.toLong)
-              case _ =>
-                v.setDictionary(new ColeVectorDictionary(
-                  Array(raw.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
-                v.reserveDictionaryIds(n).putInts(0, n, 0)
-            }
-          }
-        case null => // schema evolution: column absent from this file —
-          // NULL, or the column's exists-default when the ALTER declared one
-          fieldDefaults(i) match {
-            case null => v.putNulls(0, n)
-            case d: Int => v.putInts(0, n, d)
-            case d: Long => v.putLongs(0, n, d)
-            case d: Double => v.putDoubles(0, n, d)
-            case d: org.apache.spark.sql.types.Decimal =>
-              val p = required.fields(i).dataType.asInstanceOf[DecimalType].precision
-              var r = 0
-              while (r < n) { v.putDecimal(r, d, p); r += 1 }
-            case d: UTF8String =>
-              // constant string: a 1-entry dictionary, no per-row copies
-              v.setDictionary(new ColeVectorDictionary(Array(d.getBytes)))
-              v.reserveDictionaryIds(n).putInts(0, n, 0)
-            case other =>
-              var r = 0
-              while (r < n) {
-                v.putByteArray(r, other.asInstanceOf[Array[Byte]]); r += 1
-              }
-          }
-      }
-      vecs(i) = v
-      i += 1
-    }
-    // every field is served by the loop above (fieldSrc covers the whole
-    // required schema; constant fields ride the ConstCol lane)
+    while (i < lanes.length) { lanes(i).slice(offset, n); i += 1 }
     offset += n
-    if (batch != null) batch.close()
-    batch = new ColumnarBatch(vecs, n)
+    batch.setNumRows(n)
     batch
   }
 
-  override def close(): Unit = {
-    if (batch != null) batch.close()
-    reader.close()
-  }
-}
-
-/** COLE dictionary page → Spark's vectorized Dictionary interface. */
-final class ColeVectorDictionary(entries: Array[Array[Byte]])
-    extends org.apache.spark.sql.execution.vectorized.Dictionary {
-  override def decodeToBinary(id: Int): Array[Byte] = entries(id)
-  override def decodeToInt(id: Int): Int =
-    throw new UnsupportedOperationException("COLE dictionaries are string-typed")
-  override def decodeToLong(id: Int): Long =
-    throw new UnsupportedOperationException("COLE dictionaries are string-typed")
-  override def decodeToFloat(id: Int): Float =
-    throw new UnsupportedOperationException("COLE dictionaries are string-typed")
-  override def decodeToDouble(id: Int): Double =
-    throw new UnsupportedOperationException("COLE dictionaries are string-typed")
+  override def close(): Unit = reader.close()
 }
 
 // ------------------------------------------------------------------ write

@@ -2,6 +2,8 @@ package graft.sources.cole
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 
@@ -123,19 +125,36 @@ object ColeIO {
 
 /** Serializable Hadoop `Configuration` carrier for the reader/writer
   * factories shipped to executors (Spark's own SerializableConfiguration
-  * is `private[spark]`). Hadoop's writable serde round-trips the full
-  * property map, so executor-side filesystem resolution sees the same
+  * is `private[spark]`). The wire form is the full property map as plain
+  * key/value pairs, so executor-side filesystem resolution sees the same
   * credentials/tuning the driver planned with.
+  *
+  * Not `Configuration.write`: that form adds a GZIP'd provenance array
+  * per property, which nearly doubles the bytes and costs several ms per
+  * copy each way — and codegen closures capture the reader factory, so
+  * one query ships this object a dozen times. Reading back `set`s each
+  * pair, as `readFields` does, minus the provenance.
   */
 final class ColeHadoopConf(@transient var value: Configuration) extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    value.write(out)
+    val props = value.asScala.toArray
+    out.writeInt(props.length)
+    props.foreach { e =>
+      // Text's vint-prefixed UTF-8: no 64 KiB cap, unlike writeUTF
+      org.apache.hadoop.io.Text.writeString(out, e.getKey)
+      org.apache.hadoop.io.Text.writeString(out, e.getValue)
+    }
   }
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
     value = new Configuration(false)
-    value.readFields(in)
+    var n = in.readInt()
+    while (n > 0) {
+      value.set(org.apache.hadoop.io.Text.readString(in),
+        org.apache.hadoop.io.Text.readString(in))
+      n -= 1
+    }
   }
 }
 

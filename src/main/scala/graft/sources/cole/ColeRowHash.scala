@@ -1,7 +1,13 @@
 package graft.sources.cole
 
+import scala.annotation.switch
+
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Order-insensitive multiset fingerprint of a row stream — the engine
   * side of no-op rewrite detection for row-level UPDATE/MERGE.
@@ -45,82 +51,172 @@ object ColeRowHash {
     z ^ (z >>> 31)
   }
 
-  @inline private def foldBytes(seed: Long, b: Array[Byte]): Long = {
+  private val LittleEndian =
+    java.nio.ByteOrder.nativeOrder == java.nio.ByteOrder.LITTLE_ENDIAN
+
+  /** Fold `len` bytes at (`base`, `off`) in place — a byte array or a
+    * `UTF8String`'s backing memory, with no copy. Words read big-endian,
+    * so the hash does not depend on the host's byte order.
+    */
+  @inline private def foldBytes(seed: Long, base: AnyRef, off: Long, len: Int): Long = {
     var h = seed
     var i = 0
     // 8 bytes at a time, tail bytes one by one
-    while (i + 8 <= b.length) {
-      var w = 0L
-      var j = 0
-      while (j < 8) { w = (w << 8) | (b(i + j) & 0xFFL); j += 1 }
-      h = mix(h ^ w)
+    while (i + 8 <= len) {
+      val w = Platform.getLong(base, off + i)
+      h = mix(h ^ (if (LittleEndian) java.lang.Long.reverseBytes(w) else w))
       i += 8
     }
-    while (i < b.length) { h = mix(h ^ (b(i) & 0xFFL)); i += 1 }
-    mix(h ^ b.length)
+    while (i < len) { h = mix(h ^ (Platform.getByte(base, off + i) & 0xFFL)); i += 1 }
+    mix(h ^ len)
   }
+
+  @inline private def foldBytes(seed: Long, b: Array[Byte]): Long =
+    foldBytes(seed, b, Platform.BYTE_ARRAY_OFFSET.toLong, b.length)
 
   private val NullMarker = 0x6E756C6C5F763141L
 
-  /** Streaming fingerprint accumulator over one side's row stream.
+  // per-field type tags: the hash of a cell is chosen once per field
+  private final val TagInt = 0
+  private final val TagLong = 1
+  private final val TagDouble = 2
+  private final val TagFloat = 3
+  private final val TagString = 4
+  private final val TagBinary = 5
+  private final val TagDecimal = 6
+  private final val TagWideDecimal = 7
+  private final val TagFloatArray = 8
+
+  private def tagOf(dt: DataType): Int = dt match {
+    case IntegerType => TagInt
+    case LongType | TimestampType | TimestampNTZType => TagLong
+    case DoubleType => TagDouble
+    case FloatType => TagFloat
+    case StringType => TagString
+    case BinaryType => TagBinary
+    // scale is fixed by the schema, so the unscaled value is the full
+    // identity; wide decimals fold their two's-complement bytes
+    case dt: DecimalType =>
+      if (dt.precision <= Decimal.MAX_LONG_DIGITS) TagDecimal else TagWideDecimal
+    case ArrayType(FloatType, _) => TagFloatArray
+    case other =>
+      throw new IllegalArgumentException(s"no-op detection cannot hash type $other")
+  }
+
+  // doubleToLongBits canonicalizes NaN, so equal values hash equal
+  @inline private def hashDouble(d: Double): Long =
+    mix(java.lang.Double.doubleToLongBits(d))
+
+  @inline private def hashFloat(f: Float): Long =
+    mix(java.lang.Float.floatToIntBits(f).toLong)
+
+  @inline private def hashString(s: UTF8String): Long =
+    foldBytes(0x73747268L, s.getBaseObject, s.getBaseOffset, s.numBytes)
+
+  @inline private def hashBinary(b: Array[Byte]): Long = foldBytes(0x62696E68L, b)
+
+  private def hashWide(d: Decimal): Long =
+    foldBytes(0x64656377L, d.toJavaBigDecimal.unscaledValue().toByteArray)
+
+  private def hashFloats(a: ArrayData): Long = {
+    var h = 0x61727266L
+    var i = 0
+    val n = a.numElements()
+    while (i < n) {
+      h = mix(h ^ java.lang.Float.floatToIntBits(a.getFloat(i)).toLong)
+      i += 1
+    }
+    mix(h ^ n)
+  }
+
+  /** Streaming fingerprint accumulator over one side's row stream, fed
+    * a row at a time ([[add]]) or a batch a column at a time
+    * ([[addBatch]]); both fold the same per-row hash.
     * Not thread-safe — one instance per reader/writer task.
     */
   final class RowHasher(schema: StructType) {
-    // name-sorted data-column ordinals + types (FileMetaCol excluded)
-    private val fields: Array[(Int, DataType)] = schema.fields.zipWithIndex
+    // name-sorted data-column ordinals, tags and decimal types
+    // (FileMetaCol excluded)
+    private val fields = schema.fields.zipWithIndex
       .filterNot(_._1.name == ColeUtil.FileMetaCol)
       .sortBy(_._1.name)
-      .map { case (f, i) => (i, f.dataType) }.toArray
+    private val ords: Array[Int] = fields.map(_._2)
+    private val tags: Array[Int] = fields.map(f => tagOf(f._1.dataType))
+    private val precisions: Array[Int] = fields.map(_._1.dataType match {
+      case d: DecimalType => d.precision
+      case _ => 0
+    })
+    private val scales: Array[Int] = fields.map(_._1.dataType match {
+      case d: DecimalType => d.scale
+      case _ => 0
+    })
+    // per-row hashes of the batch being folded
+    private var rowHashes = new Array[Long](0)
 
     var count: Long = 0L
     var sum1: Long = 0L
     var sum2: Long = 0L
     var xor1: Long = 0L
 
-    private def fieldHash(row: InternalRow, ord: Int, dt: DataType): Long =
+    private def cell(row: InternalRow, f: Int): Long = {
+      val ord = ords(f)
       if (row.isNullAt(ord)) NullMarker
-      else dt match {
-        case IntegerType => mix(row.getInt(ord).toLong)
-        case LongType | TimestampType | TimestampNTZType => mix(row.getLong(ord))
-        // doubleToLongBits canonicalizes NaN, so equal values hash equal
-        case DoubleType => mix(java.lang.Double.doubleToLongBits(row.getDouble(ord)))
-        case FloatType => mix(java.lang.Float.floatToIntBits(row.getFloat(ord)).toLong)
-        case StringType => foldBytes(0x73747268L, row.getUTF8String(ord).getBytes)
-        case BinaryType => foldBytes(0x62696E68L, row.getBinary(ord))
-        case dt: DecimalType =>
-          val d = row.getDecimal(ord, dt.precision, dt.scale)
-          // scale is fixed by the schema, so the unscaled value is the
-          // full identity; wide decimals fold their two's-complement bytes
-          if (dt.precision <= Decimal.MAX_LONG_DIGITS) mix(d.toUnscaledLong)
-          else foldBytes(0x64656377L,
-            d.toJavaBigDecimal.unscaledValue().toByteArray)
-        case ArrayType(FloatType, _) =>
-          val a = row.getArray(ord)
-          var h = 0x61727266L
-          var i = 0
-          val n = a.numElements()
-          while (i < n) {
-            h = mix(h ^ java.lang.Float.floatToIntBits(a.getFloat(i)).toLong)
-            i += 1
-          }
-          mix(h ^ n)
-        case other =>
-          throw new IllegalArgumentException(
-            s"no-op detection cannot hash type $other")
+      else (tags(f): @switch) match {
+        case TagInt => mix(row.getInt(ord).toLong)
+        case TagLong => mix(row.getLong(ord))
+        case TagDouble => hashDouble(row.getDouble(ord))
+        case TagFloat => hashFloat(row.getFloat(ord))
+        case TagString => hashString(row.getUTF8String(ord))
+        case TagBinary => hashBinary(row.getBinary(ord))
+        case TagDecimal => mix(row.getDecimal(ord, precisions(f), scales(f)).toUnscaledLong)
+        case TagWideDecimal => hashWide(row.getDecimal(ord, precisions(f), scales(f)))
+        case _ => hashFloats(row.getArray(ord))
+      }
+    }
+
+    private def cell(v: ColumnVector, r: Int, f: Int): Long =
+      if (v.isNullAt(r)) NullMarker
+      else (tags(f): @switch) match {
+        case TagInt => mix(v.getInt(r).toLong)
+        case TagLong => mix(v.getLong(r))
+        case TagDouble => hashDouble(v.getDouble(r))
+        case TagFloat => hashFloat(v.getFloat(r))
+        case TagString => hashString(v.getUTF8String(r))
+        case TagBinary => hashBinary(v.getBinary(r))
+        case TagDecimal => mix(v.getDecimal(r, precisions(f), scales(f)).toUnscaledLong)
+        case TagWideDecimal => hashWide(v.getDecimal(r, precisions(f), scales(f)))
+        case _ => hashFloats(v.getArray(r))
       }
 
-    def add(row: InternalRow): Unit = {
-      var h = 0L
-      var i = 0
-      while (i < fields.length) {
-        val (ord, dt) = fields(i)
-        h = mix(h ^ fieldHash(row, ord, dt))
-        i += 1
-      }
+    @inline private def fold(h: Long): Unit = {
       count += 1
       sum1 += h
       sum2 += mix(h ^ 0xA5A5A5A5DEADBEEFL)
       xor1 ^= mix(h ^ 0x0F0F0F0F12345678L)
+    }
+
+    def add(row: InternalRow): Unit = {
+      var h = 0L
+      var f = 0
+      while (f < ords.length) { h = mix(h ^ cell(row, f)); f += 1 }
+      fold(h)
+    }
+
+    /** Every row of `batch`, one column at a time. */
+    def addBatch(batch: ColumnarBatch): Unit = {
+      val n = batch.numRows
+      if (rowHashes.length < n) rowHashes = new Array[Long](n)
+      val h = rowHashes
+      java.util.Arrays.fill(h, 0, n, 0L)
+      var f = 0
+      while (f < ords.length) {
+        val v = batch.column(ords(f))
+        var r = 0
+        while (r < n) { h(r) = mix(h(r) ^ cell(v, r, f)); r += 1 }
+        f += 1
+      }
+      var r = 0
+      while (r < n) { fold(h(r)); r += 1 }
     }
   }
 

@@ -415,8 +415,7 @@ class ColeHashingReaderFactory(inner: ColeReaderFactory, required: StructType,
         val has = loud(r.next())
         if (has) {
           batch = r.get()
-          val it = batch.rowIterator()
-          while (it.hasNext) hasher.add(it.next())
+          hasher.addBatch(batch)
         }
         has
       }

@@ -176,4 +176,78 @@ class ColeRowLevelNoopSpec extends AnyFunSuite {
     }
     assert(spark.table("noopw.db.ins").count() === 602)
   }
+
+  test("a batch fingerprinted a column at a time equals the same rows hashed one by one") {
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+    import org.apache.spark.unsafe.types.UTF8String
+
+    val schema = StructType(Seq(
+      IntegerType, LongType, TimestampType, TimestampNTZType, DoubleType,
+      FloatType, StringType, BinaryType, DecimalType(9, 2), DecimalType(18, 4),
+      DecimalType(25, 4), ArrayType(FloatType, containsNull = false)
+    ).zipWithIndex.map { case (t, i) => StructField(s"c${(i * 7) % 12}", t) })
+    val rnd = new scala.util.Random(20261017L)
+    // Catalyst values, NULL one cell in five; strings span the 8-byte
+    // word boundary and carry multi-byte characters
+    def value(t: DataType): Any = if (rnd.nextInt(5) == 0) null else t match {
+      case IntegerType => rnd.nextInt()
+      case LongType | TimestampType | TimestampNTZType => rnd.nextLong()
+      case DoubleType => if (rnd.nextInt(10) == 0) Double.NaN else rnd.nextDouble()
+      case FloatType => rnd.nextFloat()
+      case StringType => UTF8String.fromString(
+        Seq.fill(rnd.nextInt(20))("aé東"(rnd.nextInt(3))).mkString)
+      case BinaryType => Array.fill(rnd.nextInt(20))(rnd.nextInt(256).toByte)
+      case d: DecimalType => Decimal(BigDecimal(BigInt(d.precision * 3, rnd) *
+        (if (rnd.nextBoolean()) 1 else -1), d.scale), d.precision, d.scale)
+      case _ => new GenericArrayData(Array.fill[Any](rnd.nextInt(6))(rnd.nextFloat()))
+    }
+    def batchOf(rows: Seq[GenericInternalRow]): ColumnarBatch = {
+      val vecs = schema.fields.zipWithIndex.map { case (f, c) =>
+        val v = new OnHeapColumnVector(rows.size, f.dataType)
+        rows.zipWithIndex.foreach { case (row, r) =>
+          if (row.isNullAt(c)) v.putNull(r)
+          else f.dataType match {
+            case IntegerType => v.putInt(r, row.getInt(c))
+            case LongType | TimestampType | TimestampNTZType => v.putLong(r, row.getLong(c))
+            case DoubleType => v.putDouble(r, row.getDouble(c))
+            case FloatType => v.putFloat(r, row.getFloat(c))
+            case StringType => v.putByteArray(r, row.getUTF8String(c).getBytes)
+            case BinaryType => v.putByteArray(r, row.getBinary(c))
+            case d: DecimalType => v.putDecimal(r, row.getDecimal(c, d.precision, d.scale),
+              d.precision)
+            case _ =>
+              val a = row.getArray(c).toFloatArray()
+              val at = v.arrayData().getElementsAppended
+              v.arrayData().appendFloats(a.length, a, 0)
+              v.putArray(r, at, a.length)
+          }
+        }
+        v: ColumnVector
+      }
+      new ColumnarBatch(vecs, rows.size)
+    }
+
+    val columnar = new ColeRowHash.RowHasher(schema)
+    val batchRows = new ColeRowHash.RowHasher(schema)
+    val unsafeRows = new ColeRowHash.RowHasher(schema)
+    val toUnsafe = UnsafeProjection.create(schema)
+    // batch sizes shrink and grow, so the per-row scratch is reused
+    Seq(700, 1, 0, 64, 4096, 3, 1500).foreach { n =>
+      val rows = Seq.fill(n)(new GenericInternalRow(
+        schema.fields.map(f => value(f.dataType))))
+      val batch = batchOf(rows)
+      columnar.addBatch(batch)
+      batch.rowIterator().forEachRemaining(r => batchRows.add(r))
+      rows.foreach(r => unsafeRows.add(toUnsafe(r)))
+      batch.close()
+    }
+    val fp = ColeRowHash.Fp.of(columnar)
+    assert(fp.count === 6364L)
+    assert(fp === ColeRowHash.Fp.of(batchRows))
+    assert(fp === ColeRowHash.Fp.of(unsafeRows))
+  }
 }
