@@ -2884,7 +2884,10 @@ class ColeWriteBuilder(schema: StructType, path: String, rowGroupSize: Int,
               .getOrElse("none"))
       }
     }
-    bucketSpec match {
+    import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+    import org.apache.spark.sql.connector.expressions.{Expressions => E, SortDirection}
+    def asc(cols: Seq[String]) = cols.map(c => E.sort(E.column(c), SortDirection.ASCENDING))
+    val (distribution: Distribution, ordering: Seq[String]) = bucketSpec match {
       case Some((_, bucketCols0)) =>
         // synthetic-key layout: the synth column doesn't exist in the
         // incoming data — cluster and sort by the SOURCE key tuple (equal
@@ -2903,31 +2906,9 @@ class ColeWriteBuilder(schema: StructType, path: String, rowGroupSize: Int,
         // (its unit ordinal is monotone in it, so each task's rows arrive
         // unit-directory-grouped and the per-(unit, bucket) sub-writer
         // map stays small), then the bucket keys
-        val orderCols = temporal.map(_.src).filterNot(bucketCols.contains)
-          .toSeq ++ bucketCols
-        new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-          import org.apache.spark.sql.connector.expressions.{Expressions => E}
-          override def requiredDistribution()
-              : org.apache.spark.sql.connector.distributions.Distribution =
-            org.apache.spark.sql.connector.distributions.Distributions.clustered(
-              bucketCols.map(c => E.column(c)
-                : org.apache.spark.sql.connector.expressions.Expression).toArray)
-          override def requiredOrdering()
-              : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-            orderCols.map(c => E.sort(E.column(c),
-              org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
-          override def toBatch: BatchWrite =
-            new ColeBatchWrite(schema, path, rowGroupSize, doTruncate, conf,
-              partCols, bucketSpec, dynamicOverwrite, overwriteFilters,
-              bucketDerive, temporal = temporal, branch = branch)
-          override def toStreaming: StreamingWrite = {
-            if (doTruncate || dynamicOverwrite || overwriteFilters.nonEmpty)
-              throw new UnsupportedOperationException(
-                "the cole streaming sink supports Append output mode only")
-            new ColeStreamingWrite(schema, path, rowGroupSize, conf, partCols,
-              bucketSpec, bucketDerive, temporal = temporal, branch = branch)
-          }
-        }
+        (Distributions.clustered(bucketCols.map(c => E.column(c)
+          : org.apache.spark.sql.connector.expressions.Expression).toArray),
+          temporal.map(_.src).filterNot(bucketCols.contains).toSeq ++ bucketCols)
       case None =>
         // in-partition ordering request: partition keys first (each
         // task's rows arrive grouped per directory — one open sub-writer
@@ -2938,86 +2919,128 @@ class ColeWriteBuilder(schema: StructType, path: String, rowGroupSize: Int,
         // directory's writer at a time — unordered, a month-of-hours
         // append holds up to MaxOpenWriters row-group buffers per task
         // (measured: heap exhaustion at sf1). Identity-only hive writes
-        // keep Spark's own pre-write clustering.
-        val ordering: Seq[String] = (if (sortBy.nonEmpty || temporal.isDefined)
+        // keep Spark's own pre-write clustering, and a plain write asks
+        // for nothing (an unspecified distribution with no ordering
+        // leaves the query as it is).
+        val ordering = ((if (sortBy.nonEmpty || temporal.isDefined)
           partCols ++ temporal.map(_.src).filterNot(partCols.contains)
-        else Seq.empty) ++ sortBy
-        if (ordering.nonEmpty)
-          new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-            import org.apache.spark.sql.connector.expressions.{Expressions => E}
-            // TEMPORAL writes additionally request a RANGE distribution
-            // on (partCols, ts) — Iceberg's write.distribution-mode=range
-            // (r17-opt). The unit ordinal is monotone in the timestamp,
-            // so range-partitioned tasks own CONTIGUOUS unit directories
-            // and each directory receives files from one task (plus at
-            // most a boundary neighbor) instead of one file PER TASK per
-            // directory: a 16-task month-of-hours append wrote 375 dirs
-            // x 16 = 6000 ~4 KB files (measured, sf1) — the small-files
-            // antipattern that tripled the table's own read cost. One
-            // range exchange at write time buys the file layout for the
-            // table's whole read life. Identity-only hive writes keep
-            // their existing (exchange-free, per-task-sorted) behavior.
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              if (temporal.isDefined)
-                org.apache.spark.sql.connector.distributions.Distributions.ordered(
-                  ordering.distinct.map(c => E.sort(E.column(c),
-                    org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray)
-              else
-                org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              ordering.distinct.map(c => E.sort(E.column(c),
-                org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
-            override def toBatch: BatchWrite =
-              new ColeBatchWrite(schema, path, rowGroupSize, doTruncate, conf, partCols,
-                bucketSpec, dynamicOverwrite, overwriteFilters, temporal = temporal,
-                branch = branch)
-            override def toStreaming: StreamingWrite = {
-              if (doTruncate || dynamicOverwrite || overwriteFilters.nonEmpty)
-                throw new UnsupportedOperationException(
-                  "the cole streaming sink supports Append output mode only")
-              new ColeStreamingWrite(schema, path, rowGroupSize, conf, partCols,
-                bucketSpec, temporal = temporal, branch = branch)
-            }
-          }
-        else new Write {
-        override def toBatch: BatchWrite =
-          new ColeBatchWrite(schema, path, rowGroupSize, doTruncate, conf, partCols,
-            bucketSpec, dynamicOverwrite, overwriteFilters, temporal = temporal,
-            branch = branch)
-        override def toStreaming: StreamingWrite = {
-          if (doTruncate || dynamicOverwrite || overwriteFilters.nonEmpty)
-            throw new UnsupportedOperationException(
-              "the cole streaming sink supports Append output mode only")
-          new ColeStreamingWrite(schema, path, rowGroupSize, conf, partCols,
-            bucketSpec, temporal = temporal, branch = branch)
-        }
+        else Seq.empty) ++ sortBy).distinct
+        // TEMPORAL writes additionally request a RANGE distribution on
+        // (partCols, ts) — Iceberg's write.distribution-mode=range
+        // (r17-opt). The unit ordinal is monotone in the timestamp, so
+        // range-partitioned tasks own CONTIGUOUS unit directories and
+        // each directory receives files from one task (plus at most a
+        // boundary neighbor) instead of one file PER TASK per directory:
+        // a 16-task month-of-hours append wrote 375 dirs x 16 = 6000
+        // ~4 KB files (measured, sf1) — the small-files antipattern that
+        // tripled the table's own read cost. One range exchange at write
+        // time buys the file layout for the table's whole read life.
+        (if (temporal.isDefined) Distributions.ordered(asc(ordering).toArray)
+          else Distributions.unspecified(), ordering)
+    }
+    new Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+      override def requiredDistribution(): Distribution = distribution
+      override def requiredOrdering()
+          : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+        asc(ordering).toArray
+      override def toBatch: BatchWrite =
+        new ColeBatchWrite(schema, path, rowGroupSize, doTruncate, conf,
+          partCols, bucketSpec, dynamicOverwrite, overwriteFilters,
+          bucketDerive, temporal = temporal, branch = branch)
+      override def toStreaming: StreamingWrite = {
+        if (doTruncate || dynamicOverwrite || overwriteFilters.nonEmpty)
+          throw new UnsupportedOperationException(
+            "the cole streaming sink supports Append output mode only")
+        new ColeStreamingWrite(schema, path, rowGroupSize, conf, partCols,
+          bucketSpec, bucketDerive, temporal = temporal, branch = branch)
       }
     }
   }
 }
 
-final case class ColeCommitMessage(files: Seq[String]) extends WriterCommitMessage
+/** One task's committed files as (written, final) pairs: `written` is where
+  * the bytes sit now, `final` the name readers see. The two differ only
+  * when the [[ColeFileNaming]] rule leaves the rename to the driver.
+  */
+final case class ColeCommitMessage(files: Seq[(String, String)])
+    extends WriterCommitMessage
 
-class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
-    truncate: Boolean, conf: Configuration, partCols: Seq[String],
-    bucketSpec: Option[(Int, Seq[String])] = None,
-    dynamicOverwrite: Boolean = false,
-    overwriteFilters: Array[Filter] = Array.empty,
-    bucketDerive: Option[(String, Seq[String])] = None,
-    temporal: Option[ColeTemporal.Spec] = None,
-    branch: Option[String] = None)
-    extends BatchWrite {
+/** How write tasks name their files. Built once on the driver and shipped
+  * inside [[ColeWriterFactory]]; `paths` returns the (in-progress, final)
+  * names of the k-th file a task opens in directory `dir` (k < 0: the
+  * layout opens one file per directory per task). A task always writes
+  * the dotted in-progress name — listings (and polling streaming sources)
+  * never observe a torn half-written `.col` file — and the rule says who
+  * renames it.
+  */
+sealed trait ColeFileNaming extends Serializable {
+  def paths(dir: String, partitionId: Int, taskId: Long, epochId: Long,
+      k: Int): (String, String)
+  /** The task renames at its own commit; otherwise the driver does. */
+  def taskRenames: Boolean = false
+}
 
-  // versioning bookkeeping (no-ops on unversioned tables): files the
-  // truncate/overwrite paths retired, rolled back on abort, recorded
-  // with the adds at commit
-  private val retired = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-  private val retireStamp = java.lang.Long.toHexString(System.nanoTime())
+object ColeFileNaming {
+  private def part(partitionId: Int, taskId: Long, k: Int): String =
+    if (k < 0) f"part-$partitionId%05d-$taskId.col"
+    else f"part-$partitionId%05d-$taskId-$k%d.col"
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // validate the schema (and the partition columns) eagerly on the driver
+  /** Plain batch: `part-<pid>-<tid>[-<k>].col`, renamed by the task. */
+  case object Task extends ColeFileNaming {
+    def paths(dir: String, partitionId: Int, taskId: Long, epochId: Long,
+        k: Int): (String, String) = {
+      val n = part(partitionId, taskId, k)
+      (s"$dir/.$n.inprogress", s"$dir/$n")
+    }
+    override def taskRenames: Boolean = true
+  }
+
+  /** Deferred: the driver renames to `<prefix>part-…` at job commit, after
+    * its transactional bookkeeping — what keeps row-level REPLACE and
+    * merge-on-read files invisible to concurrent readers (and tailing
+    * streams) until the commit is durable. The prefix carries a driver
+    * stamp (`replace-<stamp>-`, `delta-<stamp>-`): task ids restart per
+    * application, so without it a later rewrite could mint the exact name
+    * of a file it replaces.
+    */
+  final case class Deferred(prefix: String) extends ColeFileNaming {
+    def paths(dir: String, partitionId: Int, taskId: Long, epochId: Long,
+        k: Int): (String, String) = {
+      val n = part(partitionId, taskId, k)
+      (s"$dir/.$n.inprogress", s"$dir/$prefix$n")
+    }
+  }
+
+  /** Streaming epoch: `part-e<E>-p<pid>-<k>.col`, written as
+    * `.….inprogress-<tid>` and renamed by the driver at epoch commit. The
+    * final name is epoch-deterministic, so a replayed epoch overwrites
+    * the same files instead of appending duplicates.
+    */
+  case object Epoch extends ColeFileNaming {
+    def paths(dir: String, partitionId: Int, taskId: Long, epochId: Long,
+        k: Int): (String, String) = {
+      val n = f"part-e$epochId%d-p$partitionId%05d-${math.max(k, 0)}%d.col"
+      (s"$dir/.$n.inprogress-$taskId", s"$dir/$n")
+    }
+  }
+}
+
+/** Driver-side write preparation shared by batch appends/overwrites and
+  * the streaming sink: schema and column guards, partition/bucket/
+  * temporal validation, branch rules, first-declaration layout sidecars,
+  * the evolved-table format version and CHECK compilation. `clearOld`
+  * runs once every check has passed and before the layout sidecars and
+  * the write conf resolve (the batch truncate/overwrite retires the old
+  * files there, so the conf sees the table as the new data will).
+  */
+private[cole] object ColeWritePrep {
+  def factory(schema: StructType, path: String, rowGroupSize: Int,
+      conf: Configuration, partCols: Seq[String],
+      bucketSpec: Option[(Int, Seq[String])],
+      bucketDerive: Option[(String, Seq[String])],
+      temporal: Option[ColeTemporal.Spec], branch: Option[String],
+      naming: ColeFileNaming, resetLayout: Boolean = false)(
+      clearOld: => Unit = ()): ColeWriterFactory = {
     ColeUtil.toColeColumns(schema)
     // a DROPPED column name must not come back through a path-based append:
     // old footers still store its former values and resolution would
@@ -3037,6 +3060,8 @@ class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
       s"partition column '$c' not in write schema"))
     require(partCols.size < schema.size,
       "cannot partition by every column: no data columns remain")
+    require(bucketSpec.isEmpty || partCols.isEmpty,
+      "COLE tables are either hive-partitioned or hash-bucketed, not both")
     bucketSpec.foreach { case (n, cs) =>
       // synthetic-key layout: the writer OWNS the synth column (it derives
       // and stores it); the incoming data must carry the source key tuple
@@ -3057,48 +3082,6 @@ class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
       }
       require(n > 0 && n <= 65536, s"bucket count must be in [1, 65536], got $n")
     }
-    val (fs, dir) = ColeIO.resolve(path, conf)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val versioned = ColeVersions.enabled(path, conf)
-    // branch writes (r14 WAP) stage APPENDS into the invisible branch
-    // root with the table's exact layout; anything that would mutate
-    // main (truncate, overwrite, layout declaration) rejects loudly —
-    // the publish is a pure rename with no conflict surface
-    branch.foreach { b =>
-      require(!truncate && !dynamicOverwrite && overwriteFilters.isEmpty,
-        s"branch '$b' writes are append-only (write-audit-publish): " +
-          "truncate/overwrite mutate the live table — run them on main")
-      require(bucketSpec.isEmpty || ColeBucket.readHistory(path, conf).nonEmpty,
-        s"a branch write cannot DECLARE a bucket layout (the sidecar " +
-          "lives on main): lay the table out first, then branch")
-      require(temporal.isEmpty || ColeTemporal.readSpecs(path, conf).nonEmpty,
-        s"a branch write cannot DECLARE a temporal layout (the sidecar " +
-          "lives on main): lay the table out first, then branch")
-      ColeRefs.branchFork(path, conf, b) // still exists, or loud
-    }
-    if (truncate)
-      ColeIO.listPartitioned(path, conf).foreach { case (s, _) =>
-        retired ++= ColeVersions.retireOrDelete(fs, path,
-          s.getPath.toString, retireStamp, versioned)
-      }
-    // static-partition OVERWRITE: drop files of exactly the matching
-    // partitions before any new data lands; the rest of the table is
-    // untouched (the builder validated every predicate hits a partition
-    // column)
-    if (overwriteFilters.nonEmpty) {
-      val preds = overwriteFilters.flatMap(ColePredicate.fromFilter)
-      ColeIO.listPartitioned(path, conf).foreach { case (st, parts) =>
-        val pv = parts.toMap
-        if (preds.forall(p => pv.get(p.column).exists(
-            ColePredicate.partitionKeeps(p, _)))) {
-          retired ++= ColeVersions.retireOrDelete(fs, path,
-            st.getPath.toString, retireStamp, versioned)
-          fs.delete(new org.apache.hadoop.fs.Path(
-            ColeBloomIndex.sidecarPath(st.getPath.toString)), false)
-          ColeDv.drop(fs, st.getPath.toString)
-        }
-      }
-    }
     temporal.foreach { sp =>
       val f = schema.fields.find(_.name == sp.src).getOrElse(
         throw new IllegalArgumentException(
@@ -3106,6 +3089,22 @@ class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
       require(f.dataType == TimestampType || f.dataType == TimestampNTZType,
         s"temporal partition source '${sp.src}' must be a timestamp, is ${f.dataType}")
     }
+    val (fs, dir) = ColeIO.resolve(path, conf)
+    if (!fs.exists(dir)) fs.mkdirs(dir)
+    // branch writes (r14 WAP) stage APPENDS into the invisible branch
+    // root with the table's exact layout; the layout sidecars live on
+    // main, so a branch write may only route by the layout the table
+    // already declares
+    branch.foreach { b =>
+      require(bucketSpec.forall(s => ColeBucket.readSpec(path, conf).contains(s)),
+        "a branch write cannot declare a NEW bucket layout (the sidecar " +
+          "lives on main): lay the table out first, then branch")
+      require(temporal.forall(t => ColeTemporal.readSpec(path, conf).contains(t)),
+        "a branch write cannot declare a NEW temporal layout (the sidecar " +
+          "lives on main): lay the table out first, then branch")
+      ColeRefs.branchFork(path, conf, b) // still exists, or loud
+    }
+    clearOld
     // the layout self-describes: persist the bucket/temporal spec BEFORE
     // any data lands, so a concurrent reader never sees derived-layout
     // files without the sidecar that explains them. First declaration
@@ -3113,19 +3112,16 @@ class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
     // only: an append into an EVOLVED table resolves the active era, and
     // re-persisting it as a singleton would wipe the era history the
     // old-era files still prune by (r13)
-    if (truncate || ColeBucket.readHistory(path, conf).isEmpty)
+    if (resetLayout || ColeBucket.readHistory(path, conf).isEmpty)
       bucketSpec.foreach { case (n, cs) =>
         ColeBucket.writeSpec(path, conf, n, cs, bucketDerive) }
-    // first declaration only: an append into an EVOLVED table resolves
-    // the active spec, and re-persisting it as a singleton would wipe
-    // the evolution history the old-era files still prune by
     if (ColeTemporal.readSpecs(path, conf).isEmpty)
       temporal.foreach(ColeTemporal.writeSpec(path, conf, _))
     // branch writes place files under the staging root (layout subpaths
     // mirror the table's 1:1 — publish is a rename per file); sidecars,
     // checks and the active bucket era still resolve from the TABLE path
-    branch.foreach(b => fs.mkdirs(new org.apache.hadoop.fs.Path(
-      ColeRefs.branchDataRoot(path, b))))
+    val dataRoot = branch.map(ColeRefs.branchDataRoot(path, _))
+    dataRoot.foreach(r => fs.mkdirs(new org.apache.hadoop.fs.Path(r)))
     new ColeWriterFactory(schema, path, rowGroupSize,
       // evolved tables auto-write v2 (new columns carry NULLs for rows
       // landing beside pre-evolution files); others stay v1-compatible
@@ -3134,13 +3130,67 @@ class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
       partCols, bucketSpec, bucketDerive,
       // CHECK constraints compile once here on the driver; executors
       // evaluate bound predicates per row (identity when none declared)
-      ColeChecks.forWrite(path, conf, schema), temporal,
-      dataRoot = branch.map(ColeRefs.branchDataRoot(path, _)))
+      ColeChecks.forWrite(path, conf, schema), temporal, dataRoot, naming)
+  }
+}
+
+class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
+    truncate: Boolean, conf: Configuration, partCols: Seq[String],
+    bucketSpec: Option[(Int, Seq[String])] = None,
+    dynamicOverwrite: Boolean = false,
+    overwriteFilters: Array[Filter] = Array.empty,
+    bucketDerive: Option[(String, Seq[String])] = None,
+    temporal: Option[ColeTemporal.Spec] = None,
+    branch: Option[String] = None)
+    extends BatchWrite {
+
+  // versioning bookkeeping (no-ops on unversioned tables): files the
+  // truncate/overwrite paths retired, rolled back on abort, recorded
+  // with the adds at commit
+  private val retired = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+  private val retireStamp = java.lang.Long.toHexString(System.nanoTime())
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    // branch writes are append-only: truncate/overwrite mutate main, and
+    // the publish is a pure rename with no conflict surface
+    branch.foreach(b =>
+      require(!truncate && !dynamicOverwrite && overwriteFilters.isEmpty,
+        s"branch '$b' writes are append-only (write-audit-publish): " +
+          "truncate/overwrite mutate the live table — run them on main"))
+    ColeWritePrep.factory(schema, path, rowGroupSize, conf, partCols,
+        bucketSpec, bucketDerive, temporal, branch, ColeFileNaming.Task,
+        resetLayout = truncate) {
+      val (fs, _) = ColeIO.resolve(path, conf)
+      val versioned = ColeVersions.enabled(path, conf)
+      if (truncate)
+        ColeIO.listPartitioned(path, conf).foreach { case (s, _) =>
+          retired ++= ColeVersions.retireOrDelete(fs, path,
+            s.getPath.toString, retireStamp, versioned)
+        }
+      // static-partition OVERWRITE: drop files of exactly the matching
+      // partitions before any new data lands; the rest of the table is
+      // untouched (the builder validated every predicate hits a partition
+      // column)
+      if (overwriteFilters.nonEmpty) {
+        val preds = overwriteFilters.flatMap(ColePredicate.fromFilter)
+        ColeIO.listPartitioned(path, conf).foreach { case (st, parts) =>
+          val pv = parts.toMap
+          if (preds.forall(p => pv.get(p.column).exists(
+              ColePredicate.partitionKeeps(p, _)))) {
+            retired ++= ColeVersions.retireOrDelete(fs, path,
+              st.getPath.toString, retireStamp, versioned)
+            fs.delete(new org.apache.hadoop.fs.Path(
+              ColeBloomIndex.sidecarPath(st.getPath.toString)), false)
+            ColeDv.drop(fs, st.getPath.toString)
+          }
+        }
+      }
+    }
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val newFiles = messages.flatMap {
-      case ColeCommitMessage(fs0) => fs0
+      case ColeCommitMessage(fs0) => fs0.map(_._2)
       case _ => Seq.empty
     }
     val (fs, _) = ColeIO.resolve(path, conf)
@@ -3188,7 +3238,7 @@ class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     messages.collect { case ColeCommitMessage(fs0) =>
-      fs0.foreach { f =>
+      fs0.foreach { case (f, _) =>
         val (fs, p) = ColeIO.resolve(f, conf)
         fs.delete(p, false)
       }
@@ -3201,6 +3251,11 @@ class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
   }
 }
 
+/** The one task-side write factory: batch appends/overwrites, the
+  * row-level REPLACE and merge-on-read writes, and the streaming sink.
+  * Routes rows to the bucketed, partitioned or plain writer by layout and
+  * names every file through `naming`.
+  */
 class ColeWriterFactory(schema: StructType, path: String, rowGroupSize: Int,
     hconf: ColeHadoopConf, partCols: Seq[String] = Seq.empty,
     bucketSpec: Option[(Int, Seq[String])] = None,
@@ -3210,28 +3265,40 @@ class ColeWriterFactory(schema: StructType, path: String, rowGroupSize: Int,
     // branch writes (r14): files PLACE under the staging root while every
     // table-level resolution (sidecars, active era, checks) keeps using
     // `path` — layout subpaths mirror the table's, so publish renames 1:1
-    dataRoot: Option[String] = None)
-    extends DataWriterFactory {
+    dataRoot: Option[String] = None,
+    naming: ColeFileNaming)
+    extends DataWriterFactory with StreamingDataWriterFactory {
   // resolved on the DRIVER at factory construction (one sidecar read),
   // serialized to tasks: writers route by the ACTIVE era's directory key
   private val bucketDirKey: String =
     if (bucketSpec.isEmpty) ColeBucket.DirKey
     else ColeBucket.activeDirKey(path, hconf.value)
   private val root: String = dataRoot.getOrElse(path)
+
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    createWriter(partitionId, taskId, -1L)
+
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] = {
+    val conf = hconf.value
+    // the k-th file this task opens in layout directory `dir` (relative
+    // to the data root; "" is the root itself)
+    def open(fileSchema: StructType, dir: String, k: Int): ColeDataWriter = {
+      val (tmp, file) = naming.paths(if (dir.isEmpty) root else s"$root/$dir",
+        partitionId, taskId, epochId, k)
+      new ColeDataWriter(fileSchema, tmp, file, naming.taskRenames,
+        rowGroupSize, conf)
+    }
     ColeChecks.wrap(bucketSpec match {
       case Some((n, c)) =>
-        new ColeBucketedDataWriter(schema, root, partitionId, taskId,
-          rowGroupSize, hconf.value, n,
+        new ColeBucketedDataWriter(schema, open, conf, n,
           bucketDerive.map(_._2).getOrElse(c), bucketDerive.map(_._1), temporal,
           bucketDirKey)
-      case None if partCols.isEmpty && temporal.isEmpty =>
-        new ColeDataWriter(schema, f"$root/part-$partitionId%05d-$taskId.col",
-          rowGroupSize, hconf.value)
+      case None if partCols.isEmpty && temporal.isEmpty => open(schema, "", -1)
       case None =>
-        new ColePartitionedDataWriter(schema, root, partitionId, taskId,
-          rowGroupSize, hconf.value, partCols, temporal)
+        new ColePartitionedDataWriter(schema, open, conf, partCols, temporal)
     }, checks, schema)
+  }
 }
 
 /** Hashed-bucket writer: routes each row to `_bucket=<b>/` by the shared
@@ -3243,9 +3310,9 @@ class ColeWriterFactory(schema: StructType, path: String, rowGroupSize: Int,
   * `df.repartition(n, col)`-ish input, but correctness never depends on
   * it: any task can emit to any bucket.
   */
-class ColeBucketedDataWriter(schema: StructType, protected val baseDir: String,
-    protected val partitionId: Int, protected val taskId: Long,
-    rowGroupSize: Int, conf: Configuration,
+class ColeBucketedDataWriter(schema: StructType,
+    /** Opens the k-th file of a layout directory (see [[ColeWriterFactory]]). */
+    open: (StructType, String, Int) => ColeDataWriter, conf: Configuration,
     numBuckets: Int, bucketCols: Seq[String],
     /** Synthetic combined-key mode: the name of the LONG column this
       * writer derives (the combined avalanche hash of `bucketCols`) and
@@ -3267,13 +3334,13 @@ class ColeBucketedDataWriter(schema: StructType, protected val baseDir: String,
       * `_bucket` for a never-evolved layout, `_bucket<era>` after —
       * resolved once on the driver by the factory.
       */
-    protected val bucketDirKey: String = ColeBucket.DirKey)
+    bucketDirKey: String = ColeBucket.DirKey)
     extends DataWriter[InternalRow] {
 
   private val kis: Array[Int] = bucketCols.map(schema.fieldIndex).toArray
   private val keyTypes: Array[DataType] = kis.map(schema.fields(_).dataType)
   private val writers = new Array[ColeDataWriter](numBuckets)
-  private val closedFiles = scala.collection.mutable.ArrayBuffer.empty[String]
+  private val closedFiles = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
   private val temporalIdx: Int = temporal.fold(-1) { t =>
     val i = schema.fieldIndex(t.src)
     schema.fields(i).dataType match {
@@ -3304,30 +3371,18 @@ class ColeBucketedDataWriter(schema: StructType, protected val baseDir: String,
   private val overrideRow =
     if (synthInSchema >= 0) new LongOverrideRow(synthInSchema) else null
 
-  /** File this task writes in bucket `b` — the streaming writer overrides
-    * with epoch-deterministic dotted in-progress names.
-    */
-  protected def fileName(b: Int): String =
-    f"$baseDir/$bucketDirKey=$b/part-$partitionId%05d-$taskId.col"
-
-  /** The k-th file this task opens under (unit directory `prefix`,
-    * bucket `b`) of a composed temporal+bucket layout — `k` keeps names
-    * unique past sub-writer eviction. Streaming overrides.
-    */
-  protected def temporalFileName(prefix: String, b: Int, k: Int): String =
-    f"$baseDir/$prefix/$bucketDirKey=$b/part-$partitionId%05d-$taskId-$k%d.col"
-
   /** Sub-writer for bucket `b` of the row's (possibly temporal-derived)
-    * unit directory. Flat layouts stay on the array fast path; composed
-    * layouts key a bounded LinkedHashMap by (ordinal, bucket), evicting
-    * the least-recently-created writer (its file commits as-is; several
-    * part files per directory are fine).
+    * unit directory. Flat layouts stay on the array fast path (one file
+    * per bucket per task); composed layouts key a bounded LinkedHashMap
+    * by (ordinal, bucket), evicting the least-recently-created writer
+    * (its file commits as-is; several part files per directory are fine,
+    * the file ordinal `k` keeps their names unique).
     */
   private def writerFor(record: InternalRow, b: Int): ColeDataWriter =
     if (temporalIdx < 0) {
       var w = writers(b)
       if (w == null) {
-        w = new ColeDataWriter(fileSchema, fileName(b), rowGroupSize, conf)
+        w = open(fileSchema, s"$bucketDirKey=$b", -1)
         writers(b) = w
       }
       w
@@ -3342,12 +3397,11 @@ class ColeBucketedDataWriter(schema: StructType, protected val baseDir: String,
         case None =>
           if (temporalWriters.size >= ColePartitionedDataWriter.MaxOpenWriters) {
             val (oldKey, oldest) = temporalWriters.head
-            closedFiles ++= oldest.commitFiles()
+            closedFiles += oldest.commitFiles()
             temporalWriters.remove(oldKey)
           }
-          val fresh = new ColeDataWriter(fileSchema,
-            temporalFileName(s"${t.dirKey}=$ord", b,
-              temporalWriters.size + closedFiles.size), rowGroupSize, conf)
+          val fresh = open(fileSchema, s"${t.dirKey}=$ord/$bucketDirKey=$b",
+            temporalWriters.size + closedFiles.size)
           temporalWriters.put((ord, b), fresh)
           fresh
       }
@@ -3384,9 +3438,9 @@ class ColeBucketedDataWriter(schema: StructType, protected val baseDir: String,
   }
 
   override def commit(): WriterCommitMessage = {
-    writers.foreach(w => if (w != null) closedFiles ++= w.commitFiles())
+    writers.foreach(w => if (w != null) closedFiles += w.commitFiles())
     java.util.Arrays.fill(writers.asInstanceOf[Array[AnyRef]], null)
-    temporalWriters.values.foreach(closedFiles ++= _.commitFiles())
+    temporalWriters.values.foreach(closedFiles += _.commitFiles())
     temporalWriters.clear()
     ColeCommitMessage(closedFiles.toSeq)
   }
@@ -3394,7 +3448,7 @@ class ColeBucketedDataWriter(schema: StructType, protected val baseDir: String,
   override def abort(): Unit = {
     writers.foreach(w => if (w != null) w.abort())
     temporalWriters.values.foreach(_.abort())
-    closedFiles.foreach { f =>
+    closedFiles.foreach { case (f, _) =>
       val (fs, p) = ColeIO.resolve(f, conf)
       fs.delete(p, false)
     }
@@ -3413,18 +3467,11 @@ class ColeBucketedDataWriter(schema: StructType, protected val baseDir: String,
   */
 object ColePartitionedDataWriter { val MaxOpenWriters = 256 }
 
-class ColePartitionedDataWriter(schema: StructType, protected val baseDir: String,
-    protected val partitionId: Int, protected val taskId: Long,
-    rowGroupSize: Int, conf: Configuration,
+class ColePartitionedDataWriter(schema: StructType,
+    /** Opens the k-th file of a layout directory (see [[ColeWriterFactory]]). */
+    open: (StructType, String, Int) => ColeDataWriter, conf: Configuration,
     partCols: Seq[String],
     temporal: Option[ColeTemporal.Spec] = None) extends DataWriter[InternalRow] {
-
-  /** Name of the k-th file this task opens under partition directory
-    * `dir` — the streaming writer overrides this with epoch-deterministic
-    * in-progress names.
-    */
-  protected def fileName(dir: String, k: Int): String =
-    f"$baseDir/$dir/part-$partitionId%05d-$taskId-$k%d.col"
 
   private val partIdx: Array[Int] = partCols.map(schema.fieldIndex).toArray
   private val dataIdx: Array[Int] =
@@ -3447,7 +3494,7 @@ class ColePartitionedDataWriter(schema: StructType, protected val baseDir: Strin
   }
 
   private val writers = scala.collection.mutable.LinkedHashMap.empty[String, ColeDataWriter]
-  private val closedFiles = scala.collection.mutable.ArrayBuffer.empty[String]
+  private val closedFiles = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
 
   private def partDir(record: InternalRow): String = {
     val identity = partIdx.zipWithIndex.map { case (fi, i) =>
@@ -3481,11 +3528,10 @@ class ColePartitionedDataWriter(schema: StructType, protected val baseDir: Strin
           // evict the least-recently-created writer; its file commits
           // as-is (multiple part files per partition value are fine)
           val (oldKey, oldest) = writers.head
-          closedFiles ++= oldest.commitFiles()
+          closedFiles += oldest.commitFiles()
           writers.remove(oldKey)
         }
-        val fresh = new ColeDataWriter(dataSchema,
-          fileName(dir, writers.size + closedFiles.size), rowGroupSize, conf)
+        val fresh = open(dataSchema, dir, writers.size + closedFiles.size)
         writers.put(dir, fresh)
         fresh
     }
@@ -3515,14 +3561,14 @@ class ColePartitionedDataWriter(schema: StructType, protected val baseDir: Strin
   }
 
   override def commit(): WriterCommitMessage = {
-    writers.values.foreach(w => closedFiles ++= w.commitFiles())
+    writers.values.foreach(w => closedFiles += w.commitFiles())
     writers.clear()
     ColeCommitMessage(closedFiles.toSeq)
   }
 
   override def abort(): Unit = {
     writers.values.foreach(_.abort())
-    closedFiles.foreach { f =>
+    closedFiles.foreach { case (f, _) =>
       val (fs, p) = ColeIO.resolve(f, conf)
       fs.delete(p, false)
     }
@@ -3535,19 +3581,14 @@ class ColePartitionedDataWriter(schema: StructType, protected val baseDir: Strin
   * chunk from the data (sorted → DELTA, runny → RLE, low-cardinality
   * strings → DICTIONARY), flushes, repeats.
   */
-class ColeDataWriter(schema: StructType, file: String, rowGroupSize: Int,
+class ColeDataWriter(schema: StructType, writePath: String, file: String,
+    renameAtCommit: Boolean, rowGroupSize: Int,
     conf: Configuration) extends DataWriter[InternalRow] {
 
   private val coleCols = ColeUtil.toColeColumns(schema)
   private val version = ColeFileWriter.resolveVersion(coleCols, conf)
-  // batch tasks write to a dotted in-progress name and rename at commit:
-  // listings (and polling streaming sources) must never observe a torn
-  // half-written .col file. Streaming tasks pass an already-dotted name
-  // (their DRIVER renames at epoch commit) — keep it verbatim.
-  private val fileName = file.substring(file.lastIndexOf('/') + 1)
-  private val writePath =
-    if (fileName.startsWith(".")) file
-    else file.substring(0, file.lastIndexOf('/') + 1) + s".$fileName.inprogress"
+  // bytes go to the dotted in-progress `writePath`; `file` is the final
+  // name, renamed to here at commit or by the driver (ColeFileNaming)
   private val writer = new ColeFileWriter(writePath, coleCols, conf)
   // primitive row-group buffers: a boxing ArrayBuffer[Int/Long] would box
   // every cell of every numeric column on the write path. Allocated per
@@ -3689,30 +3730,23 @@ class ColeDataWriter(schema: StructType, file: String, rowGroupSize: Int,
     if (distinct.size * 2 < probe || distinct.size <= 256) Dict else Plain
   }
 
-  /** Flush, close, and return the written file — for use as a sub-writer
-    * of the partitioned writer.
-    *
-    * Defer mode ([[ColeFileWriter.DeferRenameKey]] on the conf): the
-    * dotted in-progress file is NOT renamed at task commit — the DRIVER
-    * renames at job commit, after its transactional bookkeeping. This is
-    * what keeps row-level REPLACE invisible to concurrent readers (and
-    * tailing streams) until the compaction record is durable.
+  /** Flush, close, and return the (written, final) pair — for use as a
+    * sub-writer of the routing writers. Renames to the final name first
+    * when the task owns the rename.
     */
-  def commitFiles(): Seq[String] = {
+  def commitFiles(): (String, String) = {
     flush()
     writer.close()
-    if (writePath != file &&
-        conf != null && conf.getBoolean(ColeFileWriter.DeferRenameKey, false))
-      return Seq(writePath)
-    if (writePath != file) {
+    if (!renameAtCommit) (writePath, file)
+    else {
       val (fs, t) = ColeIO.resolve(writePath, conf)
       val (_, f) = ColeIO.resolve(file, conf)
       require(fs.rename(t, f), s"commit rename failed: $writePath -> $file")
+      (file, file)
     }
-    Seq(file)
   }
 
-  override def commit(): WriterCommitMessage = ColeCommitMessage(commitFiles())
+  override def commit(): WriterCommitMessage = ColeCommitMessage(Seq(commitFiles()))
 
   override def abort(): Unit = {
     writer.close()
@@ -4101,22 +4135,18 @@ class ColeMicroBatchStream(scan: ColeScan, path: String, conf: Configuration,
   override def stop(): Unit = ()
 }
 
-/** Commit message of one streaming task: (in-progress, final) renames the
-  * driver performs at epoch commit.
-  */
-final case class ColeEpochCommit(renames: Seq[(String, String)])
-    extends WriterCommitMessage
-
 /** Streaming (Append) sink over the COLE layout.
   *
-  * Exactly-once story: tasks write dotted `.part-e<epoch>-p<pid>-<k>.col
-  * .inprogress-<taskId>` files (invisible to readers — listings match only
-  * `*.col`), and the DRIVER renames them to epoch-deterministic finals
-  * (`part-e<epoch>-p<pid>-<k>.col`) at epoch commit. A replayed epoch —
-  * failure between sink commit and checkpoint write — regenerates the same
-  * batch under the same epoch id, and the rename overwrites the same final
-  * names instead of appending duplicates. Task retries/speculation leave
-  * only uncommitted dotted files, cleaned by abort and ignored by readers.
+  * Exactly-once story: tasks write through [[ColeFileNaming.Epoch]] —
+  * dotted `.part-e<epoch>-p<pid>-<k>.col.inprogress-<taskId>` files
+  * (invisible to readers — listings match only `*.col`) — and the DRIVER
+  * renames them to the epoch-deterministic finals
+  * (`part-e<epoch>-p<pid>-<k>.col`) their commit messages carry. A
+  * replayed epoch — failure between sink commit and checkpoint write —
+  * regenerates the same batch under the same epoch id, and the rename
+  * overwrites the same final names instead of appending duplicates. Task
+  * retries/speculation leave only uncommitted dotted files, cleaned by
+  * abort and ignored by readers.
   */
 object ColeStreamingWrite {
   /** Directory (under the table root) of per-epoch commit manifests: one
@@ -4145,80 +4175,16 @@ class ColeStreamingWrite(schema: StructType, path: String, rowGroupSize: Int,
       */
     branch: Option[String] = None) extends StreamingWrite {
 
-  /** Files land here: the table root, or the branch staging root (whose
-    * layout mirrors the table's, so staged rels ARE their publish
-    * destinations).
-    */
-  private val dataRoot: String =
-    branch.fold(path)(ColeRefs.branchDataRoot(path, _))
-
+  // the batch write's preparation, once per epoch: CHECK constraints and
+  // the evolved-table format version hold for streamed rows too
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    ColeUtil.toColeColumns(schema)
-    ColeCatalog.droppedColumns(path, conf).intersect(schema.fieldNames)
-      .foreach(c => throw new IllegalArgumentException(
-        s"column '$c' was dropped from this table; old files still store " +
-          "its values — pick a new name or rewrite the table"))
-    partCols.foreach(c => require(schema.fieldNames.contains(c),
-      s"partition column '$c' not in write schema"))
-    require(partCols.size < schema.size,
-      "cannot partition by every column: no data columns remain")
-    require(bucketSpec.isEmpty || partCols.isEmpty,
-      "COLE tables are either hive-partitioned or hash-bucketed, not both")
-    bucketSpec.foreach { case (n, cs) =>
-      val hashCols = bucketDerive.map(_._2).getOrElse(cs)
-      bucketDerive.foreach { case (synth, _) =>
-        require(!schema.fieldNames.contains(synth),
-          s"bucketKey column '$synth' already exists in the write schema; " +
-            "the writer derives and stores it — pick an unused name")
-      }
-      hashCols.foreach { c =>
-        require(schema.fieldNames.contains(c), s"bucket column '$c' not in write schema")
-        schema.fields(schema.fieldIndex(c)).dataType match {
-          case IntegerType | LongType | StringType => ()
-          case other => throw new IllegalArgumentException(
-            s"COLE buckets on INT/LONG/STRING keys; '$c' is $other")
-        }
-      }
-      require(n > 0 && n <= 65536, s"bucket count must be in [1, 65536], got $n")
-    }
-    val (fs, dir) = ColeIO.resolve(dataRoot, conf)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    if (branch.isEmpty) {
-      // sidecar BEFORE any epoch lands (idempotent overwrite), so a reader
-      // tailing the growing table can prove co-partitioning from epoch one
-      bucketSpec.foreach { case (n, cs) =>
-        ColeBucket.writeSpec(path, conf, n, cs, bucketDerive) }
-      // first declaration only — never clobber an evolved spec history
-      if (ColeTemporal.readSpecs(path, conf).isEmpty)
-        temporal.foreach(ColeTemporal.writeSpec(path, conf, _))
-    } else {
-      // a branch stream STAGES data — it must not mutate the table's
-      // layout sidecars pre-audit. Declaring a NEW layout through a
-      // branch stream is rejected; an EXISTING table layout routes the
-      // staged files identically (the staging root mirrors it).
-      bucketSpec.foreach { case (n, cs) =>
-        require(ColeBucket.readSpec(path, conf).contains((n, cs)),
-          "a branch stream cannot declare a NEW bucket layout — create " +
-            "the table bucketed first, then stream onto the branch") }
-      temporal.foreach { t =>
-        require(ColeTemporal.readSpecs(path, conf).lastOption.contains(t),
-          "a branch stream cannot declare a NEW temporal layout — " +
-            "declare it on the table first, then stream onto the branch") }
-    }
-    new ColeStreamingWriterFactory(schema, dataRoot, rowGroupSize,
-      new ColeHadoopConf(conf), partCols, bucketSpec, bucketDerive,
-      // CHECK constraints hold for streamed rows too — compiled once per
-      // epoch's factory on the driver, enforced before any byte lands
-      ColeChecks.forWrite(path, conf, schema), temporal,
-      // bucket-era routing resolves against the TABLE's history, not the
-      // staging root
-      dirKeyPath = path)
-  }
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    ColeWritePrep.factory(schema, path, rowGroupSize, conf, partCols,
+      bucketSpec, bucketDerive, temporal, branch, ColeFileNaming.Epoch)()
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val finals = messages.flatMap {
-      case ColeEpochCommit(renames) => renames.map { case (tmp, fin) =>
+      case ColeCommitMessage(renames) => renames.map { case (tmp, fin) =>
         val (fs, t) = ColeIO.resolve(tmp, conf)
         val (_, f) = ColeIO.resolve(fin, conf)
         if (fs.exists(f)) fs.delete(f, false) // epoch replay: overwrite
@@ -4267,126 +4233,10 @@ class ColeStreamingWrite(schema: StructType, path: String, rowGroupSize: Int,
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case ColeEpochCommit(renames) => renames.foreach { case (tmp, _) =>
+      case ColeCommitMessage(renames) => renames.foreach { case (tmp, _) =>
         val (fs, t) = ColeIO.resolve(tmp, conf)
         fs.delete(t, false)
       }
       case _ => ()
     }
-}
-
-object ColeStreaming {
-  /** `dir/.NAME.inprogress-<task>` → `dir/NAME` (the final, epoch-
-    * deterministic name a replayed epoch converges to).
-    */
-  def finalName(tmp: String, taskId: Long): String = {
-    val slash = tmp.lastIndexOf('/')
-    val name = tmp.substring(slash + 1)
-    require(name.startsWith(".") && name.endsWith(s".inprogress-$taskId"),
-      s"not an in-progress file of task $taskId: $tmp")
-    tmp.substring(0, slash + 1) +
-      name.substring(1, name.length - s".inprogress-$taskId".length)
-  }
-}
-
-class ColeStreamingWriterFactory(schema: StructType, path: String,
-    rowGroupSize: Int, hconf: ColeHadoopConf, partCols: Seq[String],
-    bucketSpec: Option[(Int, Seq[String])] = None,
-    bucketDerive: Option[(String, Seq[String])] = None,
-    checks: Array[CompiledCheck] = Array.empty,
-    temporal: Option[ColeTemporal.Spec] = None,
-    /** Where layout sidecars live — the TABLE root. Differs from `path`
-      * only for branch staging, where files land under the staging root
-      * but era routing still follows the table's history.
-      */
-    dirKeyPath: String = null)
-    extends StreamingDataWriterFactory {
-
-  private val bucketDirKey: String =
-    if (bucketSpec.isEmpty) ColeBucket.DirKey
-    else ColeBucket.activeDirKey(
-      if (dirKeyPath == null) path else dirKeyPath, hconf.value)
-
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    ColeChecks.wrap(bucketSpec match {
-      case Some((n, c)) =>
-        new ColeStreamingBucketedDataWriter(schema, path, partitionId, taskId,
-          rowGroupSize, hconf.value, n,
-          bucketDerive.map(_._2).getOrElse(c), epochId, bucketDerive.map(_._1),
-          temporal, bucketDirKey)
-      case None if partCols.isEmpty && temporal.isEmpty =>
-        val tmp =
-          f"$path/.part-e$epochId%d-p$partitionId%05d-0.col.inprogress-$taskId"
-        new ColeStreamingDataWriter(schema, tmp, taskId, rowGroupSize, hconf.value)
-      case None =>
-        new ColeStreamingPartitionedDataWriter(schema, path, partitionId, taskId,
-          rowGroupSize, hconf.value, partCols, epochId, temporal)
-    }, checks, schema)
-}
-
-/** Unpartitioned streaming task writer: one dotted in-progress file,
-  * renamed by the driver at epoch commit.
-  */
-class ColeStreamingDataWriter(schema: StructType, tmp: String, taskId: Long,
-    rowGroupSize: Int, conf: Configuration) extends DataWriter[InternalRow] {
-  private val inner = new ColeDataWriter(schema, tmp, rowGroupSize, conf)
-  override def write(record: InternalRow): Unit = inner.write(record)
-  override def commit(): WriterCommitMessage = {
-    inner.commitFiles()
-    ColeEpochCommit(Seq(tmp -> ColeStreaming.finalName(tmp, taskId)))
-  }
-  override def abort(): Unit = inner.abort()
-  override def close(): Unit = ()
-}
-
-/** Bucketed streaming task writer: the batch bucket-routing machinery with
-  * epoch-deterministic dotted names per `_bucket=<b>/` directory — a
-  * streaming ingest lands DIRECTLY in the layout that joins shuffle-free
-  * (and that bucket-prunes point lookups), with the same epoch-replay
-  * idempotence as every other cole sink shape.
-  */
-class ColeStreamingBucketedDataWriter(schema: StructType, baseDir0: String,
-    partitionId0: Int, taskId0: Long, rowGroupSize: Int, conf: Configuration,
-    numBuckets: Int, bucketCols: Seq[String], epochId: Long,
-    deriveKey0: Option[String] = None,
-    temporal0: Option[ColeTemporal.Spec] = None,
-    bucketDirKey0: String = ColeBucket.DirKey)
-    extends ColeBucketedDataWriter(schema, baseDir0, partitionId0, taskId0,
-      rowGroupSize, conf, numBuckets, bucketCols, deriveKey0, temporal0,
-      bucketDirKey0) {
-
-  override protected def fileName(b: Int): String =
-    f"$baseDir/$bucketDirKey=$b/" +
-      f".part-e$epochId%d-p$partitionId%05d-0.col.inprogress-$taskId"
-
-  override protected def temporalFileName(prefix: String, b: Int, k: Int): String =
-    f"$baseDir/$prefix/$bucketDirKey=$b/" +
-      f".part-e$epochId%d-p$partitionId%05d-$k%d.col.inprogress-$taskId"
-
-  override def commit(): WriterCommitMessage = super.commit() match {
-    case ColeCommitMessage(files) =>
-      ColeEpochCommit(files.map(t => t -> ColeStreaming.finalName(t, taskId)))
-    case other => other
-  }
-}
-
-/** Partitioned streaming task writer: the batch routing/eviction machinery
-  * with epoch-deterministic dotted names per `key=value` directory.
-  */
-class ColeStreamingPartitionedDataWriter(schema: StructType, baseDir: String,
-    partitionId: Int, taskId: Long, rowGroupSize: Int, conf: Configuration,
-    partCols: Seq[String], epochId: Long,
-    temporal: Option[ColeTemporal.Spec] = None)
-    extends ColePartitionedDataWriter(schema, baseDir, partitionId, taskId,
-      rowGroupSize, conf, partCols, temporal) {
-
-  override protected def fileName(dir: String, k: Int): String =
-    f"$baseDir/$dir/.part-e$epochId%d-p$partitionId%05d-$k%d.col.inprogress-$taskId"
-
-  override def commit(): WriterCommitMessage = super.commit() match {
-    case ColeCommitMessage(files) =>
-      ColeEpochCommit(files.map(t => t -> ColeStreaming.finalName(t, taskId)))
-    case other => other
-  }
 }

@@ -71,10 +71,10 @@ class ColeDeltaWriteBuilder(op: ColeRowLevelOperation, schema: StructType,
     new ColeDeltaWriteImpl(op, schema, path, rowGroupSize, conf, partCols)
 }
 
-/** Per-task message: files this task wrote (dotted, invisible) plus the
-  * row ordinals it deleted, grouped by source file.
+/** Per-task message: files this task wrote as (dotted, final) pairs plus
+  * the row ordinals it deleted, grouped by source file.
   */
-final case class ColeDeltaCommitMessage(files: Seq[String],
+final case class ColeDeltaCommitMessage(files: Seq[(String, String)],
     deletes: Map[String, Array[Int]]) extends WriterCommitMessage
 
 class ColeDeltaWriteImpl(op: ColeRowLevelOperation, schema: StructType,
@@ -96,14 +96,9 @@ class ColeDeltaWriteImpl(op: ColeRowLevelOperation, schema: StructType,
       partCols.foreach(c => require(schema.fieldNames.contains(c),
         s"partition column '$c' not in delta-write schema"))
     }
-    // inserted/updated rows stay invisible (dotted) until commit has
-    // race-checked and ordered the swap — same discipline as the
-    // replace write
     // evolved columns (in the write schema, absent from some live file)
     // make NULLs unavoidable in new-image files — auto-select v2 for them
-    val wconf = new Configuration(
-      ColeUtil.evolvedWriteConf(conf, path, schema, partCols))
-    wconf.setBoolean(ColeFileWriter.DeferRenameKey, true)
+    val wconf = ColeUtil.evolvedWriteConf(conf, path, schema, partCols)
     val inner: Option[ColeWriterFactory] =
       if (!hasRows) None
       else Some(new ColeWriterFactory(schema, path, rowGroupSize,
@@ -115,25 +110,19 @@ class ColeDeltaWriteImpl(op: ColeRowLevelOperation, schema: StructType,
         // post-image rows validate before any delta file lands
         ColeChecks.forWrite(path, conf, schema),
         // temporal layouts re-derive for new-image files
-        ColeTemporal.readSpec(path, conf)))
+        ColeTemporal.readSpec(path, conf),
+        // inserted/updated rows stay invisible (dotted) until commit has
+        // race-checked and ordered the swap — same discipline as the
+        // replace write
+        naming = ColeFileNaming.Deferred(
+          s"delta-${java.lang.Long.toHexString(System.nanoTime())}-")))
     new ColeDeltaWriterFactory(inner)
-  }
-
-  private val stamp = java.lang.Long.toHexString(System.nanoTime())
-
-  private def finalOf(dotted: String): String = {
-    val slash = dotted.lastIndexOf('/')
-    val name = dotted.substring(slash + 1)
-    require(name.startsWith(".") && name.endsWith(".inprogress"),
-      s"not a deferred in-progress file: $dotted")
-    dotted.substring(0, slash + 1) + s"delta-$stamp-" +
-      name.substring(1, name.length - ".inprogress".length)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: ColeDeltaCommitMessage => m }
     val (fs, _) = ColeIO.resolve(path, conf)
-    val newDotted = msgs.flatMap(_.files).filter { f =>
+    val newDotted = msgs.flatMap(_.files).filter { case (f, _) =>
       val r = new ColeFileReader(f, conf)
       val rows = try r.meta.totalRows finally r.close()
       if (rows == 0L) { fs.delete(new HPath(f), false); false } else true
@@ -183,8 +172,7 @@ class ColeDeltaWriteImpl(op: ColeRowLevelOperation, schema: StructType,
       }
     }
     // 1. new rows become visible
-    val finals = newDotted.map { f =>
-      val dst = finalOf(f)
+    val finals = newDotted.map { case (f, dst) =>
       require(fs.rename(new HPath(f), new HPath(dst)),
         s"delta-commit rename failed: $f")
       dst
@@ -226,7 +214,7 @@ class ColeDeltaWriteImpl(op: ColeRowLevelOperation, schema: StructType,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case ColeDeltaCommitMessage(files, _) => files.foreach { f =>
+      case ColeDeltaCommitMessage(files, _) => files.foreach { case (f, _) =>
         val (fs, p) = ColeIO.resolve(f, conf)
         fs.delete(p, false)
       }

@@ -551,12 +551,6 @@ object ColeFileWriter {
     */
   val VersionKey = "graft.cole.version"
 
-  /** Hadoop-conf key (boolean): task commits KEEP the dotted in-progress
-    * name; the driver renames at job commit — the row-level REPLACE
-    * write's invisibility window (see ColeDataWriter.commitFiles).
-    */
-  val DeferRenameKey = "graft.cole.deferCommitRename"
-
   /** Resolve the format version for a column set: explicit wins (but v1
     * cannot carry v2-only types); otherwise the lowest version that can
     * hold the schema — keeping DEFAULT writes byte-compatible with the

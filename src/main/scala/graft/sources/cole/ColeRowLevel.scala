@@ -482,16 +482,9 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
           s"synthetic bucket column '$synth' missing from replace-write schema") }
       require(n > 0 && n <= 65536, s"bucket count must be in [1, 65536], got $n")
     }
-    // defer task-commit renames: replacement files stay DOTTED (invisible
-    // to listings, readers, and tailing streams) until this driver's
-    // commit has race-checked the replaced set and made the compaction
-    // record durable — without this, a stream triggering between task
-    // commit and job commit would replay every replaced row
     // evolved columns (in the write schema, absent from some live file)
     // make NULLs unavoidable in the rewrite — auto-select v2 for it
-    val wconf = new Configuration(
-      ColeUtil.evolvedWriteConf(conf, path, schema, partCols))
-    wconf.setBoolean(ColeFileWriter.DeferRenameKey, true)
+    val wconf = ColeUtil.evolvedWriteConf(conf, path, schema, partCols)
     // branch DML (WAP): replacement rows land STAGED under the branch's
     // data root (layout subpaths mirror the table's 1:1, same as branch
     // appends) — main's tree is never written
@@ -510,28 +503,22 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
         // unit directory (or its NEW one when the UPDATE moved the
         // timestamp) — layout invariants survive DML
         ColeTemporal.readSpec(path, conf),
-        dataRoot = dataRoot), schema)
+        dataRoot = dataRoot,
+        // defer the renames: replacement files stay DOTTED (invisible to
+        // listings, readers, and tailing streams) until this driver's
+        // commit has race-checked the replaced set and made the
+        // compaction record durable — without this, a stream triggering
+        // between task commit and job commit would replay every replaced
+        // row. The stamp keeps final names unique across sessions.
+        naming = ColeFileNaming.Deferred(s"replace-$stamp-")), schema)
   }
 
-  /** `dir/.NAME.inprogress` → `dir/replace-<stamp>-NAME`. The stamp makes
-    * the final name unique across SESSIONS: task ids restart per
-    * application, so a later replace write can otherwise mint the exact
-    * `part-<pid>-<tid>.col` name of a file it is replacing — and the
-    * rename-before-delete swap would collide with it.
-    */
   private val stamp = java.lang.Long.toHexString(System.nanoTime())
 
-  private def finalOf(dotted: String): String = {
-    val slash = dotted.lastIndexOf('/')
-    val name = dotted.substring(slash + 1)
-    require(name.startsWith(".") && name.endsWith(".inprogress"),
-      s"not a deferred in-progress file: $dotted")
-    dotted.substring(0, slash + 1) + s"replace-$stamp-" +
-      name.substring(1, name.length - ".inprogress".length)
-  }
-
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val tasks: Seq[(Int, ColeRowHash.Fp, Seq[String])] = messages.toSeq.flatMap {
+    // per task: (written, final) pairs — the written names stay dotted
+    // until the swap below renames them
+    val tasks: Seq[(Int, ColeRowHash.Fp, Seq[(String, String)])] = messages.toSeq.flatMap {
       case ColeHashedCommitMessage(fs0, pid, fp) => Seq((pid, fp, fs0))
       case ColeCommitMessage(fs0) => Seq((-1, ColeRowHash.Fp.zero, fs0))
       case _ => Seq.empty
@@ -541,12 +528,12 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     // (zero-match condition, or every row of its slice deleted) commits
     // an EMPTY (still-dotted) .col file — drop those instead of
     // littering the table
-    def dropEmpty(f: String): Boolean = {
-      val r = new ColeFileReader(f, conf)
+    def dropEmpty(f: (String, String)): Boolean = {
+      val r = new ColeFileReader(f._1, conf)
       val rows = try r.meta.totalRows finally r.close()
-      if (rows == 0L) { fs.delete(new HPath(f), false); false } else true
+      if (rows == 0L) { fs.delete(new HPath(f._1), false); false } else true
     }
-    val taskFiles: Map[Int, Seq[String]] =
+    val taskFiles: Map[Int, Seq[(String, String)]] =
       tasks.map { case (pid, _, fs0) => pid -> fs0.filter(dropEmpty) }.toMap
     val planned = op.plannedFiles
     if (branch.isDefined) {
@@ -633,8 +620,8 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     val (noopFiles: Set[String], discardTasks: Set[Int]) =
       noopDetection(tasks, taskFiles, planned)
     discardTasks.foreach(pid => taskFiles.getOrElse(pid, Seq.empty)
-      .foreach(f => fs.delete(new HPath(f), false)))
-    val newDotted: Seq[String] = taskFiles.toSeq.sortBy(_._1).collect {
+      .foreach(f => fs.delete(new HPath(f._1), false)))
+    val newDotted: Seq[(String, String)] = taskFiles.toSeq.sortBy(_._1).collect {
       case (pid, fs0) if !discardTasks.contains(pid) => fs0
     }.flatten
     val replaced = planned.filterNot { case (p, _, _) => noopFiles.contains(p) }
@@ -644,12 +631,11 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
       // record (QUALIFIED final-name outs → replaced ins) goes durable
       // BEFORE any replacement file becomes visible
       ColeCompact.writeCompactionRecord(fs, path, s"replace-$stamp",
-        newDotted.toSeq.map(f =>
-          fs.makeQualified(new HPath(finalOf(f))).toString),
+        newDotted.map(f => fs.makeQualified(new HPath(f._2)).toString),
         replaced.map(r => fs.makeQualified(new HPath(r._1)).toString))
     }
-    newDotted.foreach { f =>
-      require(fs.rename(new HPath(f), new HPath(finalOf(f))),
+    newDotted.foreach { case (f, fin) =>
+      require(fs.rename(new HPath(f), new HPath(fin)),
         s"replace-commit rename failed: $f")
     }
     val versioned = ColeVersions.enabled(path, conf)
@@ -677,7 +663,7 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     if (newDotted.nonEmpty || verRemoves.nonEmpty || foreignRemoves.nonEmpty)
       ColeVersions.commitIfEnabled(path, conf,
         op.command().toString.toLowerCase,
-        newDotted.toSeq.map(f => ColeVersions.relOf(fs, path, finalOf(f))),
+        newDotted.map(f => ColeVersions.relOf(fs, path, f._2)),
         verRemoves ++ foreignRemoves)
     } finally claims.release()
   }
@@ -688,8 +674,8 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     * discard the invisible replacement), and which write tasks' files to
     * discard with them.
     */
-  private def noopDetection(tasks: Seq[(Int, ColeRowHash.Fp, Seq[String])],
-      taskFiles: Map[Int, Seq[String]],
+  private def noopDetection(tasks: Seq[(Int, ColeRowHash.Fp, Seq[(String, String)])],
+      taskFiles: Map[Int, Seq[(String, String)]],
       planned: Seq[(String, Long, Long)]): (Set[String], Set[Int]) = {
     val slices = Option(op.scanAcc).map(_.value)
       .map(_.asScala.groupBy(_.idx).view.mapValues(_.head.fp).toMap)
@@ -736,8 +722,8 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     */
   private def commitToBranch(b: String,
       fs: org.apache.hadoop.fs.FileSystem,
-      tasks: Seq[(Int, ColeRowHash.Fp, Seq[String])],
-      taskFiles: Map[Int, Seq[String]],
+      tasks: Seq[(Int, ColeRowHash.Fp, Seq[(String, String)])],
+      taskFiles: Map[Int, Seq[(String, String)]],
       planned: Seq[(String, Long, Long)],
       messages: Array[WriterCommitMessage]): Unit = {
     val claims = ColeClaims.acquire(fs, conf, path,
@@ -778,21 +764,21 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
       }
       val (noopFiles, discardTasks) = noopDetection(tasks, taskFiles, planned)
       discardTasks.foreach(pid => taskFiles.getOrElse(pid, Seq.empty)
-        .foreach(f => fs.delete(new HPath(f), false)))
-      val newDotted: Seq[String] = taskFiles.toSeq.sortBy(_._1).collect {
+        .foreach(f => fs.delete(new HPath(f._1), false)))
+      val newDotted: Seq[(String, String)] = taskFiles.toSeq.sortBy(_._1).collect {
         case (pid, fs0) if !discardTasks.contains(pid) => fs0
       }.flatten
       // replacements become visible inside the staging root — invisible
       // to every read surface until the branch record lands below
-      newDotted.foreach { f =>
-        require(fs.rename(new HPath(f), new HPath(finalOf(f))),
+      newDotted.foreach { case (f, fin) =>
+        require(fs.rename(new HPath(f), new HPath(fin)),
           s"branch replace-commit rename failed: $f")
       }
       val stagingPrefix = fs.makeQualified(
         new HPath(ColeRefs.branchDataRoot(path, b))).toString
         .stripSuffix("/") + "/"
       val adds = newDotted.map { f =>
-        val q = fs.makeQualified(new HPath(finalOf(f))).toString
+        val q = fs.makeQualified(new HPath(f._2)).toString
         require(q.startsWith(stagingPrefix),
           s"branch replacement landed outside the staging root: $q")
         q.drop(stagingPrefix.length)
@@ -821,7 +807,7 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
           case ColeCommitMessage(fs0) => fs0
           case _ => Seq.empty
         }
-        files.foreach { f =>
+        files.foreach { case (f, _) =>
           val (fs, p) = ColeIO.resolve(f, conf)
           fs.delete(p, false)
         }
@@ -832,7 +818,7 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
 /** Replace-path commit message: the task's files plus the fingerprint of
   * every row it wrote (the write side of no-op rewrite detection).
   */
-final case class ColeHashedCommitMessage(files: Seq[String], partitionId: Int,
+final case class ColeHashedCommitMessage(files: Seq[(String, String)], partitionId: Int,
     fp: ColeRowHash.Fp) extends WriterCommitMessage
 
 /** Writer-factory decorator for the replace path: folds each written row

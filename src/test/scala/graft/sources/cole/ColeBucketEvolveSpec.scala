@@ -4,7 +4,9 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucket spec evolution (r13): `CALL cole.system.evolve_bucket` re-declares
@@ -348,6 +350,41 @@ class ColeBucketEvolveSpec extends AnyFunSuite {
       assert(!names.contains("v") && !names.contains("w"),
         s"${i.path} resurrected the dropped column: $names")
     }
+  }
+
+  test("a streamed append into an evolved table keeps both eras and routes by the active one") {
+    val s = spark
+    import s.implicits._
+    val t = s"$warehouse/db/evstream"
+    (0 until 2000).map(i => (i.toLong, i.toLong % 100)).toDF("id", "v")
+      .write.format("cole").mode("overwrite").option("bucketBy", "4:id").save(t)
+    val conf = ColeIO.driverConf()
+    ColeBucket.evolve(t, conf, 8, Seq("id"))
+    val cp = Files.createTempDirectory("cole_bevolve_cp").toString
+    val source = MemoryStream[(Long, Long)](spark)
+    val q = source.toDF().toDF("id", "v").writeStream.format("cole")
+      .option("path", t).option("checkpointLocation", cp)
+      .outputMode(OutputMode.Append).start()
+    source.addData((2000 until 2600).map(i => (i.toLong, i.toLong % 100)))
+    q.processAllAvailable()
+    q.stop()
+    // the sidecar keeps the era history the old files prune by
+    assert(ColeBucket.readHistory(t, conf).map(e => (e.n, e.cols)) ===
+      Seq((4, Seq("id")), (8, Seq("id"))))
+    // streamed files sit under the active era's key only
+    val streamed = ColeMetaCache.infos(t, conf)
+      .filter(_.path.split('/').last.startsWith("part-e"))
+    assert(streamed.nonEmpty && streamed.forall(i =>
+      i.partValues.toMap.contains(ColeBucket.dirKeyOf(1)) &&
+        !i.partValues.toMap.contains(ColeBucket.DirKey)),
+      streamed.map(_.path).mkString(", "))
+    // every key, old or streamed, is found exactly once through pruning
+    val back = spark.read.format("cole").load(t)
+    val keys = (0 until 2000 by 20) ++ (2000 until 2600 by 6)
+    assert(keys.size === 200)
+    val wrong = keys.filter(k => back.filter(col("id") === k.toLong).count() != 1L)
+    assert(wrong.isEmpty, s"${wrong.size} of 200 point lookups miscounted: $wrong")
+    assert(back.count() === 2600L)
   }
 
   test("loud rejections: unbucketed table, identical re-declaration") {

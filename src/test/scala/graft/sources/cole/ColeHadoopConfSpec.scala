@@ -26,7 +26,7 @@ class ColeHadoopConfSpec extends AnyFunSuite {
 
   test("the session's conf round-trips as the same key/value set, in fewer bytes") {
     val conf = spark.sessionState.newHadoopConf()
-    conf.set(ColeFileWriter.DeferRenameKey, "true")
+    conf.set(ColeFileWriter.CompressKey, "true")
     val long = "v" * (70 * 1024)
     conf.set("graft.test.long", long)
     conf.set("graft.test.unicode", "Zürich · 東京 · 🚀")
@@ -41,7 +41,7 @@ class ColeHadoopConfSpec extends AnyFunSuite {
     val expected = entries(conf)
     assert(expected.size > 100, s"the session conf carries ${expected.size} keys")
     assert(entries(back) === expected)
-    assert(back.get(ColeFileWriter.DeferRenameKey) === "true")
+    assert(back.get(ColeFileWriter.CompressKey) === "true")
     assert(back.get("graft.test.long") === long)
     assert(back.get("graft.test.unicode") === "Zürich · 東京 · 🚀")
 

@@ -2,6 +2,8 @@ package graft.sources.cole
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -9,6 +11,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 final case class SinkRow(id: Long, grp: String, v: Long)
+final case class EvoRow(id: Long, grp: String, v: Long, w: Option[Long])
 
 /** Streaming (Append) writes into the COLE layout: per-epoch files land
   * atomically at epoch commit, replays converge on the same file names,
@@ -210,6 +213,104 @@ class ColeStreamingSinkSpec extends AnyFunSuite {
     val names = new java.io.File(dir).listFiles().map(_.getName).filter(_.endsWith(".col"))
     assert(names.length === 1 && names.head.startsWith("part-e0-"),
       s"replay produced extra files: ${names.toSeq}")
+  }
+
+  test("epoch replay converges in partitioned, bucketed and temporal+bucketed layouts") {
+    val s = spark
+    import s.implicits._
+    val plain = rows(0, 60).toDF()
+    // 60 rows two hours apart: five day directories
+    val stamped = plain.withColumn("ts", timestamp_seconds(col("id") * 7200L))
+    def colFiles(dir: String): Seq[String] = {
+      val root = new java.io.File(dir).toPath
+      Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(root.relativize(_).toString)
+        .filter(n => n.endsWith(".col") || n.contains("inprogress")).toSeq.sorted
+    }
+    val layouts = Seq(
+      ("partitioned", plain, (d: String) => new ColeWriteBuilder(plain.schema, d,
+        16, ColeIO.driverConf(), partCols = Seq("grp"))),
+      ("bucketed", plain, (d: String) => new ColeWriteBuilder(plain.schema, d,
+        16, ColeIO.driverConf(), bucketSpec = Some((4, Seq("id"))))),
+      ("temporal+bucketed", stamped, (d: String) => new ColeWriteBuilder(
+        stamped.schema, d, 16, ColeIO.driverConf(),
+        bucketSpec = Some((4, Seq("id"))),
+        temporal = Some(ColeTemporal.Spec("days", "ts")))))
+    layouts.foreach { case (layout, data, builder) =>
+      val dir = Files.createTempDirectory("cole_stream_replay_layout").toString
+      val write = builder(dir).build().toStreaming
+      def runEpoch(epochId: Long, taskId: Long): Unit = {
+        val factory = write.createStreamingWriterFactory(null)
+        val w = factory.createWriter(0, taskId, epochId)
+        data.queryExecution.toRdd.collect().foreach(w.write)
+        write.commit(epochId, Array(w.commit()))
+      }
+      runEpoch(0L, 7L)
+      val before = colFiles(dir)
+      assert(s.read.format("cole").load(dir).count() === 60L, layout)
+      runEpoch(0L, 8L)
+      assert(colFiles(dir) === before, s"$layout: replay changed the file set")
+      assert(s.read.format("cole").load(dir).count() === 60L,
+        s"$layout: replayed epoch duplicated rows")
+      assert(before.size > 1 && before.forall(n =>
+        n.substring(n.lastIndexOf('/') + 1).startsWith("part-e0-p00000-")),
+        s"$layout: ${before.mkString(", ")}")
+    }
+  }
+
+  test("streamed appends follow the batch append's evolution rules") {
+    val s = spark
+    import s.implicits._
+    // a column absent from every existing file, NULL on half the rows:
+    // the batch append writes it (format v2 for the evolved table), and
+    // the streamed append must land the same rows
+    val evolved = (100 until 160).map(i =>
+      EvoRow(i.toLong, s"g${i % 3}", i * 2L, if (i % 2 == 0) None else Some(i * 3L)))
+    val batchDir = Files.createTempDirectory("cole_stream_evo_b").toString
+    val streamDir = Files.createTempDirectory("cole_stream_evo_s").toString
+    Seq(batchDir, streamDir).foreach(d =>
+      rows(0, 100).toDF().coalesce(1).write.format("cole").mode("overwrite").save(d))
+    evolved.toDF().coalesce(1).write.format("cole").mode("append").save(batchDir)
+    val cp = Files.createTempDirectory("cole_stream_evo_cp").toString
+    val source = MemoryStream[EvoRow](spark)
+    val q = source.toDF().writeStream.format("cole")
+      .option("path", streamDir).option("checkpointLocation", cp)
+      .outputMode(OutputMode.Append).start()
+    source.addData(evolved)
+    q.processAllAvailable()
+    q.stop()
+    val want = rows(0, 100).map(r => EvoRow(r.id, r.grp, r.v, None)) ++ evolved
+    Seq(batchDir, streamDir).foreach { d =>
+      val got = s.read.format("cole").load(d).select("id", "grp", "v", "w")
+        .as[EvoRow].collect().sortBy(_.id).toSeq
+      assert(got === want, d)
+    }
+
+    // a column named after a RENAME source: old files still store the
+    // renamed column under that name, so batch and stream both refuse it
+    val wh = Files.createTempDirectory("cole_stream_evo_wh").toString
+    s.conf.set("spark.sql.catalog.sevo", "graft.sources.cole.ColeCatalog")
+    s.conf.set("spark.sql.catalog.sevo.warehouse", wh)
+    val t = s"$wh/db/rn"
+    rows(0, 100).toDF().coalesce(1).write.format("cole").mode("overwrite").save(t)
+    spark.sql("ALTER TABLE sevo.db.rn RENAME COLUMN v TO vv")
+    def refused(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(x => Option(x.getMessage).exists(_.contains("stored name")))
+    val batchErr = intercept[Exception] {
+      rows(100, 110).toDF().write.format("cole").mode("append").save(t)
+    }
+    assert(refused(batchErr), batchErr.toString)
+    val cp2 = Files.createTempDirectory("cole_stream_evo_cp2").toString
+    val source2 = MemoryStream[SinkRow](spark)
+    val q2 = source2.toDF().writeStream.format("cole")
+      .option("path", t).option("checkpointLocation", cp2)
+      .outputMode(OutputMode.Append).start()
+    source2.addData(rows(100, 110))
+    val streamErr = intercept[Exception](q2.processAllAvailable())
+    try q2.stop() catch { case _: Exception => () }
+    assert(refused(streamErr), streamErr.toString)
+    assert(spark.table("sevo.db.rn").count() === 100L)
   }
 
   test("partitioned streaming write: key=value layout with partition pruning") {
