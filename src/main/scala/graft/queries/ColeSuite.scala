@@ -57,8 +57,9 @@ object ColeSuite {
     // layout changed (files per unit directory), so pre-change fixtures
     // must rebuild even though the fingerprinted writer classes did not
     // move (the distribution lives in the Write plumbing, not the
-    // data writers).
-    (Seq("graft-fixture-v2", writerFingerprint) ++
+    // data writers). v3: the batch commit drops the 0-row files of
+    // tasks that received no rows.
+    (Seq("graft-fixture-v3", writerFingerprint) ++
       files.map(f => s"${f.getName}:${f.length()}:${f.lastModified()}"))
       .mkString("\n")
   }

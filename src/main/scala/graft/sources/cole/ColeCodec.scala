@@ -421,26 +421,66 @@ object ColeCodec {
   // ---- DICTIONARY strings: [dict_size u32]([len u32][bytes])* [indices RLE-int32]
 
   def encodeDictStrings(values: Array[Array[Byte]]): Array[Byte] = {
-    val index = new java.util.HashMap[String, Integer]()
+    val index = new BytesIndex
     val indices = new Array[Int](values.length)
-    val entries = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
     var i = 0
-    while (i < values.length) {
-      val key = new String(values(i), java.nio.charset.StandardCharsets.ISO_8859_1)
-      var idx = index.get(key)
-      if (idx == null) {
-        idx = Integer.valueOf(entries.size)
-        index.put(key, idx)
-        entries += values(i)
-      }
-      indices(i) = idx.intValue()
+    while (i < values.length) { indices(i) = index.idOf(values(i)); i += 1 }
+    val out = new Out()
+    out.u32(index.size)
+    i = 0
+    while (i < index.size) {
+      val e = index.entry(i)
+      out.u32(e.length); out.raw(e)
       i += 1
     }
-    val out = new Out()
-    out.u32(entries.size)
-    entries.foreach { e => out.u32(e.length); out.raw(e) }
     out.raw(encodeRleInt(indices))
     out.toBytes
+  }
+
+  /** Distinct byte strings with dense ids in first-seen order: an
+    * open-addressing table keyed by the bytes themselves, so a lookup
+    * builds no `String` and boxes no id.
+    */
+  final class BytesIndex {
+    private var slots = Array.fill(32)(-1) // id, -1 = empty; kept under half full
+    private var entries = new Array[Array[Byte]](16)
+    private var hashes = new Array[Int](16)
+    private var n = 0
+
+    def size: Int = n
+    def entry(id: Int): Array[Byte] = entries(id)
+
+    /** The id of `b`, added with the next id when absent. */
+    def idOf(b: Array[Byte]): Int = {
+      val h = java.util.Arrays.hashCode(b) * 0x9E3779B9
+      var mask = slots.length - 1
+      var i = (h ^ (h >>> 16)) & mask
+      while (slots(i) >= 0) {
+        val id = slots(i)
+        if (hashes(id) == h && java.util.Arrays.equals(entries(id), b)) return id
+        i = (i + 1) & mask
+      }
+      if (n == entries.length) {
+        entries = java.util.Arrays.copyOf(entries, 2 * n)
+        hashes = java.util.Arrays.copyOf(hashes, 2 * n)
+      }
+      entries(n) = b
+      hashes(n) = h
+      slots(i) = n
+      n += 1
+      if (2 * n > slots.length) {
+        slots = Array.fill(2 * slots.length)(-1)
+        mask = slots.length - 1
+        var id = 0
+        while (id < n) {
+          var j = (hashes(id) ^ (hashes(id) >>> 16)) & mask
+          while (slots(j) >= 0) j = (j + 1) & mask
+          slots(j) = id
+          id += 1
+        }
+      }
+      n - 1
+    }
   }
 
   /** Dictionary page as (entries, per-row ids) — the layout the vectorized

@@ -154,7 +154,7 @@ object ColeCompact {
     var (compacted, filesBefore, filesAfter, bytesBefore, bytesAfter) =
       (0, 0, 0, 0L, 0L)
     dirs.foreach { dir =>
-      recover(fs, dir) // finish or roll back any interrupted earlier swap
+      recover(fs, dir, table, conf) // finish or roll back any interrupted earlier swap
       // list AFTER recovery: a roll-forward/back just changed the file
       // set, and a stale pre-recovery listing would double-count bytes
       // and write deleted names into the new swap manifest
@@ -325,6 +325,18 @@ object ColeCompact {
   private[cole] def manifestPath(dir: HPath): HPath =
     new HPath(dir, ".compact-manifest")
 
+  /** The swap manifest of `dir`, None when there is none (or its swap
+    * completed while it was being read).
+    */
+  private[cole] def manifestLines(fs: org.apache.hadoop.fs.FileSystem,
+      dir: HPath): Option[Seq[String]] =
+    try {
+      val in = fs.open(manifestPath(dir))
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        .split('\n').filter(_.nonEmpty).toSeq)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
   private[cole] def writeManifest(fs: org.apache.hadoop.fs.FileSystem, dir: HPath,
       lines: Seq[String]): Unit = {
     val out = fs.create(manifestPath(dir), true)
@@ -333,19 +345,12 @@ object ColeCompact {
     finally out.close()
   }
 
-  /** Resolve an interrupted swap recorded by the manifest: if every
-    * expected new file landed, roll FORWARD (delete the listed old files
-    * — the duplication window closes); otherwise roll BACK (delete the
-    * partial new files — the old files are still the complete copy).
-    * No-op without a manifest. Called automatically per directory by
-    * [[compact]]; exposed for standalone recovery.
-    */
   /** Delete crash leftovers older than `olderThanMs`: abandoned dotted
     * in-progress files (a task that died before commit), `.tmp` scratch,
-    * and stale `.delete-*` / `.compact-*` scratch directories. Live data,
-    * sidecars, records, and RECENT in-progress files (a streaming epoch
-    * or replace-commit still in flight — the TTL is the guard) are never
-    * touched. Returns the number of paths removed.
+    * and stale `.delete-*` / `.update-*` / `.compact-*` scratch
+    * directories. Live data, sidecars, records, and RECENT in-progress
+    * files (a streaming epoch or replace-commit still in flight — the TTL
+    * is the guard) are never touched. Returns the number of paths removed.
     */
   def vacuum(table: String, conf: org.apache.hadoop.conf.Configuration,
       olderThanMs: Long = 24L * 3600 * 1000): Int = {
@@ -358,7 +363,8 @@ object ColeCompact {
         val name = st.getPath.getName
         val stale = st.getModificationTime < cutoff
         if (st.isDirectory) {
-          if ((name.startsWith(".delete-") || name.startsWith(".compact-")) &&
+          if ((name.startsWith(".delete-") || name.startsWith(".update-") ||
+              name.startsWith(".compact-")) &&
               stale && name != ".compact-manifest") {
             fs.delete(st.getPath, true); removed += 1
           } else if (!name.startsWith(".") && name != "_cole_compactions" &&
@@ -375,23 +381,45 @@ object ColeCompact {
     removed
   }
 
-  def recover(fs: org.apache.hadoop.fs.FileSystem, dir: HPath): Unit = {
-    val mp = manifestPath(dir)
-    if (!fs.exists(mp)) return
-    val in = fs.open(mp)
-    val lines = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).split('\n').filter(_.nonEmpty)
-    finally in.close()
-    val olds = lines.collect { case l if l.startsWith("old:") => l.drop(4) }
-    val news = lines.collect { case l if l.startsWith("new:") => l.drop(4) }
-    val allNew = news.forall(n => fs.exists(new HPath(dir, n)))
-    if (allNew) olds.foreach { n =>
-      fs.delete(new HPath(dir, n), false)
-      fs.delete(new HPath(ColeBloomIndex.sidecarPath(
-        new HPath(dir, n).toString)), false)
-      ColeDv.drop(fs, new HPath(dir, n).toString)
+  /** Resolve an interrupted swap recorded by the manifest: if every
+    * expected new file landed, roll FORWARD (delete the listed old files
+    * — the duplication window closes); otherwise roll BACK (delete the
+    * partial new files — the old files are still the complete copy).
+    * No-op without a manifest. Called per directory by [[compact]], by
+    * the copy-on-write rewrite ([[ColeRewrite]]) and by [[ColeRebucket]]
+    * before they trust a listing; exposed for standalone recovery.
+    *
+    * Resolution runs under the claims of the manifest's old files: every
+    * swap writes its manifest under those claims and removes it before
+    * releasing them, so a manifest whose files a LIVE committer claims is
+    * that committer's swap in progress, not a crashed one to undo —
+    * recovery parks until it finishes (or its claims expire), then
+    * resolves only if the same manifest is still there.
+    */
+  def recover(fs: org.apache.hadoop.fs.FileSystem, dir: HPath, table: String,
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    var pending = manifestLines(fs, dir)
+    while (pending.isDefined) {
+      val lines = pending.get
+      val olds = lines.collect { case l if l.startsWith("old:") => l.drop(4) }
+      val news = lines.collect { case l if l.startsWith("new:") => l.drop(4) }
+      val claims = ColeClaims.acquire(fs, conf, table,
+        olds.map(n => ColeVersions.relOf(fs, table, new HPath(dir, n).toString)),
+        "recover")
+      try {
+        val now = manifestLines(fs, dir)
+        if (now == pending) {
+          if (news.forall(n => fs.exists(new HPath(dir, n)))) olds.foreach { n =>
+            fs.delete(new HPath(dir, n), false)
+            fs.delete(new HPath(ColeBloomIndex.sidecarPath(
+              new HPath(dir, n).toString)), false)
+            ColeDv.drop(fs, new HPath(dir, n).toString)
+          }
+          else news.foreach(n => fs.delete(new HPath(dir, n), false))
+          fs.delete(manifestPath(dir), false)
+          pending = None
+        } else pending = now // the holder finished; a newer swap may have begun
+      } finally claims.release()
     }
-    else news.foreach(n => fs.delete(new HPath(dir, n), false))
-    fs.delete(mp, false)
   }
 }

@@ -462,7 +462,14 @@ class ColeTable(schema: StructType, writePartCols: Seq[String],
     * conjunctions are rejected at analysis (canDeleteWhere false).
     */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.nonEmpty && filters.forall(f => ColePredicate.fromFilter(f).isDefined) && {
+    filters.nonEmpty && rewritesNatively(filters)
+
+  /** Whether a statement with this WHERE conjunction (empty: every row)
+    * can run on the connector's own file rewrite ([[ColeRewrite]]): the
+    * DELETE fast path, and the native UPDATE ([[ColeUpdate]]).
+    */
+  private[cole] def rewritesNatively(filters: Array[Filter]): Boolean =
+    filters.forall(f => ColePredicate.fromFilter(f).isDefined) && {
       // a lane-mixed (widened) or renamed-in-some-file predicate column
       // would make the fast path misevaluate against raw executor chunks
       // — route to the group-based row-level DELETE instead (always
@@ -2958,11 +2965,32 @@ class ColeWriteBuilder(schema: StructType, path: String, rowGroupSize: Int,
   }
 }
 
-/** One task's committed files as (written, final) pairs: `written` is where
-  * the bytes sit now, `final` the name readers see. The two differ only
-  * when the [[ColeFileNaming]] rule leaves the rename to the driver.
+/** One committed file: `written` is where the bytes sit now, `fin` the
+  * name readers see (the two differ only when the [[ColeFileNaming]] rule
+  * leaves the rename to the driver), and `rows` how many rows it holds.
   */
-final case class ColeCommitMessage(files: Seq[(String, String)])
+final case class ColeWrittenFile(written: String, fin: String, rows: Long)
+
+object ColeWrittenFile {
+  /** Deletes the 0-row files of a write and returns the rest. Tasks open
+    * their file eagerly, so a task that received no rows commits an empty
+    * one. With `keepOne`, a write that is empty in every task keeps its
+    * first file, so a path table's schema still resolves.
+    */
+  def dropEmpty(files: Seq[ColeWrittenFile], conf: Configuration,
+      keepOne: Boolean): Seq[ColeWrittenFile] = {
+    val (full, empty) = files.partition(_.rows > 0L)
+    val kept = if (full.isEmpty && keepOne) empty.take(1) else Seq.empty
+    empty.drop(kept.size).foreach { f =>
+      val (fs, p) = ColeIO.resolve(f.written, conf)
+      fs.delete(p, false)
+    }
+    full ++ kept
+  }
+}
+
+/** One task's committed files. */
+final case class ColeCommitMessage(files: Seq[ColeWrittenFile])
     extends WriterCommitMessage
 
 /** How write tasks name their files. Built once on the driver and shipped
@@ -3189,10 +3217,10 @@ class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val newFiles = messages.flatMap {
-      case ColeCommitMessage(fs0) => fs0.map(_._2)
+    val newFiles = ColeWrittenFile.dropEmpty(messages.toSeq.flatMap {
+      case ColeCommitMessage(fs0) => fs0
       case _ => Seq.empty
-    }
+    }, conf, keepOne = true).map(_.fin)
     val (fs, _) = ColeIO.resolve(path, conf)
     val versioned = ColeVersions.enabled(path, conf)
     if (dynamicOverwrite) {
@@ -3238,8 +3266,8 @@ class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     messages.collect { case ColeCommitMessage(fs0) =>
-      fs0.foreach { case (f, _) =>
-        val (fs, p) = ColeIO.resolve(f, conf)
+      fs0.foreach { f =>
+        val (fs, p) = ColeIO.resolve(f.written, conf)
         fs.delete(p, false)
       }
     }
@@ -3340,7 +3368,7 @@ class ColeBucketedDataWriter(schema: StructType,
   private val kis: Array[Int] = bucketCols.map(schema.fieldIndex).toArray
   private val keyTypes: Array[DataType] = kis.map(schema.fields(_).dataType)
   private val writers = new Array[ColeDataWriter](numBuckets)
-  private val closedFiles = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+  private val closedFiles = scala.collection.mutable.ArrayBuffer.empty[ColeWrittenFile]
   private val temporalIdx: Int = temporal.fold(-1) { t =>
     val i = schema.fieldIndex(t.src)
     schema.fields(i).dataType match {
@@ -3448,8 +3476,8 @@ class ColeBucketedDataWriter(schema: StructType,
   override def abort(): Unit = {
     writers.foreach(w => if (w != null) w.abort())
     temporalWriters.values.foreach(_.abort())
-    closedFiles.foreach { case (f, _) =>
-      val (fs, p) = ColeIO.resolve(f, conf)
+    closedFiles.foreach { f =>
+      val (fs, p) = ColeIO.resolve(f.written, conf)
       fs.delete(p, false)
     }
   }
@@ -3494,7 +3522,7 @@ class ColePartitionedDataWriter(schema: StructType,
   }
 
   private val writers = scala.collection.mutable.LinkedHashMap.empty[String, ColeDataWriter]
-  private val closedFiles = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+  private val closedFiles = scala.collection.mutable.ArrayBuffer.empty[ColeWrittenFile]
 
   private def partDir(record: InternalRow): String = {
     val identity = partIdx.zipWithIndex.map { case (fi, i) =>
@@ -3568,8 +3596,8 @@ class ColePartitionedDataWriter(schema: StructType,
 
   override def abort(): Unit = {
     writers.values.foreach(_.abort())
-    closedFiles.foreach { case (f, _) =>
-      val (fs, p) = ColeIO.resolve(f, conf)
+    closedFiles.foreach { f =>
+      val (fs, p) = ColeIO.resolve(f.written, conf)
       fs.delete(p, false)
     }
   }
@@ -3616,6 +3644,7 @@ class ColeDataWriter(schema: StructType, writePath: String, file: String,
   // columns pay nothing and their pages stay dense
   private val nullBufs = new Array[Array[Boolean]](schema.length)
   private var buffered = 0
+  private var rows = 0L
 
   override def write(record: InternalRow): Unit = {
     var i = 0
@@ -3657,6 +3686,7 @@ class ColeDataWriter(schema: StructType, writePath: String, file: String,
       i += 1
     }
     buffered += 1
+    rows += 1
     if (buffered >= rowGroupSize) flush()
   }
 
@@ -3721,28 +3751,25 @@ class ColeDataWriter(schema: StructType, writePath: String, file: String,
   private def chooseStrEnc(a: Array[Array[Byte]]): Enc = {
     if (a.isEmpty) return Plain
     val probe = math.min(a.length, 4096)
-    val distinct = new java.util.HashSet[String]()
+    val distinct = new ColeCodec.BytesIndex
     var i = 0
-    while (i < probe) {
-      distinct.add(new String(a(i), java.nio.charset.StandardCharsets.ISO_8859_1))
-      i += 1
-    }
+    while (i < probe) { distinct.idOf(a(i)); i += 1 }
     if (distinct.size * 2 < probe || distinct.size <= 256) Dict else Plain
   }
 
-  /** Flush, close, and return the (written, final) pair — for use as a
+  /** Flush, close, and return the committed file — for use as a
     * sub-writer of the routing writers. Renames to the final name first
     * when the task owns the rename.
     */
-  def commitFiles(): (String, String) = {
+  def commitFiles(): ColeWrittenFile = {
     flush()
     writer.close()
-    if (!renameAtCommit) (writePath, file)
+    if (!renameAtCommit) ColeWrittenFile(writePath, file, rows)
     else {
       val (fs, t) = ColeIO.resolve(writePath, conf)
       val (_, f) = ColeIO.resolve(file, conf)
       require(fs.rename(t, f), s"commit rename failed: $writePath -> $file")
-      (file, file)
+      ColeWrittenFile(file, file, rows)
     }
   }
 
@@ -4184,12 +4211,13 @@ class ColeStreamingWrite(schema: StructType, path: String, rowGroupSize: Int,
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val finals = messages.flatMap {
-      case ColeCommitMessage(renames) => renames.map { case (tmp, fin) =>
-        val (fs, t) = ColeIO.resolve(tmp, conf)
-        val (_, f) = ColeIO.resolve(fin, conf)
+      case ColeCommitMessage(renames) => renames.map { w =>
+        val (fs, t) = ColeIO.resolve(w.written, conf)
+        val (_, f) = ColeIO.resolve(w.fin, conf)
         if (fs.exists(f)) fs.delete(f, false) // epoch replay: overwrite
         if (!fs.rename(t, f))
-          throw new java.io.IOException(s"epoch $epochId: rename $tmp -> $fin failed")
+          throw new java.io.IOException(
+            s"epoch $epochId: rename ${w.written} -> ${w.fin} failed")
         fs.makeQualified(f).toString
       }
       case _ => Seq.empty
@@ -4233,8 +4261,8 @@ class ColeStreamingWrite(schema: StructType, path: String, rowGroupSize: Int,
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case ColeCommitMessage(renames) => renames.foreach { case (tmp, _) =>
-        val (fs, t) = ColeIO.resolve(tmp, conf)
+      case ColeCommitMessage(renames) => renames.foreach { w =>
+        val (fs, t) = ColeIO.resolve(w.written, conf)
         fs.delete(t, false)
       }
       case _ => ()

@@ -40,9 +40,9 @@ import org.apache.spark.sql.types.StructType
   * the idempotent pipeline / audit finds it), never silent row loss.
   * Same documented non-atomic window class as truncate/overwrite swaps.
   */
-class ColeDeltaOperation(cmd: RowLevelOperation.Command, path: String,
-    partCols: Seq[String], rowGroupSize: Int, conf: Configuration)
-    extends ColeRowLevelOperation(cmd, path, partCols, rowGroupSize, conf)
+class ColeDeltaOperation(cmd: RowLevelOperation.Command, path0: String,
+    partCols0: Seq[String], rowGroupSize: Int, conf0: Configuration)
+    extends ColeRowLevelOperation(cmd, path0, partCols0, rowGroupSize, conf0)
     with SupportsDelta {
 
   override def rowId(): Array[NamedReference] =
@@ -71,10 +71,10 @@ class ColeDeltaWriteBuilder(op: ColeRowLevelOperation, schema: StructType,
     new ColeDeltaWriteImpl(op, schema, path, rowGroupSize, conf, partCols)
 }
 
-/** Per-task message: files this task wrote as (dotted, final) pairs plus
-  * the row ordinals it deleted, grouped by source file.
+/** Per-task message: files this task wrote (still dotted) plus the row
+  * ordinals it deleted, grouped by source file.
   */
-final case class ColeDeltaCommitMessage(files: Seq[(String, String)],
+final case class ColeDeltaCommitMessage(files: Seq[ColeWrittenFile],
     deletes: Map[String, Array[Int]]) extends WriterCommitMessage
 
 class ColeDeltaWriteImpl(op: ColeRowLevelOperation, schema: StructType,
@@ -122,11 +122,8 @@ class ColeDeltaWriteImpl(op: ColeRowLevelOperation, schema: StructType,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: ColeDeltaCommitMessage => m }
     val (fs, _) = ColeIO.resolve(path, conf)
-    val newDotted = msgs.flatMap(_.files).filter { case (f, _) =>
-      val r = new ColeFileReader(f, conf)
-      val rows = try r.meta.totalRows finally r.close()
-      if (rows == 0L) { fs.delete(new HPath(f), false); false } else true
-    }
+    val newDotted = ColeWrittenFile.dropEmpty(msgs.flatMap(_.files), conf,
+      keepOne = false)
     // merge per-file delete ordinals across tasks (a file's matched rows
     // can arrive in several tasks after the MERGE join's shuffle)
     val delByFile: Map[String, Array[Int]] = msgs.flatMap(_.deletes.toSeq)
@@ -172,10 +169,10 @@ class ColeDeltaWriteImpl(op: ColeRowLevelOperation, schema: StructType,
       }
     }
     // 1. new rows become visible
-    val finals = newDotted.map { case (f, dst) =>
-      require(fs.rename(new HPath(f), new HPath(dst)),
-        s"delta-commit rename failed: $f")
-      dst
+    val finals = newDotted.map { f =>
+      require(fs.rename(new HPath(f.written), new HPath(f.fin)),
+        s"delta-commit rename failed: ${f.written}")
+      f.fin
     }
     // 2. old images vector away (extending any existing vector); keep
     // the merged sets — they are the commit's exact vector state
@@ -214,8 +211,8 @@ class ColeDeltaWriteImpl(op: ColeRowLevelOperation, schema: StructType,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case ColeDeltaCommitMessage(files, _) => files.foreach { case (f, _) =>
-        val (fs, p) = ColeIO.resolve(f, conf)
+      case ColeDeltaCommitMessage(files, _) => files.foreach { f =>
+        val (fs, p) = ColeIO.resolve(f.written, conf)
         fs.delete(p, false)
       }
       case _ => ()

@@ -35,7 +35,9 @@ import org.apache.spark.sql.execution.datasources.v2.V2CommandExec
   * row-level operation and plans it as [[ColeDmlRetryExec]], which
   * executes the logical through a fresh nested QueryExecution per
   * attempt — a thread-local suppression flag keeps the strategy from
-  * intercepting its own re-executions. The condition-driven DELETE
+  * intercepting its own re-executions. An eligible UPDATE plans the
+  * native [[ColeUpdateExec]] as the child instead, and each attempt
+  * re-runs it: it re-classifies from a fresh listing. The condition-driven DELETE
   * paths ([[ColeDelete]]) are self-contained in the connector and
   * retry through [[ColeDmlRetry.withRetries]] directly; their
   * re-execution re-classifies from a fresh listing, and the idempotent
@@ -137,8 +139,9 @@ class ColeDmlRetryStrategy extends SparkStrategy {
           rd.getTagValue(ColeDmlRetry.PlannedTag).isEmpty &&
           !ColeDmlRetry.isReplanning && ColeDmlRetry.strategyEnabled =>
       rd.setTagValue(ColeDmlRetry.PlannedTag, true)
-      Seq(ColeDmlRetryExec(rd,
-        rd.operation.asInstanceOf[ColeRowLevelOperation], planLater(rd)))
+      val op = rd.operation.asInstanceOf[ColeRowLevelOperation]
+      // an eligible UPDATE runs as a native columnar file rewrite
+      Seq(ColeDmlRetryExec(rd, op, ColeUpdate.plan(rd, op).getOrElse(planLater(rd))))
     case wd: WriteDelta
         if wd.operation.isInstanceOf[ColeRowLevelOperation] &&
           wd.getTagValue(ColeDmlRetry.PlannedTag).isEmpty &&
@@ -153,7 +156,8 @@ class ColeDmlRetryStrategy extends SparkStrategy {
 /** Executes the row-level command: attempt 0 runs `child` — the vanilla
   * exec planned in the SAME planner pass (zero extra planning on the
   * no-conflict path) — and each conflict abort re-plans the logical
-  * through a fresh nested QueryExecution (bounded).
+  * through a fresh nested QueryExecution (bounded). A native
+  * [[ColeUpdateExec]] child re-runs itself instead.
   */
 case class ColeDmlRetryExec(logical: LogicalPlan, op: ColeRowLevelOperation,
     child: SparkPlan)
@@ -172,12 +176,15 @@ case class ColeDmlRetryExec(logical: LogicalPlan, op: ColeRowLevelOperation,
     var attempt = 0
     while (true) {
       try {
-        if (attempt == 0) child.executeCollect()
-        else ColeDmlRetry.suppressed {
-          // commandExecuted forces the command eagerly through the
-          // standard path: fresh optimization, fresh physical plan,
-          // fresh scan listing — a true re-plan, not a job re-run
-          sess.sessionState.executePlan(logical).commandExecuted
+        child match {
+          case native: ColeUpdateExec => native.update()
+          case _ if attempt == 0 => child.executeCollect()
+          case _ => ColeDmlRetry.suppressed {
+            // commandExecuted forces the command eagerly through the
+            // standard path: fresh optimization, fresh physical plan,
+            // fresh scan listing — a true re-plan, not a job re-run
+            sess.sessionState.executePlan(logical).commandExecuted
+          }
         }
         return Nil
       } catch {

@@ -60,7 +60,7 @@ object ColeRebucket {
     require(history.nonEmpty, s"$table has no bucket layout to rebucket")
     val activeKey = history.last.dirKey
     // resolve a prior interrupted rebucket before trusting the listing
-    ColeCompact.recover(fs, root)
+    ColeCompact.recover(fs, root, table, conf)
     val infos = ColeMetaCache.infos(table, conf)
     val old = infos.filterNot(_.partValues.toMap.contains(activeKey))
     val kept = infos.size - old.size

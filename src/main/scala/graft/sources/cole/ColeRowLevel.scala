@@ -47,8 +47,9 @@ import graft.sources.cole.ColeFormat._
   * contract of `RowLevelOperationTable`): the scan records the planned
   * file snapshot, the write replaces exactly that set.
   */
-class ColeRowLevelOperation(cmd: RowLevelOperation.Command, path: String,
-    partCols: Seq[String], rowGroupSize: Int, conf: Configuration,
+class ColeRowLevelOperation(cmd: RowLevelOperation.Command,
+    private[cole] val path: String, private[cole] val partCols: Seq[String],
+    rowGroupSize: Int, private[cole] val conf: Configuration,
     /** Write-audit-publish routing (r15): with the session's
       * `graft.cole.write.branch` conf set, row-level DML reads the
       * BRANCH state (fork snapshot minus masks, plus staged files) and
@@ -516,25 +517,19 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
   private val stamp = java.lang.Long.toHexString(System.nanoTime())
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // per task: (written, final) pairs — the written names stay dotted
-    // until the swap below renames them
-    val tasks: Seq[(Int, ColeRowHash.Fp, Seq[(String, String)])] = messages.toSeq.flatMap {
+    // per task: its files — the written names stay dotted until the
+    // swap below renames them
+    val tasks: Seq[(Int, ColeRowHash.Fp, Seq[ColeWrittenFile])] = messages.toSeq.flatMap {
       case ColeHashedCommitMessage(fs0, pid, fp) => Seq((pid, fp, fs0))
       case ColeCommitMessage(fs0) => Seq((-1, ColeRowHash.Fp.zero, fs0))
       case _ => Seq.empty
     }
     val (fs, _) = ColeIO.resolve(path, conf)
-    // tasks open their writer eagerly, so a task that received no rows
-    // (zero-match condition, or every row of its slice deleted) commits
-    // an EMPTY (still-dotted) .col file — drop those instead of
-    // littering the table
-    def dropEmpty(f: (String, String)): Boolean = {
-      val r = new ColeFileReader(f._1, conf)
-      val rows = try r.meta.totalRows finally r.close()
-      if (rows == 0L) { fs.delete(new HPath(f._1), false); false } else true
-    }
-    val taskFiles: Map[Int, Seq[(String, String)]] =
-      tasks.map { case (pid, _, fs0) => pid -> fs0.filter(dropEmpty) }.toMap
+    // a task that received no rows (zero-match condition, or every row of
+    // its slice deleted) commits an empty file: drop those
+    val taskFiles: Map[Int, Seq[ColeWrittenFile]] = tasks.map { case (pid, _, fs0) =>
+      pid -> ColeWrittenFile.dropEmpty(fs0, conf, keepOne = false)
+    }.toMap
     val planned = op.plannedFiles
     if (branch.isDefined) {
       commitToBranch(branch.get, fs, tasks, taskFiles, planned, messages)
@@ -620,8 +615,8 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     val (noopFiles: Set[String], discardTasks: Set[Int]) =
       noopDetection(tasks, taskFiles, planned)
     discardTasks.foreach(pid => taskFiles.getOrElse(pid, Seq.empty)
-      .foreach(f => fs.delete(new HPath(f._1), false)))
-    val newDotted: Seq[(String, String)] = taskFiles.toSeq.sortBy(_._1).collect {
+      .foreach(f => fs.delete(new HPath(f.written), false)))
+    val newDotted: Seq[ColeWrittenFile] = taskFiles.toSeq.sortBy(_._1).collect {
       case (pid, fs0) if !discardTasks.contains(pid) => fs0
     }.flatten
     val replaced = planned.filterNot { case (p, _, _) => noopFiles.contains(p) }
@@ -631,12 +626,12 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
       // record (QUALIFIED final-name outs → replaced ins) goes durable
       // BEFORE any replacement file becomes visible
       ColeCompact.writeCompactionRecord(fs, path, s"replace-$stamp",
-        newDotted.map(f => fs.makeQualified(new HPath(f._2)).toString),
+        newDotted.map(f => fs.makeQualified(new HPath(f.fin)).toString),
         replaced.map(r => fs.makeQualified(new HPath(r._1)).toString))
     }
-    newDotted.foreach { case (f, fin) =>
-      require(fs.rename(new HPath(f), new HPath(fin)),
-        s"replace-commit rename failed: $f")
+    newDotted.foreach { f =>
+      require(fs.rename(new HPath(f.written), new HPath(f.fin)),
+        s"replace-commit rename failed: ${f.written}")
     }
     val versioned = ColeVersions.enabled(path, conf)
     val (replacedForeign, replacedLocal) =
@@ -663,7 +658,7 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     if (newDotted.nonEmpty || verRemoves.nonEmpty || foreignRemoves.nonEmpty)
       ColeVersions.commitIfEnabled(path, conf,
         op.command().toString.toLowerCase,
-        newDotted.map(f => ColeVersions.relOf(fs, path, f._2)),
+        newDotted.map(f => ColeVersions.relOf(fs, path, f.fin)),
         verRemoves ++ foreignRemoves)
     } finally claims.release()
   }
@@ -674,8 +669,8 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     * discard the invisible replacement), and which write tasks' files to
     * discard with them.
     */
-  private def noopDetection(tasks: Seq[(Int, ColeRowHash.Fp, Seq[(String, String)])],
-      taskFiles: Map[Int, Seq[(String, String)]],
+  private def noopDetection(tasks: Seq[(Int, ColeRowHash.Fp, Seq[ColeWrittenFile])],
+      taskFiles: Map[Int, Seq[ColeWrittenFile]],
       planned: Seq[(String, Long, Long)]): (Set[String], Set[Int]) = {
     val slices = Option(op.scanAcc).map(_.value)
       .map(_.asScala.groupBy(_.idx).view.mapValues(_.head.fp).toMap)
@@ -722,8 +717,8 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     */
   private def commitToBranch(b: String,
       fs: org.apache.hadoop.fs.FileSystem,
-      tasks: Seq[(Int, ColeRowHash.Fp, Seq[(String, String)])],
-      taskFiles: Map[Int, Seq[(String, String)]],
+      tasks: Seq[(Int, ColeRowHash.Fp, Seq[ColeWrittenFile])],
+      taskFiles: Map[Int, Seq[ColeWrittenFile]],
       planned: Seq[(String, Long, Long)],
       messages: Array[WriterCommitMessage]): Unit = {
     val claims = ColeClaims.acquire(fs, conf, path,
@@ -764,21 +759,21 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
       }
       val (noopFiles, discardTasks) = noopDetection(tasks, taskFiles, planned)
       discardTasks.foreach(pid => taskFiles.getOrElse(pid, Seq.empty)
-        .foreach(f => fs.delete(new HPath(f._1), false)))
-      val newDotted: Seq[(String, String)] = taskFiles.toSeq.sortBy(_._1).collect {
+        .foreach(f => fs.delete(new HPath(f.written), false)))
+      val newDotted: Seq[ColeWrittenFile] = taskFiles.toSeq.sortBy(_._1).collect {
         case (pid, fs0) if !discardTasks.contains(pid) => fs0
       }.flatten
       // replacements become visible inside the staging root — invisible
       // to every read surface until the branch record lands below
-      newDotted.foreach { case (f, fin) =>
-        require(fs.rename(new HPath(f), new HPath(fin)),
-          s"branch replace-commit rename failed: $f")
+      newDotted.foreach { f =>
+        require(fs.rename(new HPath(f.written), new HPath(f.fin)),
+          s"branch replace-commit rename failed: ${f.written}")
       }
       val stagingPrefix = fs.makeQualified(
         new HPath(ColeRefs.branchDataRoot(path, b))).toString
         .stripSuffix("/") + "/"
       val adds = newDotted.map { f =>
-        val q = fs.makeQualified(new HPath(f._2)).toString
+        val q = fs.makeQualified(new HPath(f.fin)).toString
         require(q.startsWith(stagingPrefix),
           s"branch replacement landed outside the staging root: $q")
         q.drop(stagingPrefix.length)
@@ -807,8 +802,8 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
           case ColeCommitMessage(fs0) => fs0
           case _ => Seq.empty
         }
-        files.foreach { case (f, _) =>
-          val (fs, p) = ColeIO.resolve(f, conf)
+        files.foreach { f =>
+          val (fs, p) = ColeIO.resolve(f.written, conf)
           fs.delete(p, false)
         }
       case _ => ()
@@ -818,7 +813,7 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
 /** Replace-path commit message: the task's files plus the fingerprint of
   * every row it wrote (the write side of no-op rewrite detection).
   */
-final case class ColeHashedCommitMessage(files: Seq[(String, String)], partitionId: Int,
+final case class ColeHashedCommitMessage(files: Seq[ColeWrittenFile], partitionId: Int,
     fp: ColeRowHash.Fp) extends WriterCommitMessage
 
 /** Writer-factory decorator for the replace path: folds each written row

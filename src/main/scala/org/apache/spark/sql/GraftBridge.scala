@@ -18,4 +18,9 @@ object GraftBridge {
 
   def logicalPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** A Catalyst predicate as a data source filter, when it translates. */
+  def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e,
+      supportNestedPredicatePushdown = true)
 }

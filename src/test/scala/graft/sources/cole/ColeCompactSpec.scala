@@ -163,7 +163,7 @@ class ColeCompactSpec extends AnyFunSuite {
     val manifest = olds.map("old:" + _) :+ "new:compact-test-0.col"
     val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/.compact-manifest"), true)
     out.write(manifest.mkString("\n").getBytes); out.close()
-    ColeCompact.recover(fs, root)
+    ColeCompact.recover(fs, root, dir, ColeIO.driverConf())
     assert(spark.read.format("cole").load(dir).count() === rows,
       "forward recovery must delete the superseded originals")
     assert(ColeUtil.listFiles(dir).size === 1)
@@ -173,7 +173,7 @@ class ColeCompactSpec extends AnyFunSuite {
     val out2 = fs.create(new org.apache.hadoop.fs.Path(s"$dir/.compact-manifest"), true)
     out2.write("old:compact-test-0.col\nnew:compact-never-0.col\nnew:compact-never-1.col"
       .getBytes); out2.close()
-    ColeCompact.recover(fs, root)
+    ColeCompact.recover(fs, root, dir, ColeIO.driverConf())
     assert(spark.read.format("cole").load(dir).count() === rows,
       "backward recovery must keep the old copy when news are incomplete")
   }

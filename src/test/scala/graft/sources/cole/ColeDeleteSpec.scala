@@ -189,7 +189,7 @@ class ColeDeleteSpec extends AnyFunSuite {
     // concurrent write INSIDE the delete's window (after classification,
     // before the swap) must abort loudly and leave the table untouched
     val before = fileState(dir)
-    ColeDelete.raceWindow = () => before.keys.foreach { p =>
+    ColeRewrite.raceWindow = () => before.keys.foreach { p =>
       val f = new java.io.File(p)
       f.setLastModified(f.lastModified() + 60000)
     }
@@ -203,7 +203,7 @@ class ColeDeleteSpec extends AnyFunSuite {
         Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
       assert(msgs(r).exists(m => m != null && m.contains("concurrent write")),
         r.toString)
-    } finally ColeDelete.raceWindow = () => ()
+    } finally ColeRewrite.raceWindow = () => ()
     // nothing was renamed or deleted: table byte-identical
     assert(fileState(dir) === before, "aborted delete must leave the table untouched")
     assert(spark.table("dwh.db.rj").count() === 100)

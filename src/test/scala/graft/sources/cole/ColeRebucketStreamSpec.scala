@@ -96,7 +96,7 @@ class ColeRebucketStreamSpec extends AnyFunSuite {
     ColeCompact.writeManifest(fs, root,
       olds.map("old:" + _) ++ Seq("new:" + partialNew,
         "new:_bucket1=1/rebucket-crash-part-b.col")) // b never landed
-    ColeCompact.recover(fs, root)
+    ColeCompact.recover(fs, root, dir, conf)
     assert(!fs.exists(new HPath(dir, partialNew)),
       "roll-back must drop the partial outputs")
     assert(olds.forall(r => fs.exists(new HPath(dir, r))),
@@ -113,7 +113,7 @@ class ColeRebucketStreamSpec extends AnyFunSuite {
     // copy duplicates, so row counts stay exact afterwards
     ColeCompact.writeManifest(fs, root,
       Seq("old:" + olds.head, "new:" + newA))
-    ColeCompact.recover(fs, root)
+    ColeCompact.recover(fs, root, dir, conf)
     assert(fs.exists(new HPath(dir, newA)))
     assert(!fs.exists(new HPath(dir, olds.head)),
       "roll-forward must delete the replaced old file")

@@ -95,7 +95,7 @@ class ColeStreamSwapRollbackSpec extends AnyFunSuite {
     // roll the swap back (what the next compact() pass does first) —
     // inputs stay, manifest goes; the stream must neither replay nor
     // later resurrect the phantom outputs
-    ColeCompact.recover(fs, new HPath(dir))
+    ColeCompact.recover(fs, new HPath(dir), dir, ColeIO.driverConf())
     reader.processAllAvailable()
     assert(received.get() === 100L, "rollback recovery replayed rows")
 

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** Head-to-head vs the reference engine's own benchmark: the same four
   * operations through the COLE connector on the in-repo
   * `benchmark_data.col` (1M rows, the file the reference's bench suite
-  * writes), after the single-thread L0 decode rate per page encoding.
+  * writes), after the single-thread L0 decode and encode rates per page
+  * encoding.
   * `sbt "Test/runMain graft.tools.RefCompare [file]"`
   */
 object RefCompare {
@@ -27,6 +28,9 @@ object RefCompare {
     println(f"[refcmp] file: $file ($mb%.1f MB)")
     decodeRates(file).foreach { case (label, mbs) =>
       println(f"[refcmp] decode $label%-21s ${mbs}%8.1f MB/s (1 thread)")
+    }
+    encodeRates(file).foreach { case (label, mbs) =>
+      println(f"[refcmp] encode $label%-21s ${mbs}%8.1f MB/s (1 thread)")
     }
     bench("full scan (all cols)")(df.agg(sum("id"), sum("value"), sum("score"),
       count("region")).head())
@@ -64,6 +68,52 @@ object RefCompare {
     }
     chunks.groupBy { case (g, c) => encoding(g, c) }.toSeq.sortBy(_._1)
       .map { case (e, sel) => e -> rate(sel) } :+ ("whole file" -> rate(chunks))
+  }
+
+  /** Single-thread L0 encode rate of `file`, per page encoding and for the
+    * whole file: each chunk, decoded once up front, is re-encoded with its
+    * own page encoding by the codec kernel the writer calls. The rate is
+    * over the chunks' STORED bytes, so it reads against the decode rate.
+    * Best of ten passes after two warm-up passes.
+    */
+  def encodeRates(file: String): Seq[(String, Double)] = {
+    import graft.sources.cole.ColeCodec._
+    import graft.sources.cole.ColeFormat._
+    val r = new ColeFileReader(file, ColeIO.driverConf())
+    val chunks = try {
+      val meta = r.meta
+      for (g <- meta.rowGroups.indices; c <- meta.columns.indices) yield {
+        val cc = meta.rowGroups(g).chunks(c)
+        val enc = cc.pages.head.encoding
+        require(cc.pages.size == 1 && !cc.pages.exists(_.nullCount > 0),
+          s"row group $g column $c: one dense page per chunk expected")
+        (enc.toString.toUpperCase, meta.columns(c).colType, enc, r.readChunk(g, c),
+          cc.totalSize)
+      }
+    } finally r.close()
+    def encode(t: ColeType, e: Enc, cd: graft.sources.cole.ColumnData): Array[Byte] =
+      (t, e) match {
+        case (TInt32, Plain) => encodePlainInt(cd.ints)
+        case (TInt32, Rle) => encodeRleInt(cd.ints)
+        case (TInt32, Delta) => encodeDeltaInt(cd.ints)
+        case (_, Plain) if cd.longs != null => encodePlainLong(cd.longs)
+        case (_, Rle) => encodeRleLong(cd.longs)
+        case (_, Delta) => encodeDeltaLong(cd.longs)
+        case (TDouble, Plain) => encodePlainDouble(cd.doubles)
+        case (_, Plain) => encodePlainStrings(cd.strings)
+        case (_, Dict) => encodeDictStrings(cd.strings)
+      }
+    def rate(sel: Seq[(String, ColeType, Enc, graft.sources.cole.ColumnData, Long)]): Double = {
+      val bytes = sel.map(_._5).sum
+      val ns = (1 to 12).map { _ =>
+        val t0 = System.nanoTime()
+        sel.foreach { case (_, t, e, cd, _) => encode(t, e, cd) }
+        System.nanoTime() - t0
+      }.drop(2).min
+      bytes / 1e6 / (ns / 1e9)
+    }
+    chunks.groupBy(_._1).toSeq.sortBy(_._1).map { case (e, sel) => e -> rate(sel) } :+
+      ("whole file" -> rate(chunks))
   }
 }
 
