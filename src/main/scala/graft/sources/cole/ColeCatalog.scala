@@ -323,14 +323,8 @@ object ColeBucket {
         s"evolve:$n:${cols.mkString(",")}\n" +
         derive.fold("") { case (synth, srcs) =>
           s"derive:$synth=${srcs.mkString(",")}\n" }
-      // unique temp name: concurrent writers can never clobber each
-      // other's staging even outside the claim (belt)
-      val tmp = new org.apache.hadoop.fs.Path(table,
-        s".$SpecFile.tmp-${java.lang.Long.toHexString(System.nanoTime())}")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      ColeIO.replaceFile(fs, tmp, p, s"bucket spec write at $table")
+      ColeIO.writeReplacing(fs, p,
+        body.getBytes(java.nio.charset.StandardCharsets.UTF_8), s"bucket spec write at $table")
       // the version record snapshots the LIVE sidecar: commit while the
       // claim still holds, or a concurrent evolver's newer spec could be
       // pinned to THIS evolve's version (wrong as-of layout resolution)

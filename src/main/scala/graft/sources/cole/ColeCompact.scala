@@ -185,7 +185,8 @@ object ColeCompact {
         // listing and the claim is SKIPPED this pass (counted
         // uncompacted; the next maintenance run picks it up).
         val claims = ColeClaims.acquire(fs, conf, table,
-          sts.map(s => ColeVersions.relOf(fs, table, s._1.getPath.toString)),
+          manifestClaim(fs, table, dir) +:
+            sts.map(s => ColeVersions.relOf(fs, table, s._1.getPath.toString)),
           "compact")
         def drifted = sts.exists { s =>
           try {
@@ -325,6 +326,15 @@ object ColeCompact {
   private[cole] def manifestPath(dir: HPath): HPath =
     new HPath(dir, ".compact-manifest")
 
+  /** The claim a swap of `dir` holds while its manifest exists: every
+    * swap of a directory writes the same manifest path, so two
+    * committers of disjoint files in one directory swap one at a time,
+    * and [[recover]] waits for a live swap.
+    */
+  private[cole] def manifestClaim(fs: org.apache.hadoop.fs.FileSystem, table: String,
+      dir: HPath): String =
+    ColeVersions.relOf(fs, table, manifestPath(dir).toString)
+
   /** The swap manifest of `dir`, None when there is none (or its swap
     * completed while it was being read).
     */
@@ -339,18 +349,20 @@ object ColeCompact {
 
   private[cole] def writeManifest(fs: org.apache.hadoop.fs.FileSystem, dir: HPath,
       lines: Seq[String]): Unit = {
-    val out = fs.create(manifestPath(dir), true)
-    try out.write(lines.mkString("\n").getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    // a concurrent recover() must never read a torn manifest — an empty
+    // one names no files whose claims it would wait for, so it would
+    // resolve (delete) a manifest still being written
+    ColeIO.writeReplacing(fs, manifestPath(dir),
+      lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8), "swap manifest")
   }
 
   /** Delete crash leftovers older than `olderThanMs`: abandoned dotted
     * in-progress files (a task that died before commit), `.tmp` scratch,
-    * and stale `.delete-*` / `.update-*` / `.compact-*` scratch
-    * directories. Live data, sidecars, records, and RECENT in-progress
-    * files (a streaming epoch or replace-commit still in flight — the TTL
-    * is the guard) are never touched. Returns the number of paths removed.
+    * and stale `.delete-*` / `.update-*` / `.merge-*` / `.compact-*`
+    * scratch directories. Live data, sidecars, records, and RECENT
+    * in-progress files (a streaming epoch or replace-commit still in
+    * flight — the TTL is the guard) are never touched. Returns the number
+    * of paths removed.
     */
   def vacuum(table: String, conf: org.apache.hadoop.conf.Configuration,
       olderThanMs: Long = 24L * 3600 * 1000): Int = {
@@ -364,7 +376,7 @@ object ColeCompact {
         val stale = st.getModificationTime < cutoff
         if (st.isDirectory) {
           if ((name.startsWith(".delete-") || name.startsWith(".update-") ||
-              name.startsWith(".compact-")) &&
+              name.startsWith(".merge-") || name.startsWith(".compact-")) &&
               stale && name != ".compact-manifest") {
             fs.delete(st.getPath, true); removed += 1
           } else if (!name.startsWith(".") && name != "_cole_compactions" &&
@@ -389,10 +401,10 @@ object ColeCompact {
     * the copy-on-write rewrite ([[ColeRewrite]]) and by [[ColeRebucket]]
     * before they trust a listing; exposed for standalone recovery.
     *
-    * Resolution runs under the claims of the manifest's old files: every
-    * swap writes its manifest under those claims and removes it before
-    * releasing them, so a manifest whose files a LIVE committer claims is
-    * that committer's swap in progress, not a crashed one to undo —
+    * Resolution runs under the claims of the manifest and its old files:
+    * every swap writes its manifest under those claims and removes it
+    * before releasing them, so a manifest a LIVE committer claims is that
+    * committer's swap in progress, not a crashed one to undo —
     * recovery parks until it finishes (or its claims expire), then
     * resolves only if the same manifest is still there.
     */
@@ -403,7 +415,7 @@ object ColeCompact {
       val lines = pending.get
       val olds = lines.collect { case l if l.startsWith("old:") => l.drop(4) }
       val news = lines.collect { case l if l.startsWith("new:") => l.drop(4) }
-      val claims = ColeClaims.acquire(fs, conf, table,
+      val claims = ColeClaims.acquire(fs, conf, table, manifestClaim(fs, table, dir) +:
         olds.map(n => ColeVersions.relOf(fs, table, new HPath(dir, n).toString)),
         "recover")
       try {

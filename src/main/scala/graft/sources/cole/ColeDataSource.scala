@@ -1589,7 +1589,7 @@ private[cole] object ColePredicate {
   /** IN lists above this stay residual: preds ship inside every input
     * partition, so an unbounded value list would bloat task serialization.
     */
-  private val MaxInValues = 1024
+  private[cole] val MaxInValues = 1024
 
   def fromFilter(f: Filter): Option[ColePredicate] = f match {
     case EqualTo(c, v: String) =>

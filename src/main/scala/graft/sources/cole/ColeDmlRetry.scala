@@ -35,10 +35,11 @@ import org.apache.spark.sql.execution.datasources.v2.V2CommandExec
   * row-level operation and plans it as [[ColeDmlRetryExec]], which
   * executes the logical through a fresh nested QueryExecution per
   * attempt — a thread-local suppression flag keeps the strategy from
-  * intercepting its own re-executions. An eligible UPDATE plans the
-  * native [[ColeUpdateExec]] as the child instead, and each attempt
-  * re-runs it: it re-classifies from a fresh listing. The condition-driven DELETE
-  * paths ([[ColeDelete]]) are self-contained in the connector and
+  * intercepting its own re-executions. An eligible UPDATE or MERGE plans
+  * its native exec ([[ColeUpdateExec]], [[ColeMergeExec]]) as the child
+  * instead, and each attempt re-runs it: it re-classifies from a fresh
+  * listing. The condition-driven DELETE paths ([[ColeDelete]]) are
+  * self-contained in the connector and
   * retry through [[ColeDmlRetry.withRetries]] directly; their
   * re-execution re-classifies from a fresh listing, and the idempotent
   * condition makes a retry after a PARTIAL multi-directory failure heal
@@ -140,8 +141,9 @@ class ColeDmlRetryStrategy extends SparkStrategy {
           !ColeDmlRetry.isReplanning && ColeDmlRetry.strategyEnabled =>
       rd.setTagValue(ColeDmlRetry.PlannedTag, true)
       val op = rd.operation.asInstanceOf[ColeRowLevelOperation]
-      // an eligible UPDATE runs as a native columnar file rewrite
-      Seq(ColeDmlRetryExec(rd, op, ColeUpdate.plan(rd, op).getOrElse(planLater(rd))))
+      // an eligible UPDATE or MERGE runs as a native columnar file rewrite
+      val native = ColeUpdate.plan(rd, op).orElse(ColeMerge.plan(rd, op))
+      Seq(ColeDmlRetryExec(rd, op, native.getOrElse(planLater(rd))))
     case wd: WriteDelta
         if wd.operation.isInstanceOf[ColeRowLevelOperation] &&
           wd.getTagValue(ColeDmlRetry.PlannedTag).isEmpty &&
@@ -157,7 +159,7 @@ class ColeDmlRetryStrategy extends SparkStrategy {
   * exec planned in the SAME planner pass (zero extra planning on the
   * no-conflict path) — and each conflict abort re-plans the logical
   * through a fresh nested QueryExecution (bounded). A native
-  * [[ColeUpdateExec]] child re-runs itself instead.
+  * [[ColeNativeDmlExec]] child re-runs itself instead.
   */
 case class ColeDmlRetryExec(logical: LogicalPlan, op: ColeRowLevelOperation,
     child: SparkPlan)
@@ -177,7 +179,7 @@ case class ColeDmlRetryExec(logical: LogicalPlan, op: ColeRowLevelOperation,
     while (true) {
       try {
         child match {
-          case native: ColeUpdateExec => native.update()
+          case native: ColeNativeDmlExec => native.attempt()
           case _ if attempt == 0 => child.executeCollect()
           case _ => ColeDmlRetry.suppressed {
             // commandExecuted forces the command eagerly through the

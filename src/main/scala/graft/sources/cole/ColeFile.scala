@@ -21,50 +21,63 @@ final case class ColumnData(ints: Array[Int], longs: Array[Long],
 
   /** The chunk restricted to positions `rows`, in that order: one
     * primitive loop per lane (wides in [hi,lo] pairs), null flags too.
+    * Each lane loops in a method of its own: one method holding every
+    * lane's loop ran each in the interpreter or on-stack-replaced code,
+    * about 15× slower, because a rewrite calls it only a few times per
+    * row group.
     */
   def gather(rows: Array[Int]): ColumnData = {
-    val n = rows.length
-    def refs[T <: AnyRef](a: Array[T], g: Array[T]): Array[T] = {
-      var j = 0
-      while (j < n) { g(j) = a(rows(j)); j += 1 }
-      g
-    }
+    import ColumnData._
     ColumnData(
-      if (ints == null) null else {
-        val g = new Array[Int](n)
-        var j = 0
-        while (j < n) { g(j) = ints(rows(j)); j += 1 }
-        g
-      },
-      if (longs == null) null else {
-        val g = new Array[Long](n)
-        var j = 0
-        while (j < n) { g(j) = longs(rows(j)); j += 1 }
-        g
-      },
-      if (strings == null) null else refs(strings, new Array[Array[Byte]](n)),
-      if (doubles == null) null else {
-        val g = new Array[Double](n)
-        var j = 0
-        while (j < n) { g(j) = doubles(rows(j)); j += 1 }
-        g
-      },
-      if (nulls == null) null else {
-        val g = new Array[Boolean](n)
-        var j = 0
-        while (j < n) { g(j) = nulls(rows(j)); j += 1 }
-        g
-      },
-      if (vecs == null) null else refs(vecs, new Array[Array[Float]](n)),
-      if (wides == null) null else {
-        val g = new Array[Long](2 * n)
-        var j = 0
-        while (j < n) {
-          g(2 * j) = wides(2 * rows(j)); g(2 * j + 1) = wides(2 * rows(j) + 1)
-          j += 1
-        }
-        g
-      })
+      if (ints == null) null else gatherInts(ints, rows),
+      if (longs == null) null else gatherLongs(longs, rows),
+      if (strings == null) null else gatherRefs(strings, rows),
+      if (doubles == null) null else gatherDoubles(doubles, rows),
+      if (nulls == null) null else gatherBools(nulls, rows),
+      if (vecs == null) null else gatherRefs(vecs, rows),
+      if (wides == null) null else gatherWides(wides, rows))
+  }
+}
+
+object ColumnData {
+  private def gatherInts(a: Array[Int], rows: Array[Int]): Array[Int] = {
+    val g = new Array[Int](rows.length)
+    var j = 0
+    while (j < rows.length) { g(j) = a(rows(j)); j += 1 }
+    g
+  }
+  private def gatherLongs(a: Array[Long], rows: Array[Int]): Array[Long] = {
+    val g = new Array[Long](rows.length)
+    var j = 0
+    while (j < rows.length) { g(j) = a(rows(j)); j += 1 }
+    g
+  }
+  private def gatherDoubles(a: Array[Double], rows: Array[Int]): Array[Double] = {
+    val g = new Array[Double](rows.length)
+    var j = 0
+    while (j < rows.length) { g(j) = a(rows(j)); j += 1 }
+    g
+  }
+  private def gatherBools(a: Array[Boolean], rows: Array[Int]): Array[Boolean] = {
+    val g = new Array[Boolean](rows.length)
+    var j = 0
+    while (j < rows.length) { g(j) = a(rows(j)); j += 1 }
+    g
+  }
+  private def gatherRefs[T <: AnyRef: scala.reflect.ClassTag](a: Array[T], rows: Array[Int]): Array[T] = {
+    val g = new Array[T](rows.length)
+    var j = 0
+    while (j < rows.length) { g(j) = a(rows(j)); j += 1 }
+    g
+  }
+  private def gatherWides(a: Array[Long], rows: Array[Int]): Array[Long] = {
+    val g = new Array[Long](2 * rows.length)
+    var j = 0
+    while (j < rows.length) {
+      g(2 * j) = a(2 * rows(j)); g(2 * j + 1) = a(2 * rows(j) + 1)
+      j += 1
+    }
+    g
   }
 }
 

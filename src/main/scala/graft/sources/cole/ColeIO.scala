@@ -36,26 +36,45 @@ object ColeIO {
     (p.getFileSystem(conf), p)
   }
 
-  /** Publish `tmp` at `dst`, REPLACING any existing file — atomically
-    * where the filesystem can (FileContext's OVERWRITE rename: local +
-    * HDFS-class), falling back to delete-then-rename elsewhere. The
-    * atomic path means a concurrent reader of a sidecar never observes
-    * the no-file window the plain fallback has (a bucketed table whose
-    * spec momentarily "vanished" would plan as unbucketed).
+  /** Publish `bytes` at `dst`, REPLACING any existing file: written under
+    * a unique dotted `.tmp` name beside it, then renamed over it —
+    * atomically where the filesystem can (local, and FileContext's
+    * OVERWRITE rename on HDFS-class stores), falling back to
+    * delete-then-rename elsewhere. The atomic path means a concurrent
+    * reader never observes a torn file, nor the no-file window the plain
+    * fallback has (a bucketed table whose spec momentarily "vanished"
+    * would plan as unbucketed). A local filesystem goes through java.nio,
+    * as [[ColeClaims]] does: Hadoop's local create forks `chmod` for the
+    * file and its checksum, on every sidecar and swap manifest.
     */
-  def replaceFile(fs: FileSystem, tmp: HPath, dst: HPath,
+  def writeReplacing(fs: FileSystem, dst: HPath, bytes: Array[Byte],
       what: String): Unit = {
-    val atomically =
-      try {
-        org.apache.hadoop.fs.FileContext
-          .getFileContext(fs.getUri, fs.getConf)
-          .rename(fs.makeQualified(tmp), fs.makeQualified(dst),
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        true
-      } catch { case _: Exception => false }
-    if (!atomically && !fs.rename(tmp, dst)) {
-      fs.delete(dst, false)
-      require(fs.rename(tmp, dst), s"$what: publish rename failed")
+    val tmp = new HPath(dst.getParent, s".${dst.getName}.${java.util.UUID.randomUUID()}.tmp")
+    if (fs.getUri.getScheme == "file") {
+      val d = java.nio.file.Paths.get(fs.makeQualified(dst).toUri.getPath)
+      val t = d.resolveSibling(tmp.getName)
+      java.nio.file.Files.createDirectories(d.getParent)
+      java.nio.file.Files.write(t, bytes)
+      // the checksum Hadoop wrote beside an earlier version would fail
+      // the read of this one
+      java.nio.file.Files.deleteIfExists(d.resolveSibling(s".${d.getFileName}.crc"))
+      java.nio.file.Files.move(t, d, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } else {
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      val atomically =
+        try {
+          org.apache.hadoop.fs.FileContext
+            .getFileContext(fs.getUri, fs.getConf)
+            .rename(fs.makeQualified(tmp), fs.makeQualified(dst),
+              org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+          true
+        } catch { case _: Exception => false }
+      if (!atomically && !fs.rename(tmp, dst)) {
+        fs.delete(dst, false)
+        require(fs.rename(tmp, dst), s"$what: publish rename failed")
+      }
     }
   }
 

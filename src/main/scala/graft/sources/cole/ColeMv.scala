@@ -268,10 +268,7 @@ object ColeMv {
       d.inflight.map(v => s"inflight:$v").toSeq ++
       Seq("end"))
       .mkString("\n").getBytes(StandardCharsets.UTF_8)
-    val tmp = new HPath(mv, s".$SidecarName.${System.nanoTime()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body) finally out.close()
-    ColeIO.replaceFile(fs, tmp, sidecar(mv), "MV definition")
+    ColeIO.writeReplacing(fs, sidecar(mv), body, "MV definition")
   }
 
   def isMv(mv: String, conf: Configuration): Boolean = {

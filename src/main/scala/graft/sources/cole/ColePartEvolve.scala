@@ -167,12 +167,8 @@ object ColePartEvolve {
           s"[${cols.mkString(",")}]")
       val body = (if (baseTxt.endsWith("\n")) baseTxt else baseTxt + "\n") +
         s"evolve:${cols.mkString(",")}\n"
-      val tmp = new HPath(table,
-        s".$SpecFile.tmp-${java.lang.Long.toHexString(System.nanoTime())}")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      ColeIO.replaceFile(fs, tmp, p, s"partition spec write at $table")
+      ColeIO.writeReplacing(fs, p,
+        body.getBytes(java.nio.charset.StandardCharsets.UTF_8), s"partition spec write at $table")
       if (ColeVersions.enabled(table, conf))
         ColeVersions.commitIfEnabled(table, conf, "evolve-partition",
           Seq.empty, Seq.empty)

@@ -72,7 +72,8 @@ object ColeRebucket {
           "rebucket")
     }
     val claims = ColeClaims.acquire(fs, conf, table,
-      old.map(i => ColeVersions.relOf(fs, table, i.path)), "rebucket")
+      ColeCompact.manifestClaim(fs, table, root) +:
+        old.map(i => ColeVersions.relOf(fs, table, i.path)), "rebucket")
     try {
       def drifted = old.exists { i =>
         try {

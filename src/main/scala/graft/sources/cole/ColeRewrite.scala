@@ -6,9 +6,12 @@ import org.apache.spark.sql.SparkSession
 
 import graft.sources.cole.ColeFormat._
 
-/** The copy-on-write file rewrite behind `DELETE WHERE` ([[ColeDelete]])
-  * and the native UPDATE ([[ColeUpdateExec]]): one engine, two per-row-
-  * group transforms — drop the rows the condition selects, or patch them.
+/** The copy-on-write file rewrite behind `DELETE WHERE` ([[ColeDelete]]),
+  * the native UPDATE ([[ColeUpdateExec]]) and the native MERGE
+  * ([[ColeMergeExec]]): one engine, two per-row-group transforms — drop
+  * the rows the condition selects, or patch them. A MERGE also adds the
+  * source rows no target row matched; they commit with the replacements
+  * as one statement.
   *
   * Shape: file-local and embarrassingly parallel. Footer stats classify
   * every file on the driver WITHOUT reading a data byte:
@@ -18,16 +21,19 @@ import graft.sources.cole.ColeFormat._
   *     file under schema evolution) → file UNTOUCHED, byte-identical;
   *   - every row provably matches → whole-file DROP (delete), or a
   *     rewrite that patches every row (update);
-  *   - otherwise → the file REWRITES to exactly one replacement.
+  *   - otherwise → the file REWRITES to one replacement, or to one per
+  *     run of its row groups when it is larger than the statement's split
+  *     size ([[runsOf]]).
   *
-  * Rewrites fan out as one Spark job (one task per file, no shuffle).
-  * Each task walks its file row group by row group, preserving row order
-  * and row-group boundaries: a group without a selected row — or whose
-  * patched values all equal the originals — splices its STORED bytes
-  * verbatim; any other group decodes, applies the transform and
+  * Rewrites fan out as one Spark job (one task per file or run, no
+  * shuffle). Each task walks its row groups in order, preserving row
+  * order and row-group boundaries: a group without a selected row — or
+  * whose patched values all equal the originals — splices its STORED
+  * bytes verbatim; any other group decodes, applies the transform and
   * re-encodes with the chunk's own encodings. A file whose transform
-  * changes nothing opens no writer and stays byte-identical. Rows never
-  * move between files, so partition, bucket and sort layouts hold.
+  * changes nothing stays byte-identical (unsplit, it opens no writer).
+  * Rows never leave their file's directory and keep their order, so
+  * partition, bucket and sort layouts hold.
   *
   * Transaction: the ColeCompact two-phase swap. Replacement files land
   * in a dotted scratch directory (invisible to readers), the manifest
@@ -50,7 +56,7 @@ object ColeRewrite {
     */
   final case class Stats(filesTotal: Int, filesUntouched: Int,
       filesDropped: Int, filesRewritten: Int, rowsMatched: Long,
-      rowGroupsSpliced: Long, noopFiles: Int)
+      rowGroupsSpliced: Long, noopFiles: Int, rowsInserted: Long = 0L)
 
   /** What a rewrite does to the selected rows of a row group. */
   trait Transform extends Serializable {
@@ -63,7 +69,7 @@ object ColeRewrite {
 
   /** Patch the selected rows in place. */
   trait PatchRows extends Transform {
-    val op = "update"
+    def op: String = "update"
     /** Executor side, once per file. */
     def forFile(meta: FileMeta, partValues: Seq[(String, String)]): RowGroupPatch
   }
@@ -74,6 +80,12 @@ object ColeRewrite {
       * changes. The reader's chunks are shared: a patched chunk is a copy.
       */
     def apply(reader: ColeFileReader, rgIdx: Int, sel: Array[Int]): Map[Int, ColumnData]
+    /** The file's rows the patch matched, when it narrows the selection
+      * itself (MERGE probes its key); -1 when every selected row counts.
+      */
+    def rowsMatched: Long = -1L
+    /** The source rows the file's rows matched (MERGE). */
+    def sourceMatched: Array[Int] = Array.emptyIntArray
   }
 
   /** Driver-side classification of the live files against `preds`. */
@@ -145,30 +157,61 @@ object ColeRewrite {
       classified.collect { case (i, c, ps) if c != Untouched => i.path -> ps }.toMap)
   }
 
-  /** One task's outcome: `changed` counts the deleted rows, or the
-    * selected rows of the groups a patch altered; 0 = the file stays as
-    * it is.
+  /** One task's outcome over a run of `file`'s row groups: `changed`
+    * counts the deleted rows, or the selected rows of the groups a patch
+    * altered; 0 over every run = the file stays as it is. `written`: the
+    * run's rows are in scratch file `name`. `sourceMatched`: the source
+    * rows a MERGE's patch matched.
     */
-  private final case class FileResult(file: String, kept: Long, matched: Long,
-      changed: Long, spliced: Int)
+  private final case class FileResult(file: String, name: String, kept: Long,
+      matched: Long, changed: Long, spliced: Int, written: Boolean,
+      sourceMatched: Array[Int])
 
-  /** A replacement's name: the statement prefix on the source's base
-    * name. Earlier statement prefixes are stripped so names do not grow
-    * with every rewrite of the same file; a base name two candidates of
-    * one directory share keeps the full source name.
+  /** The runs of row groups [from, until) `meta` rewrites as, one task
+    * and one replacement each: a file larger than `splitBytes` splits
+    * into about `len / splitBytes` runs of equal row-group counts.
+    */
+  private def runsOf(meta: FileMeta, len: Long, splitBytes: Long): Seq[(Int, Int)] = {
+    val n = meta.rowGroups.size
+    val k = math.max(1L, math.min(n.toLong, (len + splitBytes - 1) / splitBytes)).toInt
+    (0 until k).map(r => (r * n / k, (r + 1) * n / k))
+  }
+
+  /** The split size Spark's file scans use for these files: their bytes
+    * spread over the task slots, between the open cost and
+    * `spark.sql.files.maxPartitionBytes`. A rewrite then spreads over the
+    * slots as a scan of the same files would, and leaves files a later
+    * statement need not split again.
+    */
+  private def splitBytes(spark: SparkSession, files: Seq[ColeMetaCache.FileInfo]): Long =
+    org.apache.spark.sql.execution.datasources.FilePartition.maxSplitBytes(spark,
+      Seq(org.apache.spark.sql.execution.datasources.PartitionDirectory(
+        org.apache.spark.sql.catalyst.InternalRow.empty,
+        files.map(i => new org.apache.hadoop.fs.FileStatus(i.len, false, 1, 0L, i.mtime,
+          new HPath(i.path))).toArray)))
+
+  /** Each run's replacement name, per (file, run) of `runs` (file, run,
+    * runs of the file): the statement prefix on the source's base name,
+    * with the run's index when the file splits. Earlier statement
+    * prefixes are stripped so names do not grow with every rewrite of the
+    * same file. A name another run of the directory already took gets a
+    * counter after the prefix, so no two replacements share a name.
     */
   private def replacementNames(op: String, stamp: String,
-      files: Seq[String]): Map[String, String] = {
-    val Prefixed = "^(?:(?:delete|update)-[0-9a-f]+-)+(.+)$".r
+      runs: Seq[(String, Int, Int)]): Map[(String, Int), String] = {
+    val Prefixed = "^(?:(?:delete|update|merge)-[0-9a-f]+-)+(.+)$".r
     def base(f: String): String = new HPath(f).getName match {
       case Prefixed(b) => b
       case n => n
     }
-    files.groupBy(f => new HPath(f).getParent.toString).values.flatMap { fs0 =>
-      val clash = fs0.groupBy(base).collect { case (b, g) if g.size > 1 => b }.toSet
-      fs0.map { f =>
-        val b = base(f)
-        f -> s"$op-$stamp-${if (clash(b)) new HPath(f).getName else b}"
+    runs.groupBy(r => new HPath(r._1).getParent.toString).values.flatMap { rs =>
+      val taken = scala.collection.mutable.Set.empty[String]
+      rs.map { case (f, r, k) =>
+        val b = if (k == 1) base(f) else base(f).stripSuffix(".col") + s"-$r.col"
+        var name = s"$op-$stamp-$b"
+        var i = 0
+        while (!taken.add(name)) { i += 1; name = s"$op-$stamp-$i-$b" }
+        (f, r) -> name
       }
     }.toMap
   }
@@ -179,11 +222,20 @@ object ColeRewrite {
     */
   private[cole] var raceWindow: () => Unit = () => ()
 
-  /** Runs the rewrite of `plan` and commits it as one statement. */
+  /** Runs the rewrite of `plan` and commits it as one statement.
+    *
+    * @param inserts a MERGE's added rows: driver side, after the rewrite
+    *                job, given the source rows its tasks matched, the
+    *                scratch directory (dotted, in the table root, laid
+    *                out as the table) and the file-name prefix, writes the
+    *                rows to add and returns their files
+    */
   def rewrite(spark: SparkSession, table: String, plan: Plan,
-      conf: Configuration, transform: Transform): Stats = {
+      conf: Configuration, transform: Transform,
+      inserts: Option[(java.util.BitSet, String, String) => Seq[ColeWrittenFile]] = None)
+      : Stats = {
     val op = transform.op
-    val (fs, _) = ColeIO.resolve(table, conf)
+    val (fs, root) = ColeIO.resolve(table, conf)
     val infos = plan.infos
     // a drop needs no task for a file whose every row matches; a patch
     // rewrites it like any other candidate
@@ -193,30 +245,80 @@ object ColeRewrite {
     }
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     val scratchName = s".$op-$stamp"
-    val names = replacementNames(op, stamp, rewrites.map(_.path))
-    val scratchDirs = rewrites.map(i => new HPath(i.path).getParent).distinct
-      .map(new HPath(_, scratchName))
+    val split = splitBytes(spark, rewrites)
+    val runs = rewrites.map(i => i.path -> runsOf(i.meta, i.len, split)).toMap
+    val names = replacementNames(op, stamp,
+      rewrites.flatMap(i => runs(i.path).indices.map(r => (i.path, r, runs(i.path).size))))
+    // replacements land in a scratch directory beside their source; added
+    // rows in one under the table root that mirrors the table's layout
+    val insertScratch = new HPath(root, scratchName)
+    val scratchDirs = (rewrites.map(i => new HPath(i.path).getParent).distinct
+      .map(new HPath(_, scratchName)) ++ inserts.map(_ => insertScratch))
     def dropScratch(): Unit = scratchDirs.foreach(fs.delete(_, true))
 
-    // ---- distributed rewrite: one task per affected file, zero shuffle
+    // ---- distributed rewrite: one task per affected file or run of its
+    // row groups, zero shuffle. A split file's runs all write, changed or
+    // not: the file is replaced whole
     val hconf = new ColeHadoopConf(conf)
-    val results: Map[String, FileResult] =
-      if (rewrites.isEmpty) Map.empty
+    val runResults: Seq[FileResult] =
+      if (rewrites.isEmpty) Seq.empty
       else {
-        val tasks = rewrites.map(i =>
-          (i.path, i.partValues, names(i.path), plan.filePreds(i.path)))
-        try spark.sparkContext.parallelize(tasks, tasks.size)
-          .map { case (f, pv, name, ps) =>
-            rewriteFile(f, pv, scratchName, name, ps, transform, hconf) }
-          .collect().map(r => r.file -> r).toMap
-        catch { case e: Throwable => dropScratch(); throw e }
+        val tasks = rewrites.flatMap(i => runs(i.path).zipWithIndex.map { case ((from, until), r) =>
+          (i.path, i.partValues, names((i.path, r)), plan.filePreds(i.path), from, until,
+            runs(i.path).size > 1)
+        })
+        val sc = spark.sparkContext
+        val tag = s"cole$scratchName"
+        sc.addJobTag(tag)
+        try sc.parallelize(tasks, tasks.size)
+          .map { case (f, pv, name, ps, from, until, split) =>
+            rewriteFile(f, pv, scratchName, name, ps, transform, hconf, from, until, split) }
+          .collect().toSeq
+        catch {
+          case e: Throwable =>
+            // the first failed task fails the job while its siblings may
+            // still write into the scratch: stop them before dropping it
+            sc.cancelJobsWithTag(tag)
+            val st = sc.statusTracker
+            val deadline = System.nanoTime() + 30000000000L
+            while (System.nanoTime() < deadline && st.getJobIdsForTag(tag).iterator
+                .flatMap(st.getJobInfo(_)).flatMap(_.stageIds).flatMap(st.getStageInfo(_))
+                .exists(_.numActiveTasks > 0)) Thread.sleep(10)
+            dropScratch()
+            throw e
+        } finally sc.removeJobTag(tag)
       }
+    // per file: its runs' outcomes added up
+    val results: Map[String, FileResult] = runResults.groupBy(_.file).map { case (f, rs) =>
+      f -> FileResult(f, rs.head.name, rs.map(_.kept).sum, rs.map(_.matched).sum,
+        rs.map(_.changed).sum, rs.map(_.spliced).sum, rs.exists(_.written),
+        rs.flatMap(_.sourceMatched).toArray)
+    }
+    // ---- added rows, each file with the live path it renames to
+    val added: Seq[(ColeWrittenFile, HPath)] = inserts.toSeq.flatMap { ins =>
+      val matched = new java.util.BitSet
+      results.valuesIterator.foreach(_.sourceMatched.foreach(matched.set))
+      val prefix = insertScratch.toString + "/"
+      try ins(matched, insertScratch.toString, s"$op-$stamp-").map { f =>
+        require(f.fin.startsWith(prefix), s"added file ${f.fin} outside $prefix")
+        f -> fs.makeQualified(new HPath(root, f.fin.stripPrefix(prefix)))
+      }
+      catch { case e: Throwable => dropScratch(); throw e }
+    }
+    // a rename onto a live name would replace that file's rows
+    val landing = names.toSeq.map { case ((f, _), n) =>
+      fs.makeQualified(new HPath(new HPath(f).getParent, n)) } ++ added.map(_._2)
+    if (landing.distinct.size != landing.size) {
+      dropScratch()
+      throw new IllegalStateException(s"${op.toUpperCase} would land two files on one " +
+        s"name: ${landing.diff(landing.distinct).distinct.mkString(", ")}")
+    }
     raceWindow()
     // a rewrite that kept ZERO rows degenerates to a whole-file drop —
     // never rename an empty replacement into the table. A rewrite that
     // CHANGED zero rows (stats couldn't exclude, exact evaluation did, or
     // every patched value equals the original) degenerates to untouched:
-    // its original stays, byte-identical, and no replacement was written.
+    // its original stays, byte-identical, and no replacement renames in.
     val noop = results.filter(_._2.changed == 0L)
     val emptied = results.filter { case (_, r) => r.changed > 0L && r.kept == 0L }
     val replaced = results.filter { case (_, r) => r.changed > 0L && r.kept > 0L }
@@ -229,11 +331,16 @@ object ColeRewrite {
     val verRemoves = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val versioned = ColeVersions.enabled(table, conf)
     // check-then-swap holds per-file storage claims (ColeClaims —
-    // cross-process) on EVERY file of the statement until its version
-    // record lands: without them two overlapping committers could both
-    // pass the (len,mtime) check below before either renames
+    // cross-process) on EVERY file of the statement, and on the manifest
+    // of every directory it swaps, until its version record lands:
+    // without them two overlapping committers could both pass the
+    // (len,mtime) check below before either renames
+    val swapByDir = swapFiles.groupBy(i => fs.makeQualified(new HPath(i.path).getParent))
+    val addedByDir = added.groupBy(_._2.getParent)
+    val dirs = (swapByDir.keySet ++ addedByDir.keySet).toSeq.sortBy(_.toString)
     val claims = try ColeClaims.acquire(fs, conf, table,
-      swapFiles.map(i => ColeVersions.relOf(fs, table, i.path)), op)
+      swapFiles.map(i => ColeVersions.relOf(fs, table, i.path)) ++
+        dirs.map(ColeCompact.manifestClaim(fs, table, _)), op)
     catch { case e: Throwable => dropScratch(); throw e }
     try {
       // concurrent-write race check: every file this statement decided
@@ -251,38 +358,48 @@ object ColeRewrite {
           s"concurrent write detected on ${info.path} during ${op.toUpperCase}; " +
             "aborted with no changes — retry after the other writer commits")
       }
-      swapFiles.groupBy(i => new HPath(i.path).getParent).toSeq.sortBy(_._1.toString)
-        .zipWithIndex.foreach { case ((dir, files), dirIdx) =>
-          val oldNames = files.map(i => new HPath(i.path).getName)
-          val newNames = files.flatMap(i => replaced.get(i.path).map(_ => names(i.path)))
-          ColeCompact.writeManifest(fs, dir,
-            oldNames.map("old:" + _) ++ newNames.map("new:" + _))
-          // record the swap for streaming sources: a cole-file-log that
-          // already covers the input files must not re-emit the
-          // replacements. Named by the directory's index: layouts nest, so
-          // directory names repeat (`_t_days_ts=1/_bucket=0`,
-          // `_t_days_ts=2/_bucket=0`)
+      dirs.zipWithIndex.foreach { case (dir, dirIdx) =>
+        val files = swapByDir.getOrElse(dir, Seq.empty)
+        val adds = addedByDir.getOrElse(dir, Seq.empty)
+        val oldNames = files.map(i => new HPath(i.path).getName)
+        val newNames = files.filter(i => replaced.contains(i.path)).flatMap(i =>
+          runResults.filter(r => r.file == i.path && r.written).map(_.name))
+        // added files roll forward or back with the replacements
+        ColeCompact.writeManifest(fs, dir, oldNames.map("old:" + _) ++
+          (newNames ++ adds.map(_._2.getName)).map("new:" + _))
+        // record the swap for streaming sources: a cole-file-log that
+        // already covers the input files must not re-emit the
+        // replacements. Added rows are new to every reader and stay out
+        // of it. Named by the directory's index: layouts nest, so
+        // directory names repeat (`_t_days_ts=1/_bucket=0`,
+        // `_t_days_ts=2/_bucket=0`)
+        if (files.nonEmpty)
           ColeCompact.writeCompactionRecord(fs, table, s"$op-$stamp-$dirIdx",
             newNames.map(n => fs.makeQualified(new HPath(dir, n)).toString),
             oldNames.map(n => fs.makeQualified(new HPath(dir, n)).toString))
-          val scratch = new HPath(dir, scratchName)
-          newNames.foreach { n =>
-            require(fs.rename(new HPath(scratch, n), new HPath(dir, n)),
-              s"rename failed for $scratch/$n")
-            verAdds += ColeVersions.relOf(fs, table, new HPath(dir, n).toString)
-          }
-          val indexedCols = files.flatMap(i =>
-            ColeBloomIndex.indexedColumns(i.path, conf)).distinct
-          files.foreach { i =>
-            fs.delete(new HPath(ColeBloomIndex.sidecarPath(i.path)), false)
-            ColeDv.drop(fs, i.path)
-            verRemoves ++= ColeVersions.retireOrDelete(fs, table, i.path, stamp, versioned)
-          }
-          fs.delete(scratch, true)
-          fs.delete(ColeCompact.manifestPath(dir), false)
-          if (indexedCols.nonEmpty)
-            ColeBloomIndex.build(dir.toString, indexedCols, conf)
+        val scratch = new HPath(dir, scratchName)
+        newNames.foreach { n =>
+          require(fs.rename(new HPath(scratch, n), new HPath(dir, n)),
+            s"rename failed for $scratch/$n")
+          verAdds += ColeVersions.relOf(fs, table, new HPath(dir, n).toString)
         }
+        adds.foreach { case (f, live) =>
+          require(fs.rename(new HPath(f.written), live),
+            s"rename failed for ${f.written}")
+          verAdds += ColeVersions.relOf(fs, table, live.toString)
+        }
+        val indexedCols = files.flatMap(i =>
+          ColeBloomIndex.indexedColumns(i.path, conf)).distinct
+        files.foreach { i =>
+          fs.delete(new HPath(ColeBloomIndex.sidecarPath(i.path)), false)
+          ColeDv.drop(fs, i.path)
+          verRemoves ++= ColeVersions.retireOrDelete(fs, table, i.path, stamp, versioned)
+        }
+        fs.delete(scratch, true)
+        fs.delete(ColeCompact.manifestPath(dir), false)
+        if (indexedCols.nonEmpty)
+          ColeBloomIndex.build(dir.toString, indexedCols, conf)
+      }
       dropScratch() // dirs whose every rewrite was a no-op never swapped
       if (verAdds.nonEmpty || verRemoves.nonEmpty)
         ColeVersions.commitIfEnabled(table, conf, op, verAdds.toSeq, verRemoves.toSeq)
@@ -290,7 +407,7 @@ object ColeRewrite {
 
     // if the statement emptied the table, persist the schema sidecar so
     // the table still resolves (files are the usual source of truth)
-    if (dropped.size + emptied.size == infos.size) {
+    if (infos.nonEmpty && added.isEmpty && dropped.size + emptied.size == infos.size) {
       import org.apache.spark.sql.types._
       val partFields = ColeMetaCache.partitionSchema(infos,
           ColePartEvolve.evolvedCols(table, conf))
@@ -313,18 +430,21 @@ object ColeRewrite {
       dropped.size + emptied.size,
       replaced.size,
       dropped.map(_.meta.totalRows).sum + results.valuesIterator.map(_.matched).sum,
-      results.valuesIterator.map(_.spliced.toLong).sum,
-      noop.size)
+      results.valuesIterator.map(r => if (r.changed == 0L) 0L else r.spliced.toLong).sum,
+      noop.size,
+      added.map(_._1.rows).sum)
   }
 
   /** Executor-side single-file rewrite into `<dir>/<scratch>/<name>`. */
   private def rewriteFile(file: String, partValues: Seq[(String, String)],
       scratch: String, name: String, preds: Array[ColePredicate],
-      transform: Transform, hconf: ColeHadoopConf): FileResult =
+      transform: Transform, hconf: ColeHadoopConf, from: Int, until: Int,
+      split: Boolean): FileResult =
     // a candidate vanishing mid-rewrite = a concurrent committer's swap
     // retired it: surface the loud, RETRYABLE conflict (the auto-retry
     // re-plans from a fresh listing), never a bare FileNotFoundException
-    try rewriteFileInner(file, partValues, scratch, name, preds, transform, hconf)
+    try rewriteFileInner(file, partValues, scratch, name, preds, transform, hconf,
+      from, until, split)
     catch {
       case e: java.io.FileNotFoundException => throw new IllegalStateException(
         s"concurrent write detected during ${transform.op.toUpperCase} rewrite " +
@@ -333,9 +453,13 @@ object ColeRewrite {
           "commits", e)
     }
 
+  /** Rewrites row groups [`from`, `until`) of `file`; a `split` run
+    * writes its groups even when none changes.
+    */
   private def rewriteFileInner(file: String, partValues: Seq[(String, String)],
       scratch: String, name: String, preds: Array[ColePredicate],
-      transform: Transform, hconf: ColeHadoopConf): FileResult = {
+      transform: Transform, hconf: ColeHadoopConf, from: Int, until: Int,
+      split: Boolean): FileResult = {
     val conf = hconf.value
     val reader = new ColeFileReader(file, conf)
     try {
@@ -348,20 +472,25 @@ object ColeRewrite {
       // matches (the steady state of every idempotent re-run) returns
       // here — no writer opened, no other column decoded.
       val AllRows: Array[Int] = null // marker: whole group matches
-      val selections: Array[Array[Int]] =
-        meta.rowGroups.zipWithIndex.map { case (rg, rgIdx) =>
+      val groups = from until until
+      val selections: Map[Int, Array[Int]] = groups.map { rgIdx =>
+        val rg = meta.rowGroups(rgIdx)
+        rgIdx -> (
           if (preds.isEmpty) AllRows
           else if (ColePredicate.skipRowGroup(rg, nameToIdx, preds))
             Array.empty[Int]
           else if (ColePredicate.fullyKeepsRowGroup(rg, nameToIdx, preds))
             AllRows
           else ColePredicate.buildSelection(
-            reader, rgIdx, rg.numRows, nameToIdx, preds)
-        }.toArray
-      val totalRows = meta.rowGroups.map(_.numRows.toLong).sum
-      val matched = selections.zip(meta.rowGroups).map { case (sel, rg) =>
-        if (sel eq AllRows) rg.numRows.toLong else sel.length.toLong }.sum
-      if (matched == 0L) return FileResult(file, totalRows, 0L, 0L, 0)
+            reader, rgIdx, rg.numRows, nameToIdx, preds))
+      }.toMap
+      val totalRows = groups.map(meta.rowGroups(_).numRows.toLong).sum
+      val matched = groups.map { rgIdx =>
+        val sel = selections(rgIdx)
+        if (sel eq AllRows) meta.rowGroups(rgIdx).numRows.toLong else sel.length.toLong
+      }.sum
+      if (matched == 0L && !split)
+        return FileResult(file, name, totalRows, 0L, 0L, 0, written = false, Array.emptyIntArray)
       // ---- phase 2: transform the selected groups, reusing the phase-1
       // selections (predicate columns decode once). The writer opens at
       // the first changed group; groups before it splice then.
@@ -405,16 +534,15 @@ object ColeRewrite {
         kept += n
       }
       try {
-        meta.rowGroups.zipWithIndex.foreach { case (rg, rgIdx) =>
+        groups.foreach { rgIdx =>
+          val rg = meta.rowGroups(rgIdx)
           val sel = selections(rgIdx)
           val all = (sel eq AllRows) || sel.length == rg.numRows
           if (sel != null && sel.isEmpty) unchanged(rgIdx)
           else if (patch == null) {
             if (all) changed += rg.numRows // every row deletes: drop the group
             else {
-              val drop = new Array[Boolean](rg.numRows)
-              sel.foreach(drop(_) = true)
-              val keepIdx = Array.range(0, rg.numRows).filterNot(drop)
+              val keepIdx = unselected(sel, rg.numRows)
               write(rg, meta.columns.indices.map(ci =>
                 reader.readChunk(rgIdx, ci).gather(keepIdx)), keepIdx.length)
               changed += sel.length
@@ -430,8 +558,9 @@ object ColeRewrite {
             }
           }
         }
-        // a drop that removed whole groups still rewrites the rest
-        if (changed > 0L && writer == null && pendingSplices.nonEmpty) {
+        // a drop that removed whole groups still rewrites the rest, and a
+        // split run writes its groups whether or not they changed
+        if ((changed > 0L || split) && writer == null && pendingSplices.nonEmpty) {
           writer = new ColeFileWriter(outPath.toString, meta.columns, wconf)
           pendingSplices.foreach(splice)
         }
@@ -445,8 +574,23 @@ object ColeRewrite {
           }
           throw e
       }
-      FileResult(file, kept, matched, changed, if (changed == 0L) 0 else spliced)
+      FileResult(file, name, kept,
+        if (patch != null && patch.rowsMatched >= 0) patch.rowsMatched else matched,
+        changed, spliced, written = writer != null,
+        if (patch == null) Array.emptyIntArray else patch.sourceMatched)
     } finally reader.close()
+  }
+
+  /** The ordinals in [0, `n`) missing from `sel` (ascending). */
+  private def unselected(sel: Array[Int], n: Int): Array[Int] = {
+    val out = new Array[Int](n - sel.length)
+    var r = 0; var s = 0; var o = 0
+    while (r < n) {
+      if (s < sel.length && sel(s) == r) s += 1
+      else { out(o) = r; o += 1 }
+      r += 1
+    }
+    out
   }
 
   /** Original per-chunk encodings, with the writer's nulls rule applied
@@ -454,7 +598,13 @@ object ColeRewrite {
     */
   private def chunkEncodings(rg: RowGroupMeta, cols: Seq[ColumnData]): Seq[Enc] =
     rg.chunks.zip(cols).map { case (c, cd) =>
-      if (cd.nulls != null && cd.nulls.exists(identity)) Plain
+      if (cd.nulls != null && anyNull(cd.nulls)) Plain
       else c.pages.headOption.map(_.encoding).getOrElse(Plain)
     }
+
+  private def anyNull(nulls: Array[Boolean]): Boolean = {
+    var r = 0
+    while (r < nulls.length) { if (nulls(r)) return true; r += 1 }
+    false
+  }
 }

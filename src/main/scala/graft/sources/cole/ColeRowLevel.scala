@@ -49,7 +49,7 @@ import graft.sources.cole.ColeFormat._
   */
 class ColeRowLevelOperation(cmd: RowLevelOperation.Command,
     private[cole] val path: String, private[cole] val partCols: Seq[String],
-    rowGroupSize: Int, private[cole] val conf: Configuration,
+    private[cole] val rowGroupSize: Int, private[cole] val conf: Configuration,
     /** Write-audit-publish routing (r15): with the session's
       * `graft.cole.write.branch` conf set, row-level DML reads the
       * BRANCH state (fork snapshot minus masks, plus staged files) and

@@ -90,13 +90,8 @@ object ColeTemporal {
   private def writeSpecs(table: String, conf: Configuration,
       specs: Seq[Spec]): Unit = {
     val (fs, p) = ColeIO.resolve(s"$table/$SpecFile", conf)
-    val tmp = new org.apache.hadoop.fs.Path(table,
-      s".$SpecFile.tmp-${java.lang.Long.toHexString(System.nanoTime())}")
-    val out = fs.create(tmp, true)
-    try out.write(("1\n" + specs.map(s => s"${s.fn}:${s.src}\n").mkString)
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    ColeIO.replaceFile(fs, tmp, p, s"temporal spec write at $table")
+    ColeIO.writeReplacing(fs, p, ("1\n" + specs.map(s => s"${s.fn}:${s.src}\n").mkString)
+      .getBytes(StandardCharsets.UTF_8), s"temporal spec write at $table")
   }
 
   /** The ACTIVE transform (writers route by it). */

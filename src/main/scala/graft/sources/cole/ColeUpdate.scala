@@ -1,7 +1,7 @@
 package graft.sources.cole
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeSet, BindReferences, Expression, GenericInternalRow, If, LeafExpression, Literal, SubqueryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeSet, BindReferences, Expression, GenericInternalRow, If, JoinedRow, LeafExpression, Literal, SubqueryExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenFallback}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, RepartitionOperation, ReplaceData, Sort}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -46,37 +46,19 @@ object ColeUpdate {
 
   /** The native exec for `rd`, or None to keep Spark's ReplaceData. */
   def plan(rd: ReplaceData, op: ColeRowLevelOperation): Option[ColeUpdateExec] = {
-    if (op.command() != RowLevelOperation.Command.UPDATE || op.branch.isDefined ||
-        ColeDv.vectorMode(op.path, op.conf)) return None
-    val (attrs, table) = rd.originalTable match {
-      case r: DataSourceV2Relation => r.table match {
-        case t: ColeTable => (r.output, t)
-        case _ => return None
-      }
+    val (attrs, table) = ColeNativeDml.relation(rd, op, RowLevelOperation.Command.UPDATE)
+      .getOrElse(return None)
+    val projected = (ColeNativeDml.unwrap(rd.query) match {
+      case p: Project => p
       case _ => return None
-    }
-    // the write's required distribution and ordering (bucketed and
-    // temporal layouts) wrap the rewrite projection
-    def projection(q: LogicalPlan): Option[Project] = q match {
-      case p: Project => Some(p)
-      case s: Sort => projection(s.child)
-      case r: RepartitionOperation => projection(r.child)
-      case _ => None
-    }
-    val projected = projection(rd.query).getOrElse(return None)
-      .projectList.map(e => e.name -> e).toMap
+    }).projectList.map(e => e.name -> e).toMap
     val cond = rd.condition
     val always = cond == Literal.TrueLiteral
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(a, b) => conjuncts(a) ++ conjuncts(b)
-      case other => Seq(other)
-    }
     val filters: Array[Filter] =
       if (always) Array.empty
-      else conjuncts(cond).map(c =>
+      else ColeNativeDml.conjuncts(cond).map(c =>
         org.apache.spark.sql.GraftBridge.translateFilter(c).getOrElse(return None))
         .toArray
-    if (!table.rewritesNatively(filters)) return None
     // Spark projects every column as `if (cond) assigned else column`;
     // the optimizer folds an unassigned (or self-assigned) one to the
     // column itself and an always-true condition to the bare value
@@ -93,62 +75,136 @@ object ColeUpdate {
         case _ => return None
       }
     }
-    val columns = AttributeSet(attrs)
-    if (!assigned.forall { case (_, e) => e.deterministic &&
-        !SubqueryExpression.hasSubquery(e) && e.references.subsetOf(columns) })
+    if (!assigned.forall { case (_, e) => ColeNativeDml.pure(e, AttributeSet(attrs)) } ||
+        !ColeNativeDml.fits(table, attrs, op, filters, assigned.map(_._1)))
       return None
+    Some(ColeUpdateExec(op.path, op.partCols, filters, attrs, assigned))
+  }
+}
+
+/** What the native UPDATE and MERGE share: the table a statement rewrites
+  * in place, and the checks that it can.
+  */
+private[cole] object ColeNativeDml {
+
+  /** The COLE table behind `rd` and its columns, when `rd` is a
+    * copy-on-write `command` on main.
+    */
+  def relation(rd: ReplaceData, op: ColeRowLevelOperation,
+      command: RowLevelOperation.Command): Option[(Seq[Attribute], ColeTable)] =
+    if (op.command() != command || op.branch.isDefined ||
+        ColeDv.vectorMode(op.path, op.conf)) None
+    else rd.originalTable match {
+      case r: DataSourceV2Relation => r.table match {
+        case t: ColeTable => Some((r.output, t))
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** The rewrite's query without the write's required distribution and
+    * ordering (bucketed and temporal layouts wrap it).
+    */
+  def unwrap(q: LogicalPlan): LogicalPlan = q match {
+    case s: Sort => unwrap(s.child)
+    case r: RepartitionOperation => unwrap(r.child)
+    case other => other
+  }
+
+  def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(a, b) => conjuncts(a) ++ conjuncts(b)
+    case other => Seq(other)
+  }
+
+  /** Deterministic, subquery-free and reading only `columns`. */
+  def pure(e: Expression, columns: AttributeSet): Boolean =
+    e.deterministic && !SubqueryExpression.hasSubquery(e) && e.references.subsetOf(columns)
+
+  /** Whether [[ColeRewrite]] can run a statement that classifies files by
+    * `filters` and writes `assigned` in place:
+    *   - the filters convert to [[ColePredicate]]s under the rules of
+    *     [[ColeTable.rewritesNatively]] (not a clone, no renamed or
+    *     lane-mixed predicate column);
+    *   - no assigned column is a partition, bucket, bucket-derivation or
+    *     temporal key (those rows would move between files);
+    *   - every column has a COLE lane, and every live file stores it in
+    *     that lane or serves it from its directory (no renamed, widened,
+    *     lane-mixed or missing column, and no partition layout
+    *     mid-evolution: a rewritten file keeps its directory, while
+    *     ReplaceData's replacements adopt the active spec).
+    */
+  def fits(table: ColeTable, attrs: Seq[Attribute], op: ColeRowLevelOperation,
+      filters: Array[Filter], assigned: Seq[Attribute]): Boolean = {
     val path = op.path
     val conf = op.conf
-    val keys: Set[String] = op.partCols.toSet ++
+    lazy val keys: Set[String] = op.partCols.toSet ++
       ColePartEvolve.evolvedCols(path, conf) ++
       ColeBucket.readHistory(path, conf).flatMap(era =>
         era.cols ++ era.derive.toSeq.flatMap { case (s, cs) => s +: cs }) ++
       ColeBucket.readDerivation(path, conf).toSeq.flatMap { case (s, cs) => s +: cs } ++
       ColeTemporal.readSpecs(path, conf).map(_.src)
-    if (assigned.exists { case (a, _) => keys.contains(a.name) }) return None
-    val lanes = try ColeUtil.toColeColumns(DataTypeUtils.fromAttributes(attrs))
-      catch { case _: IllegalArgumentException => return None }
-    // a rewritten file keeps its directory, so a layout mid-evolution
-    // (a column directory-served by some files only) takes ReplaceData,
-    // whose replacements adopt the active spec
-    val infos = ColeMetaCache.infos(path, conf)
-    val servesAll = infos.forall { i =>
-      i.renamed.isEmpty && attrs.zip(lanes).forall { case (a, c) =>
+    lazy val lanes = try Some(ColeUtil.toColeColumns(DataTypeUtils.fromAttributes(attrs)))
+      catch { case _: IllegalArgumentException => None }
+    lazy val infos = ColeMetaCache.infos(path, conf)
+    lazy val servesAll = lanes.exists(ls => infos.forall { i =>
+      i.renamed.isEmpty && attrs.zip(ls).forall { case (a, c) =>
         i.partValues.exists(_._1 == a.name) ||
           i.meta.columns.exists(m => m.name == a.name && m.colType == c.colType)
       }
-    }
-    if (!servesAll || ColePartEvolve.dualCols(infos).nonEmpty) return None
-    Some(ColeUpdateExec(path, op.partCols, filters, attrs, assigned))
+    })
+    table.rewritesNatively(filters) && !assigned.exists(a => keys.contains(a.name)) &&
+      servesAll && ColePartEvolve.dualCols(infos).isEmpty
   }
 }
 
-/** Physical UPDATE on the [[ColeRewrite]] engine, planned by
-  * [[ColeDmlRetryStrategy]] as the child of [[ColeDmlRetryExec]], which
-  * calls [[update]] once per attempt: each attempt re-classifies from a
-  * fresh listing. Reports its work through SQL metrics.
+/** A row-level statement the connector runs itself on [[ColeRewrite]]
+  * instead of Spark's ReplaceData, planned by [[ColeDmlRetryStrategy]] as
+  * the child of [[ColeDmlRetryExec]], which calls [[attempt]] once per try:
+  * each try re-classifies from a fresh listing. Reports its work through
+  * SQL metrics.
   */
-case class ColeUpdateExec(path: String, partCols: Seq[String],
-    filters: Array[Filter], attrs: Seq[Attribute],
-    assignments: Seq[(Attribute, Expression)]) extends LeafV2CommandExec {
+trait ColeNativeDmlExec extends LeafV2CommandExec {
+
+  /** One try of the statement. */
+  def attempt(): ColeRewrite.Stats
 
   override def output: Seq[Attribute] = Nil
 
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "filesRewritten" -> SQLMetrics.createMetric(sparkContext, "files rewritten"),
-    "filesUntouched" -> SQLMetrics.createMetric(sparkContext, "files untouched"),
-    "rowGroupsSpliced" -> SQLMetrics.createMetric(sparkContext, "row groups spliced"),
-    "rowsUpdated" -> SQLMetrics.createMetric(sparkContext, "rows updated"))
+  override protected def run(): Seq[InternalRow] = { attempt(); Nil }
+
+  /** The statement's SQL metrics: the rewrite's, plus `extra` (name →
+    * description).
+    */
+  protected def rewriteMetrics(extra: (String, String)*): Map[String, SQLMetric] =
+    (Seq("filesRewritten" -> "files rewritten", "filesUntouched" -> "files untouched",
+      "rowGroupsSpliced" -> "row groups spliced", "rowsUpdated" -> "rows updated") ++ extra)
+      .map { case (k, d) => k -> SQLMetrics.createMetric(sparkContext, d) }.toMap
+
+  /** Publishes what one try did. */
+  protected def report(st: ColeRewrite.Stats): Unit = {
+    metrics("filesRewritten").set(st.filesRewritten.toLong)
+    metrics("filesUntouched").set(st.filesUntouched.toLong)
+    metrics("rowGroupsSpliced").set(st.rowGroupsSpliced)
+    metrics("rowsUpdated").set(st.rowsMatched)
+    metrics.get("rowsInserted").foreach(_.set(st.rowsInserted))
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+  }
+}
+
+/** Physical UPDATE on the [[ColeRewrite]] engine. */
+case class ColeUpdateExec(path: String, partCols: Seq[String],
+    filters: Array[Filter], attrs: Seq[Attribute],
+    assignments: Seq[(Attribute, Expression)]) extends ColeNativeDmlExec {
+
+  override lazy val metrics: Map[String, SQLMetric] = rewriteMetrics()
 
   override def simpleString(maxFields: Int): String =
     s"ColeUpdate $path SET " +
       assignments.map { case (a, e) => s"${a.name} = ${e.sql}" }.mkString(", ") +
       s" WHERE [${filters.mkString(", ")}]"
 
-  override protected def run(): Seq[InternalRow] = { update(); Nil }
-
-  /** One attempt of the statement. */
-  def update(): ColeRewrite.Stats = {
+  override def attempt(): ColeRewrite.Stats = {
     val conf = ColeIO.driverConf()
     val plan = ColeRewrite.classify(path, filters.flatMap(ColePredicate.fromFilter),
       partCols, conf)
@@ -157,22 +213,26 @@ case class ColeUpdateExec(path: String, partCols: Seq[String],
       else {
         val schema = DataTypeUtils.fromAttributes(attrs)
         ColeRewrite.rewrite(session, path, plan, conf, ColeUpdatePatch(schema,
-          assignments.map { case (a, e) =>
-            (attrs.indexWhere(_.exprId == a.exprId),
-              ColeParam.lift(BindReferences.bindReference(e, attrs)))
-          }.toArray,
+          ColeUpdatePatch.bind(assignments, attrs),
           // CHECK constraints hold for the updated rows, with the message
           // the ReplaceData rewrite gives
           ColeChecks.forWrite(path, conf, schema)))
       }
-    metrics("filesRewritten").set(st.filesRewritten.toLong)
-    metrics("filesUntouched").set(st.filesUntouched.toLong)
-    metrics("rowGroupsSpliced").set(st.rowGroupsSpliced)
-    metrics("rowsUpdated").set(st.rowsMatched)
-    SQLMetrics.postDriverMetricUpdates(sparkContext,
-      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+    report(st)
     st
   }
+}
+
+object ColeUpdatePatch {
+  /** Assignments by table ordinal, bound to the table row followed by the
+    * fields of `after` (a MERGE's source row).
+    */
+  def bind(assignments: Seq[(Attribute, Expression)], attrs: Seq[Attribute],
+      after: Seq[Attribute] = Nil): Array[(Int, Expression)] =
+    assignments.map { case (a, e) =>
+      (attrs.indexWhere(_.exprId == a.exprId),
+        ColeParam.lift(BindReferences.bindReference(e, attrs ++ after)))
+    }.toArray
 }
 
 /** A constant the compiled projection reads from its references instead
@@ -194,16 +254,22 @@ private[cole] object ColeParam {
   }
 }
 
-/** The UPDATE transform: per row group, the assignments evaluate over
-  * the selected rows through zero-copy lane views; a lane whose values
-  * change is copied and patched, every other lane stays the reader's.
-  * Doubles compare by `doubleToLongBits`, as [[ColeRowHash]] does.
+/** The UPDATE and MERGE transform: per row group, the assignments
+  * evaluate over the selected rows through zero-copy lane views; a lane
+  * whose values change is copied and patched, every other lane stays the
+  * reader's. Doubles compare by `doubleToLongBits`, as [[ColeRowHash]]
+  * does. A MERGE patches only the rows whose key its `source` holds, each
+  * with its source row joined after the table row.
   *
-  * @param assigns table ordinal → assignment bound to the table row
+  * @param assigns table ordinal → assignment bound to the table row (and
+  *                the source row, for a MERGE)
   */
 final case class ColeUpdatePatch(schema: StructType,
-    assigns: Array[(Int, Expression)], checks: Array[CompiledCheck])
+    assigns: Array[(Int, Expression)], checks: Array[CompiledCheck],
+    source: ColeMergeSource = null)
     extends ColeRewrite.PatchRows {
+
+  override def op: String = if (source == null) "update" else "merge"
 
   override def forFile(meta: FileMeta, partValues: Seq[(String, String)])
       : ColeRewrite.RowGroupPatch = new ColeRewrite.RowGroupPatch {
@@ -214,7 +280,7 @@ final case class ColeUpdatePatch(schema: StructType,
       if (checks.nonEmpty) schema.indices.toSet
       else assigns.flatMap(_._2.collect {
         case b: org.apache.spark.sql.catalyst.expressions.BoundReference => b.ordinal
-      }).toSet
+      }).toSet ++ Option(source).toSeq.flatMap(_.keys)
     private val constants: Array[ColumnVector] = Array.tabulate(schema.length) { i =>
       val f = schema.fields(i)
       if (src(i) >= 0 && referenced(i)) null
@@ -233,6 +299,14 @@ final case class ColeUpdatePatch(schema: StructType,
     private val proj = UnsafeProjection.create(assigns.map(_._2).toSeq)
     private val types: Array[ColeType] = assigns.map { case (i, _) =>
       meta.columns(src(i)).colType }
+    private val keyTypes: Array[DataType] =
+      if (source == null) null else source.keys.map(schema.fields(_).dataType)
+    private val joined = new JoinedRow
+    private val hits = new java.util.BitSet
+    private var matched = 0L
+
+    override def rowsMatched: Long = if (source == null) -1L else matched
+    override def sourceMatched: Array[Int] = hits.stream().toArray
 
     override def apply(reader: ColeFileReader, rgIdx: Int,
         sel: Array[Int]): Map[Int, ColumnData] = {
@@ -245,11 +319,10 @@ final case class ColeUpdatePatch(schema: StructType,
       val originals = assigns.map { case (i, _) => reader.readChunk(rgIdx, src(i)) }
       val patched = new Array[ColumnData](assigns.length)
       val post = if (checks.isEmpty) null else new GenericInternalRow(schema.length)
-      var j = 0
-      while (j < sel.length) {
-        val in = batch.getRow(j)
-        val out = proj(in)
-        val r = sel(j)
+      // the assignments over row `r` of the group, read through `in`
+      // (`row` joins a MERGE's source row after it)
+      def patchRow(in: InternalRow, row: InternalRow, r: Int): Unit = {
+        val out = proj(row)
         var k = 0
         while (k < assigns.length) {
           val orig = originals(k)
@@ -271,6 +344,19 @@ final case class ColeUpdatePatch(schema: StructType,
             k += 1
           }
           checks.foreach(_.validate(post, schema))
+        }
+      }
+      var j = 0
+      while (j < sel.length) {
+        val in = batch.getRow(j)
+        if (source == null) patchRow(in, in, sel(j))
+        else {
+          val s = source.probe(in, keyTypes)
+          if (s >= 0) {
+            hits.set(s)
+            matched += 1
+            patchRow(in, joined(in, source.rows(s)), sel(j))
+          }
         }
         j += 1
       }

@@ -23,4 +23,8 @@ object GraftBridge {
   def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
     execution.datasources.DataSourceStrategy.translateFilter(e,
       supportNestedPredicatePushdown = true)
+
+  /** The error a MERGE raises when two source rows match one target row. */
+  def mergeCardinalityViolation(): Throwable =
+    errors.QueryExecutionErrors.mergeCardinalityViolationError()
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Compaction vs concurrent row-level DML (r12): the rewrite claims its
@@ -15,10 +16,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * wait, rejects loudly with the table untouched; re-run after the
   * compact it applies cleanly.
   */
-class ColeCompactDmlRaceSpec extends AnyFunSuite {
+class ColeCompactDmlRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val warehouse =
     Files.createTempDirectory("cole_cmprace_wh").toString
+
+  private var savedWait: Option[Option[String]] = None
+
+  override def afterAll(): Unit = {
+    savedWait.foreach { w =>
+      val hc = spark.sparkContext.hadoopConfiguration
+      w.fold(hc.unset(ColeClaims.WaitKey))(hc.set(ColeClaims.WaitKey, _))
+    }
+    super.afterAll()
+  }
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -27,8 +38,11 @@ class ColeCompactDmlRaceSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    // bounded claim wait so the in-window DML attempt rejects in ms
-    s.sparkContext.hadoopConfiguration.setLong(ColeClaims.WaitKey, 400L)
+    // bounded claim wait so the in-window DML attempt rejects in ms; the
+    // context is shared with later suites, so afterAll restores it
+    val hc = s.sparkContext.hadoopConfiguration
+    savedWait = Some(Option(hc.get(ColeClaims.WaitKey)))
+    hc.setLong(ColeClaims.WaitKey, 400L)
     s.conf.set("spark.sql.catalog.cr", "graft.sources.cole.ColeCatalog")
     s.conf.set("spark.sql.catalog.cr.warehouse", warehouse)
     s

@@ -220,4 +220,41 @@ class ColeCompactSpec extends AnyFunSuite {
     val got = spark.read.format("cole").load(dir).count()
     assert(got === li.count())
   }
+
+  test("a swap manifest is never readable half-written") {
+    val dir = new org.apache.hadoop.fs.Path(
+      Files.createTempDirectory("cole_manifest_atomic").toString)
+    val fs = dir.getFileSystem(ColeIO.driverConf())
+    val lines = (0 until 50).map(i => s"old:part-$i.col") :+ "new:compact-x-0.col"
+    // one swap after another writes its manifest and removes it; a
+    // concurrent recover() reading meanwhile must see all of one or none
+    val writer = new Thread(() => (0 until 100).foreach { _ =>
+      ColeCompact.writeManifest(fs, dir, lines)
+      fs.delete(ColeCompact.manifestPath(dir), false)
+    })
+    writer.start()
+    val seen = scala.collection.mutable.Set.empty[Int]
+    while (writer.isAlive) ColeCompact.manifestLines(fs, dir).foreach(ls => seen += ls.size)
+    writer.join()
+    assert(seen.subsetOf(Set(lines.size)), s"torn manifest reads: line counts $seen")
+    assert(fs.listStatus(dir).map(_.getPath.getName).filter(_.endsWith(".tmp")).isEmpty)
+  }
+
+  test("a sidecar publishes through a non-local filesystem's rename") {
+    // the branch of ColeIO.writeReplacing that HDFS and object stores
+    // take, driven over local files by a wrapper reporting another scheme
+    val dir = Files.createTempDirectory("cole_publish_fs").toString
+    val conf = ColeIO.driverConf()
+    val wrapped = new org.apache.hadoop.fs.FilterFileSystem(
+        org.apache.hadoop.fs.FileSystem.getLocal(conf)) {
+      override def getUri: java.net.URI = java.net.URI.create("colewrap:///")
+    }
+    wrapped.setConf(conf)
+    val dst = new org.apache.hadoop.fs.Path(dir, "spec")
+    Seq("first", "second").foreach(v =>
+      ColeIO.writeReplacing(wrapped, dst, v.getBytes("UTF-8"), "spec"))
+    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(dir, "spec")), "UTF-8") ===
+      "second")
+    assert(new java.io.File(dir).list().filter(_.endsWith(".tmp")).isEmpty)
+  }
 }

@@ -167,18 +167,78 @@ class ColeUpdateNativeSpec extends AnyFunSuite {
     assert(fileBytes(t) === same)
   }
 
+  test("a file above the split size rewrites as one task and one file per run of row groups") {
+    val t = dir("split")
+    plain(t)
+    val before = fileBytes(t)
+    // a 1-byte split size: every candidate splits, one run per row group
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    try {
+      val sc = spark.sparkContext
+      sc.setJobGroup("upn-split", "split update")
+      val p = try run("UPDATE upn.db.split SET v = v + 1, tag = 'U' " +
+        "WHERE id >= 450 AND id < 520")
+      finally sc.clearJobGroup()
+      val u = native(p).getOrElse(fail(s"expected the native path:\n$p"))
+      val jobs = sc.statusTracker.getJobIdsForGroup("upn-split")
+      assert(jobs.length === 1)
+      assert(sc.statusTracker.getJobInfo(jobs.head).get.stageIds.toSeq
+        .flatMap(sc.statusTracker.getStageInfo(_)).map(_.numTasks).sum === 4)
+      def m(k: String) = u.metrics(k).value
+      assert(m("filesRewritten") === 1L)
+      assert(m("rowsUpdated") === 70L)
+      assert(m("rowGroupsSpliced") === 2L)
+      // file 1 is now four files; files 0 and 2 are byte-identical
+      val after = fileBytes(t)
+      assert(after.size === 6)
+      assert((before.keySet intersect after.keySet).size === 2)
+      (before.keySet intersect after.keySet).foreach(f => assert(before(f) === after(f)))
+      // an UPDATE that changes nothing keeps the file it split (id 805
+      // of file 2 already has tag t0), and drops the runs it wrote
+      val p2 = run("UPDATE upn.db.split SET tag = 't0' WHERE id = 805")
+      assert(native(p2).get.metrics("filesRewritten").value === 0L)
+      assert(fileBytes(t) === after)
+      assert(!new java.io.File(t).listFiles().exists(f =>
+        f.isDirectory && f.getName.startsWith(".update-")))
+      // a DELETE splits file 0 as well
+      spark.sql("DELETE FROM upn.db.split WHERE id < 50")
+      assert(fileBytes(t).size === 9)
+    } finally {
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+    }
+    val got = spark.table("upn.db.split")
+    assert(got.count() === 1150L)
+    assert(got.filter(col("tag") === "U").count() === 70L)
+    assert(got.filter(col("id") === 460L).select("v").head().getLong(0) === 4601L)
+    assert(got.filter(col("id") === 520L).select("v").head().getLong(0) === 5200L)
+    assert(got.agg(sum("v")).head().getLong(0) ===
+      (50L until 1200L).map(_ * 10L).sum + 70L)
+  }
+
   test("repeated native rewrites keep file names bounded") {
     val t = dir("names")
     plain(t)
+    val s = spark
+    import s.implicits._
+    // the MERGE also reaches ids 150 and 350, in other row groups of the
+    // first file, so that file is rewritten every round
+    ((0L until 10L) ++ Seq(150L, 350L)).map(i => (i, 1L)).toDF("id", "d")
+      .createOrReplaceTempView("names_src")
     (1 to 30).foreach { i =>
       spark.sql(s"UPDATE upn.db.names SET v = v + 1 WHERE id < 10")
       spark.sql(s"DELETE FROM upn.db.names WHERE id = ${1199 - i}")
+      spark.sql("MERGE INTO upn.db.names t USING names_src s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET v = t.v + s.d")
     }
     val names = ColeIO.listPartitioned(t, conf).map(_._1.getPath.getName)
     assert(names.forall(_.length < 80), names.toString)
     assert(spark.table("upn.db.names").filter(col("id") < 10)
       .select("v").collect().map(_.getLong(0)).toSet ===
-      (0 until 10).map(_ * 10L + 30).toSet)
+      (0 until 10).map(_ * 10L + 60).toSet)
+    assert(spark.table("upn.db.names").filter(col("id").isin(150L, 350L))
+      .select("v").collect().map(_.getLong(0)).toSet === Set(1530L, 3530L))
     assert(spark.table("upn.db.names").count() === 1170L)
   }
 
