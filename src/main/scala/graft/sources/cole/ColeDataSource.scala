@@ -500,7 +500,7 @@ class ColeTable(schema: StructType, writePartCols: Seq[String],
     // and idempotent on a partially-swapped state — the auto-retry heals
     // a concurrent-write abort instead of surfacing the manual re-run
     val conf = ColeIO.driverConf()
-    ColeDmlRetry.withRetries(conf, "delete") {
+    ColeDmlRetry.withRetries(conf) { _ =>
       ColeDelete.deleteWhere(org.apache.spark.sql.SparkSession.active,
         props("path"), filters, writePartCols, conf)
     }
@@ -3863,7 +3863,7 @@ class ColeMicroBatchStream(scan: ColeScan, path: String, conf: Configuration,
   private val fs = logDir.getFileSystem(conf)
   private val (tableFs, tablePath) = ColeIO.resolve(path, conf)
   private val manifestDir = new HPath(tablePath, ColeStreamingWrite.ManifestDirName)
-  private val compDir = new HPath(ColeCompact.recordsDir(tablePath.toString))
+  private val compDir = new HPath(ColeSwap.recordsDir(tablePath.toString))
 
   /** Files already logged, rebuilt from the log once per stream. */
   private val seen = scala.collection.mutable.HashSet[String]()
@@ -3954,10 +3954,10 @@ class ColeMicroBatchStream(scan: ColeScan, path: String, conf: Configuration,
     * never lists them; full listings dedup via the set). Until then the
     * inputs stay admissible: the record-before-rename window and a
     * crashed-then-rolled-back swap both leave the inputs as the only
-    * live copy. A record whose swap provably rolled back (its
-    * `.compact-manifest` is gone — recover() deletes it last — yet the
-    * outputs never arrived) is dropped for good, so its phantom outputs
-    * can never occupy admission slots.
+    * live copy. A record whose swap provably rolled back (no swap
+    * manifest left where its group lives — recover() deletes it last —
+    * yet the outputs never arrived) is dropped for good, so its phantom
+    * outputs can never occupy admission slots.
     */
   private def resolvePendingSwaps(): Unit = {
     val resolved = pendingSwaps.iterator.flatMap { case (name, (outs, ins)) =>
@@ -3966,8 +3966,7 @@ class ColeMicroBatchStream(scan: ColeScan, path: String, conf: Configuration,
         carry --= ins
         carry ++= outs
         Some(name)
-      } else if (!tableFs.exists(
-          ColeCompact.manifestPath(new HPath(outs.head).getParent))) {
+      } else if (!ColeSwap.inFlight(tableFs, tablePath, outs)) {
         // no manifest, outputs missing: the swap rolled back (or its
         // outputs were already consumed by a LATER swap, whose own
         // record serves the rows) — the inputs stay admissible

@@ -109,15 +109,15 @@ object ColeDmlRetry {
     false
   }
 
-  /** Connector-internal retry for self-contained operations (the
-    * condition-driven DELETE paths): `body` must re-plan from scratch on
+  /** The bounded conflict loop of every row-level statement: `body`,
+    * given the attempt index (0 first), must re-plan from scratch on
     * every invocation and be idempotent on a partially-applied state.
     */
-  def withRetries[T](conf: Configuration, what: String)(body: => T): T = {
+  def withRetries[T](conf: Configuration)(body: Int => T): T = {
     val max = conf.getInt(MaxRetriesKey, DefaultMaxRetries)
     var attempt = 0
     while (true) {
-      try return body
+      try return body(attempt)
       catch {
         case e: Throwable if isConflict(e) && attempt < max =>
           attempt += 1
@@ -173,30 +173,19 @@ case class ColeDmlRetryExec(logical: LogicalPlan, op: ColeRowLevelOperation,
   override def run(): Seq[InternalRow] = {
     ColeDmlRetry.executions.incrementAndGet()
     val sess = session
-    val max = sess.sessionState.newHadoopConf()
-      .getInt(ColeDmlRetry.MaxRetriesKey, ColeDmlRetry.DefaultMaxRetries)
-    var attempt = 0
-    while (true) {
-      try {
-        child match {
-          case native: ColeNativeDmlExec => native.attempt()
-          case _ if attempt == 0 => child.executeCollect()
-          case _ => ColeDmlRetry.suppressed {
-            // commandExecuted forces the command eagerly through the
-            // standard path: fresh optimization, fresh physical plan,
-            // fresh scan listing — a true re-plan, not a job re-run
-            sess.sessionState.executePlan(logical).commandExecuted
-          }
+    ColeDmlRetry.withRetries(sess.sessionState.newHadoopConf()) { attempt =>
+      // the failed attempt's scan fingerprints must not feed the
+      // re-execution's no-op rewrite detection
+      if (attempt > 0) Option(op.scanAcc).foreach(_.reset())
+      child match {
+        case native: ColeNativeDmlExec => native.attempt()
+        case _ if attempt == 0 => child.executeCollect()
+        case _ => ColeDmlRetry.suppressed {
+          // commandExecuted forces the command eagerly through the
+          // standard path: fresh optimization, fresh physical plan,
+          // fresh scan listing — a true re-plan, not a job re-run
+          sess.sessionState.executePlan(logical).commandExecuted
         }
-        return Nil
-      } catch {
-        case e: Throwable if ColeDmlRetry.isConflict(e) && attempt < max =>
-          attempt += 1
-          ColeDmlRetry.retries.incrementAndGet()
-          // the failed attempt's scan fingerprints must not feed the
-          // re-execution's no-op rewrite detection
-          Option(op.scanAcc).foreach(_.reset())
-          Thread.sleep(25L * attempt)
       }
     }
     Nil

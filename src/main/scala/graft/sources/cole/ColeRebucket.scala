@@ -28,12 +28,12 @@ import org.apache.spark.sql.SparkSession
   * (run compact first to materialize them; a leaf-dir read would
   * otherwise resurrect their deleted rows).
   *
-  * Crash safety — the compaction swap discipline, with the manifest at
-  * the TABLE ROOT because outputs land across directories: scratch
-  * write (dotted, invisible) → row-count verify from footers → manifest
-  * (old + new, table-relative) → compaction record (tailing streams
-  * skip the rewritten rows) → rename outputs in → delete/retire olds →
-  * drop manifest. A crash at any point resolves at the next rebucket /
+  * Crash safety — the [[ColeSwap]], with the manifest at the TABLE ROOT
+  * because outputs land across directories: scratch write (dotted,
+  * invisible) → row-count verify from footers → manifest (old + new,
+  * table-relative) → compaction record (tailing streams skip the
+  * rewritten rows) → rename outputs in → delete/retire olds → drop
+  * manifest. A crash at any point resolves at the next rebucket /
   * recover(root): forward when every output landed, backward otherwise.
   * The whole read→swap window holds per-file claims on the inputs
   * (heartbeated), so concurrent DML parks and never interleaves.
@@ -59,8 +59,9 @@ object ColeRebucket {
     val history = ColeBucket.readHistory(table, conf)
     require(history.nonEmpty, s"$table has no bucket layout to rebucket")
     val activeKey = history.last.dirKey
-    // resolve a prior interrupted rebucket before trusting the listing
-    ColeCompact.recover(fs, root, table, conf)
+    // resolve a prior interrupted swap before trusting the listing
+    ColeSwap.recoverTable(fs, table, conf,
+      ColeIO.listPartitioned(table, conf).map(_._1.getPath.getParent).distinct)
     val infos = ColeMetaCache.infos(table, conf)
     val old = infos.filterNot(_.partValues.toMap.contains(activeKey))
     val kept = infos.size - old.size
@@ -71,20 +72,14 @@ object ColeRebucket {
           "<catalog>.system.compact first to materialize vectors, then " +
           "rebucket")
     }
-    val claims = ColeClaims.acquire(fs, conf, table,
-      ColeCompact.manifestClaim(fs, table, root) +:
-        old.map(i => ColeVersions.relOf(fs, table, i.path)), "rebucket")
+    val removed = old.map(i => (i.path, i.len, i.mtime))
+    val claimed = ColeSwap.claim(fs, conf, table, "rebucket", old.map(_.path), Seq(root))
     try {
-      def drifted = old.exists { i =>
-        try {
-          val st = fs.getFileStatus(new HPath(i.path))
-          st.getLen != i.len || st.getModificationTime != i.mtime
-        } catch { case _: java.io.FileNotFoundException => true }
-      }
-      if (drifted) return Stats(0, kept, 0, 0L) // next run picks it up
+      // drifted inputs: the next run picks them up
+      if (ColeSwap.drifted(fs, removed).isDefined) return Stats(0, kept, 0, 0L)
       afterClaimsHook.get().run()
-      val stamp = java.lang.Long.toHexString(System.nanoTime())
-      val scratch = new HPath(root, s".rebucket-$stamp")
+      val stamp = ColeSwap.newStamp()
+      val scratch = new HPath(root, ColeSwap.scratchName("rebucket", stamp))
       fs.mkdirs(scratch)
       // the scratch directory IS a cole table with the evolved layout:
       // copying the sidecars makes the ordinary writer route, derive,
@@ -154,58 +149,28 @@ object ColeRebucket {
           s"rebucket of $table would change the row count " +
             s"($oldRows -> $newRows); aborted with the table untouched")
       }
-      val scratchQ = fs.makeQualified(scratch).toString
-      def relUnderScratch(p: HPath): String = {
-        val q = fs.makeQualified(p).toString
-        require(q.startsWith(scratchQ + "/"), s"$p not under $scratch")
-        q.substring(scratchQ.length + 1)
-      }
       // final names carry the stamp so a later rebucket can never mint a
-      // colliding name; target relative path = scratch-relative path
-      // with the file name prefixed
-      val finalRels = outs.map { p =>
-        val rel = relUnderScratch(p)
-        val slash = rel.lastIndexOf('/')
-        if (slash < 0) s"rebucket-$stamp-$rel"
-        else rel.substring(0, slash + 1) + s"rebucket-$stamp-" +
-          rel.substring(slash + 1)
+      // colliding name; the directory is the scratch-relative one
+      val scratchQ = fs.makeQualified(scratch).toString
+      val finals = outs.map { p =>
+        val rel = fs.makeQualified(p.getParent).toString.stripPrefix(scratchQ).stripPrefix("/")
+        new HPath(if (rel.isEmpty) root else new HPath(root, rel), s"rebucket-$stamp-${p.getName}")
       }
       // belt under the claim heartbeat (same discipline as ColeCompact):
       // the rewrite window is data-proportional — re-stat the inputs
       // IMMEDIATELY before the swap intent commits and abort on drift,
       // so even a wrongly broken claim can never let the swap resurrect
       // a concurrent DML's rows
-      if (drifted) {
+      if (ColeSwap.drifted(fs, removed).isDefined) {
         fs.delete(scratch, true)
         return Stats(0, kept, 0, 0L)
       }
-      val oldRels = old.map(i => ColeVersions.relOf(fs, table, i.path))
-      // swap intent at the TABLE ROOT (outputs span directories; the
-      // relative paths resolve under it), resolved by recover(root)
-      ColeCompact.writeManifest(fs, root,
-        oldRels.map("old:" + _) ++ finalRels.map("new:" + _))
-      ColeCompact.writeCompactionRecord(fs, table, s"rebucket-$stamp",
-        finalRels.map(r => fs.makeQualified(new HPath(root, r)).toString),
-        old.map(i => fs.makeQualified(new HPath(i.path)).toString))
-      outs.zip(finalRels).foreach { case (src, rel) =>
-        val dst = new HPath(root, rel)
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(src, dst), s"rebucket rename failed: $src")
-      }
-      val indexedCols = old.flatMap(i =>
-        ColeBloomIndex.indexedColumns(i.path, conf)).distinct
-      val versioned = ColeVersions.enabled(table, conf)
-      val verRemoves = old.flatMap { i =>
-        fs.delete(new HPath(ColeBloomIndex.sidecarPath(i.path)), false)
-        ColeVersions.retireOrDelete(fs, table, i.path, stamp, versioned)
-      }
-      fs.delete(scratch, true)
-      fs.delete(ColeCompact.manifestPath(root), false)
-      ColeVersions.commitIfEnabled(table, conf, "rebucket",
-        finalRels, verRemoves)
-      if (indexedCols.nonEmpty)
-        ColeBloomIndex.build(table, indexedCols, conf)
+      finals.map(_.getParent).distinct.foreach(fs.mkdirs)
+      // one manifest at the TABLE ROOT: outputs land across directories
+      ColeSwap.commit(fs, table, conf, "rebucket", stamp, claimed,
+        Seq(ColeSwap.Group(root, old.map(_.path),
+          outs.map(_.toString).zip(finals.map(_.toString)))))(Nil)
       Stats(old.size, kept, outs.size, newRows)
-    } finally claims.release()
+    } finally claimed.release()
   }
 }

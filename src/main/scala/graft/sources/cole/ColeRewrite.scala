@@ -35,14 +35,14 @@ import graft.sources.cole.ColeFormat._
   * Rows never leave their file's directory and keep their order, so
   * partition, bucket and sort layouts hold.
   *
-  * Transaction: the ColeCompact two-phase swap. Replacement files land
-  * in a dotted scratch directory (invisible to readers), the manifest
-  * commits the intent, then rename-in / delete-old; a crash at any point
-  * is resolved by [[ColeCompact.recover]]. Concurrent writers are
-  * detected by (length, mtime) snapshot comparison immediately before
-  * the swap, under per-file [[ColeClaims]], and rejected loudly —
-  * nothing has been renamed at that point, so an aborted statement
-  * leaves the table byte-identical.
+  * Transaction: the [[ColeSwap]], one manifest per directory.
+  * Replacement files land in a dotted scratch directory (invisible to
+  * readers), the manifest commits the intent, then rename-in /
+  * delete-old; a crash at any point is resolved by [[ColeSwap.recover]].
+  * Concurrent writers are detected by (length, mtime) snapshot
+  * comparison immediately before the swap, under per-file claims, and
+  * rejected loudly — nothing has been renamed at that point, so an
+  * aborted statement leaves the table byte-identical.
   *
   * Selection semantics are SQL WHERE-true: a row is selected only when
   * the condition evaluates TRUE; NULL comparisons leave the row alone
@@ -104,8 +104,8 @@ object ColeRewrite {
       conf: Configuration): Plan = {
     val (fs, _) = ColeIO.resolve(table, conf)
     // resolve any interrupted earlier swap before trusting the listing
-    ColeIO.listPartitioned(table, conf).map(_._1.getPath.getParent).distinct
-      .foreach(ColeCompact.recover(fs, _, table, conf))
+    ColeSwap.recoverTable(fs, table, conf,
+      ColeIO.listPartitioned(table, conf).map(_._1.getPath.getParent).distinct)
 
     val infos = ColeMetaCache.infos(table, conf)
     // split on the columns EVERY file serves from its directory, not the
@@ -243,8 +243,8 @@ object ColeRewrite {
       case DropRows => (plan.whole, plan.partial)
       case _ => (Seq.empty, plan.whole ++ plan.partial)
     }
-    val stamp = java.lang.Long.toHexString(System.nanoTime())
-    val scratchName = s".$op-$stamp"
+    val stamp = ColeSwap.newStamp()
+    val scratchName = ColeSwap.scratchName(op, stamp)
     val split = splitBytes(spark, rewrites)
     val runs = rewrites.map(i => i.path -> runsOf(i.meta, i.len, split)).toMap
     val names = replacementNames(op, stamp,
@@ -323,24 +323,23 @@ object ColeRewrite {
     val emptied = results.filter { case (_, r) => r.changed > 0L && r.kept == 0L }
     val replaced = results.filter { case (_, r) => r.changed > 0L && r.kept > 0L }
 
-    // ---- two-phase swap per directory
+    // ---- the swap, one manifest per directory: rows never leave their
+    // file's directory, and added files roll forward or back with the
+    // replacements of theirs
     val swapFiles = dropped ++ rewrites.filterNot(i => noop.contains(i.path))
-    // versioning bookkeeping (no-ops on unversioned tables): one commit
-    // record for the whole statement, written after every directory swapped
-    val verAdds = scala.collection.mutable.ArrayBuffer.empty[String]
-    val verRemoves = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val versioned = ColeVersions.enabled(table, conf)
-    // check-then-swap holds per-file storage claims (ColeClaims —
-    // cross-process) on EVERY file of the statement, and on the manifest
-    // of every directory it swaps, until its version record lands:
-    // without them two overlapping committers could both pass the
-    // (len,mtime) check below before either renames
     val swapByDir = swapFiles.groupBy(i => fs.makeQualified(new HPath(i.path).getParent))
     val addedByDir = added.groupBy(_._2.getParent)
-    val dirs = (swapByDir.keySet ++ addedByDir.keySet).toSeq.sortBy(_.toString)
-    val claims = try ColeClaims.acquire(fs, conf, table,
-      swapFiles.map(i => ColeVersions.relOf(fs, table, i.path)) ++
-        dirs.map(ColeCompact.manifestClaim(fs, table, _)), op)
+    val groups = (swapByDir.keySet ++ addedByDir.keySet).toSeq.sortBy(_.toString).map { dir =>
+      val files = swapByDir.getOrElse(dir, Seq.empty)
+      val scratch = new HPath(dir, scratchName)
+      ColeSwap.Group(dir, files.map(_.path),
+        files.filter(i => replaced.contains(i.path)).flatMap(i =>
+          runResults.filter(r => r.file == i.path && r.written).map(r =>
+            (new HPath(scratch, r.name).toString, new HPath(dir, r.name).toString))),
+        addedByDir.getOrElse(dir, Seq.empty).map { case (f, live) => (f.written, live.toString) })
+    }
+    val claimed = try ColeSwap.claim(fs, conf, table, op, swapFiles.map(_.path),
+      groups.map(_.dir))
     catch { case e: Throwable => dropScratch(); throw e }
     try {
       // concurrent-write race check: every file this statement decided
@@ -348,62 +347,15 @@ object ColeRewrite {
       // decision read. Abort BEFORE any mutation — the table is untouched
       // on rejection (speculative scratch output is discarded), so a
       // retry re-runs the whole statement, never half of it.
-      swapFiles.foreach { info =>
-        val ok = try {
-          val st = fs.getFileStatus(new HPath(info.path))
-          st.getLen == info.len && st.getModificationTime == info.mtime
-        } catch { case _: java.io.FileNotFoundException => false }
-        if (!ok) dropScratch()
-        require(ok,
-          s"concurrent write detected on ${info.path} during ${op.toUpperCase}; " +
-            "aborted with no changes — retry after the other writer commits")
+      ColeSwap.drifted(fs, swapFiles.map(i => (i.path, i.len, i.mtime))).foreach { p =>
+        dropScratch()
+        throw new IllegalStateException(s"concurrent write detected on $p during " +
+          s"${op.toUpperCase}; aborted with no changes — retry after the other writer commits")
       }
-      dirs.zipWithIndex.foreach { case (dir, dirIdx) =>
-        val files = swapByDir.getOrElse(dir, Seq.empty)
-        val adds = addedByDir.getOrElse(dir, Seq.empty)
-        val oldNames = files.map(i => new HPath(i.path).getName)
-        val newNames = files.filter(i => replaced.contains(i.path)).flatMap(i =>
-          runResults.filter(r => r.file == i.path && r.written).map(_.name))
-        // added files roll forward or back with the replacements
-        ColeCompact.writeManifest(fs, dir, oldNames.map("old:" + _) ++
-          (newNames ++ adds.map(_._2.getName)).map("new:" + _))
-        // record the swap for streaming sources: a cole-file-log that
-        // already covers the input files must not re-emit the
-        // replacements. Added rows are new to every reader and stay out
-        // of it. Named by the directory's index: layouts nest, so
-        // directory names repeat (`_t_days_ts=1/_bucket=0`,
-        // `_t_days_ts=2/_bucket=0`)
-        if (files.nonEmpty)
-          ColeCompact.writeCompactionRecord(fs, table, s"$op-$stamp-$dirIdx",
-            newNames.map(n => fs.makeQualified(new HPath(dir, n)).toString),
-            oldNames.map(n => fs.makeQualified(new HPath(dir, n)).toString))
-        val scratch = new HPath(dir, scratchName)
-        newNames.foreach { n =>
-          require(fs.rename(new HPath(scratch, n), new HPath(dir, n)),
-            s"rename failed for $scratch/$n")
-          verAdds += ColeVersions.relOf(fs, table, new HPath(dir, n).toString)
-        }
-        adds.foreach { case (f, live) =>
-          require(fs.rename(new HPath(f.written), live),
-            s"rename failed for ${f.written}")
-          verAdds += ColeVersions.relOf(fs, table, live.toString)
-        }
-        val indexedCols = files.flatMap(i =>
-          ColeBloomIndex.indexedColumns(i.path, conf)).distinct
-        files.foreach { i =>
-          fs.delete(new HPath(ColeBloomIndex.sidecarPath(i.path)), false)
-          ColeDv.drop(fs, i.path)
-          verRemoves ++= ColeVersions.retireOrDelete(fs, table, i.path, stamp, versioned)
-        }
-        fs.delete(scratch, true)
-        fs.delete(ColeCompact.manifestPath(dir), false)
-        if (indexedCols.nonEmpty)
-          ColeBloomIndex.build(dir.toString, indexedCols, conf)
-      }
-      dropScratch() // dirs whose every rewrite was a no-op never swapped
-      if (verAdds.nonEmpty || verRemoves.nonEmpty)
-        ColeVersions.commitIfEnabled(table, conf, op, verAdds.toSeq, verRemoves.toSeq)
-    } finally claims.release()
+      // before the version record: drop the scratch of the directories
+      // whose every rewrite was a no-op (they never swapped)
+      ColeSwap.commit(fs, table, conf, op, stamp, claimed, groups) { dropScratch(); Nil }
+    } finally claimed.release()
 
     // if the statement emptied the table, persist the schema sidecar so
     // the table still resolves (files are the usual source of truth)

@@ -40,8 +40,9 @@ import graft.sources.cole.ColeFormat._
   *     that changes a composite key re-routes the row to its new
   *     bucket), then at commit verifies no concurrent writer touched the
   *     replaced files ((len, mtime) snapshot from planning — reject
-  *     loudly, new files rolled back) and swaps: compaction record for
-  *     streaming sources, delete replaced files + bloom sidecars.
+  *     loudly, new files rolled back) and swaps through the
+  *     [[ColeSwap]], one manifest at the table root (an UPDATE may move
+  *     a row to another partition).
   *
   * The scan and write coordinate through this operation instance (the
   * contract of `RowLevelOperationTable`): the scan records the planned
@@ -109,6 +110,21 @@ class ColeRowLevelOperation(cmd: RowLevelOperation.Command,
       scanHashNames = hashNames
       plannedDvs = dvs
       if (authoritative) plannedLocked = true
+    }
+  }
+
+  @volatile private var recovered = false
+
+  /** Resolves interrupted swaps before the group scan first trusts a
+    * listing; the runtime group-filter subquery and the main scan both
+    * plan through this operation.
+    */
+  private[cole] def recoverOnce(): Unit = synchronized {
+    if (!recovered) {
+      val (fs, _) = ColeIO.resolve(path, conf)
+      ColeSwap.recoverTable(fs, path, conf,
+        ColeIO.listPartitioned(path, conf).map(_._1.getPath.getParent).distinct)
+      recovered = true
     }
   }
 
@@ -218,7 +234,9 @@ class ColeGroupScan(op: ColeRowLevelOperation, required: StructType,
     // carrying deletion vectors is rejected (a group rewrite blind to
     // them would resurrect vectored-away rows): compact main first.
     val infos = op.branch match {
-      case None => ColeMetaCache.infos(path, conf)
+      case None =>
+        op.recoverOnce()
+        ColeMetaCache.infos(path, conf)
       case Some(b) =>
         val (is, dvs) = ColeRefs.branchInfos(path, conf, b)
         require(dvs.isEmpty,
@@ -514,7 +532,7 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
         naming = ColeFileNaming.Deferred(s"replace-$stamp-")), schema)
   }
 
-  private val stamp = java.lang.Long.toHexString(System.nanoTime())
+  private val stamp = ColeSwap.newStamp()
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // per task: its files — the written names stay dotted until the
@@ -524,7 +542,7 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
       case ColeCommitMessage(fs0) => Seq((-1, ColeRowHash.Fp.zero, fs0))
       case _ => Seq.empty
     }
-    val (fs, _) = ColeIO.resolve(path, conf)
+    val (fs, root) = ColeIO.resolve(path, conf)
     // a task that received no rows (zero-match condition, or every row of
     // its slice deleted) commits an empty file: drop those
     val taskFiles: Map[Int, Seq[ColeWrittenFile]] = tasks.map { case (pid, _, fs0) =>
@@ -535,27 +553,24 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
       commitToBranch(branch.get, fs, tasks, taskFiles, planned, messages)
       return
     }
+    val opName = op.command().toString.toLowerCase
     // zero-copy clone DML (mask-don't-retire): planned files outside the
     // table root are the SOURCE's — they claim/mask under their src-rel
-    // and are HIDDEN by the pointer at commit instead of retired
-    val cloneCs = ColeClone.read(path, conf)
-    val foreignRel: Map[String, String] =
-      cloneCs.fold(Map.empty[String, String])(ColeClone.foreignRelOf(_, conf))
-    def claimRelOf(p: String): String =
-      foreignRel.getOrElse(p, ColeVersions.relOf(fs, path, p))
-    val anyForeign = planned.exists(p => foreignRel.contains(p._1))
-    // check-then-mutate is made atomic PER AFFECTED FILE by storage-level
-    // claims (ColeClaims — cross-PROCESS, unlike r11's JVM table lock):
-    // overlapping committers serialize so the loser's re-check sees the
-    // winner's renames — without this both pass the check first and both
-    // commit, duplicating every replaced row. File-disjoint committers
-    // hold disjoint claims and never contend at all. Commits that will
-    // mask foreign files also claim the pointer (its read-modify-write
-    // serializes with other maskers and with localize).
-    val claims = ColeClaims.acquire(fs, conf, path,
-      planned.map(p => claimRelOf(p._1)) ++
-        (if (anyForeign) Seq(ColeClone.MaskClaimRel) else Nil),
-      op.command().toString.toLowerCase)
+    // and are HIDDEN by the pointer at commit instead of retired. They
+    // never enter the swap manifest: a roll-forward would delete the
+    // source's bytes
+    val foreignRel: Map[String, String] = ColeClone.read(path, conf)
+      .fold(Map.empty[String, String])(ColeClone.foreignRelOf(_, conf))
+    val plannedForeign = planned.filter(p => foreignRel.contains(p._1))
+    // one swap manifest at the table root: an UPDATE may move a row to
+    // another partition, and per-directory manifests could roll one
+    // directory forward and another back. Commits that will mask foreign
+    // files also claim the pointer (its read-modify-write serializes with
+    // other maskers and with localize).
+    val claimed = ColeSwap.claim(fs, conf, path, opName,
+      planned.map(_._1).filterNot(foreignRel.contains), Seq(root),
+      plannedForeign.map(p => foreignRel(p._1)) ++
+        (if (plannedForeign.nonEmpty) Seq(ColeClone.MaskClaimRel) else Nil))
     try {
     // a foreign file's BYTES never change when a concurrent clone-DML
     // wins (masking doesn't touch the source) — the (len, mtime) check
@@ -563,7 +578,7 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     // claims: a planned rel already masked means our scan read rows that
     // are no longer live. Loud conflict; the DML auto-retry re-plans
     // from the fresh pointer and re-executes cleanly.
-    if (anyForeign) {
+    if (plannedForeign.nonEmpty) {
       val freshCs = ColeClone.read(path, conf)
       if (freshCs.isEmpty) {
         // a concurrent localize GRADUATED the table: our plan's foreign
@@ -576,7 +591,7 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
             "replacement rolled back — retry re-plans the local table")
       }
       val maskedNow = freshCs.map(_.masked).getOrElse(Set.empty)
-      planned.map(_._1).flatMap(foreignRel.get).find(maskedNow) match {
+      plannedForeign.map(p => foreignRel(p._1)).find(maskedNow) match {
         case Some(rel) =>
           abort(messages)
           throw new IllegalStateException(
@@ -589,18 +604,12 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     // concurrent-write race check while the replacement is still fully
     // INVISIBLE (dotted): every replaced file must still be exactly the
     // bytes the group scan read — on rejection the table is untouched
-    planned.foreach { case (p, len, mtime) =>
-      val ok = try {
-        val st = fs.getFileStatus(new HPath(p))
-        st.getLen == len && st.getModificationTime == mtime
-      } catch { case _: java.io.FileNotFoundException => false }
-      if (!ok) {
-        abort(messages) // roll the invisible replacement back
-        throw new IllegalStateException(
-          s"concurrent write detected on $p during ${op.command()}; " +
-            "aborted with the replacement rolled back — retry after the " +
-            "other writer commits")
-      }
+    ColeSwap.drifted(fs, planned).foreach { p =>
+      abort(messages) // roll the invisible replacement back
+      throw new IllegalStateException(
+        s"concurrent write detected on $p during ${op.command()}; " +
+          "aborted with the replacement rolled back — retry after the " +
+          "other writer commits")
     }
     // ---- no-op rewrite detection: a planned file whose replacement rows
     // fingerprint-match the rows the scan read from it did not change —
@@ -619,48 +628,23 @@ class ColeReplaceWrite(op: ColeRowLevelOperation, schema: StructType,
     val newDotted: Seq[ColeWrittenFile] = taskFiles.toSeq.sortBy(_._1).collect {
       case (pid, fs0) if !discardTasks.contains(pid) => fs0
     }.flatten
-    val replaced = planned.filterNot { case (p, _, _) => noopFiles.contains(p) }
-    if (replaced.nonEmpty) {
-      // streaming sources tailing this table must not re-emit the
-      // replacement of rows they already processed: the compaction
-      // record (QUALIFIED final-name outs → replaced ins) goes durable
-      // BEFORE any replacement file becomes visible
-      ColeCompact.writeCompactionRecord(fs, path, s"replace-$stamp",
-        newDotted.map(f => fs.makeQualified(new HPath(f.fin)).toString),
-        replaced.map(r => fs.makeQualified(new HPath(r._1)).toString))
-    }
-    newDotted.foreach { f =>
-      require(fs.rename(new HPath(f.written), new HPath(f.fin)),
-        s"replace-commit rename failed: ${f.written}")
-    }
-    val versioned = ColeVersions.enabled(path, conf)
-    val (replacedForeign, replacedLocal) =
-      replaced.partition { case (p, _, _) => foreignRel.contains(p) }
-    val verRemoves = replacedLocal.flatMap { case (p, _, _) =>
-      fs.delete(new HPath(ColeBloomIndex.sidecarPath(p)), false)
-      ColeDv.drop(fs, p)
-      ColeVersions.retireOrDelete(fs, path, p, stamp, versioned)
-    }
-    // mask-don't-retire: the SOURCE owns these bytes. On an UNVERSIONED
-    // clone they hide behind append-only `_clonemask/` entries; on a
-    // VERSIONED clone (r15) the replacement is an ordinary remove whose
-    // bytes COPY-retire under this table's own log — masking then
-    // derives from the fold (ColeClone.read), so time travel, rollback
-    // and the change feed cover clone DML with zero extra machinery.
-    val foreignRemoves: Seq[(String, String)] =
-      if (!versioned) {
-        ColeClone.mask(path, conf,
-          replacedForeign.map { case (p, _, _) => foreignRel(p) }.toSet)
+    val (replacedForeign, replacedLocal) = planned.map(_._1)
+      .filterNot(noopFiles).partition(foreignRel.contains)
+    ColeSwap.commit(fs, path, conf, opName, stamp, claimed,
+      Seq(ColeSwap.Group(root, replacedLocal, newDotted.map(f => (f.written, f.fin))))) {
+      // mask-don't-retire: the SOURCE owns these bytes. On an UNVERSIONED
+      // clone they hide behind append-only `_clonemask/` entries; on a
+      // VERSIONED clone (r15) the replacement is an ordinary remove whose
+      // bytes COPY-retire under this table's own log — masking then
+      // derives from the fold (ColeClone.read), so time travel, rollback
+      // and the change feed cover clone DML with zero extra machinery.
+      if (!claimed.versioned) {
+        ColeClone.mask(path, conf, replacedForeign.map(foreignRel).toSet)
         Seq.empty
-      } else replacedForeign.map { case (p, _, _) =>
-        ColeVersions.copyRetire(fs, path, p, foreignRel(p), stamp)
-      }
-    if (newDotted.nonEmpty || verRemoves.nonEmpty || foreignRemoves.nonEmpty)
-      ColeVersions.commitIfEnabled(path, conf,
-        op.command().toString.toLowerCase,
-        newDotted.map(f => ColeVersions.relOf(fs, path, f.fin)),
-        verRemoves ++ foreignRemoves)
-    } finally claims.release()
+      } else replacedForeign.map(p =>
+        ColeVersions.copyRetire(fs, path, p, foreignRel(p), stamp))
+    }
+    } finally claimed.release()
   }
 
   /** No-op rewrite detection (shared by the main and branch commit

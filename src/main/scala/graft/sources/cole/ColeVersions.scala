@@ -40,7 +40,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * Crash notes: the version record goes durable AFTER its mutation's
   * swap completes, so a crash inside the swap window can lose the
   * record (the next [[audit]] reports the drift), and a crash-recovery
-  * roll-forward ([[ColeCompact.recover]]) deletes rather than retires —
+  * roll-forward ([[ColeSwap.recover]]) deletes rather than retires —
   * time travel to a version whose file was lost that way fails loudly
   * at planning, never silently returns partial data.
   *

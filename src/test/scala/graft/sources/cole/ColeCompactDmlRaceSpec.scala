@@ -60,7 +60,7 @@ class ColeCompactDmlRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val before = s.table("cr.db.c1").collect().map(_.toSeq).toSet
     @volatile var outcome: String = "not-run"
-    ColeCompact.betweenRecordAndRenameHook.set(() => {
+    ColeSwap.betweenRecordAndRenameHook.set(() => {
       // inside compact's claim window: record durable, outputs not yet
       // renamed, input claims HELD. The UPDATE's commit must fail to
       // claim within its bounded wait and reject loudly.
@@ -77,7 +77,7 @@ class ColeCompactDmlRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     })
     val stats =
       try ColeCompact.compact(spark, t, targetBytes = 1L << 30)
-      finally ColeCompact.betweenRecordAndRenameHook.set(() => ())
+      finally ColeSwap.betweenRecordAndRenameHook.set(() => ())
     assert(stats.compactedDirs === 1, s"compact must have run: $stats")
     assert(outcome.contains("could not claim") ||
       outcome.contains("held by a concurrent committer"),

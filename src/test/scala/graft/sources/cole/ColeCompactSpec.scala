@@ -163,7 +163,7 @@ class ColeCompactSpec extends AnyFunSuite {
     val manifest = olds.map("old:" + _) :+ "new:compact-test-0.col"
     val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/.compact-manifest"), true)
     out.write(manifest.mkString("\n").getBytes); out.close()
-    ColeCompact.recover(fs, root, dir, ColeIO.driverConf())
+    ColeSwap.recover(fs, root, dir, ColeIO.driverConf())
     assert(spark.read.format("cole").load(dir).count() === rows,
       "forward recovery must delete the superseded originals")
     assert(ColeUtil.listFiles(dir).size === 1)
@@ -173,7 +173,7 @@ class ColeCompactSpec extends AnyFunSuite {
     val out2 = fs.create(new org.apache.hadoop.fs.Path(s"$dir/.compact-manifest"), true)
     out2.write("old:compact-test-0.col\nnew:compact-never-0.col\nnew:compact-never-1.col"
       .getBytes); out2.close()
-    ColeCompact.recover(fs, root, dir, ColeIO.driverConf())
+    ColeSwap.recover(fs, root, dir, ColeIO.driverConf())
     assert(spark.read.format("cole").load(dir).count() === rows,
       "backward recovery must keep the old copy when news are incomplete")
   }
@@ -208,6 +208,23 @@ class ColeCompactSpec extends AnyFunSuite {
       "vacuum touched live data")
   }
 
+  test("vacuum sweeps every swap's stale scratch, a crashed rebucket's included") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("cole_vacuum_scratch").toString
+    (0L until 100L).map(i => (i, i * 2.0)).toDF("id", "v")
+      .write.format("cole").mode("overwrite").save(dir)
+    val old = System.currentTimeMillis() - 48L * 3600 * 1000
+    val planted = Seq("delete", "update", "merge", "compact", "rebucket").map { op =>
+      val f = new java.io.File(dir, ColeSwap.scratchName(op, "5eed"))
+      f.mkdirs(); new java.io.File(f, "x.col").createNewFile()
+      f.setLastModified(old); f
+    }
+    assert(ColeCompact.vacuum(dir, ColeIO.driverConf(), olderThanMs = 24L * 3600 * 1000) === 5)
+    assert(planted.forall(!_.exists))
+    assert(spark.read.format("cole").load(dir).count() === 100L)
+  }
+
   test("compaction can re-layout: compression applied during the rewrite") {
     val dir = Files.createTempDirectory("cole_compact_zip").toString
     li.repartition(6).write.format("cole").mode("overwrite").save(dir)
@@ -229,12 +246,12 @@ class ColeCompactSpec extends AnyFunSuite {
     // one swap after another writes its manifest and removes it; a
     // concurrent recover() reading meanwhile must see all of one or none
     val writer = new Thread(() => (0 until 100).foreach { _ =>
-      ColeCompact.writeManifest(fs, dir, lines)
-      fs.delete(ColeCompact.manifestPath(dir), false)
+      ColeSwap.writeManifest(fs, dir, lines)
+      fs.delete(ColeSwap.manifestPath(dir), false)
     })
     writer.start()
     val seen = scala.collection.mutable.Set.empty[Int]
-    while (writer.isAlive) ColeCompact.manifestLines(fs, dir).foreach(ls => seen += ls.size)
+    while (writer.isAlive) ColeSwap.manifestLines(fs, dir).foreach(ls => seen += ls.size)
     writer.join()
     assert(seen.subsetOf(Set(lines.size)), s"torn manifest reads: line counts $seen")
     assert(fs.listStatus(dir).map(_.getPath.getName).filter(_.endsWith(".tmp")).isEmpty)

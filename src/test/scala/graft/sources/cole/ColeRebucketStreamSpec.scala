@@ -93,15 +93,15 @@ class ColeRebucketStreamSpec extends AnyFunSuite {
     fs.mkdirs(new HPath(dir, "_bucket1=0"))
     org.apache.hadoop.fs.FileUtil.copy(fs, new HPath(dir, olds.head),
       fs, new HPath(dir, partialNew), false, true, fs.getConf)
-    ColeCompact.writeManifest(fs, root,
+    ColeSwap.writeManifest(fs, root,
       olds.map("old:" + _) ++ Seq("new:" + partialNew,
         "new:_bucket1=1/rebucket-crash-part-b.col")) // b never landed
-    ColeCompact.recover(fs, root, dir, conf)
+    ColeSwap.recover(fs, root, dir, conf)
     assert(!fs.exists(new HPath(dir, partialNew)),
       "roll-back must drop the partial outputs")
     assert(olds.forall(r => fs.exists(new HPath(dir, r))),
       "roll-back must keep every old file")
-    assert(!fs.exists(ColeCompact.manifestPath(root)))
+    assert(!fs.exists(ColeSwap.manifestPath(root)))
     assert(s.read.format("cole").load(dir).count() === before)
 
     // FORWARD: every output landed — recover deletes the listed olds
@@ -111,13 +111,13 @@ class ColeRebucketStreamSpec extends AnyFunSuite {
       fs, new HPath(dir, newA), false, true, fs.getConf)
     // forward-roll deletes ONLY the listed olds: list just the one the
     // copy duplicates, so row counts stay exact afterwards
-    ColeCompact.writeManifest(fs, root,
+    ColeSwap.writeManifest(fs, root,
       Seq("old:" + olds.head, "new:" + newA))
-    ColeCompact.recover(fs, root, dir, conf)
+    ColeSwap.recover(fs, root, dir, conf)
     assert(fs.exists(new HPath(dir, newA)))
     assert(!fs.exists(new HPath(dir, olds.head)),
       "roll-forward must delete the replaced old file")
-    assert(!fs.exists(ColeCompact.manifestPath(root)))
+    assert(!fs.exists(ColeSwap.manifestPath(root)))
     assert(s.read.format("cole").load(dir).count() === before)
   }
 }

@@ -62,11 +62,11 @@ class ColeStreamCompactRaceSpec extends AnyFunSuite {
 
     // the seam fires with the compaction record DURABLE but the outputs
     // NOT yet renamed — run live triggers inside that exact window
-    ColeCompact.betweenRecordAndRenameHook.set(() => q.processAllAvailable())
+    ColeSwap.betweenRecordAndRenameHook.set(() => q.processAllAvailable())
     try {
       val stats = ColeCompact.compact(s, dir, targetBytes = 1L << 30)
       assert(stats.filesAfter === 1 && stats.filesBefore === 4)
-    } finally ColeCompact.betweenRecordAndRenameHook.set(() => ())
+    } finally ColeSwap.betweenRecordAndRenameHook.set(() => ())
     q.processAllAvailable()
     assert(received.get() === 100L,
       "a trigger inside the record-write→rename window replayed compacted rows")

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming source versus a compaction swap that CRASHED after its
   * record went durable but before any output was renamed into place —
-  * the window `ColeCompact.betweenRecordAndRenameHook` marks. Two
+  * the window `ColeSwap.betweenRecordAndRenameHook` marks. Two
   * hazards, both fixed by deferring the carry-set handover until the
   * outputs actually exist (`pendingSwaps`):
   *
@@ -70,10 +70,10 @@ class ColeStreamSwapRollbackSpec extends AnyFunSuite {
     val stamp = "deadbeef"
     val outs = (0 until 2).map(i =>
       fs.makeQualified(new HPath(root, s"compact-$stamp-$i.col")).toString)
-    ColeCompact.writeManifest(fs, new HPath(dir),
+    ColeSwap.writeManifest(fs, new HPath(dir),
       ins.map(p => "old:" + new HPath(p).getName) ++
         outs.map(p => "new:" + new HPath(p).getName))
-    ColeCompact.writeCompactionRecord(fs, dir, stamp, outs, ins)
+    ColeSwap.writeCompactionRecord(fs, dir, stamp, outs, ins)
 
     // a capped reader starting AFTER the crash: the warm-up listing and
     // the record arrive in the same trigger, with every input unserved.
@@ -95,7 +95,7 @@ class ColeStreamSwapRollbackSpec extends AnyFunSuite {
     // roll the swap back (what the next compact() pass does first) —
     // inputs stay, manifest goes; the stream must neither replay nor
     // later resurrect the phantom outputs
-    ColeCompact.recover(fs, new HPath(dir), dir, ColeIO.driverConf())
+    ColeSwap.recover(fs, new HPath(dir), dir, ColeIO.driverConf())
     reader.processAllAvailable()
     assert(received.get() === 100L, "rollback recovery replayed rows")
 
@@ -131,11 +131,11 @@ class ColeStreamSwapRollbackSpec extends AnyFunSuite {
     // a live trigger inside the record→rename window sees the record as
     // PENDING (outputs missing, manifest present) and must keep waiting,
     // not misclassify it as rolled back; the post-swap trigger confirms
-    ColeCompact.betweenRecordAndRenameHook.set(() => q.processAllAvailable())
+    ColeSwap.betweenRecordAndRenameHook.set(() => q.processAllAvailable())
     try {
       val stats = ColeCompact.compact(s, dir, targetBytes = 1L << 30)
       assert(stats.filesAfter === 1 && stats.filesBefore === 4)
-    } finally ColeCompact.betweenRecordAndRenameHook.set(() => ())
+    } finally ColeSwap.betweenRecordAndRenameHook.set(() => ())
     q.processAllAvailable()
     assert(received.get() === 100L,
       "pending-swap confirmation replayed compacted rows")
