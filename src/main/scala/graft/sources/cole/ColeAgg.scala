@@ -527,23 +527,6 @@ class ColeAggScan(path: String, conf: Configuration, groupCols: Seq[String],
 
   private val hconf = new ColeHadoopConf(conf)
 
-  // partition-column predicates prune whole files at planning; only
-  // data-column predicates reach the readers' selection vectors.
-  // Claimed IsNotNull is dropped PER FILE below when the column is
-  // null-free there (keeping the metadata-only paths); null-bearing v2
-  // files enforce it row-exactly in the selection loop.
-  private val (partPreds, preds) =
-    allPreds.partition(p => partCols.contains(p.column))
-
-  // temporal layout: the same derived-ordinal pruning as the row scan —
-  // a filtered pushed aggregate over a ts range plans only touched
-  // directories (conservative; original preds stay in the data set)
-  private val temporalPreds = ColeTemporal.derivePartPreds(preds.toSeq,
-    snapshot.flatMap(_.temporalSpecs).getOrElse(ColeTemporal.readSpecs(path, conf)))
-
-  private def partitionKeeps(p: ColePredicate, raw: String): Boolean =
-    ColePredicate.partitionKeeps(p, raw)
-
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
   override def description(): String = {
@@ -555,100 +538,55 @@ class ColeAggScan(path: String, conf: Configuration, groupCols: Seq[String],
       s"${a.kind.toUpperCase}(${Option(a.column).getOrElse("*")})").mkString(", ")}]$g$f"
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val target = ColePack.targetBytes
-    // planning is metadata-only: footers come from the driver cache, no
-    // data file is opened here (snapshot reads plan the PINNED file set)
+  /** Planned once per listing, like the row scan: Spark plans every copy
+    * of the scan's exec node. Live deletion vectors change without the
+    * listing, so their plans are never kept.
+    */
+  private var planned: (Seq[(String, Long, Long)], Array[InputPartition]) = null
+
+  override def planInputPartitions(): Array[InputPartition] = synchronized {
     val infos = snapshot.map(_.infos).getOrElse(ColeMetaCache.infos(path, conf))
-    // vector mode: ship each file's deletion-vector ordinals to the
-    // readers (per row group, local ordinals — the row scan's plumbing).
-    // COUNT answers stay metadata-exact (physical rows minus vector
-    // counts, no data bytes); value sweeps mask with the vector.
-    val dvLocal: Map[String, Array[Array[Int]]] = snapshot match {
-      case Some(s) if s.dvs.nonEmpty => // pinned vectors as of the version
-        infos.flatMap(i => s.dvs.get(i.path).map(ords =>
-          i.path -> ColeDv.localize(i.meta, ords))).toMap
-      case Some(_) => Map.empty
-      case None if ColeDv.vectorModeFor(path, conf) =>
-        val (dfs, _) = ColeIO.resolve(path, conf)
-        // same foreign-file discipline as the row scan (ADVICE r13)
-        val foreign: String => Boolean =
-          if (ColeClone.read(path, conf).isEmpty) _ => false
-          else ColeClone.isForeign(path, _, conf)
-        infos.flatMap { i =>
-          if (foreign(i.path)) None
-          else ColeDv.read(dfs, i.path, i.len, i.mtime).map(ords =>
-            i.path -> ColeDv.localize(i.meta, ords))
-        }.toMap
-      case None => Map.empty
+    val key = infos.map(i => (i.path, i.len, i.mtime))
+    if (planned != null && planned._1 == key) planned._2.clone()
+    else {
+      val plan = ColePlan.plan(path, conf, infos, snapshot, allPreds)
+      val parts = partitionsOf(plan)
+      if (plan.sidecars.isEmpty) planned = (key, parts)
+      parts.clone()
     }
-    // a file whose vector covers every row is dead: skip it whole
-    val dvDead: Set[String] =
-      if (dvLocal.isEmpty) Set.empty
-      else infos.filter { i =>
-        dvLocal.get(i.path).exists(_.iterator.map(a =>
-          if (a == null) 0 else a.length).sum == i.meta.totalRows)
-      }.map(_.path).toSet
-    // metadata fold: an unfiltered (partition predicates still prune
-    // files, exactly), ungrouped, vector-free aggregate answers from the
-    // footer cache alone — ONE task ships the finished partials and no
-    // data file is ever opened (the v2 SUMS tail carries exact wrapped
+  }
+
+  private def partitionsOf(plan: ColePlan.Plan): Array[InputPartition] = {
+    // metadata fold: an ungrouped aggregate whose surviving files evaluate
+    // no predicate row by row and carry no deletion vector answers from
+    // the footer cache alone — ONE task ships the finished partials and
+    // no data file is ever opened (the v2 SUMS tail carries exact wrapped
     // chunk sums; counts and min/max were already metadata)
-    if (groupCols.isEmpty && preds.isEmpty && dvLocal.isEmpty &&
-        snapshot.forall(_.rgKeep.isEmpty)) {
-      val survivors = infos.filter { info =>
-        val pv = info.partValues.toMap
-        partPreds.forall(p => pv.get(p.column).exists(partitionKeeps(p, _)))
-      }
-      val folded = ColeAggFold.tryFold(survivors, aggs)
+    if (groupCols.isEmpty && snapshot.forall(_.rgKeep.isEmpty) &&
+        plan.files.forall(f => f.preds.isEmpty && f.deleted == null)) {
+      val folded = ColeAggFold.tryFold(plan.files.map(_.info), aggs)
       if (folded.isDefined) {
         ColeAggFold.foldedPlans.incrementAndGet()
         return Array(ColeFoldedAggPartition(folded.get))
       }
     }
-    // bucket pruning, same as the row scan: a filtered aggregate whose
-    // claimed predicate pins the bucket column sweeps 1/n of the table,
-    // per ERA on evolved layouts (snapshots resolve the spec history as
-    // of their version)
-    val bucketKeeps: Map[String, Set[String]] = ColeBucket.keepsByEra(
-      snapshot.fold(ColeBucket.readHistory(path, conf))(_.bucketHistory),
-      preds.toSeq)
-    infos.filterNot(i => dvDead(i.path)).flatMap { info =>
-      val pv = info.partValues.toMap
-      if (ColeBucket.pruneFile(pv, bucketKeeps)) Seq.empty
-      else if (!partPreds.forall(p => pv.get(p.column).exists(partitionKeeps(p, _))))
-        Seq.empty
-      else if (!temporalPreds.forall(p =>
-          pv.get(p.column).forall(partitionKeeps(p, _)))) Seq.empty
-      else {
-        val meta = info.meta
-        val nameToIdx = meta.columns.map(_.name).zipWithIndex.toMap
-        // IsNotNull on a null-free column is vacuous for THIS file: drop
-        // it so dense files keep the preds-empty metadata/stat-only agg
-        // paths (same per-file discipline as the row scan)
-        val filePreds = preds.filter(p => !p.isNotNullClaim ||
-          nameToIdx.get(p.column).exists(meta.columnHasNulls))
-        // partition group columns are per-file constants — they need no
-        // chunk, so they never enter the projected column set
-        val colIndices = (groupCols.filterNot(partCols.contains) ++
-            aggs.flatMap(a => Option(a.column))).distinct
-          .map(nameToIdx(_)).toArray
-        val fileDv = dvLocal.get(info.path)
-        // PHYSICAL row counts (the readers need them to build selections
-        // over every stored row); the vector rides the partition and the
-        // readers subtract it — same contract as the row scan
-        val rgs = meta.rowGroups.zipWithIndex.collect {
-          case (rg, rgIdx) if rg.numRows > 0 &&
-              !ColePredicate.skipRowGroup(rg, nameToIdx, filePreds) &&
-              // advisory bloom sidecar, same as the row scan: a filtered
-              // aggregate's string point probe prunes row groups too
-              !ColeBloomIndex.skips(info.path, info.len, info.mtime, rgIdx, filePreds, conf) =>
-            (rgIdx, rg.numRows, colIndices.map(ci => rg.chunks(ci).totalSize).sum)
-        }
-        ColePack.pack(info.path, colIndices, rgs, target, filePreds,
-          info.partValues.toArray,
-          deletedOf = rg => fileDv.map(_(rg)).orNull)
+    plan.files.flatMap { f =>
+      val meta = f.info.meta
+      val nameToIdx = meta.columns.map(_.name).zipWithIndex.toMap
+      // partition group columns are per-file constants — they need no
+      // chunk, so they never enter the projected column set
+      val colIndices = (groupCols.filterNot(partCols.contains) ++
+          aggs.flatMap(a => Option(a.column))).distinct
+        .map(nameToIdx(_)).toArray
+      // PHYSICAL row counts (the readers need them to build selections
+      // over every stored row); the vector rides the partition and the
+      // readers subtract it — same contract as the row scan
+      val rgs = f.groups.toSeq.collect { case rgIdx if meta.rowGroups(rgIdx).numRows > 0 =>
+        val rg = meta.rowGroups(rgIdx)
+        (rgIdx, rg.numRows, colIndices.map(ci => rg.chunks(ci).totalSize).sum)
       }
+      ColePack.pack(f.info.path, colIndices, rgs, ColePack.targetBytes, f.preds,
+        f.info.partValues.toArray, deletedOf = f.deletedOf)
     }.toArray match {
       // a fully-pruned (or empty) table still needs ONE partial row for a
       // GLOBAL aggregate: Spark's rewritten final agg over zero partial
@@ -658,8 +596,8 @@ class ColeAggScan(path: String, conf: Configuration, groupCols: Seq[String],
         // file path is never opened for an empty partition, so a table
         // directory with ZERO .col files (external schema) is covered too
         Array[InputPartition](ColeInputPartition(
-          infos.headOption.map(_.path).getOrElse(path),
-          Array.empty, Array.empty, Array.empty, preds))
+          plan.infos.headOption.map(_.path).getOrElse(path),
+          Array.empty, Array.empty, Array.empty))
       case parts => parts.map(p => p: InputPartition)
     }
   }

@@ -421,8 +421,7 @@ class ColeTable(schema: StructType, writePartCols: Seq[String],
             s"row-level DML on branch '${wap.get}' requires copy-on-write " +
               "(delete_mode 'copy'): a merge-on-read vector would mutate " +
               "sidecars in MAIN's tree")
-          return new ColeRowLevelOperation(info.command(), p, writePartCols,
-            65536, conf, wap)
+          return new ColeRowLevelOperation(info.command(), p, writePartCols, conf, wap)
         }
         // zero-copy clones run row-level DML copy-on-write with
         // mask-don't-retire (ColeClone.mask) — but never merge-on-read:
@@ -437,9 +436,9 @@ class ColeTable(schema: StructType, writePartCols: Seq[String],
         // land in new files — no rewrite of co-resident unmatched rows.
         // Copy-on-write group rewrite otherwise.
         if (ColeDv.vectorMode(p, conf))
-          new ColeDeltaOperation(info.command(), p, writePartCols, 65536, conf)
+          new ColeDeltaOperation(info.command(), p, writePartCols, conf)
         else
-          new ColeRowLevelOperation(info.command(), p, writePartCols, 65536, conf)
+          new ColeRowLevelOperation(info.command(), p, writePartCols, conf)
       }
     }
 
@@ -502,7 +501,7 @@ class ColeTable(schema: StructType, writePartCols: Seq[String],
     val conf = ColeIO.driverConf()
     ColeDmlRetry.withRetries(conf) { _ =>
       ColeDelete.deleteWhere(org.apache.spark.sql.SparkSession.active,
-        props("path"), filters, writePartCols, conf)
+        props("path"), filters, conf)
     }
   }
 
@@ -1894,27 +1893,6 @@ private[cole] object ColePack {
     catch { case _: Throwable => 128L * 1024 * 1024 }
 }
 
-/** Planning-only disjunction over branches on (possibly) different
-  * columns — see [[ColePredicate.skipOnlyFromFilter]]. Skips a row group
-  * when every branch is provably impossible there: data-column branches
-  * from page stats, partition-column branches from the file's constant.
-  * An undecidable branch (unknown column, no pages) keeps the group.
-  */
-private[cole] final case class ColeOrSkip(branches: Array[ColePredicate]) {
-  def skips(rg: RowGroupMeta, nameToIdx: Map[String, Int],
-      partValues: Map[String, String]): Boolean =
-    branches.forall { p =>
-      if (partValues.contains(p.column))
-        !ColePredicate.partitionKeeps(p, partValues(p.column))
-      else nameToIdx.get(p.column).exists { ci =>
-        val pages = rg.chunks(ci).pages
-        pages.nonEmpty && pages.forall(ph => p.canSkip(ph.stats))
-      }
-    }
-
-  override def toString: String = branches.mkString("(", " OR ", ")")
-}
-
 class ColeScan(fullSchema: StructType, required: StructType, path: String,
     conf: Configuration, filters: Array[Filter], limit: Int = -1,
     topN: Option[(String, Boolean, Int)] = None,
@@ -2111,198 +2089,88 @@ class ColeScan(fullSchema: StructType, required: StructType, path: String,
   override def filter(newFilters: Array[Filter]): Unit =
     runtimeFilters = newFilters
 
-  /** Surviving row groups, packed into ~maxPartitionBytes partitions:
-    * predicate-vs-stats skipping happens here on the driver, before any
-    * executor reads a byte — the Spark twin of the reference's
-    * canSkipPage loop. Runtime IN-filters (if any arrived) participate as
-    * per-value range checks.
+  /** Surviving row groups, packed into ~maxPartitionBytes partitions.
+    * Which files and row groups the claimed predicates (and any runtime
+    * IN-filters) can touch is [[ColePlan]]'s decision; the scan adds its
+    * own steps: TopN/LIMIT credit, packing and key-grouped partitions.
     */
-  private def partitionKeeps(p: ColePredicate, raw: String): Boolean =
-    ColePredicate.partitionKeeps(p, raw)
-
   override def planInputPartitions(): Array[InputPartition] =
-    planPartitionsOf(_ => true)
+    planPartitions(_ => true, memoize = !dvMode)
 
-  /** Planning entry, parameterized by a file filter so the micro-batch
-    * stream can plan exactly one batch's new files with the same
-    * stats-skipping, partition-pruning, and packing as a batch scan.
-    *
-    * Runtime-filter contract: when this scan reported
+  /** Planning entry for the micro-batch stream: exactly one batch's new
+    * files, planned afresh with the same pruning and packing as a batch
+    * scan.
+    */
+  private[cole] def planPartitionsOf(fileKeep: String => Boolean): Array[InputPartition] =
+    planPartitions(fileKeep, memoize = false)
+
+  /** Plans by (listing, runtime filters): Spark plans every copy of the
+    * scan's exec node (adaptive execution re-applies its physical rules
+    * to a copy), and a runtime-filtered planning needs the static plan
+    * again; each comes from here once. A new listing (a commit, a retried
+    * statement) plans afresh. Live deletion vectors change without the
+    * listing, so their plans are never kept.
+    */
+  private val planned = scala.collection.mutable.HashMap.empty[
+    (Seq[(String, Long, Long)], Seq[Filter]), Array[ColeInputPartition]]
+
+  /** Runtime-filter contract: when this scan reported
     * KeyGroupedPartitioning, the re-plan after `filter(...)` must not
     * SHRINK the set of partition keys Spark recorded at planning time —
     * BatchScanExec requires HasPartitionKey on every partition and
     * rejects keys it has never seen, and a shrunken set degrades the
-    * storage-partitioned join's alignment. So when runtime filters are
-    * in play on a key-grouped scan, the static plan (runtime filters
-    * ignored — byte-identical to what Spark recorded) is recomputed from
-    * the same driver-cached footers, and every statically-surviving key
-    * the runtime filters pruned re-emits as a ZERO-row-group partition:
-    * reads nothing, preserves the key set exactly.
+    * storage-partitioned join's alignment. So every key of the static
+    * plan (runtime filters ignored, byte-identical to what Spark
+    * recorded) that the runtime filters pruned re-emits as a
+    * ZERO-row-group partition: reads nothing, preserves the key set.
     */
-  private[cole] def planPartitionsOf(fileKeep: String => Boolean): Array[InputPartition] = {
-    val planned = plannedPartitions(fileKeep)
-    if (runtimeFilters.isEmpty || partKeySchema.isEmpty)
-      return planned.toArray[InputPartition]
-    val saved = runtimeFilters
-    val staticPlanned =
-      try { runtimeFilters = Array.empty; plannedPartitions(fileKeep) }
-      finally runtimeFilters = saved
-    val present = planned.iterator.map(_.partValues.toSeq).toSet
-    val missing = staticPlanned.iterator
+  private def planPartitions(fileKeep: String => Boolean,
+      memoize: Boolean): Array[InputPartition] = {
+    val infos = tableInfos
+    def plannedFor(rt: Array[Filter]): Array[ColeInputPartition] =
+      if (!memoize) plannedPartitions(infos, fileKeep, rt)
+      else planned.synchronized {
+        planned.getOrElseUpdate((infos.map(i => (i.path, i.len, i.mtime)), rt.toSeq),
+          plannedPartitions(infos, fileKeep, rt))
+      }
+    val rt = runtimeFilters
+    val parts = plannedFor(rt)
+    if (rt.isEmpty || partKeySchema.isEmpty) return parts.toArray[InputPartition]
+    val present = parts.iterator.map(_.partValues.toSeq).toSet
+    val missing = plannedFor(Array.empty).iterator
       .filter(p => !present.contains(p.partValues.toSeq))
       .map(p => p.partValues.toSeq -> p).toMap
-    (planned ++ missing.values.map(p => p.copy(rowGroups = Array.empty,
+    (parts ++ missing.values.map(p => p.copy(rowGroups = Array.empty,
       rowCounts = Array.empty, preds = Array.empty))).toArray[InputPartition]
   }
 
-  private def plannedPartitions(fileKeep: String => Boolean): Array[ColeInputPartition] = {
-    val runtimeIn: Array[ColePredicate] = runtimeFilters.flatMap {
-      // IN on a partition column keeps its set form: evaluated per FILE
-      // against the directory value (dynamic partition pruning)
-      case f @ In(c, _) if partCols.contains(c) =>
-        ColePredicate.fromFilter(f).toArray
-      case In(c, vs) =>
-        val nums = vs.flatMap(ColePredicate.num)
-        if (nums.length == vs.length) nums.map(ColePredicate(c, "eq", _)) else Array.empty[ColePredicate]
-      case f => ColePredicate.fromFilter(f).toArray
-    }
-    // partition-column predicates prune whole FILES from the directory
-    // value; only data-column predicates reach stats/selection machinery
-    val (partPreds, preds) =
-      filters.flatMap(ColePredicate.fromFilter).partition(p => partCols.contains(p.column))
-    val (partRuntime, dataRuntime) = runtimeIn.partition(p => partCols.contains(p.column))
-    // temporal layout: claimed predicates on the source timestamp imply
-    // predicates on its derived unit-ordinal directory — a ts range over
-    // a years-long table plans only the touched days' directories. The
-    // ORIGINAL predicates stay in the data set (stats + row-exact
-    // selection make the boundary exact); files without the derived key
-    // (pre-layout tail of a path-based table) are never pruned by these.
-    // Derivation covers the whole spec HISTORY (r12 evolution): each
-    // era's files prune by their own transform; time-travel snapshots
-    // resolve the history as-of their version.
-    val temporalPreds = ColeTemporal.derivePartPreds(
-      (preds ++ dataRuntime).toSeq,
-      snapshot.flatMap(_.temporalSpecs)
-        .getOrElse(ColeTemporal.readSpecs(path, conf)))
+  private def plannedPartitions(infos: Seq[ColeMetaCache.FileInfo],
+      fileKeep: String => Boolean, runtime: Array[Filter]): Array[ColeInputPartition] = {
+    val plan = ColePlan.plan(path, conf, infos, snapshot,
+      filters.flatMap(ColePredicate.fromFilter), runtime, skipOnly, fileKeep)
     // `_cole_file` (SupportsMetadataColumns): a per-file constant served
     // through the partition-value mechanism, never a footer column
     val wantFileCol = required.fieldNames.contains(ColeUtil.FileMetaCol)
-    val target = ColePack.targetBytes
-    // per-file claimed-predicate sets (IsNotNull dropped where vacuous)
-    val predsOf = scala.collection.mutable.HashMap.empty[String, Array[ColePredicate]]
-    // metadata-only planning: footers come from the driver cache (one read
-    // per file across the whole query, even when runtime filters trigger a
-    // second planning pass), stats prune without opening any data file
-    // (file, colIndices, rgIdx, rows, bytes, topN column min/max,
-    //  guaranteed = stats prove every row survives all filters, partValues)
-    // bucket pruning: equality/IN on the bucket column(s) pins the hash
-    // bucket(s) — only those _bucket<era>=N directories' files plan at
-    // all (runtime IN-filters from joins prune the same way on the
-    // re-plan). Per ERA on evolved layouts: each era's keep set keys its
-    // own directory key, derived synthetic keys pin through one more
-    // avalanche (the same route a stored synth column takes), and a file
-    // is only ever judged by the key its directory carries.
-    val bucketKeeps: Map[String, Set[String]] =
-      ColeBucket.keepsByEra(bucketHistory, (preds ++ dataRuntime).toSeq)
-    val dvOf: Map[String, Array[Array[Int]]] = snapshot match {
-      // time-travel read: PINNED vectors (resolved + identity-checked as
-      // of the version by the snapshot builder), never the live sidecars
-      case Some(s) if s.dvs.nonEmpty =>
-        tableInfos.flatMap(i => s.dvs.get(i.path).map(ords =>
-          i.path -> ColeDv.localize(i.meta, ords))).toMap
-      case Some(_) => Map.empty
-      case None if dvMode =>
-        val (dfs, _) = ColeIO.resolve(path, conf)
-        // belt-and-braces (ADVICE r13): never consult sidecars adjacent
-        // to a clone's FOREIGN files — those are the source's live
-        // state, not this table's pinned snapshot (setMode also rejects
-        // vector mode on clones, so this can't normally arise)
-        val foreign: String => Boolean =
-          if (ColeClone.read(path, conf).isEmpty) _ => false
-          else ColeClone.isForeign(path, _, conf)
-        tableInfos.flatMap { i =>
-          if (foreign(i.path)) None
-          else ColeDv.read(dfs, i.path, i.len, i.mtime).map(ords =>
-            i.path -> ColeDv.localize(i.meta, ords))
-        }.toMap
-      case None => Map.empty
-    }
-    // a file whose vector covers every row is dead: skip it whole (it
-    // lingers byte-identical until compaction sweeps it)
-    val dvDead: Set[String] =
-      if (dvOf.isEmpty) Set.empty
-      else tableInfos.filter { i =>
-        dvOf.get(i.path).exists(_.iterator.map(a =>
-          if (a == null) 0 else a.length).sum == i.meta.totalRows)
-      }.map(_.path).toSet
-    val survivors = tableInfos.filter(i =>
-      fileKeep(i.path) && !dvDead(i.path)).flatMap { info =>
-      val pv = info.partValues.toMap
-      if (ColeBucket.pruneFile(pv, bucketKeeps)) Seq.empty
-      else if (!(partPreds ++ partRuntime).forall(p =>
-          pv.get(p.column).exists(partitionKeeps(p, _)))) Seq.empty
-      // derived temporal preds: prune only files CARRYING the derived
-      // key (forall on the option — absent key keeps the file)
-      else if (!temporalPreds.forall(p =>
-          pv.get(p.column).forall(partitionKeeps(p, _)))) Seq.empty
-      else {
-        val meta = info.meta
-        val nameToIdx = meta.columns.map(_.name).zipWithIndex.toMap
-        // partition-spec duality (ColePartEvolve): a pred column THIS
-        // FILE serves from its directory prunes/keeps the whole file by
-        // that value (it is not in the file's footers); for files that
-        // CARRY the column as data it stays an ordinary stats/selection
-        // predicate. Pure tables have no dir-served columns on the data
-        // side (partCols already routed those), so dirPreds is empty
-        // and this is byte-for-byte the old path.
-        val (dirPreds, dataPreds) = preds.partition(p => pv.contains(p.column))
-        if (!dirPreds.forall(p => partitionKeeps(p, pv(p.column)))) Seq.empty
-        // schema evolution: a file written before a claimed-filter column
-        // existed stores NULL for it on every row, and every claimed
-        // predicate (comparisons, IN, IsNotNull) rejects NULL — the whole
-        // file drops from planning, no byte read. `WHERE added_col > 0`
-        // thus prunes the entire pre-evolution tail of a 100 TB table.
-        else if (dataPreds.exists(p => !nameToIdx.contains(p.column))) Seq.empty
-        else {
-        // a claimed IsNotNull is vacuous over null-free chunks; dropping
-        // it PER FILE keeps the preds-empty fast paths (metadata counts,
-        // guaranteed credit) intact for v1 tables while nullable v2
-        // files still enforce it row-exactly
-        val filePreds = dataPreds.filter(p => !p.isNotNullClaim ||
-          nameToIdx.get(p.column).exists(meta.columnHasNulls))
-        predsOf(info.path) = filePreds
-        // per-field source over the WHOLE required schema: ConstSrc for
-        // metadata columns and anything THIS file's directory carries,
-        // -1 for absent (pre-evolution NULL/default), footer index else
-        val colIndices = required.fieldNames.map { n =>
-          if (n == ColeUtil.FileMetaCol || n == ColeUtil.PosMetaCol ||
-            pv.contains(n)) ColeUtil.ConstSrc
-          else nameToIdx.getOrElse(n, -1)
-        }
-        // ordinal-addressed feed reads (rgKeep): only the row groups the
-        // delta's ordinals touch plan at all — O(delta) group opens
-        val rgAllowed = snapshot.flatMap(_.rgKeep.get(info.path))
-        meta.rowGroups.zipWithIndex.collect {
-          case (rg, rgIdx) if rgAllowed.forall(_.contains(rgIdx)) &&
-              !skipRowGroup(rg, nameToIdx, filePreds) &&
-              !skipRowGroupIn(rg, nameToIdx, dataRuntime) &&
-              !skipOnly.exists(_.skips(rg, nameToIdx, pv)) &&
-              // advisory bloom sidecar: string point lookups drop row
-              // groups that provably lack the probe value (no-op when no
-              // index or no string equality is claimed)
-              !ColeBloomIndex.skips(info.path, info.len, info.mtime, rgIdx, filePreds, conf) =>
-            val mm = topN.flatMap { case (c, _, _) =>
-              nameToIdx.get(c).flatMap(meta.statsMinMax(rgIdx, _)) }
-            val guaranteed = dataRuntime.isEmpty &&
-              (filePreds.isEmpty ||
-                ColePredicate.fullyKeepsRowGroup(rg, nameToIdx, filePreds))
-            (info.path, colIndices, rgIdx, rg.numRows,
-              colIndices.filter(_ >= 0).map(ci => rg.chunks(ci).totalSize).sum,
-              mm, guaranteed,
-              if (wantFileCol) info.partValues :+ (ColeUtil.FileMetaCol -> info.path)
-              else info.partValues)
-        }
-        }
+    // per surviving row group: (file, colIndices, rgIdx, rows, projected
+    // bytes, topN column min/max, every row passes)
+    val survivors = plan.files.flatMap { f =>
+      val meta = f.info.meta
+      val nameToIdx = meta.columns.map(_.name).zipWithIndex.toMap
+      val dirKeys = f.info.partValues.iterator.map(_._1).toSet
+      // per-field source over the WHOLE required schema: ConstSrc for
+      // metadata columns and anything THIS file's directory carries,
+      // -1 for absent (pre-evolution NULL/default), footer index else
+      val colIndices = required.fieldNames.map { n =>
+        if (n == ColeUtil.FileMetaCol || n == ColeUtil.PosMetaCol ||
+          dirKeys.contains(n)) ColeUtil.ConstSrc
+        else nameToIdx.getOrElse(n, -1)
+      }
+      val topCol = topN.flatMap { case (c, _, _) => nameToIdx.get(c) }
+      f.groups.indices.map { k =>
+        val rg = meta.rowGroups(f.groups(k))
+        (f, colIndices, f.groups(k), rg.numRows,
+          colIndices.filter(_ >= 0).map(ci => rg.chunks(ci).totalSize).sum,
+          topCol.flatMap(meta.statsMinMax(f.groups(k), _)), f.full(k))
       }
     }
     // ORDER BY col LIMIT n data skipping: at least n FILTER-SURVIVING rows
@@ -2313,12 +2181,10 @@ class ColeScan(fullSchema: StructType, required: StructType, path: String,
     // retained but never counted), so the threshold stays conservative.
     // deletion vectors: the planner holds each row group's EXACT deleted
     // count, so live-row lower bounds stay available for the counting
-    // prunes below (r10 — these used to switch off entirely under
-    // vectors). Stats remain physical: a deleted row may still supply a
-    // group's min/max, which only makes thresholds MORE conservative.
-    def liveRows(path: String, rgIdx: Int, rows: Int): Long =
-      rows - dvOf.get(path).map(a =>
-        if (a(rgIdx) == null) 0 else a(rgIdx).length).getOrElse(0).toLong
+    // prunes below. Stats remain physical: a deleted row may still supply
+    // a group's min/max, which only makes thresholds MORE conservative.
+    def liveRows(f: ColePlan.File, rgIdx: Int, rows: Int): Long =
+      rows - Option(f.deletedOf(rgIdx)).fold(0)(_.length).toLong
     val afterTopN = topN match {
       case Some((_, desc, n)) =>
         val withStats = survivors.filter(r => r._6.isDefined && r._7)
@@ -2344,12 +2210,14 @@ class ColeScan(fullSchema: StructType, required: StructType, path: String,
         }
       case _ => survivors
     }
-    val packed = afterTopN.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
+    val packed = afterTopN.groupBy(_._1.info.path).toSeq.sortBy(_._1).flatMap {
       case (file, rgs) =>
+        val f = rgs.head._1
         ColePack.pack(file, rgs.head._2,
-          rgs.map(r => (r._3, r._4, r._5)).sortBy(_._1), target,
-          predsOf.getOrElse(file, preds), rgs.head._8.toArray,
-          deletedOf = rg => dvOf.get(file).map(_(rg)).orNull)
+          rgs.map(r => (r._3, r._4, r._5)).sortBy(_._1), ColePack.targetBytes, f.preds,
+          (if (wantFileCol) f.info.partValues :+ (ColeUtil.FileMetaCol -> file)
+          else f.info.partValues).toArray,
+          deletedOf = f.deletedOf)
     }
     // typed partition keys make every InputPartition key-groupable —
     // outputPartitioning() reports the clustering these keys realize.
@@ -2370,21 +2238,13 @@ class ColeScan(fullSchema: StructType, required: StructType, path: String,
     val parts =
       if (!keyable) packed
       else packed.map(p => p.copy(partKey = partKeyRow(p.partValues)))
-    // a pushed LIMIT with no row-dropping predicates can stop planning
-    // once enough rows are covered, truncated at row-group granularity
-    // (Spark trims to the exact count above the scan). Guard on the
-    // EFFECTIVE per-file preds, not the raw claimed set: a claimed
-    // IsNotNull drops nothing on null-free files and is dropped per file
-    // above (r17 — always-nullable schemas mean Catalyst no longer folds
-    // `col IS NOT NULL` away, so the vacuity decision lives here now);
-    // partition predicates fully keep every surviving file.
+    // a pushed LIMIT can stop planning once enough rows are covered,
+    // truncated at row-group granularity (Spark trims to the exact count
+    // above the scan), when every planned row group passes every
+    // predicate whole: it then delivers EXACTLY rows − deleted(rg) rows.
     // skipOnly nonempty means a row-dropping residual filter exists above
     // the scan — never stop planning early on a pushed limit then.
-    // Deletion vectors compose (r10): a row group delivers EXACTLY
-    // rows − deleted(rg) rows when no predicate is claimed, so the
-    // covered count uses live rows and the truncation stays exact
-    if (limit >= 0 && dataRuntime.isEmpty && skipOnly.isEmpty &&
-        (preds.isEmpty || parts.forall(_.preds.isEmpty))) {
+    if (limit >= 0 && skipOnly.isEmpty && plan.files.forall(_.full.forall(identity))) {
       val out = scala.collection.mutable.ArrayBuffer[ColeInputPartition]()
       var covered = 0L
       val it = parts.iterator
@@ -2405,25 +2265,6 @@ class ColeScan(fullSchema: StructType, required: StructType, path: String,
     } else parts.toArray
   }
 
-  /** Skip a row group when some predicate eliminates every page of its
-    * column's chunk.
-    */
-  /** A runtime IN-set (eq per value, disjunctive) skips a row group only
-    * when EVERY value is excluded by EVERY page of that column's chunk.
-    */
-  private def skipRowGroupIn(rg: RowGroupMeta, nameToIdx: Map[String, Int],
-      inPreds: Array[ColePredicate]): Boolean =
-    inPreds.groupBy(_.column).exists { case (c, ps) =>
-      nameToIdx.get(c).exists { ci =>
-        val pages = rg.chunks(ci).pages
-        pages.nonEmpty && ps.forall(p => pages.forall(ph => p.canSkip(ph.stats)))
-      }
-    }
-
-  private def skipRowGroup(rg: RowGroupMeta, nameToIdx: Map[String, Int],
-      preds: Array[ColePredicate]): Boolean =
-    ColePredicate.skipRowGroup(rg, nameToIdx, preds)
-
   override def createReaderFactory(): PartitionReaderFactory =
     // exists-defaults ride the required schema's field metadata into the
     // readers (re-attached here: Spark's pruning may rebuild fields bare)
@@ -2442,19 +2283,16 @@ class ColeScan(fullSchema: StructType, required: StructType, path: String,
     */
   private lazy val tableTotals: (Long, Long) = {
     val infos = tableInfos
-    // deletion vectors: report LIVE row counts to AQE/CBO (exact —
-    // footer rows minus each file's vector count; sidecar reads are
-    // cached), so join-strategy decisions see the table's real size
-    val deleted: Long =
-      if (!dvMode) snapshot.map(_.dvs.valuesIterator.map(_.length.toLong).sum)
-        .getOrElse(0L)
-      else {
-        val (dfs, _) = ColeIO.resolve(path, conf)
-        infos.iterator.map(i =>
-          ColeDv.read(dfs, i.path, i.len, i.mtime)
-            .map(_.length.toLong).getOrElse(0L)).sum
-      }
-    (infos.map(_.len).sum, infos.map(_.meta.totalRows).sum - deleted)
+    // deletion vectors: report LIVE row counts to AQE/CBO (exact — the
+    // planner's surviving rows minus each group's vector count), so
+    // join-strategy decisions see the table's real size
+    val rows =
+      if (!dvMode && snapshot.forall(_.dvs.isEmpty)) infos.map(_.meta.totalRows).sum
+      else ColePlan.plan(path, conf, infos, snapshot, Array.empty).files.iterator
+        .flatMap(f => f.groups.iterator.map(g =>
+          f.info.meta.rowGroups(g).numRows - Option(f.deletedOf(g)).fold(0)(_.length).toLong))
+        .sum
+    (infos.map(_.len).sum, rows)
   }
 
   /** Per-column statistics for Spark's CBO, from footers alone (the same

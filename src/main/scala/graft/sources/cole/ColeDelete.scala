@@ -35,7 +35,7 @@ object ColeDelete {
   val splicedRowGroups = new java.util.concurrent.atomic.AtomicLong(0)
 
   def deleteWhere(spark: SparkSession, table: String, filters: Array[Filter],
-      partCols: Seq[String], conf: Configuration): Stats = {
+      conf: Configuration): Stats = {
     val predOpts = filters.map(f => f -> ColePredicate.fromFilter(f))
     val bad = predOpts.collect { case (f, None) => f }
     require(bad.isEmpty,
@@ -45,7 +45,7 @@ object ColeDelete {
     val preds = predOpts.flatMap(_._2)
     require(preds.nonEmpty,
       "DELETE with no condition: use TRUNCATE TABLE to empty a COLE table")
-    val plan = ColeRewrite.classify(table, preds, partCols, conf)
+    val plan = ColeRewrite.classify(table, preds, conf)
     if (plan.isEmpty) return Stats(plan.infos.size, plan.infos.size, 0, 0, 0L)
 
     // merge-on-read (vector) mode: no file is rewritten or dropped —

@@ -41,8 +41,8 @@ import org.apache.spark.sql.types.StructType
   * Same documented non-atomic window class as truncate/overwrite swaps.
   */
 class ColeDeltaOperation(cmd: RowLevelOperation.Command, path0: String,
-    partCols0: Seq[String], rowGroupSize: Int, conf0: Configuration)
-    extends ColeRowLevelOperation(cmd, path0, partCols0, rowGroupSize, conf0)
+    partCols0: Seq[String], conf0: Configuration)
+    extends ColeRowLevelOperation(cmd, path0, partCols0, conf0)
     with SupportsDelta {
 
   override def rowId(): Array[NamedReference] =

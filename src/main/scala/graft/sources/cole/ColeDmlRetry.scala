@@ -55,17 +55,6 @@ object ColeDmlRetry {
   val MaxRetriesKey = "graft.cole.dml.maxRetries"
   val DefaultMaxRetries = 3
 
-  /** Kill switch for the whole strategy (SQL conf, default on): false
-    * plans row-level DML exactly as without the extensions — the r12
-    * loud-reject behavior, and an attribution lever for benchmarks.
-    */
-  val EnabledKey = "graft.cole.dml.retry.enabled"
-
-  private[cole] def strategyEnabled: Boolean =
-    try org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(EnabledKey, "true") == "true"
-    catch { case _: Exception => true }
-
   /** Conflict re-executions performed — spec-visible. */
   val retries = new AtomicLong(0)
 
@@ -138,7 +127,7 @@ class ColeDmlRetryStrategy extends SparkStrategy {
     case rd: ReplaceData
         if rd.operation.isInstanceOf[ColeRowLevelOperation] &&
           rd.getTagValue(ColeDmlRetry.PlannedTag).isEmpty &&
-          !ColeDmlRetry.isReplanning && ColeDmlRetry.strategyEnabled =>
+          !ColeDmlRetry.isReplanning =>
       rd.setTagValue(ColeDmlRetry.PlannedTag, true)
       val op = rd.operation.asInstanceOf[ColeRowLevelOperation]
       // an eligible UPDATE or MERGE runs as a native columnar file rewrite
@@ -147,7 +136,7 @@ class ColeDmlRetryStrategy extends SparkStrategy {
     case wd: WriteDelta
         if wd.operation.isInstanceOf[ColeRowLevelOperation] &&
           wd.getTagValue(ColeDmlRetry.PlannedTag).isEmpty &&
-          !ColeDmlRetry.isReplanning && ColeDmlRetry.strategyEnabled =>
+          !ColeDmlRetry.isReplanning =>
       wd.setTagValue(ColeDmlRetry.PlannedTag, true)
       Seq(ColeDmlRetryExec(wd,
         wd.operation.asInstanceOf[ColeRowLevelOperation], planLater(wd)))

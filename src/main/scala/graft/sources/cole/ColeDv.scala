@@ -153,7 +153,15 @@ object ColeDv {
     * and fails loudly rather than resurrect or over-delete rows.
     */
   def read(fs: FileSystem, dataFile: String, len: Long,
-      mtime: Long): Option[Array[Int]] = {
+      mtime: Long): Option[Array[Int]] =
+    readWithId(fs, dataFile, len, mtime).map(_._2)
+
+  /** [[read]], with the sidecar's (len, mtime) as statted BEFORE its
+    * ordinals were read: a commit landing in between leaves the identity
+    * older than the live sidecar, so a drift check against it rejects.
+    */
+  def readWithId(fs: FileSystem, dataFile: String, len: Long,
+      mtime: Long): Option[((Long, Long), Array[Int])] = {
     val p = new HPath(sidecarPath(dataFile))
     val key = fs.makeQualified(p).toString
     val st = try Some(fs.getFileStatus(p))
@@ -167,13 +175,13 @@ object ColeDv {
           case Some((m1, l1, dLen, dMtime, v))
               if m1 == status.getModificationTime && l1 == status.getLen =>
             checkIdentity(dataFile, dLen, dMtime, len, mtime)
-            Some(v)
+            Some(((status.getLen, status.getModificationTime), v))
           case _ =>
             val (dLen, dMtime, out) = parsePinned(fs, p)
             checkIdentity(dataFile, dLen, dMtime, len, mtime)
             cache.put(key,
               (status.getModificationTime, status.getLen, dLen, dMtime, out))
-            Some(out)
+            Some(((status.getLen, status.getModificationTime), out))
         }
     }
   }

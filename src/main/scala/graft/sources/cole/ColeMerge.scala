@@ -114,7 +114,7 @@ object ColeMerge {
         !insert.forall(_.forall(ColeNativeDml.pure(_, source.outputSet))) ||
         !ColeNativeDml.fits(table, attrs, op, filters.toArray, assigned.map(_._1)))
       return None
-    Some(ColeMergeExec(op.path, op.partCols, op.rowGroupSize, filters.toArray, attrs,
+    Some(ColeMergeExec(op.path, op.partCols, filters.toArray, attrs,
       source, keys.toSeq, assigned, insert))
   }
 }
@@ -128,7 +128,7 @@ object ColeMerge {
   * @param inserts per table column, the value an unmatched source row
   *                inserts; None without a `WHEN NOT MATCHED` clause
   */
-case class ColeMergeExec(path: String, partCols: Seq[String], rowGroupSize: Int,
+case class ColeMergeExec(path: String, partCols: Seq[String],
     filters: Array[Filter], attrs: Seq[Attribute], source: LogicalPlan,
     keys: Seq[(Attribute, Expression)], assignments: Seq[(Attribute, Expression)],
     inserts: Option[Seq[Expression]]) extends ColeNativeDmlExec {
@@ -167,7 +167,7 @@ case class ColeMergeExec(path: String, partCols: Seq[String], rowGroupSize: Int,
           Seq(GreaterThanOrEqual(first.name, ls.min), LessThanOrEqual(first.name, ls.max))
       }
     val classified = ColeRewrite.classify(path,
-      (filters ++ keyFilters).flatMap(ColePredicate.fromFilter), partCols, conf)
+      (filters ++ keyFilters).flatMap(ColePredicate.fromFilter), conf)
     // no non-NULL key: no target row can match
     val plan = if (firstValues.nonEmpty) classified
       else classified.copy(whole = Nil, partial = Nil, filePreds = Map.empty)
@@ -175,7 +175,9 @@ case class ColeMergeExec(path: String, partCols: Seq[String], rowGroupSize: Int,
       (matched: java.util.BitSet, scratch: String, prefix: String) =>
         val proj = UnsafeProjection.create(exprs, srcOut)
         val out = rows.indices.filterNot(matched.get).map(i => proj(rows(i)).copy())
-        if (out.isEmpty) Nil else writeRows(out, scratch, prefix, conf)
+        if (out.isEmpty) Nil
+        else writeRows(out, scratch, prefix, conf,
+          ColeRowLevelOperation.rowGroupSizeOf(classified.infos))
     }
     val st =
       if (plan.isEmpty && adds.isEmpty) plan.untouched
@@ -193,7 +195,7 @@ case class ColeMergeExec(path: String, partCols: Seq[String], rowGroupSize: Int,
 
   /** Writes `rows` through the table's write factory, under `scratch`. */
   private def writeRows(rows: Seq[InternalRow], scratch: String, prefix: String,
-      conf: Configuration): Seq[ColeWrittenFile] = {
+      conf: Configuration, rowGroupSize: Int): Seq[ColeWrittenFile] = {
     val schema = DataTypeUtils.fromAttributes(attrs)
     val bucketSpec = ColeBucket.readSpec(path, conf)
     val bucketDerive = ColeBucket.readDerivation(path, conf)

@@ -88,7 +88,7 @@ object ColeRewrite {
     def sourceMatched: Array[Int] = Array.emptyIntArray
   }
 
-  /** Driver-side classification of the live files against `preds`. */
+  /** Driver-side classification of the live files ([[classify]]). */
   final case class Plan(infos: Seq[ColeMetaCache.FileInfo],
       /** every row matches */
       whole: Seq[ColeMetaCache.FileInfo],
@@ -100,61 +100,21 @@ object ColeRewrite {
     def untouched: Stats = Stats(infos.size, infos.size, 0, 0, 0L, 0L, 0)
   }
 
-  def classify(table: String, preds: Array[ColePredicate], partCols: Seq[String],
-      conf: Configuration): Plan = {
+  /** The live files against `preds`, as a fold over the table's
+    * [[ColePlan]]: a file with no surviving row group stays untouched, one
+    * whose every row group survives fully matches whole, any other one is
+    * partial.
+    */
+  def classify(table: String, preds: Array[ColePredicate], conf: Configuration): Plan = {
     val (fs, _) = ColeIO.resolve(table, conf)
     // resolve any interrupted earlier swap before trusting the listing
     ColeSwap.recoverTable(fs, table, conf,
       ColeIO.listPartitioned(table, conf).map(_._1.getPath.getParent).distinct)
-
     val infos = ColeMetaCache.infos(table, conf)
-    // split on the columns EVERY file serves from its directory, not the
-    // declared partCols: under partition-spec evolution (ColePartEvolve)
-    // a declared partition column may still be DATA in older files —
-    // those resolve per file below
-    val dirAlways: Set[String] =
-      if (infos.isEmpty) partCols.toSet
-      else infos.iterator.map(_.partValues.iterator.map(_._1).toSet).reduce(_ & _)
-    val (partPreds, dataPreds) = preds.partition(p => dirAlways.contains(p.column))
-    // equality/IN on the bucket column(s) pins hash buckets: files in
-    // other buckets cannot contain a matching row regardless of stats —
-    // per ERA on evolved layouts, each era judged by its own key
-    val bucketKeeps: Map[String, Set[String]] = ColeBucket.keepsByEra(
-      ColeBucket.readHistory(table, conf), dataPreds.toSeq)
-    val Untouched = 0; val Whole = 1; val Partial = 2
-    val classified = infos.map { info =>
-      val pv = info.partValues.toMap
-      val partHit = partPreds.forall(p =>
-        pv.get(p.column).exists(ColePredicate.partitionKeeps(p, _)))
-      // partition-spec duality (ColePartEvolve): a pred column THIS file
-      // serves from its directory decides the whole file by that value —
-      // constant-true for survivors, so row matching uses the remaining
-      // file-local preds only
-      val (dirPs, filePs) = dataPreds.partition(p => pv.contains(p.column))
-      val cls =
-        if (!partHit) Untouched
-        else if (!dirPs.forall(p =>
-          ColePredicate.partitionKeeps(p, pv(p.column)))) Untouched
-        else if (ColeBucket.pruneFile(pv, bucketKeeps)) Untouched
-        else {
-          val meta = info.meta
-          val nameToIdx = meta.columns.map(_.name).zipWithIndex.toMap
-          // a file written before a predicate column existed stores NULL
-          // for it on every row; NULL never satisfies a condition
-          if (filePs.exists(p => !nameToIdx.contains(p.column))) Untouched
-          else if (filePs.nonEmpty && meta.rowGroups.forall(rg =>
-              ColePredicate.skipRowGroup(rg, nameToIdx, filePs))) Untouched
-          else if (filePs.isEmpty || meta.rowGroups.forall(rg =>
-              ColePredicate.fullyKeepsRowGroup(rg, nameToIdx, filePs)))
-            Whole
-          else Partial
-        }
-      (info, cls, filePs)
-    }
-    Plan(infos,
-      classified.collect { case (i, c, _) if c == Whole => i },
-      classified.collect { case (i, c, _) if c == Partial => i },
-      classified.collect { case (i, c, ps) if c != Untouched => i.path -> ps }.toMap)
+    val files = ColePlan.plan(table, conf, infos, None, preds).files
+    val (whole, partial) = files.partition(_.whole)
+    Plan(infos, whole.map(_.info), partial.map(_.info),
+      files.map(f => f.info.path -> f.preds).toMap)
   }
 
   /** One task's outcome over a run of `file`'s row groups: `changed`

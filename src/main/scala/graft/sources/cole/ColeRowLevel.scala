@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsRuntimeFiltering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -50,7 +50,7 @@ import graft.sources.cole.ColeFormat._
   */
 class ColeRowLevelOperation(cmd: RowLevelOperation.Command,
     private[cole] val path: String, private[cole] val partCols: Seq[String],
-    private[cole] val rowGroupSize: Int, private[cole] val conf: Configuration,
+    private[cole] val conf: Configuration,
     /** Write-audit-publish routing (r15): with the session's
       * `graft.cole.write.branch` conf set, row-level DML reads the
       * BRANCH state (fork snapshot minus masks, plus staged files) and
@@ -113,6 +113,10 @@ class ColeRowLevelOperation(cmd: RowLevelOperation.Command,
     }
   }
 
+  /** The row count replacement files cut row groups at. */
+  private[cole] lazy val rowGroupSize: Int =
+    ColeRowLevelOperation.rowGroupSizeOf(ColeMetaCache.infos(path, conf))
+
   @volatile private var recovered = false
 
   /** Resolves interrupted swaps before the group scan first trusts a
@@ -134,7 +138,7 @@ class ColeRowLevelOperation(cmd: RowLevelOperation.Command,
     Array(Expressions.column(ColeUtil.FileMetaCol))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ColeGroupScanBuilder(this, path, conf, partCols)
+    new ColeGroupScanBuilder(this, path, conf)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new ColeReplaceWrite(this, info.schema(), path, rowGroupSize, conf,
@@ -143,11 +147,12 @@ class ColeRowLevelOperation(cmd: RowLevelOperation.Command,
   override def description(): String = s"ColeRowLevel[$cmd] $path"
 }
 
-class ColeRowLevelOperationBuilder(info: RowLevelOperationInfo, path: String,
-    partCols: Seq[String], rowGroupSize: Int, conf: Configuration)
-    extends RowLevelOperationBuilder {
-  override def build(): RowLevelOperation =
-    new ColeRowLevelOperation(info.command(), path, partCols, rowGroupSize, conf)
+object ColeRowLevelOperation {
+  /** The largest row group `infos` hold, so rewritten rows keep the
+    * table's pruning grain; the writers' default for an empty table.
+    */
+  def rowGroupSizeOf(infos: Seq[ColeMetaCache.FileInfo]): Int =
+    infos.iterator.flatMap(_.meta.rowGroups.iterator.map(_.numRows)).maxOption.getOrElse(65536)
 }
 
 /** Scan builder for the group scan: filters are accepted only as FILE
@@ -155,7 +160,7 @@ class ColeRowLevelOperationBuilder(info: RowLevelOperationInfo, path: String,
   * the row-level semantics in the rewritten query plan).
   */
 class ColeGroupScanBuilder(op: ColeRowLevelOperation, path: String,
-    conf: Configuration, partCols: Seq[String])
+    conf: Configuration)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
@@ -176,7 +181,7 @@ class ColeGroupScanBuilder(op: ColeRowLevelOperation, path: String,
 
   override def build(): Scan = {
     require(required != null, "group scan built before column pruning")
-    new ColeGroupScan(op, required, path, conf, partCols.toSet, classifiers)
+    new ColeGroupScan(op, required, path, conf, classifiers)
   }
 }
 
@@ -186,8 +191,7 @@ class ColeGroupScanBuilder(op: ColeRowLevelOperation, path: String,
   * rides the partition-constant mechanism (injected into partValues).
   */
 class ColeGroupScan(op: ColeRowLevelOperation, required: StructType,
-    path: String, conf: Configuration, partCols: Set[String],
-    classifiers: Array[ColePredicate])
+    path: String, conf: Configuration, classifiers: Array[ColePredicate])
     extends Scan with Batch with SupportsRuntimeFiltering {
 
   private val hconf = new ColeHadoopConf(conf)
@@ -233,70 +237,28 @@ class ColeGroupScan(op: ColeRowLevelOperation, required: StructType,
     // snapshot minus DML masks, plus live staged files. A fork snapshot
     // carrying deletion vectors is rejected (a group rewrite blind to
     // them would resurrect vectored-away rows): compact main first.
-    val infos = op.branch match {
+    val (infos, snapshot) = op.branch match {
       case None =>
         op.recoverOnce()
-        ColeMetaCache.infos(path, conf)
+        (ColeMetaCache.infos(path, conf), None)
       case Some(b) =>
         val (is, dvs) = ColeRefs.branchInfos(path, conf, b)
         require(dvs.isEmpty,
           s"row-level DML on branch '$b' is not supported while the fork " +
             "snapshot carries deletion vectors — run " +
             "CALL <catalog>.system.compact on main, re-branch, and retry")
-        is
+        (is, Some(ColeSnapshot(is, bucketHistory = ColeBucket.readHistory(path, conf))))
     }
-    val defaulted = ColeDefaults.existsDefaults(path, conf).keySet
-    // split on the columns EVERY file serves from its directory, not the
-    // table's declared partCols: under identity partition-spec evolution
-    // (ColePartEvolve) a declared partition column may still be DATA in
-    // pre-evolution files — those resolve per file below
-    val dirAlways: Set[String] =
-      if (infos.isEmpty) partCols.toSet
-      else infos.iterator.map(_.partValues.iterator.map(_._1).toSet)
-        .reduce(_ & _)
-    val (partPreds, dataPreds) =
-      classifiers.partition(p => dirAlways.contains(p.column))
-    val bucketKeeps: Map[String, Set[String]] = ColeBucket.keepsByEra(
-      ColeBucket.readHistory(path, conf), dataPreds.toSeq)
-    val candidates = infos.filter { info =>
-      val pv = info.partValues.toMap
-      runtimeFiles.forall(_.contains(info.path)) &&
-        !ColeBucket.pruneFile(pv, bucketKeeps) &&
-        partPreds.forall(p =>
-          pv.get(p.column).exists(ColePredicate.partitionKeeps(p, _))) && {
-          val meta = info.meta
-          val nameToIdx = meta.columns.map(_.name).zipWithIndex.toMap
-          // duality lanes: a pred column THIS file dir-serves decides
-          // the whole file by its directory value
-          val (dirPs, dataPs) = dataPreds.partition(p => pv.contains(p.column))
-          if (!dirPs.forall(p =>
-              ColePredicate.partitionKeeps(p, pv(p.column)))) false
-          // a predicate column this file predates stores NULL everywhere:
-          // no row can match, the file stays untouched — UNLESS the column
-          // carries an exists-default (its rows read that constant, which
-          // the condition may match): then the pred just can't classify,
-          // the file stays a candidate and Spark's residual condition
-          // decides row-exactly above the default-filled scan
-          else if (dataPs.exists(p => !nameToIdx.contains(p.column) &&
-              !defaulted(p.column))) false
-          else !(dataPs.nonEmpty && meta.rowGroups.forall(rg =>
-            ColePredicate.skipRowGroup(rg, nameToIdx, dataPs)))
-        }
-    }
-    // merge-on-read deletion vectors apply to the group scan too: a
-    // rewrite materializes only LIVE rows (and the replace commit drops
-    // the replaced files' vectors with the files)
-    val dvMode = ColeDv.vectorMode(path, conf)
-    val (dfs, _) = ColeIO.resolve(path, conf)
-    // sidecar identities, statted BEFORE the ordinal read: a commit
-    // landing in between leaves a recorded identity OLDER than the live
-    // sidecar, so the delta commit's drift check rejects (conservative
-    // direction — never a stale plan passing as fresh)
-    val dvIdent = scala.collection.mutable.HashMap.empty[String, Option[(Long, Long)]]
-    val perFile: Seq[(String, Seq[ColeInputPartition])] = candidates.map { info =>
-      val meta = info.meta
+    // candidate files: those with a row group the classifiers may touch,
+    // restricted by the runtime group filter. Merge-on-read deletion
+    // vectors apply here too: a rewrite materializes only LIVE rows (and
+    // the replace commit drops the replaced files' vectors with the files)
+    val plan = ColePlan.plan(path, conf, infos, snapshot, classifiers)
+    val candidates = plan.files.filter(f => runtimeFiles.forall(_.contains(f.info.path)))
+    val perFile: Seq[(String, Seq[ColeInputPartition])] = candidates.map { f =>
+      val meta = f.info.meta
       val nameToIdx = meta.columns.map(_.name).zipWithIndex.toMap
-      val dirKeys = info.partValues.iterator.map(_._1).toSet
+      val dirKeys = f.info.partValues.iterator.map(_._1).toSet
       // per-field source (see ColeUtil.ConstSrc): directory-served
       // columns are per-file under spec evolution
       val colIndices = required.fieldNames.map { n =>
@@ -304,24 +266,15 @@ class ColeGroupScan(op: ColeRowLevelOperation, required: StructType,
           dirKeys.contains(n)) ColeUtil.ConstSrc
         else nameToIdx.getOrElse(n, -1)
       }
-      val pv = (info.partValues :+ (ColeUtil.FileMetaCol -> info.path)).toArray
-      if (dvMode) dvIdent(info.path) =
-        try {
-          val st = dfs.getFileStatus(new HPath(ColeDv.sidecarPath(info.path)))
-          Some((st.getLen, st.getModificationTime))
-        } catch { case _: java.io.FileNotFoundException => None }
-      val dv: Array[Array[Int]] =
-        if (!dvMode) null
-        else ColeDv.read(dfs, info.path, info.len, info.mtime)
-          .map(ColeDv.localize(meta, _)).orNull
       // whole file, every row group, NO selection predicates — rows of a
       // replaced group that don't match the condition must survive
-      info.path -> ColePack.pack(info.path, colIndices,
+      f.info.path -> ColePack.pack(f.info.path, colIndices,
         meta.rowGroups.zipWithIndex.map { case (rg, rgIdx) =>
           (rgIdx, rg.numRows,
             colIndices.filter(_ >= 0).map(ci => rg.chunks(ci).totalSize).sum)
-        }, ColePack.targetBytes, Array.empty, pv,
-        deletedOf = rg => if (dv == null) null else dv(rg))
+        }, ColePack.targetBytes, Array.empty,
+        (f.info.partValues :+ (ColeUtil.FileMetaCol -> f.info.path)).toArray,
+        deletedOf = f.deletedOf)
     }
     // slice indices = positions in the returned array; the per-file map
     // lets commit fold slice fingerprints back into per-file ones
@@ -330,9 +283,13 @@ class ColeGroupScan(op: ColeRowLevelOperation, required: StructType,
       val idxs = ps.indices.map(_ + next); next += ps.size; f -> idxs
     }.toMap
     // the replacement contract: commit swaps EXACTLY what was planned
-    op.recordPlanned(candidates.map(i => (i.path, i.len, i.mtime)), slices,
+    // the sidecar identities the vectors were read at: a later commit to
+    // a sidecar fails the delta commit's drift check
+    op.recordPlanned(candidates.map(f => (f.info.path, f.info.len, f.info.mtime)), slices,
       sliceAcc, ColeRowHash.hashableNames(required),
-      authoritative = runtimeFiles.isDefined, dvs = dvIdent.toMap)
+      authoritative = runtimeFiles.isDefined,
+      dvs = plan.sidecars.fold(Map.empty[String, Option[(Long, Long)]])(ids =>
+        candidates.map(f => f.info.path -> ids.get(f.info.path)).toMap))
     perFile.flatMap(_._2).zipWithIndex.map { case (p, i) =>
       ColeSlicedPartition(i, p): InputPartition
     }.toArray

@@ -167,16 +167,11 @@ object ColeTemporal {
     * `=`→`=`, `>`/`>=`→`>=`, `<`/`<=`→`<=`, IN→IN, same-column OR→OR;
     * everything else declines (no pruning, never a wrong prune). The
     * ORIGINAL predicates stay in the data set — stats skipping and
-    * row-exact selection make the boundary exact.
-    */
-  def derivePartPreds(preds: Seq[ColePredicate],
-      spec: Option[Spec]): Seq[ColePredicate] =
-    derivePartPreds(preds, spec.toSeq)
-
-  /** Spec-history overload (r12 evolution): derive for EVERY spec — each
-    * file carries exactly one spec's derived key, and the pruning check
-    * keeps files that lack a predicate's key, so mixed-era tables prune
-    * each era by its own transform and never wrongly.
+    * row-exact selection make the boundary exact. Derived for EVERY spec
+    * of the history: each file carries exactly one spec's derived key,
+    * and the pruning check keeps files that lack a predicate's key, so
+    * mixed-era tables prune each era by its own transform and never
+    * wrongly.
     */
   def derivePartPreds(preds: Seq[ColePredicate],
       specs: Seq[Spec]): Seq[ColePredicate] =

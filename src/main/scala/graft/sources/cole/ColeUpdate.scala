@@ -78,7 +78,7 @@ object ColeUpdate {
     if (!assigned.forall { case (_, e) => ColeNativeDml.pure(e, AttributeSet(attrs)) } ||
         !ColeNativeDml.fits(table, attrs, op, filters, assigned.map(_._1)))
       return None
-    Some(ColeUpdateExec(op.path, op.partCols, filters, attrs, assigned))
+    Some(ColeUpdateExec(op.path, filters, attrs, assigned))
   }
 }
 
@@ -193,8 +193,7 @@ trait ColeNativeDmlExec extends LeafV2CommandExec {
 }
 
 /** Physical UPDATE on the [[ColeRewrite]] engine. */
-case class ColeUpdateExec(path: String, partCols: Seq[String],
-    filters: Array[Filter], attrs: Seq[Attribute],
+case class ColeUpdateExec(path: String, filters: Array[Filter], attrs: Seq[Attribute],
     assignments: Seq[(Attribute, Expression)]) extends ColeNativeDmlExec {
 
   override lazy val metrics: Map[String, SQLMetric] = rewriteMetrics()
@@ -206,8 +205,7 @@ case class ColeUpdateExec(path: String, partCols: Seq[String],
 
   override def attempt(): ColeRewrite.Stats = {
     val conf = ColeIO.driverConf()
-    val plan = ColeRewrite.classify(path, filters.flatMap(ColePredicate.fromFilter),
-      partCols, conf)
+    val plan = ColeRewrite.classify(path, filters.flatMap(ColePredicate.fromFilter), conf)
     val st =
       if (plan.isEmpty) plan.untouched
       else {

@@ -89,7 +89,7 @@ class ColeDeleteSpec extends AnyFunSuite {
       .write.format("cole").mode("overwrite").save(dir)
     val stats = ColeDelete.deleteWhere(spark, dir,
       Array(org.apache.spark.sql.sources.LessThan("id", 2000L)),
-      Seq.empty, ColeIO.driverConf())
+      ColeIO.driverConf())
     assert(stats.filesDropped >= 1, s"expected whole-file drops, got $stats")
     assert(stats.filesRewritten <= 1, s"at most the boundary file rewrites: $stats")
     assert(stats.rowsDeleted === 2000L)
@@ -197,7 +197,7 @@ class ColeDeleteSpec extends AnyFunSuite {
       val r = intercept[Exception] {
         ColeDelete.deleteWhere(spark, dir,
           Array(org.apache.spark.sql.sources.LessThan("id", 10L)),
-          Seq.empty, ColeIO.driverConf())
+          ColeIO.driverConf())
       }
       def msgs(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))

@@ -69,7 +69,7 @@ class ColeVersionsSpec extends AnyFunSuite {
 
     ColeDelete.deleteWhere(spark, dir,
       Array(org.apache.spark.sql.sources.GreaterThan("l_orderkey", 750L)),
-      Seq.empty, conf) // v2
+      conf) // v2
     val afterCnt = spark.read.format("cole").load(dir).count()
     assert(afterCnt === li.filter(col("l_orderkey") <= 750).count())
 
@@ -109,7 +109,7 @@ class ColeVersionsSpec extends AnyFunSuite {
     ColeVersions.enable(dir, conf)
     ColeDelete.deleteWhere(spark, dir,
       Array(org.apache.spark.sql.sources.LessThan("l_orderkey", 750L)),
-      Seq.empty, conf)
+      conf)
     val expect = li.filter(col("l_orderkey") < 500)
       .agg(sum("l_quantity").as("s")).head().get(0)
     // the deleted range only exists in the snapshot
@@ -143,7 +143,7 @@ class ColeVersionsSpec extends AnyFunSuite {
     ColeVersions.enable(dir, conf)
     ColeDelete.deleteWhere(spark, dir,
       Array(org.apache.spark.sql.sources.GreaterThan("l_orderkey", 750L)),
-      Seq.empty, conf)
+      conf)
     val liveCnt = spark.read.format("cole").load(dir).count()
     assert(readAsOf(dir, 1).count() > liveCnt)
 
@@ -356,7 +356,7 @@ class ColeVersionsSpec extends AnyFunSuite {
     ColeVersions.enable(dir, conf)
     ColeDelete.deleteWhere(spark, dir,
       Array(org.apache.spark.sql.sources.GreaterThan("l_orderkey", 750L)),
-      Seq.empty, conf) // v2 = delete
+      conf) // v2 = delete
     val e = intercept[IllegalArgumentException] {
       spark.read.format("cole").option("changesFrom", "1").load(dir).count()
     }
