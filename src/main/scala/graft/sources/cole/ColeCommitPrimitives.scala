@@ -31,7 +31,7 @@ import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path => HPath}
   *    The implementation must guarantee: at most one success per path,
   *    losers raise `FileAlreadyExistsException`.
   *
-  * Retire/unretire renames need only non-overwriting rename to a unique
+  * Retire renames need only non-overwriting rename to a unique
   * destination (no atomicity across files); object stores that copy+
   * delete satisfy it because destinations are never contended.
   */

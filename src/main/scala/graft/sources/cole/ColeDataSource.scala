@@ -298,15 +298,16 @@ private[cole] object ColeUtil {
     * rejects per value. Auto-select v2 for exactly those writes, so an
     * evolved table stays writable without a hand-passed option; tables
     * with no evolved columns keep their reference-byte-compatible v1
-    * writes. An explicit formatVersion always wins.
+    * writes. An explicit formatVersion always wins. Files whose directory
+    * values `replaced` picks (an overwrite's) do not count: the new rows
+    * never sit beside them.
     */
   def evolvedWriteConf(conf: Configuration, path: String,
-      schema: StructType, partCols: Seq[String]): Configuration = {
+      schema: StructType, partCols: Seq[String],
+      replaced: Map[String, String] => Boolean = _ => false): Configuration = {
     if (conf.get(ColeFileWriter.VersionKey) != null) return conf
     val stored = schema.fieldNames.filterNot(partCols.contains)
-    val infos =
-      try ColeMetaCache.infos(path, conf)
-      catch { case _: Exception => Seq.empty } // empty/new table: no files
+    val infos = ColeMetaCache.infos(path, conf).filterNot(i => replaced(i.partValues.toMap))
     val evolved = infos.nonEmpty && stored.exists(n =>
       infos.exists(i => !i.meta.columns.exists(_.name == n) &&
         !i.renamed.contains(n)))
@@ -505,7 +506,7 @@ class ColeTable(schema: StructType, writePartCols: Seq[String],
     }
   }
 
-  /** SQL `TRUNCATE TABLE`: drop every data file (and bloom sidecar),
+  /** SQL `TRUNCATE TABLE`: swap every data file (and its sidecars) out,
     * keep the layout sidecars — the emptied table re-fills under the
     * same partitioning/bucketing contract.
     */
@@ -530,14 +531,7 @@ class ColeTable(schema: StructType, writePartCols: Seq[String],
       writePartCols, ColeCatalog.droppedColumns(path, conf),
       ColeCatalog.renames(path, conf))
     val (fs, _) = ColeIO.resolve(path, conf)
-    val stamp = java.lang.Long.toHexString(System.nanoTime())
-    val versioned = ColeVersions.enabled(path, conf)
-    val removed = ColeIO.listPartitioned(path, conf).flatMap { case (st, _) =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        ColeBloomIndex.sidecarPath(st.getPath.toString)), false)
-      ColeVersions.retireOrDelete(fs, path, st.getPath.toString, stamp, versioned)
-    }
-    ColeVersions.commitIfEnabled(path, conf, "truncate", Seq.empty, removed)
+    ColeSwap.replace(fs, path, conf, "truncate", ColeSwap.newStamp(), Nil, (_, _) => true)(())
     true
   }
 
@@ -2655,7 +2649,7 @@ class ColeWriteBuilder(schema: StructType, path: String, rowGroupSize: Int,
   private var overwriteFilters: Array[Filter] = Array.empty
 
   override def truncate(): WriteBuilder = {
-    // overwrite deletes the LISTED (local) files — on a zero-copy clone
+    // overwrite replaces the LISTED (local) files — on a zero-copy clone
     // the foreign half would survive the "overwrite"
     ColeClone.requireLocal(path, conf, "overwrite/truncate writes")
     doTruncate = true; this
@@ -2663,9 +2657,9 @@ class ColeWriteBuilder(schema: StructType, path: String, rowGroupSize: Int,
 
   /** INSERT OVERWRITE with a static partition spec (or an explicit
     * overwrite condition): supported when every predicate targets hive
-    * partition columns — the matching partitions' files delete before
-    * the write, everything else is untouched. Row-level conditions are
-    * rejected (COLE rewrites partitions, not rows).
+    * partition columns — the matching partitions' files leave through
+    * the commit's swap, everything else is untouched. Row-level
+    * conditions are rejected (COLE rewrites partitions, not rows).
     */
   override def overwrite(filters0: Array[Filter]): WriteBuilder = {
     ColeClone.requireLocal(path, conf, "INSERT OVERWRITE")
@@ -2705,7 +2699,8 @@ class ColeWriteBuilder(schema: StructType, path: String, rowGroupSize: Int,
     // exactly — pre-existing files keep their routing, so a silently
     // rewritten sidecar would corrupt bucket pruning and
     // storage-partitioned joins for every row written before it.
-    // Truncate/overwrite may re-layout (old files are deleted).
+    // A truncating overwrite may re-layout: its files land in a new
+    // bucket era (ColeBatchWrite) and the old ones leave at its swap.
     if (!doTruncate && !dynamicOverwrite && overwriteFilters.isEmpty) {
       ColeBucket.readSpec(path, conf).foreach { existing =>
         require(bucketSpec.contains(existing),
@@ -2862,12 +2857,12 @@ object ColeFileNaming {
   }
 
   /** Deferred: the driver renames to `<prefix>part-…` at job commit, after
-    * its transactional bookkeeping — what keeps row-level REPLACE and
-    * merge-on-read files invisible to concurrent readers (and tailing
-    * streams) until the commit is durable. The prefix carries a driver
-    * stamp (`replace-<stamp>-`, `delta-<stamp>-`): task ids restart per
-    * application, so without it a later rewrite could mint the exact name
-    * of a file it replaces.
+    * its transactional bookkeeping — what keeps row-level REPLACE,
+    * merge-on-read and overwrite files invisible to concurrent readers
+    * (and tailing streams) until the commit is durable. The prefix carries a driver
+    * stamp (`replace-<stamp>-`, `delta-<stamp>-`, `overwrite-<stamp>-`):
+    * task ids restart per application, so without it a later rewrite
+    * could mint the exact name of a file it replaces.
     */
   final case class Deferred(prefix: String) extends ColeFileNaming {
     def paths(dir: String, partitionId: Int, taskId: Long, epochId: Long,
@@ -2894,10 +2889,10 @@ object ColeFileNaming {
 /** Driver-side write preparation shared by batch appends/overwrites and
   * the streaming sink: schema and column guards, partition/bucket/
   * temporal validation, branch rules, first-declaration layout sidecars,
-  * the evolved-table format version and CHECK compilation. `clearOld`
-  * runs once every check has passed and before the layout sidecars and
-  * the write conf resolve (the batch truncate/overwrite retires the old
-  * files there, so the conf sees the table as the new data will).
+  * the evolved-table format version and CHECK compilation. An overwrite
+  * passes the directory values of the files it `replaced` (the format
+  * version is judged on the files its rows will sit beside) and, when it
+  * re-lays the table out, the bucket era key its files route under.
   */
 private[cole] object ColeWritePrep {
   def factory(schema: StructType, path: String, rowGroupSize: Int,
@@ -2905,8 +2900,9 @@ private[cole] object ColeWritePrep {
       bucketSpec: Option[(Int, Seq[String])],
       bucketDerive: Option[(String, Seq[String])],
       temporal: Option[ColeTemporal.Spec], branch: Option[String],
-      naming: ColeFileNaming, resetLayout: Boolean = false)(
-      clearOld: => Unit = ()): ColeWriterFactory = {
+      naming: ColeFileNaming,
+      replaced: Map[String, String] => Boolean = _ => false,
+      newEraKey: Option[String] = None): ColeWriterFactory = {
     ColeUtil.toColeColumns(schema)
     // a DROPPED column name must not come back through a path-based append:
     // old footers still store its former values and resolution would
@@ -2970,15 +2966,13 @@ private[cole] object ColeWritePrep {
           "lives on main): lay the table out first, then branch")
       ColeRefs.branchFork(path, conf, b) // still exists, or loud
     }
-    clearOld
     // the layout self-describes: persist the bucket/temporal spec BEFORE
     // any data lands, so a concurrent reader never sees derived-layout
     // files without the sidecar that explains them. First declaration
-    // (or a truncating overwrite, which legitimately resets the layout)
     // only: an append into an EVOLVED table resolves the active era, and
     // re-persisting it as a singleton would wipe the era history the
     // old-era files still prune by (r13)
-    if (resetLayout || ColeBucket.readHistory(path, conf).isEmpty)
+    if (ColeBucket.readHistory(path, conf).isEmpty)
       bucketSpec.foreach { case (n, cs) =>
         ColeBucket.writeSpec(path, conf, n, cs, bucketDerive) }
     if (ColeTemporal.readSpecs(path, conf).isEmpty)
@@ -2992,11 +2986,12 @@ private[cole] object ColeWritePrep {
       // evolved tables auto-write v2 (new columns carry NULLs for rows
       // landing beside pre-evolution files); others stay v1-compatible
       new ColeHadoopConf(ColeUtil.evolvedWriteConf(conf, path, schema,
-        partCols)),
+        partCols, replaced)),
       partCols, bucketSpec, bucketDerive,
       // CHECK constraints compile once here on the driver; executors
       // evaluate bound predicates per row (identity when none declared)
-      ColeChecks.forWrite(path, conf, schema), temporal, dataRoot, naming)
+      ColeChecks.forWrite(path, conf, schema), temporal, dataRoot, naming,
+      newEraKey)
   }
 }
 
@@ -3010,111 +3005,87 @@ class ColeBatchWrite(schema: StructType, path: String, rowGroupSize: Int,
     branch: Option[String] = None)
     extends BatchWrite {
 
-  // versioning bookkeeping (no-ops on unversioned tables): files the
-  // truncate/overwrite paths retired, rolled back on abort, recorded
-  // with the adds at commit
-  private val retired = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-  private val retireStamp = java.lang.Long.toHexString(System.nanoTime())
+  private val overwrite = truncate || dynamicOverwrite || overwriteFilters.nonEmpty
+  private val stamp = ColeSwap.newStamp()
+  private val overwritePreds = overwriteFilters.flatMap(ColePredicate.fromFilter)
+  // a truncating overwrite that declares another bucket layout: its files
+  // route under the next era, which its commit appends to the sidecar
+  private lazy val newEra: Option[Int] = bucketSpec.filter(_ => truncate).flatMap { case (n, cs) =>
+    val history = ColeBucket.readHistory(path, conf)
+    val active = history.lastOption.map(e => (e.n, e.cols, e.derive))
+    if (active.exists(_ != ((n, cs, bucketDerive)))) Some(history.size) else None
+  }
+
+  /** Whether the live files of a directory (by its values) are ones this
+    * write replaces, as far as is known before it runs: every file for a
+    * truncate, the matching partitions' for a static overwrite (the
+    * builder validated every predicate hits a partition column). A
+    * dynamic overwrite learns its directories at commit.
+    */
+  private def replaced(pv: Map[String, String]): Boolean =
+    truncate || overwritePreds.nonEmpty && overwritePreds.forall(p =>
+      pv.get(p.column).exists(ColePredicate.partitionKeeps(p, _)))
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     // branch writes are append-only: truncate/overwrite mutate main, and
     // the publish is a pure rename with no conflict surface
     branch.foreach(b =>
-      require(!truncate && !dynamicOverwrite && overwriteFilters.isEmpty,
+      require(!overwrite,
         s"branch '$b' writes are append-only (write-audit-publish): " +
           "truncate/overwrite mutate the live table — run them on main"))
-    ColeWritePrep.factory(schema, path, rowGroupSize, conf, partCols,
-        bucketSpec, bucketDerive, temporal, branch, ColeFileNaming.Task,
-        resetLayout = truncate) {
-      val (fs, _) = ColeIO.resolve(path, conf)
-      val versioned = ColeVersions.enabled(path, conf)
-      if (truncate)
-        ColeIO.listPartitioned(path, conf).foreach { case (s, _) =>
-          retired ++= ColeVersions.retireOrDelete(fs, path,
-            s.getPath.toString, retireStamp, versioned)
-        }
-      // static-partition OVERWRITE: drop files of exactly the matching
-      // partitions before any new data lands; the rest of the table is
-      // untouched (the builder validated every predicate hits a partition
-      // column)
-      if (overwriteFilters.nonEmpty) {
-        val preds = overwriteFilters.flatMap(ColePredicate.fromFilter)
-        ColeIO.listPartitioned(path, conf).foreach { case (st, parts) =>
-          val pv = parts.toMap
-          if (preds.forall(p => pv.get(p.column).exists(
-              ColePredicate.partitionKeeps(p, _)))) {
-            retired ++= ColeVersions.retireOrDelete(fs, path,
-              st.getPath.toString, retireStamp, versioned)
-            fs.delete(new org.apache.hadoop.fs.Path(
-              ColeBloomIndex.sidecarPath(st.getPath.toString)), false)
-            ColeDv.drop(fs, st.getPath.toString)
-          }
-        }
-      }
-    }
+    // an overwrite's files stay invisible until its swap; their names
+    // carry the stamp unless no live file could share one
+    val naming =
+      if (!overwrite) ColeFileNaming.Task
+      else ColeFileNaming.Deferred(
+        if (ColeIO.listPartitioned(path, conf).isEmpty) "" else s"overwrite-$stamp-")
+    ColeWritePrep.factory(schema, path, rowGroupSize, conf, partCols, bucketSpec,
+      bucketDerive, temporal, branch, naming, replaced, newEra.map(ColeBucket.dirKeyOf))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val newFiles = ColeWrittenFile.dropEmpty(messages.toSeq.flatMap {
       case ColeCommitMessage(fs0) => fs0
       case _ => Seq.empty
-    }, conf, keepOne = true).map(_.fin)
+    }, conf, keepOne = true)
     val (fs, _) = ColeIO.resolve(path, conf)
-    val versioned = ColeVersions.enabled(path, conf)
-    if (dynamicOverwrite) {
-      // replace exactly the partitions the new data landed in: per
-      // touched directory, the pre-existing .col files (everything NOT
-      // written by this job) delete at commit. Untouched partitions are
-      // never listed. Readers concurrent with the swap can transiently
-      // see old+new (same non-atomic window as truncate); ColeCompact's
-      // 2-phase manifest is the crash-safe pattern where that matters.
-      val newByDir = newFiles.map { f =>
-        val (_, p) = ColeIO.resolve(f, conf)
-        val q = fs.makeQualified(p)
-        (q.getParent.toString, q.getName)
-      }.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      newByDir.foreach { case (dir, keep) =>
-        val (_, dp) = ColeIO.resolve(dir, conf)
-        fs.listStatus(dp)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".col") &&
-            !keep.contains(st.getPath.getName))
-          .foreach { st =>
-            retired ++= ColeVersions.retireOrDelete(fs, path,
-              st.getPath.toString, retireStamp, versioned)
-            fs.delete(new org.apache.hadoop.fs.Path(
-              ColeBloomIndex.sidecarPath(st.getPath.toString)), false)
-          }
-      }
-    }
+    def qualifiedDir(f: String): String =
+      fs.makeQualified(new org.apache.hadoop.fs.Path(f)).getParent.toString
     branch match {
       case Some(b) =>
         // staged files commit to the BRANCH log (rels relative to the
         // staging root == the table-relative paths they publish to);
         // main's log and live layout are untouched
-        ColeRefs.commitBranchAppend(path, conf, b, newFiles.toSeq
-          .map(f => ColeVersions.relOf(fs, ColeRefs.branchDataRoot(path, b), f)))
+        ColeRefs.commitBranchAppend(path, conf, b, newFiles
+          .map(f => ColeVersions.relOf(fs, ColeRefs.branchDataRoot(path, b), f.fin)))
+      case None if !overwrite =>
+        ColeVersions.commitIfEnabled(path, conf, "append",
+          newFiles.map(f => ColeVersions.relOf(fs, path, f.fin)), Seq.empty)
       case None =>
-        val op =
-          if (truncate || dynamicOverwrite || overwriteFilters.nonEmpty) "overwrite"
-          else "append"
-        ColeVersions.commitIfEnabled(path, conf, op,
-          newFiles.toSeq.map(f => ColeVersions.relOf(fs, path, f)), retired.toSeq)
+        // a dynamic overwrite replaces the files of the directories it wrote
+        val wrote = if (dynamicOverwrite) newFiles.map(f => qualifiedDir(f.fin)).toSet
+          else Set.empty[String]
+        ColeSwap.replace(fs, path, conf, "overwrite", stamp,
+            newFiles.map(f => (f.written, f.fin)),
+            (f, pv) => replaced(pv) || wrote(qualifiedDir(f))) {
+          // the new layout's era lands under the claims, before any of its
+          // files is visible
+          newEra.foreach { era =>
+            val (n, cs) = bucketSpec.get
+            require(ColeBucket.evolve(path, conf, n, cs, bucketDerive).last.idx == era,
+              s"the bucket layout of $path changed while this overwrite ran; retry it")
+          }
+        }
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case ColeCommitMessage(fs0) =>
       fs0.foreach { f =>
         val (fs, p) = ColeIO.resolve(f.written, conf)
         fs.delete(p, false)
       }
     }
-    // roll a versioned truncate/overwrite back: retired files return to
-    // their live paths, the table is byte-identical to before the job
-    val (fs, _) = ColeIO.resolve(path, conf)
-    retired.foreach(ColeVersions.unretire(fs, path, _))
-    retired.clear()
-  }
 }
 
 /** The one task-side write factory: batch appends/overwrites, the
@@ -3132,13 +3103,16 @@ class ColeWriterFactory(schema: StructType, path: String, rowGroupSize: Int,
     // table-level resolution (sidecars, active era, checks) keeps using
     // `path` — layout subpaths mirror the table's, so publish renames 1:1
     dataRoot: Option[String] = None,
-    naming: ColeFileNaming)
+    naming: ColeFileNaming,
+    // a re-laying overwrite's era, not yet in the sidecar (its commit
+    // appends it)
+    newEraKey: Option[String] = None)
     extends DataWriterFactory with StreamingDataWriterFactory {
   // resolved on the DRIVER at factory construction (one sidecar read),
   // serialized to tasks: writers route by the ACTIVE era's directory key
   private val bucketDirKey: String =
     if (bucketSpec.isEmpty) ColeBucket.DirKey
-    else ColeBucket.activeDirKey(path, hconf.value)
+    else newEraKey.getOrElse(ColeBucket.activeDirKey(path, hconf.value))
   private val root: String = dataRoot.getOrElse(path)
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -4044,7 +4018,7 @@ class ColeStreamingWrite(schema: StructType, path: String, rowGroupSize: Int,
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     ColeWritePrep.factory(schema, path, rowGroupSize, conf, partCols,
-      bucketSpec, bucketDerive, temporal, branch, ColeFileNaming.Epoch)()
+      bucketSpec, bucketDerive, temporal, branch, ColeFileNaming.Epoch)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val finals = messages.flatMap {

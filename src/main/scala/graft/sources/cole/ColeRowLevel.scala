@@ -200,17 +200,17 @@ class ColeGroupScan(op: ColeRowLevelOperation, required: StructType,
     * reader folds the rows it delivers into a per-slice fingerprint and
     * reports it here (successful tasks only — Spark discards failed-task
     * accumulator updates, and the commit dedups by slice index against
-    * stage retries). Created eagerly on the driver; null outside an
-    * active session, which simply disables detection.
+    * stage retries). Created eagerly on the driver; null with neither an
+    * active nor a default session, which simply disables detection.
     */
   private val sliceAcc
       : org.apache.spark.util.CollectionAccumulator[ColeRowHash.ScanSlice] =
-    try {
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).map { s =>
       val acc = new org.apache.spark.util.CollectionAccumulator[ColeRowHash.ScanSlice]
-      org.apache.spark.sql.SparkSession.active.sparkContext
-        .register(acc, "cole-replace-scan-fp")
+      s.sparkContext.register(acc, "cole-replace-scan-fp")
       acc
-    } catch { case _: Throwable => null }
+    }.orNull
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this

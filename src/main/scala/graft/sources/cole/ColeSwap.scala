@@ -5,8 +5,9 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /** The copy-on-write file swap every rewrite of a COLE table commits
   * through: the native DELETE / UPDATE / MERGE ([[ColeRewrite]]),
-  * compaction ([[ColeCompact]]), rebucket ([[ColeRebucket]]) and the
-  * ReplaceData fallback ([[ColeReplaceWrite]]).
+  * compaction ([[ColeCompact]]), rebucket ([[ColeRebucket]]), the
+  * ReplaceData fallback ([[ColeReplaceWrite]]), and through [[replace]]
+  * every overwrite ([[ColeBatchWrite]]) and `TRUNCATE TABLE`.
   *
   * A caller writes its new files where readers cannot see them (a dotted
   * scratch directory, or dotted in-progress names), then:
@@ -139,6 +140,42 @@ object ColeSwap {
     removes ++= beforeRecord
     if (adds.nonEmpty || removes.nonEmpty)
       ColeVersions.commitIfEnabled(table, conf, op, adds.toSeq, removes.toSeq)
+  }
+
+  /** The commit of every overwrite and of `TRUNCATE TABLE`: swaps the
+    * live files `replaced` picks (by path and directory values) for
+    * `inserts`, (written, live) paths of rows new to every reader.
+    * Interrupted swaps resolve first; the picked files are claimed and
+    * re-statted, and `beforeSwap` runs under the claims. One group at the
+    * table root: the new files may land where no old file was. With
+    * nothing to replace, the new files rename in as an append's do: no
+    * manifest, no claim.
+    */
+  def replace(fs: FileSystem, table: String, conf: Configuration, op: String,
+      stamp: String, inserts: Seq[(String, String)],
+      replaced: (String, Map[String, String]) => Boolean)(beforeSwap: => Unit): Unit = {
+    def live = ColeIO.listPartitioned(table, conf)
+    recoverTable(fs, table, conf, live.map(_._1.getPath.getParent).distinct)
+    val removed = live.collect { case (st, pv) if replaced(st.getPath.toString, pv.toMap) =>
+      (st.getPath.toString, st.getLen, st.getModificationTime) }
+    if (removed.isEmpty) {
+      beforeSwap
+      inserts.foreach { case (written, fin) =>
+        require(fs.rename(new HPath(written), new HPath(fin)), s"rename failed for $written") }
+      ColeVersions.commitIfEnabled(table, conf, op,
+        inserts.map(i => ColeVersions.relOf(fs, table, i._2)), Nil)
+      return
+    }
+    val root = new HPath(table)
+    val claimed = claim(fs, conf, table, op, removed.map(_._1), Seq(root))
+    try {
+      drifted(fs, removed).foreach(p => throw new IllegalStateException(
+        s"concurrent write detected on $p during $op; aborted with nothing " +
+          "replaced — retry after the other writer commits"))
+      beforeSwap
+      commit(fs, table, conf, op, stamp, claimed,
+        Seq(Group(root, removed.map(_._1), Nil, inserts)))(Nil)
+    } finally claimed.release()
   }
 
   /** Directory (under the table root) of compaction records the streaming

@@ -197,16 +197,10 @@ object ColeVersions {
   /** Retire a live data file (versioning on) or delete it (versioning
     * off). Returns the (rel, retiredRel) record entry when retired.
     * The caller groups one `stamp` per commit so a rel path retired
-    * twice across the table's life never collides.
-    *
-    * Multi-file operations should probe [[enabled]] ONCE and use the
-    * explicit-flag overload: one existence check per commit, not one
-    * RPC per removed file of a large DELETE.
+    * twice across the table's life never collides. Multi-file
+    * operations probe [[enabled]] ONCE: one existence check per commit,
+    * not one RPC per removed file of a large DELETE.
     */
-  def retireOrDelete(fs: FileSystem, table: String, conf: Configuration,
-      abs: String, stamp: String): Option[(String, String)] =
-    retireOrDelete(fs, table, abs, stamp, enabled(table, conf))
-
   def retireOrDelete(fs: FileSystem, table: String, abs: String,
       stamp: String, versioned: Boolean): Option[(String, String)] =
     if (!versioned) { fs.delete(new HPath(abs), false); None }
@@ -245,18 +239,6 @@ object ColeVersions {
   def retiredExists(fs: FileSystem, table: String, stamp: String,
       rel: String): Boolean =
     fs.exists(new HPath(new HPath(retiredDir(table), stamp), rel))
-
-  /** Roll a [[retireOrDelete]] back (write-job abort before its commit
-    * record went durable): the retired file returns to its live path.
-    */
-  def unretire(fs: FileSystem, table: String,
-      entry: (String, String)): Unit = {
-    val (rel, retiredRel) = entry
-    val src = new HPath(vdir(table).getParent, s"$DirName/$retiredRel")
-    val dst = new HPath(table, rel)
-    fs.mkdirs(dst.getParent)
-    require(fs.rename(src, dst), s"unretire rename failed: $retiredRel")
-  }
 
   /** Append a commit record when versioning is on; no-op (None) when
     * off. `adds`/`removes` are table-relative.

@@ -8,16 +8,26 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A local filesystem that fails the first delete of a live data file
-  * while [[ColeCrashFs.armed]]: every caller of the swap renames its new
-  * files in before it deletes a replaced one, so the failure lands after
-  * the renames and before the deletes — a crash inside the swap.
+  * while [[ColeCrashFs.armed]], or the first rename of one away (a
+  * versioned table retires a replaced file by renaming it): every caller
+  * of the swap renames its new files in before it removes a replaced
+  * one, so the failure lands after the renames and before the removals —
+  * a crash inside the swap.
   */
 class ColeCrashFs extends org.apache.hadoop.fs.LocalFileSystem {
-  override def delete(f: HPath, recursive: Boolean): Boolean = {
+  private def crashOn(f: HPath, what: String): Unit =
     if (f.getName.endsWith(".col") && !f.toUri.getPath.split('/').exists(_.startsWith(".")) &&
         ColeCrashFs.armed.compareAndSet(true, false))
-      throw new java.io.IOException(s"injected crash before deleting $f")
+      throw new java.io.IOException(s"injected crash before $what $f")
+
+  override def delete(f: HPath, recursive: Boolean): Boolean = {
+    crashOn(f, "deleting")
     super.delete(f, recursive)
+  }
+
+  override def rename(src: HPath, dst: HPath): Boolean = {
+    crashOn(src, "retiring")
+    super.rename(src, dst)
   }
 }
 
@@ -28,8 +38,9 @@ object ColeCrashFs {
 /** [[ColeSwap]]: the one copy-on-write swap behind the native DML,
   * compaction, rebucket and the ReplaceData fallback. A crash between
   * its renames and its deletes recovers to exactly the table before or
-  * after the statement; a ReplaceData rewrite keeps the bloom index; a
-  * tailing stream sees a root-manifest swap as in flight.
+  * after the statement — for every overwrite and `TRUNCATE TABLE` too,
+  * on unversioned and versioned tables; a ReplaceData rewrite keeps the
+  * bloom index; a tailing stream sees a root-manifest swap as in flight.
   */
 class ColeSwapSpec extends AnyFunSuite {
 
@@ -56,8 +67,10 @@ class ColeSwapSpec extends AnyFunSuite {
   private def conf = ColeIO.driverConf()
   private def dir(name: String) = s"$warehouse/db/$name"
 
+  // a path read of a table with no data file left fails to infer a schema
   private def rows(t: String): Seq[String] =
-    spark.read.format("cole").load(t).select("id", "region", "v").collect()
+    if (ColeIO.listPartitioned(t, conf).isEmpty) Nil
+    else spark.read.format("cole").load(t).select("id", "region", "v").collect()
       .map(_.toString).sorted.toSeq
 
   private def write(t: String, ids: Range, files: Int, mode: String = "overwrite",
@@ -141,6 +154,70 @@ class ColeSwapSpec extends AnyFunSuite {
       if (id < 30) r.replaceFirst(",r[0-9],", ",moved,") else r
     }.sorted
     beforeOrAfter(t, before, after)
+  }
+
+  /** The rows [[write]] gives `ids`, as [[rows]] prints them. */
+  private def rowsOf(ids: Range, region: Int => String = i => s"r${i % 3}"): Seq[String] =
+    ids.map(i => s"[$i,${region(i)},${i * 10L}]").sorted
+
+  /** One overwrite-shaped statement for the crash matrix: its name, the
+    * table's layout, the statement and the table it leaves from `before`.
+    */
+  private case class Replace(name: String, partitioned: Boolean,
+      run: String => Unit, after: Seq[String] => Seq[String],
+      bucketBy: Option[String] = None)
+
+  private val replaces = Seq(
+    Replace("a truncating overwrite", partitioned = false,
+      t => write(t, 1000 until 1100, files = 2), _ => rowsOf(1000 until 1100)),
+    Replace("a truncating overwrite that re-lays the buckets out", partitioned = false,
+      t => write(t, 1000 until 1100, files = 2, bucketBy = Some("8:id")),
+      _ => rowsOf(1000 until 1100), bucketBy = Some("4:id")),
+    Replace("a static-partition INSERT OVERWRITE", partitioned = true,
+      t => spark.sql(s"INSERT OVERWRITE sw.db.${new HPath(t).getName} PARTITION (region = 'r1') " +
+        "SELECT id, id * 10 AS v FROM range(1000, 1030)"),
+      before => (before.filterNot(_.contains(",r1,")) ++ rowsOf(1000 until 1030, _ => "r1")).sorted),
+    Replace("a dynamic partition overwrite", partitioned = true,
+      t => {
+        val s = spark
+        import s.implicits._
+        (1000 until 1030).map(i => (i.toLong, "r1", i * 10L)).toDF("id", "region", "v")
+          .repartition(2).writeTo(s"sw.db.${new HPath(t).getName}").overwritePartitions()
+      },
+      before => (before.filterNot(_.contains(",r1,")) ++ rowsOf(1000 until 1030, _ => "r1")).sorted),
+    Replace("TRUNCATE TABLE", partitioned = true,
+      t => spark.sql(s"TRUNCATE TABLE sw.db.${new HPath(t).getName}"), _ => Nil))
+
+  for ((r, i) <- replaces.zipWithIndex; versioned <- Seq(false, true)) {
+    val kind = if (versioned) "versioned" else "unversioned"
+    test(s"crash inside the swap of ${r.name} recovers to before or after ($kind)") {
+      val t = dir(s"crash_replace_${i}_$kind")
+      write(t, 0 until 300, files = 3, bucketBy = r.bucketBy, partitioned = r.partitioned)
+      if (versioned) ColeVersions.enable(t, conf)
+      val before = rows(t)
+      val crashed = crashThenRecover(t)(r.run(t))
+      if (r.after(before).isEmpty) assert(crashed == before, "no new file to rename in")
+      else assert(crashed.size > before.size, "the crash must land after the renames")
+      beforeOrAfter(t, before, r.after(before))
+      bucketsDescribed(t)
+    }
+  }
+
+  /** Every live bucketed file sits under the key of an era of the
+    * `_bucketspec` history, and each of its rows hashes to its bucket
+    * under that era's count.
+    */
+  private def bucketsDescribed(t: String): Unit = {
+    val eras = ColeBucket.readHistory(t, conf).map(e => e.dirKey -> e.n).toMap
+    ColeIO.listPartitioned(t, conf).map { case (st, pv) => (st.getPath.getParent, pv) }
+      .distinct.foreach { case (d, pv) =>
+        pv.filter(kv => ColeBucket.isBucketKey(kv._1)).foreach { case (k, b) =>
+          assert(eras.contains(k), s"$d: no era of the bucket spec is keyed $k")
+          spark.read.format("cole").load(d.toString).select("id").collect()
+            .foreach(r => assert(ColeBucket.bucketOf(r.getLong(0), eras(k)).toString == b,
+              s"${r.getLong(0)} does not hash to $k=$b under ${eras(k)} buckets"))
+        }
+      }
   }
 
   test("a ReplaceData MERGE keeps the bloom index over the files it writes") {
